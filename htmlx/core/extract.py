@@ -605,9 +605,3 @@ def extract(html_bytes: bytes, config: Config | None = None) -> Result:
 
 def extract_text(html_bytes: bytes, config: Config | None = None) -> str:
     return Extractor(config).extract_text(html_bytes)
-
-
-def extract_to_markdown(html_bytes: bytes) -> str:
-    """ExtractToMarkdown (output.go:15-38): image/link formats forced to
-    markdown on a transient config."""
-    return Extractor(markdown_config()).extract(html_bytes).text

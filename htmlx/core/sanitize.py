@@ -329,13 +329,6 @@ def _normalize_fullwidth_to_ascii(s: str) -> str:
     return _FULLWIDTH.sub(lambda m: chr(ord(m.group()) - 0xFEE0), s)
 
 
-def _is_dangerous_scheme(lower_uri: str, scheme: str) -> bool:
-    """sanitize.go:465-477."""
-    if lower_uri.startswith(scheme):
-        return True
-    return _normalize_fullwidth_to_ascii(lower_uri).startswith(scheme)
-
-
 def _is_safe_uri(uri: str, audit: AuditRecorder) -> bool:
     """Port of isSafeURIWithAudit (sanitize.go:388-452). The fullwidth
     normalization is hoisted out of the per-scheme checks (pure perf; the

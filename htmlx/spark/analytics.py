@@ -31,7 +31,16 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     draws, simhash bit votes, lang-ID regex ladders, shingle builds) onto
     one core while the rest of the cluster idles (the same input-split
     lesson the r5 extraction fix addressed; measured r10: simhash 1.6 s ->
-    0.36 s, minhash signatures 2.5 s -> 0.65 s at local[32]/sf0.1).
+    0.36 s, minhash signatures 2.5 s -> 0.65 s at local[32]/sf0.1). The
+    mapInPandas decode tiers in entryqueries route through here for the
+    same reason.
+
+    Width is 1x defaultParallelism — exactly one Python-task wave. The r5
+    extraction fix used 2x (the production skew heuristic), but each
+    EXTRA wave of python tasks costs worker dispatch while adding
+    nothing: per-task work is row-count-uniform after the round-robin
+    repartition (measured r7, BENCH/BASELINE.md: extract_text 0.89 s @1x
+    vs 1.16 s @2x vs 1.50 s @3x; media/jpeg decode tiers -0.6 s each).
 
     When the input already carries at least defaultParallelism partitions
     — any real at-scale scan — the frame is returned UNTOUCHED: zero
@@ -2033,8 +2042,8 @@ def ann_topk(embeddings: DataFrame, num_queries: int = 5, k: int = 5) -> DataFra
 def token_stats(documents: DataFrame, include_bpe: bool = False) -> DataFrame:
     """Whitespace token counting + distinct-token counts (JVM-side).
 
-    With include_bpe=True the BPE-ish pre-tokenizer counts (see
-    bpe_token_stats) are computed in the SAME single-scan projection —
+    With include_bpe=True the BPE-ish pre-tokenizer counts
+    (BPE_PRETOKEN_PATTERN) are computed in the SAME single-scan projection —
     one pass over the corpus yields both token-budget estimates."""
     toks = F.split(F.col("text"), " ")
     cols = [
@@ -2340,10 +2349,6 @@ def doc_fingerprints(documents: DataFrame) -> DataFrame:
     return documents.select(
         F.col("doc_id").cast("long"), F.md5(F.col("text")).alias("fingerprint")
     )
-
-
-def lang_distribution(documents: DataFrame) -> DataFrame:
-    return documents.groupBy("lang").agg(F.count("*").cast("long").alias("n_docs"))
 
 
 # Language-ID spec (engine-defined, deterministic, SQL-expressible in both
@@ -2726,19 +2731,6 @@ def propagate_min_labels(
 # but THIS split is the pre-tokenization boundary — its count is the
 # standard cheap token-budget estimate for corpus accounting.
 BPE_PRETOKEN_PATTERN = r" ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+"
-
-
-def bpe_token_stats(documents: DataFrame) -> DataFrame:
-    """Pre-tokenizer counting (the 'BPE-ish regex' twin of the whitespace
-    token_stats): per-doc token count + chars-per-token — JVM-side
-    regexp_extract_all, zero shuffles."""
-    toks = F.regexp_extract_all("text", F.lit(BPE_PRETOKEN_PATTERN), 0)
-    n = F.size(toks)
-    return documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        n.cast("long").alias("n_bpe_tokens"),
-        F.floor(F.length("text") * 10 / n).cast("long").alias("chars_per_token_x10"),
-    )
 
 
 # ---- corpus-trained BPE (Sennrich 2016 "Neural Machine Translation of

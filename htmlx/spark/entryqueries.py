@@ -29,26 +29,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _spread(docs: DataFrame) -> DataFrame:
-    """Spread a docs frame across the cluster before a Python decode
-    stage: the documents table is ONE small parquet file -> one input
-    split, which would serialize every mapInPandas decode tier onto a
-    single core (the input-split lesson, BENCH/BASELINE.md r5). JVM-only
-    zero-shuffle queries deliberately do NOT use this (their plans are
-    asserted exchange-free; at real scale the scan has many splits).
-
-    Width is 1x defaultParallelism — exactly one Python-task wave. The r5
-    fix used 2x (the production skew heuristic), but each EXTRA wave of
-    32 python tasks costs ~0.3 s of worker dispatch at this corpus size
-    while adding nothing: per-task work is row-count-uniform after the
-    round-robin repartition (measured r7, BENCH/BASELINE.md: extract_text
-    0.89 s @32 parts vs 1.16 @64 vs 1.50 @96; media/jpeg decode tiers
-    -0.6 s each). At 10^12 rows partitioning comes from the scan splits,
-    never from this floor."""
-    sc = docs.sparkSession.sparkContext
-    return docs.repartition(sc.defaultParallelism)
-
-
 def _adaptive(spark: SparkSession, on: bool = True) -> None:
     """Declare a query family's AQE mode at build time (optimization
     guide §2.2 'let AQE coalesce small partitions').
@@ -78,7 +58,8 @@ def _extract(spark, sf_dir, template: str, config: Config | None = None) -> Data
     # stage runs on one core (measured: extract_text 2.1s at local[32]
     # with 31 idle workers). Salted repartition (job.salted_repartition)
     # is the production skew-defeating shape; width 1x parallelism = ONE
-    # python-task wave (r7 A/B: 0.89s @1x vs 1.16s @2x — see _spread).
+    # python-task wave (r7 A/B: 0.89s @1x vs 1.16s @2x — see
+    # analytics.spread_small_input).
     return run_extraction(
         pages, config or Config(),
         num_partitions=spark.sparkContext.defaultParallelism,
@@ -303,7 +284,7 @@ def q_extract_encoding(spark, sf_dir):
                 )
             yield pd.DataFrame(rows, columns=["url", "html"])
 
-    pages = _spread(docs).mapInPandas(build, "url string, html binary")
+    pages = analytics.spread_small_input(docs).mapInPandas(build, "url string, html binary")
     return run_extraction(pages).select("url", "title", "text", "error")
 
 
@@ -1456,7 +1437,7 @@ def q_media_sniff(spark, sf_dir):
                              "mime": "", "source_url": ""})
             yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "mime", "source_url"])
 
-    media = _spread(docs).mapInPandas(
+    media = analytics.spread_small_input(docs).mapInPandas(
         build, "media_id long, kind string, payload binary, mime string, source_url string"
     )
     return extract_media_metadata(media).select(
@@ -1546,7 +1527,7 @@ def q_media_frame_features(spark, sf_dir):
     )
     # extract_media_features is a Python (mapInPandas) stage: spread it
     # off the single input split like every other decode tier
-    feat_level = extract_media_features(_spread(media)).select(
+    feat_level = extract_media_features(analytics.spread_small_input(media)).select(
         F.lit("features").alias("level"),
         F.col("media_id"),
         F.md5(
@@ -1583,9 +1564,9 @@ def q_media_frame_features(spark, sf_dir):
                 )
             yield pd.DataFrame(rows, columns=["media_id", "payload"])
 
-    grads = _spread(docs.select(F.col("doc_id").cast("long").alias("media_id"))).mapInPandas(
-        build_gradients, "media_id long, payload binary"
-    )
+    grads = analytics.spread_small_input(
+        docs.select(F.col("doc_id").cast("long").alias("media_id"))
+    ).mapInPandas(build_gradients, "media_id long, payload binary")
     hashes = extract_image_dhash(grads)
     hex16 = F.lpad(F.lower(F.hex("dhash")), 16, "0")
     dhash_level = (
@@ -1647,7 +1628,7 @@ def q_media_frame_features(spark, sf_dir):
                 )
             yield pd.DataFrame(rows, columns=["media_id", "payload"])
 
-    waves = _spread(
+    waves = analytics.spread_small_input(
         docs.select(F.col("doc_id").cast("long").alias("media_id"))
     ).mapInPandas(build_waves, "media_id long, payload binary")
     ehashes = extract_audio_ehash(waves)
@@ -1960,7 +1941,7 @@ def q_pdf_metadata(spark, sf_dir):
                 )
             yield pd.DataFrame(rows, columns=["url", "payload"])
 
-    pdfs = _spread(docs).mapInPandas(build, "url string, payload binary")
+    pdfs = analytics.spread_small_input(docs).mapInPandas(build, "url string, payload binary")
     return extract_pdf_profile(pdfs).select(
         "url",
         "pdf_version",
@@ -2209,7 +2190,7 @@ def q_pdf_text(spark, sf_dir):
                 )
             yield pd.DataFrame(rows, columns=["url", "payload"])
 
-    pdfs = _spread(docs).mapInPandas(build, "url string, payload binary")
+    pdfs = analytics.spread_small_input(docs).mapInPandas(build, "url string, payload binary")
     return extract_pdf_documents(pdfs).select(
         "url", "text", F.col("n_streams").cast("long").alias("n_streams"), "error"
     )
@@ -2327,7 +2308,7 @@ def q_media_pixel_decode(spark, sf_dir):
                 rows.append({"media_id": d, "payload": payload})
             yield pd.DataFrame(rows, columns=["media_id", "payload"])
 
-    media = _spread(docs).mapInPandas(build, "media_id long, payload binary")
+    media = analytics.spread_small_input(docs).mapInPandas(build, "media_id long, payload binary")
     return extract_pixel_features(media).select(
         "media_id",
         F.col("width").cast("long").alias("width"),
@@ -2440,7 +2421,7 @@ def q_jpeg_pixel_decode(spark, sf_dir):
                 rows.append({"media_id": d, "payload": payload})
             yield pd.DataFrame(rows, columns=["media_id", "payload"])
 
-    media = _spread(docs).mapInPandas(build, "media_id long, payload binary")
+    media = analytics.spread_small_input(docs).mapInPandas(build, "media_id long, payload binary")
     return extract_pixel_features(media).select(
         "media_id",
         F.col("width").cast("long").alias("width"),
@@ -2967,9 +2948,7 @@ CROSS JOIN (SELECT unnest(['oracle', 'production']) AS variant) v
 
 def q_doc_length_percentiles(spark, sf_dir):
     """Exact per-group percentiles (p50/p95 of doc length per language),
-    carrying per-lang n_docs — this row also covers the
-    analytics.lang_distribution surface (the standalone row was swapped
-    for decontaminate under the driver's 50-row cap):
+    carrying per-lang n_docs:
     Spark's `percentile` and DuckDB's `quantile_cont` share the same
     linear-interpolation definition (index = (n-1)*p over the sorted
     values), verified bit-identical on this corpus — the exact-quantile
@@ -4046,7 +4025,7 @@ def q_gif_pixel_decode(spark, sf_dir):
                 rows.append({"media_id": d, "payload": payload})
             yield pd.DataFrame(rows, columns=["media_id", "payload"])
 
-    media = _spread(docs).mapInPandas(build, "media_id long, payload binary")
+    media = analytics.spread_small_input(docs).mapInPandas(build, "media_id long, payload binary")
     return extract_pixel_features(media).select(
         "media_id",
         F.col("width").cast("long").alias("width"),
@@ -4162,7 +4141,7 @@ def q_audio_pcm_decode(spark, sf_dir):
                 rows.append({"media_id": d, "payload": payload})
             yield pd.DataFrame(rows, columns=["media_id", "payload"])
 
-    media = _spread(docs).mapInPandas(build, "media_id long, payload binary")
+    media = analytics.spread_small_input(docs).mapInPandas(build, "media_id long, payload binary")
     return extract_audio_features(media).select(
         "media_id",
         F.col("sample_rate").cast("long").alias("sample_rate"),

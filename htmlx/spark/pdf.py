@@ -873,31 +873,6 @@ def extract_pdf_text(payload: bytes) -> str:
     return "\n".join(parts)
 
 
-def extract_pdf_metadata(pdfs: DataFrame) -> DataFrame:
-    """mapInPandas stage: (url, payload binary) -> structural metadata rows.
-    Same stage shape as the HTML extraction job (per-row errors, Arrow
-    batches). error='decoder_unavailable' marks payloads whose streams use
-    a filter the in-container decoder cannot inflate."""
-    import pandas as pd
-
-    def pdf_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PDF_META_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf["url"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                meta = parse_pdf_structure(b)
-                if not meta["error"]:
-                    try:
-                        extract_pdf_text(b)
-                    except (UnsupportedFilterError, zlib.error):
-                        meta["error"] = "decoder_unavailable"
-                rows.append({"url": url, **meta})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pdfs.mapInPandas(pdf_batch, PDF_META_SCHEMA)
-
-
 PDF_TEXT_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -941,41 +916,6 @@ def extract_pdf_documents(pdfs: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols)
 
     return pdfs.mapInPandas(text_batch, PDF_TEXT_SCHEMA)
-
-PDF_IMAGE_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("image_index", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("img_filter", StringType()),
-        StructField("px_md5", StringType()),
-        StructField("mean_x1000", LongType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
-def extract_pdf_image_features(pdfs: DataFrame) -> DataFrame:
-    """mapInPandas stage: (url, payload binary) -> ONE ROW PER embedded
-    image XObject (exploded worker-side, so the fat raster never leaves the
-    task — only the digest row shuffles). DCT images decode via the in-repo
-    JPEG decoder; CCITT G3/G4 via the in-repo T.4/T.6 decoder; JPX/JBIG2
-    degrade per-image."""
-    import pandas as pd
-
-    def img_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PDF_IMAGE_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf["url"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                for img in extract_pdf_images(b):
-                    rows.append({"url": url, **img})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pdfs.mapInPandas(img_batch, PDF_IMAGE_SCHEMA)
 
 
 PDF_PROFILE_SCHEMA = StructType(

@@ -354,53 +354,6 @@ def start_extraction_stream(
     return writer.start()
 
 
-def quality_filter_stream(docs_stream: DataFrame) -> DataFrame:
-    """Streaming C4/Gopher quality filtering: the published rule suites
-    applied at ingest so low-quality documents are dropped before they
-    ever land in the corpus — the streaming face of
-    analytics.c4_gopher_quality.
-
-    Stateless by construction (append-mode safe, no watermark, no
-    state store): every signal is a pure function of the document's own
-    text, so the exact batch projection applies unchanged to each
-    micro-batch. Batch/stream equivalence is therefore structural, and
-    pinned by test_streaming_quality_filter_matches_batch."""
-    from .analytics import c4_gopher_quality
-
-    return c4_gopher_quality(docs_stream)
-
-
-def robots_filter_stream(pages_stream: DataFrame, **kw) -> DataFrame:
-    """Streaming meta-robots compliance filtering: classify noindex/
-    nofollow from raw page bytes AT INGEST so noindex pages never reach
-    the corpus — the streaming face of analytics.meta_robots.
-
-    Stateless by construction (append-mode safe, no watermark, no state
-    store): the classification is one bounded-prefix regex over the
-    row's own html column, so the exact batch projection applies
-    unchanged per micro-batch; equivalence pinned by
-    test_streaming_robots_filter_matches_batch."""
-    from .analytics import meta_robots
-
-    return meta_robots(pages_stream, **kw)
-
-
-def url_filter_stream(
-    pages_stream: DataFrame, blocklist: DataFrame, **kw
-) -> DataFrame:
-    """Streaming URL filtering (RefinedWeb/UT1 blocklist + keyword +
-    structural rules) at ingest — the streaming face of
-    analytics.url_filter.
-
-    Stateless per row; the blocklist is a STATIC frame collapsed to one
-    array row and broadcast into every micro-batch (a stream-static
-    broadcast join — the same boundedness argument as the batch op).
-    Equivalence pinned by test_streaming_url_filter_matches_batch."""
-    from .analytics import url_filter
-
-    return url_filter(pages_stream, blocklist, **kw)
-
-
 def decontaminate_stream(
     docs_stream: DataFrame, eval_docs: DataFrame, n: int = 13,
     hash_basis: str = "xxhash64",

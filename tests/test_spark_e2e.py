@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from htmlx.core.extract import Config
 from htmlx.spark.io import ParquetTableIO, run_with_resume
-from htmlx.spark.job import run_all_links, run_extraction, run_metrics
+from htmlx.spark.job import run_all_links, run_extraction, run_extraction_full
 from htmlx.spark.pages import pages_from_documents
 from htmlx.spark.session import get_spark
 
@@ -60,7 +60,8 @@ def test_partition_count_invariance(spark, docs):
 
 def test_metrics_stage(spark, docs):
     pages = pages_from_documents(docs, "text")
-    m = run_metrics(pages, Config(), run_id="tm", num_partitions=2).collect()
+    full = run_extraction_full(pages, Config(), run_id="tm", num_partitions=2)
+    m = full["metrics"].collect()
     assert sum(r.docs_in for r in m) == 60
     assert sum(r.docs_error for r in m) == 0
     assert all(r.run_id == "tm" for r in m)

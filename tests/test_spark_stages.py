@@ -7,8 +7,8 @@ from pyspark.sql import functions as F
 from htmlx.core.extract import Config
 from htmlx.spark.job import (
     dedup_pages_by_content,
-    run_audit,
     run_extraction,
+    run_extraction_full,
     salted_repartition,
     to_json_results,
 )
@@ -28,7 +28,7 @@ def test_audit_stage_rows(spark):
         ("u2", b"<p>clean page</p>"),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    audit = run_audit(pages, Config(), run_id="ar").collect()
+    audit = run_extraction_full(pages, Config(), run_id="ar")["audit"].collect()
     by_url = {}
     for r in audit:
         by_url.setdefault(r.url, []).append(r)

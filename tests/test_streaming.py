@@ -340,11 +340,10 @@ def test_streaming_decontamination_matches_batch(spark, tmp_path_factory):
 
 
 def test_streaming_quality_filter_matches_batch(spark, tmp_path_factory):
-    """quality_filter_stream over a file stream == c4_gopher_quality
-    over the same rows (stateless projection), docs split across
+    """c4_gopher_quality over a file stream == c4_gopher_quality over
+    the same rows as a batch (stateless projection), docs split across
     micro-batches; the multi-line/marker rules exercised in-stream."""
     from htmlx.spark.analytics import c4_gopher_quality
-    from htmlx.spark.streaming import quality_filter_stream
 
     tmp = tmp_path_factory.mktemp("quality_stream")
     src, out_dir, ckpt = tmp / "src", tmp / "out", tmp / "ckpt"
@@ -371,7 +370,7 @@ def test_streaming_quality_filter_matches_batch(spark, tmp_path_factory):
         .parquet(str(src) + "/*")
     )
     q = (
-        quality_filter_stream(stream)
+        c4_gopher_quality(stream)
         .writeStream.format("parquet")
         .option("path", str(out_dir))
         .option("checkpointLocation", str(ckpt))
@@ -508,11 +507,10 @@ def test_streaming_latest_capture_tolerates_nulls(spark, tmp_path_factory):
 
 
 def test_streaming_robots_filter_matches_batch(spark, tmp_path_factory):
-    """robots_filter_stream over a file stream == meta_robots over the
-    same rows (stateless bounded-prefix regex), pages split across
+    """meta_robots over a file stream == meta_robots over the same rows
+    as a batch (stateless bounded-prefix regex), pages split across
     micro-batches, binary html column on the real scan path."""
     from htmlx.spark.analytics import meta_robots
-    from htmlx.spark.streaming import robots_filter_stream
 
     tmp = tmp_path_factory.mktemp("robots_stream")
     src, out_dir, ckpt = tmp / "src", tmp / "out", tmp / "ckpt"
@@ -543,7 +541,7 @@ def test_streaming_robots_filter_matches_batch(spark, tmp_path_factory):
         .parquet(str(src) + "/*")
     )
     q = (
-        robots_filter_stream(stream)
+        meta_robots(stream)
         .writeStream.format("parquet")
         .option("path", str(out_dir))
         .option("checkpointLocation", str(ckpt))
@@ -557,10 +555,9 @@ def test_streaming_robots_filter_matches_batch(spark, tmp_path_factory):
 
 
 def test_streaming_url_filter_matches_batch(spark, tmp_path_factory):
-    """url_filter_stream == url_filter per row, with the static blocklist
-    broadcast into each micro-batch of a file stream."""
+    """url_filter over a file stream == url_filter per row as a batch,
+    with the static blocklist broadcast into each micro-batch."""
     from htmlx.spark.analytics import url_filter
-    from htmlx.spark.streaming import url_filter_stream
 
     tmp = tmp_path_factory.mktemp("urlf_stream")
     src, out_dir, ckpt = tmp / "src", tmp / "out", tmp / "ckpt"
@@ -586,7 +583,7 @@ def test_streaming_url_filter_matches_batch(spark, tmp_path_factory):
         .parquet(str(src) + "/*")
     )
     q = (
-        url_filter_stream(stream, bl)
+        url_filter(stream, bl)
         .writeStream.format("parquet")
         .option("path", str(out_dir))
         .option("checkpointLocation", str(ckpt))
