@@ -80,10 +80,12 @@ def run_throughput_once(cores: int, sf_dir: str, replicate: int = 4) -> dict:
 QUERY_HISTORY = "BENCH/query_history.jsonl"
 
 
-def _load_query_history(sf: float, path: str = QUERY_HISTORY) -> list[dict]:
-    """Past per-query time dicts AT THE SAME SCALE FACTOR, oldest first
-    (a sf0.001 smoke run must not become the 2x-trough baseline for
-    sf0.1 measurements)."""
+def _load_query_history(sf: float, cpus: int, path: str = QUERY_HISTORY) -> list[dict]:
+    """Past per-query time dicts AT THE SAME SCALE FACTOR AND CORE COUNT,
+    oldest first (a sf0.001 smoke run must not become the 2x-trough
+    baseline for sf0.1 measurements, nor a local[32] minimum the baseline
+    on a 4-core host). A line without `cpus` was recorded at local[32]:
+    every run through r10 was."""
     runs = []
     if os.path.exists(path):
         with open(path) as f:
@@ -92,7 +94,7 @@ def _load_query_history(sf: float, path: str = QUERY_HISTORY) -> list[dict]:
                     entry = json.loads(line)
                 except json.JSONDecodeError:
                     continue
-                if entry.get("sf") == sf:
+                if entry.get("sf") == sf and entry.get("cpus", 32) == cpus:
                     runs.append(entry.get("queries", {}))
     return runs
 
@@ -205,7 +207,7 @@ def run_queries(sf_dir: str, cores: int) -> dict:
 
         for name in headline:
             times[name] = _time_one(name)
-        history = _load_query_history(_sf_label(sf_dir))
+        history = _load_query_history(_sf_label(sf_dir), cores)
         for _ in range(2):
             suspicious = _suspicious_queries(times, history)
             if not suspicious:
@@ -640,6 +642,8 @@ def main():
         "queries": times,
         "wall_incl_warmup": wall,
         "sf": _sf_label(SF_DIR),
+        "cpus": CPUS,
+        "loadavg": list(os.getloadavg()),
     }
     bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
     # Both scaling numbers ship, explicitly labeled: the LATEST paired-round
@@ -687,7 +691,10 @@ def main():
     with open(os.path.join(bench_dir, "bench_latest.json"), "w") as f:
         json.dump(payload, f, indent=1)
     with open(QUERY_HISTORY, "a") as f:
-        f.write(json.dumps({"measured_at": payload["measured_at"], "sf": payload["sf"], "queries": times}) + "\n")
+        f.write(json.dumps({
+            "measured_at": payload["measured_at"], "sf": payload["sf"],
+            "cpus": CPUS, "loadavg": payload["loadavg"], "queries": times,
+        }) + "\n")
     compact = {
         "metric": (
             "headline per-query wall-time SUM, warm workers, warm-up excluded; "

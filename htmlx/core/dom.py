@@ -573,18 +573,6 @@ def parse(html_text: str) -> Node:
     return tb.doc
 
 
-def parse_stdlib(html_text: str) -> Node:
-    """stdlib-driven parse (kept for differential testing)."""
-    tb = _TreeBuilder()
-    try:
-        tb.feed(html_text)
-        tb.close()
-    except Exception:
-        pass
-    tb._ensure_body()
-    return tb.doc
-
-
 # ---------------------------------------------------------------------------
 # Traversal (port of WalkNodesWithTruncation, internal/helpers.go:415-465)
 # ---------------------------------------------------------------------------

@@ -284,11 +284,3 @@ def extract_all_links(html_bytes: bytes, config=None) -> list[dict]:
     if tree_depth_exceeds(doc, getattr(config, "max_depth", 500)):
         raise ValueError("max_depth_exceeded")
     return extract_all_links_from_doc(doc, config)
-
-
-def group_links_by_type(links: list[dict]) -> dict[str, list[dict]]:
-    """Port of GroupLinksByType (links.go:788-802)."""
-    grouped: dict[str, list[dict]] = {}
-    for link in links:
-        grouped.setdefault(link["type"] or "unknown", []).append(link)
-    return grouped

@@ -458,10 +458,6 @@ def get_default_scorer() -> DefaultScorer:
     return _DEFAULT_SCORER
 
 
-def score_content_node(node: Node) -> int:
-    return _DEFAULT_SCORER.score(node)
-
-
 def should_remove_element(node: Node) -> bool:
     return _DEFAULT_SCORER.should_remove(node)
 

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import re
 
-from .dom import ELEMENT, TEXT, Node, walk_nodes
+from .dom import TEXT, Node, walk_nodes
 from .entities import replace_entity_at, replace_html_entities
 
 _SPACE_RUNS = re.compile(r"[ \t]+")
@@ -215,45 +215,3 @@ def get_text_content(node: Node) -> str:
 
     walk_nodes(node, visit)
     return "".join(buf)
-
-
-def get_text_length(node: Node) -> int:
-    """Port of GetTextLength (helpers.go:593-602). Length is UTF-8 BYTES
-    (Go len() on string), not characters — score parity depends on this."""
-    total = 0
-
-    def visit(n: Node) -> bool:
-        nonlocal total
-        if n.type == TEXT:
-            # Go strings.TrimSpace trims Unicode whitespace -> .strip()
-            total += len(normalize_text(n.data).strip().encode("utf-8"))
-        return True
-
-    walk_nodes(node, visit)
-    return total
-
-
-def get_link_density(node: Node) -> float:
-    """Port of GetLinkDensity (helpers.go:604-630)."""
-    if node is None:
-        return 0.0
-    text_length = 0
-    link_text_length = 0
-
-    def visit(n: Node) -> bool:
-        nonlocal text_length, link_text_length
-        if n.type == TEXT:
-            length = len(normalize_text(n.data).strip().encode("utf-8"))
-            text_length += length
-            p = n.parent
-            while p is not None:
-                if p.type == ELEMENT and p.data == "a":
-                    link_text_length += length
-                    break
-                p = p.parent
-        return True
-
-    walk_nodes(node, visit)
-    if text_length == 0:
-        return 0.0
-    return link_text_length / text_length

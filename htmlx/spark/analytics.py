@@ -1694,8 +1694,8 @@ def embedding_near_dup(
 
     All-pairs work is inherent to an EXACT threshold join; for the
     approximate/cheap path at 100 TB, bucket with ivf_assign first and
-    join on the IVF bucket id (see ann_topk_ivf), trading recall for
-    ~num_centroids× less pair work.
+    join on the IVF bucket id (see embedding_near_dup_ivf), trading recall
+    for ~num_centroids× less pair work.
 
     Ulp-boundary caveat (ADVICE r2): the BLAS matmul here and the DuckDB
     oracle's list_cosine_similarity sum in different orders, so two
@@ -1828,9 +1828,8 @@ def ivf_assign(
     dimensionality exists anywhere.
 
     Returns (assigned_df with bucket column, centroids_df). At 100 TB scale
-    this replaces the ANN cross join: queries probe nprobe buckets and the
-    candidate join keys on bucket id, so the pairwise work shrinks by
-    ~num_centroids/nprobe.
+    this replaces the all-pairs join: embedding_near_dup_ivf scores pairs
+    within a bucket only, so the pairwise work shrinks by ~num_centroids.
 
     `centroids` (r8): a PRE-TRAINED (centroid_id, cvec) table (this
     function's own second return, typically persisted to parquet) —
@@ -1904,104 +1903,6 @@ def ivf_assign(
         assigned = assign(norm, means)
         centroids = means
     return assigned, centroids
-
-
-def ann_topk_ivf(
-    embeddings: DataFrame,
-    num_queries: int = 5,
-    k: int = 5,
-    num_centroids: int = 8,
-    nprobe: int = 3,
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """IVF-bucketed approximate top-k: probe only the nprobe buckets whose
-    centroids are nearest each query. Same output contract as ann_topk
-    (query_id, neighbor_id, rank); approximate recall traded for a
-    bucket-join instead of a full cross product — the 100 TB path.
-    Pass `centroids` (a persisted ivf_assign artifact) to skip Lloyd
-    training and query against the fixed index."""
-    assigned, centroids = ivf_assign(embeddings, num_centroids, centroids=centroids)
-    queries = assigned.where(F.col("vec_id") < num_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("nvec").alias("qvec")
-    )
-    qprobe = (
-        queries.crossJoin(F.broadcast(centroids))
-        .select("query_id", "qvec", "centroid_id", _dot("qvec", "cvec").alias("csim"))
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("csim").desc(), F.col("centroid_id"))
-    probes = (
-        qprobe.withColumn("__r", F.row_number().over(wq))
-        .where(F.col("__r") <= nprobe)
-        .select("query_id", "qvec", F.col("centroid_id").alias("bucket"))
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), on="bucket")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), _dot("qvec", "nvec").alias("cosine")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("long"),
-            F.col("neighbor_id").cast("long"),
-            F.col("rank").cast("long"),
-        )
-    )
-
-
-def quantize_embeddings(
-    embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Per-vector affine int8 quantization of an embedding column —
-    the storage/shuffle lever for embedding ops at 100 TB: an
-    array<tinyint> plus two doubles is 4-8x smaller than the float
-    vector it encodes, and every exchange in the ANN / near-dup plans
-    (block-pair join, IVF bucket join, index writes) moves that many
-    fewer bytes. q = round((x - min) / scale) - 128 with
-    scale = (max - min) / 255; a constant vector takes scale 0 and
-    round-trips EXACTLY (guarded division). Pure Catalyst transforms,
-    scan-side, zero shuffle. Returns (id, qvec, scale, offset);
-    dequantize_embeddings inverts with worst-case per-element error
-    scale/2 (pinned by test)."""
-    v = F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))")
-    mn, mx = F.array_min(v), F.array_max(v)
-    scale = (mx - mn) / F.lit(255.0)
-    q = F.when(
-        scale == 0.0,
-        F.expr(f"transform({vec_col}, x -> CAST(-128 AS TINYINT))"),
-    ).otherwise(
-        F.transform(
-            v,
-            lambda x: (F.round((x - mn) / scale).cast("int") - 128).cast(
-                "tinyint"
-            ),
-        )
-    )
-    return embeddings.select(
-        F.col(id_col),
-        q.alias("qvec"),
-        scale.alias("scale"),
-        mn.alias("offset"),
-    )
-
-
-def dequantize_embeddings(
-    quantized: DataFrame, id_col: str = "vec_id", out_col: str = "embedding"
-) -> DataFrame:
-    """Invert quantize_embeddings: x ≈ offset + (q + 128) * scale,
-    emitted as array<double> under `out_col` so the result drops
-    straight into ann_topk / ann_topk_ivf / embedding_near_dup (they
-    normalize internally — quantization error perturbs each dimension
-    by at most scale/2, which the recall test bounds end-to-end)."""
-    deq = F.transform(
-        F.col("qvec"),
-        lambda qv: F.col("offset") + (qv.cast("double") + 128.0) * F.col("scale"),
-    )
-    return quantized.select(F.col(id_col), deq.alias(out_col))
 
 
 def ann_topk(embeddings: DataFrame, num_queries: int = 5, k: int = 5) -> DataFrame:
@@ -2840,22 +2741,6 @@ def bpe_merge_step(syms, a: str, b: str):
             out.append(syms[i])
             i += 1
     return out
-
-
-def bpe_apply_merges(word: str, merges) -> list:
-    """Encode one pretoken: apply trained merges in rank order. Rank
-    order equals iterate-lowest-rank (the GPT-2 encoder loop) because
-    training can only ever rank a composite pair AFTER the merges that
-    built its symbols. Reference implementation — O(M * len) per word;
-    the production encoder is bpe_encode_word (rank-dict loop, cost
-    scales with the word, not the merges table; pinned equal in
-    test_bpe.py)."""
-    syms = list(word)
-    for a, b in merges:
-        if len(syms) < 2:
-            break
-        syms = bpe_merge_step(syms, a, b)
-    return syms
 
 
 def bpe_ranks(merges) -> dict:

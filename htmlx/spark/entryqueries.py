@@ -2465,8 +2465,7 @@ FROM v
 
 
 def q_events_hourly(spark, sf_dir):
-    """Tumbling-window event rollup (the batch analogue of the streaming
-    windowed aggregation surface)."""
+    """Tumbling-window event rollup."""
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     # value is a 2dp money-like double: cast to DECIMAL(12,2) BEFORE the sum
     # so the aggregate is exact and order-independent (a double sum's result
@@ -2731,68 +2730,6 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(list_sum(
     FOR b IN generate_series(0, {analytics.SIMHASH_BITS - 1}) ]) AS BIGINT) AS simhash
 FROM documents
 """
-
-
-def corpus_filter_frame(docs, hash_basis: str, max_bucket_size):
-    """The composite training-corpus filter plan over a documents frame.
-    The DRIVER query runs it in oracle configuration (md5 basis, uncapped
-    buckets — exact, DuckDB-replicable); production runs ship xxhash64 +
-    capped buckets (see jobs/curate.py and the corpus_filter_production
-    bench row).
-
-    r10 shape (guide §2.4 — remove shuffles outright): the exact-dup
-    keeper is a min-window over the SAME md5 digest the base row already
-    computes (one digest shuffle; the former dedup_exact groupBy +
-    join-back paid the digest shuffle AND a corpus-wide join), lang-ID is
-    a scan-side COLUMN of base (it is a pure projection — the former
-    doc_id join shuffled the corpus once more for it), and the converged
-    component labels join in once (edge endpoints only). Two corpus-wide
-    exchanges total (digest window + label join) instead of five."""
-    from pyspark.sql import Window
-
-    docs = analytics.spread_small_input(docs)
-    base = analytics.with_lang_pred(docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "text",
-    )).select(
-        "doc_id",
-        F.md5("text").alias("text_md5"),
-        F.length("text").alias("n_chars"),
-        "pred_lang",
-    ).withColumn(
-        "exact_keep", F.min("doc_id").over(Window.partitionBy("text_md5"))
-    )
-    cands = analytics.minhash_lsh_candidates(
-        docs, max_bucket_size=max_bucket_size, hash_basis=hash_basis
-    )
-    verified = (
-        analytics.ngram_jaccard_pairs(docs, cands)
-        .where(F.col("jaccard") >= 0.9)
-        .select("doc_a", "doc_b")
-    )
-    labels = analytics.propagate_min_labels(
-        verified, [], max_iters=50, until_converged=True
-    )
-    # no broadcast hints: every side here is corpus-sized at scale (the
-    # label table is bounded by near-dup endpoints but still grows with
-    # the corpus) — shuffle joins on uniform doc_id keys, right at 100 TB
-    joined = base.join(
-        labels.withColumnRenamed("doc_id", "__ldoc"),
-        F.col("doc_id") == F.col("__ldoc"),
-        "left",
-    ).withColumn(
-        "near_dup", F.col("doc_id") != F.coalesce("label", "doc_id")
-    )
-    reason = (
-        F.when(F.col("doc_id") != F.col("exact_keep"), F.lit("exact_dup"))
-        .when(F.col("near_dup"), F.lit("near_dup"))
-        .when(F.col("n_chars") < 100, F.lit("low_quality"))
-        .when(F.col("pred_lang") == "und", F.lit("und_lang"))
-        .otherwise(F.lit(""))
-    )
-    return joined.select(
-        "doc_id", reason.alias("reason")
-    ).withColumn("keep", (F.col("reason") == "").cast("boolean"))
 
 
 #: previous invocation's persisted LSH pair set — evicted on the next
@@ -3106,9 +3043,8 @@ def synth_warc_fixture(dirpath: str = _WARC_FIXTURE_DIR) -> str:
 
 
 def q_host_stats(spark, sf_dir):
-    """Per-host crawl accounting (the batch twin of the streaming host
-    counters) MERGED with URL-canonicalization recrawl dedup into one
-    level-tagged row (driver caps at 50 queries).
+    """Per-host crawl accounting MERGED with URL-canonicalization
+    recrawl dedup into one level-tagged row (the registry caps at 50 rows).
 
     level='host': host parsed from the url with the same regex on both
     engines, doc counts + byte totals per host.

@@ -166,44 +166,6 @@ def derive_audit(results: DataFrame) -> DataFrame:
     )
 
 
-def dedup_pages_by_content(df: DataFrame) -> DataFrame:
-    """Content-hash dedup BEFORE extraction — the Spark-idiomatic
-    replacement for the reference's result cache (SURVEY.md §4.1): at
-    10^12 docs an LRU is pointless, but crawls repeat pages; extracting
-    each distinct html once is the scalable equivalent. Returns one
-    representative row per distinct html (min url for determinism).
-
-    Implemented as min_by over the digest: ONE shuffle, and only the
-    digest + the kept row's columns move — the earlier agg+join variant
-    shuffled the fat html column twice."""
-    hashed = df.withColumn("__h", F.sha2(F.col("html"), 256))
-    cols = list(df.columns)
-    kept = hashed.groupBy("__h").agg(
-        # min_by on the whole-row struct keeps the row atomic (per-column
-        # min_by could mix rows when urls tie)
-        F.min_by(F.struct(*cols), F.col("url")).alias("__r")
-    )
-    return kept.select(*[F.col("__r")[c].alias(c) for c in cols])
-
-
-def to_json_results(results: DataFrame) -> DataFrame:
-    """JSON serialization of results — ExtractToJSON analogue
-    (output.go:44-66) via the built-in `to_json` (ms durations, same field
-    names as the reference's MarshalJSON, output.go:270-302)."""
-    payload = F.struct(
-        F.col("text"),
-        F.col("title"),
-        F.col("images"),
-        F.col("links"),
-        F.col("videos"),
-        F.col("audios"),
-        F.col("word_count"),
-        F.col("reading_time_ms"),
-        F.col("processing_time_ms"),
-    )
-    return results.select("url", F.to_json(payload).alias("json"))
-
-
 def salted_repartition(df: DataFrame, num_partitions: int, salt: str = "htmlx") -> DataFrame:
     """Explicit skew-defeating shuffle on url-hash (north_rule requirement).
 

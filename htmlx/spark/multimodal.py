@@ -18,8 +18,8 @@ Codec tiers, by what the container can decode:
   ``flac.decode_flac``: Rice residuals, FIXED/LPC predictors, stereo
   decorrelation, CRC-8/16 + PCM-MD5 verification).
 - WebP LOSSLESS (VP8L) decodes FOR REAL (``vp8l.decode_webp``: canonical
-  huffman, LZ77, color cache, all four transforms; ALPH alpha planes of
-  lossy files too); ICO favicons decode via ``tiffbmp.decode_ico``.
+  huffman, LZ77, color cache, all four transforms); ICO favicons decode
+  via ``tiffbmp.decode_ico``.
 - Lossy VP8 frames, MP3/OGG and audio/video resampling genuinely require
   external codecs (libwebp/ffmpeg/torchaudio) absent here; those paths
   degrade to metadata-only rows with error='decoder_unavailable' (header
@@ -460,87 +460,6 @@ def decode_png(payload: bytes):
     return out
 
 
-_MAX_PNG_TEXT = 64 * 1024  # per-chunk decompressed text cap (bomb guard)
-
-
-def png_text_chunks(payload: bytes) -> list:
-    """PNG textual metadata (tEXt latin-1, zTXt zlib latin-1, iTXt
-    utf-8 optionally zlib) as (keyword, text) pairs in chunk order —
-    Software/Comment/Author provenance without decoding pixels.
-    Per-chunk text capped (bomb guard); malformed chunks raise
-    ValueError."""
-    if not payload.startswith(_PNG_SIG):
-        raise ValueError("not_a_png")
-    out = []
-    pos = 8
-    n = len(payload)
-    while pos + 8 <= n:
-        (clen,) = struct.unpack(">I", payload[pos : pos + 4])
-        typ = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + clen]
-        if len(data) < clen:
-            raise ValueError("truncated_png_chunk")
-        if typ == b"IEND":
-            break
-        if typ in (b"tEXt", b"zTXt", b"iTXt"):
-            kw, sep, rest = data.partition(b"\x00")
-            if not sep or not kw or len(kw) > 79:
-                raise ValueError("bad_png_text_keyword")
-            if typ == b"tEXt":
-                text = rest.decode("latin-1")
-            elif typ == b"zTXt":
-                if not rest or rest[0] != 0:
-                    raise ValueError("bad_ztxt_method")
-                text = inflate_png_text(rest[1:]).decode("latin-1")
-            else:  # iTXt: compflag, compmethod, langtag\0, translated\0, text
-                if len(rest) < 2:
-                    raise ValueError("bad_itxt_header")
-                compflag, compmethod = rest[0], rest[1]
-                body = rest[2:]
-                _lang, sep1, body = body.partition(b"\x00")
-                _trans, sep2, body = body.partition(b"\x00")
-                if not (sep1 and sep2):
-                    raise ValueError("bad_itxt_header")
-                if compflag:
-                    if compmethod != 0:
-                        raise ValueError("bad_itxt_method")
-                    body = inflate_png_text(body)
-                try:
-                    text = body.decode("utf-8")
-                except UnicodeDecodeError:
-                    raise ValueError("bad_itxt_encoding")
-            out.append((kw.decode("latin-1"), text))
-        pos += 12 + clen  # len + type + data + crc
-    return out
-
-
-def inflate_png_text(data: bytes) -> bytes:
-    d = zlib.decompressobj()
-    out = d.decompress(data, _MAX_PNG_TEXT)
-    if d.unconsumed_tail:
-        raise ValueError("png_text_too_large")
-    return out + d.flush()
-
-
-def insert_png_text(png: bytes, keyword: str, text: str, kind: bytes = b"tEXt") -> bytes:
-    """Twin helper: splice one textual chunk right after IHDR."""
-    kw = keyword.encode("latin-1")
-    if kind == b"tEXt":
-        data = kw + b"\x00" + text.encode("latin-1")
-    elif kind == b"zTXt":
-        data = kw + b"\x00\x00" + zlib.compress(text.encode("latin-1"))
-    elif kind == b"iTXt":
-        data = kw + b"\x00\x01\x00en\x00\x00" + zlib.compress(text.encode("utf-8"))
-    else:
-        raise ValueError("unknown text chunk kind")
-    chunk = (
-        struct.pack(">I", len(data)) + kind + data
-        + struct.pack(">I", zlib.crc32(kind + data) & 0xFFFFFFFF)
-    )
-    ihdr_end = 8 + 8 + 13 + 4  # sig + len/type + IHDR body + crc
-    return png[:ihdr_end] + chunk + png[ihdr_end:]
-
-
 def encode_png(arr, row_filter=None, palette=None, interlace=0, depth=8) -> bytes:
     """Minimal deterministic PNG encoder (gray/gray-alpha/RGB/RGBA;
     palette via `palette=(n,3)` with `arr` as (h,w) indices; Adam7 via
@@ -831,60 +750,6 @@ def decode_pnm(payload: bytes):
             raise ValueError("pnm_sample_exceeds_maxval")
         px = arr * 255 // maxval
     return px.astype(np.uint8).reshape(h, w, channels)
-
-
-def encode_pnm(arr, kind: int = 6, maxval: int = 255) -> bytes:
-    """Deterministic netpbm encoder (synthesis/tests twin) for any of
-    the six formats. Bitmap kinds take 0/nonzero input (nonzero =
-    black, matching decode's polarity)."""
-    import numpy as np
-
-    a = np.asarray(arr)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    h, w, c = a.shape
-    bitmap = kind in (1, 4)
-    if (kind in (3, 6)) != (c == 3) or (bitmap and c != 1):
-        raise ValueError("channel count does not match PNM kind")
-    hdr = b"P%d\n# twin\n%d %d\n" % (kind, w, h)
-    if not bitmap:
-        hdr += b"%d\n" % maxval
-    if kind == 1:
-        body = b"\n".join(
-            b" ".join(b"1" if v else b"0" for v in row) for row in (a[:, :, 0] != 0)
-        )
-    elif kind in (2, 3):
-        body = b" ".join(b"%d" % v for v in a.astype(np.int64).ravel())
-    elif kind == 4:
-        body = np.packbits((a[:, :, 0] != 0).astype(np.uint8), axis=1).tobytes()
-    elif maxval > 255:
-        body = a.astype(">u2").tobytes()
-    else:
-        body = a.astype(np.uint8).tobytes()
-    return hdr + body
-
-
-def encode_wbmp(bitonal) -> bytes:
-    """Deterministic WBMP encoder (synthesis/tests twin): any nonzero
-    sample becomes a 1 (white) bit."""
-    import numpy as np
-
-    a = np.asarray(bitonal)
-    if a.ndim == 3:
-        a = a[:, :, 0]
-    h, w = a.shape
-
-    def mb(v):
-        out = bytearray()
-        out.append(v & 0x7F)
-        v >>= 7
-        while v:
-            out.insert(0, 0x80 | (v & 0x7F))
-            v >>= 7
-        return bytes(out)
-
-    packed = np.packbits((a != 0).astype(np.uint8), axis=1)
-    return b"\x00\x00" + mb(w) + mb(h) + packed.tobytes()
 
 
 def extract_media_metadata(media: DataFrame) -> DataFrame:
@@ -1895,315 +1760,6 @@ def _parse_ogg(b: bytes) -> dict:
     }
 
 
-_MAX_COMMENT_BYTES = 16 * 1024  # provenance-text cap (bomb guard)
-
-
-def gif_comments(payload: bytes) -> list:
-    """GIF comment-extension texts (0x21 0xFE sub-block chains) via a
-    block walk that skips image data — provenance strings (encoder
-    banners, watermarks) without decoding pixels. Total text capped."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not_a_gif")
-    if len(payload) < 13:
-        raise ValueError("truncated_gif")
-    flags = payload[10]
-    pos = 13 + (3 * (2 << (flags & 7)) if flags & 0x80 else 0)
-    n = len(payload)
-    out = []
-    total = 0
-
-    def skip_subblocks(p):
-        while p < n:
-            sz = payload[p]
-            p += 1
-            if sz == 0:
-                return p
-            p += sz
-        raise ValueError("truncated_gif_blocks")
-
-    while pos < n:
-        b = payload[pos]
-        if b == 0x3B:  # trailer
-            break
-        if b == 0x21:  # extension
-            if pos + 2 > n:
-                raise ValueError("truncated_gif_blocks")
-            label = payload[pos + 1]
-            pos += 2
-            if label == 0xFE:  # comment: collect sub-block data
-                text = bytearray()
-                while pos < n:
-                    sz = payload[pos]
-                    pos += 1
-                    if sz == 0:
-                        break
-                    text += payload[pos : pos + sz]
-                    pos += sz
-                else:
-                    raise ValueError("truncated_gif_blocks")
-                total += len(text)
-                if total > _MAX_COMMENT_BYTES:
-                    raise ValueError("gif_comments_too_large")
-                out.append(bytes(text).decode("latin-1", errors="replace"))
-            else:
-                pos = skip_subblocks(pos)
-        elif b == 0x2C:  # image descriptor
-            if pos + 10 > n:
-                raise ValueError("truncated_gif_blocks")
-            iflags = payload[pos + 9]
-            pos += 10 + (3 * (2 << (iflags & 7)) if iflags & 0x80 else 0)
-            pos += 1  # LZW min code size
-            pos = skip_subblocks(pos)
-        else:
-            raise ValueError("bad_gif_block")
-    return out
-
-
-_SVG_TITLE_RE = re.compile(rb"<title[^>]*>(.{0,1024}?)</title>", re.S | re.I)
-_SVG_DESC_RE = re.compile(rb"<desc[^>]*>(.{0,4096}?)</desc>", re.S | re.I)
-
-
-def svg_title_desc(payload: bytes) -> dict:
-    """First <title>/<desc> text from an SVG (size-capped regex scan of
-    the leading bytes — the same codec-free tier as the SVG dimension
-    sniff). Gates on _svg_root so the provenance extractor agrees with
-    sniff_mime about what counts as SVG (DOCTYPE/comment prefixes
-    included). Raises ValueError when the payload is not SVG."""
-    if not _svg_root(payload):
-        raise ValueError("not_an_svg")
-    head = payload[:_MAX_TAG_SCAN]
-    out = {"title": "", "desc": ""}
-    m = _SVG_TITLE_RE.search(head)
-    if m:
-        out["title"] = m.group(1).decode("utf-8", errors="replace").strip()
-    m = _SVG_DESC_RE.search(head)
-    if m:
-        out["desc"] = m.group(1).decode("utf-8", errors="replace").strip()
-    return out
-
-
-def jpeg_exif(payload: bytes) -> dict:
-    """EXIF provenance metadata from a JPEG's APP1 segment (orientation,
-    make/model, DateTime(Original), pixel dims) — pure marker walk +
-    the shared TIFF IFD reader (tiffbmp.parse_exif); no pixel decode.
-    ValueError when the payload is not a JPEG or carries no EXIF APP1."""
-    import struct as _s
-
-    from .tiffbmp import parse_exif
-
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not_a_jpeg")
-    pos = 2
-    n = len(payload)
-    while pos + 4 <= n and payload[pos] == 0xFF:
-        marker = payload[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker == 0xDA:  # SOS: no EXIF past this point
-            break
-        (seglen,) = _s.unpack(">H", payload[pos + 2 : pos + 4])
-        seg = payload[pos + 4 : pos + 2 + seglen]
-        if marker == 0xE1 and seg[:6] == b"Exif\x00\x00":
-            return parse_exif(seg[6:])
-        pos += 2 + seglen
-    raise ValueError("no_exif_app1")
-
-
-def insert_exif_app1(jpeg: bytes, tiff_block: bytes) -> bytes:
-    """Twin helper: splice an EXIF APP1 segment right after SOI."""
-    import struct as _s
-
-    body = b"Exif\x00\x00" + tiff_block
-    return jpeg[:2] + b"\xff\xe1" + _s.pack(">H", len(body) + 2) + body + jpeg[2:]
-
-
-_ID3_TEXT_FRAMES = {b"TIT2": "title", b"TPE1": "artist", b"TALB": "album"}
-_ID3V22_TEXT_FRAMES = {b"TT2": "title", b"TP1": "artist", b"TAL": "album"}
-_VORBIS_COMMENT_KEYS = {"title": "title", "artist": "artist", "album": "album"}
-_MAX_TAG_SCAN = 1024 * 1024  # tag-region cap (bomb guard)
-
-
-def _id3_syncsafe(b: bytes) -> int:
-    return (b[0] << 21) | (b[1] << 14) | (b[2] << 7) | b[3]
-
-
-def _id3_deunsync(b: bytes) -> bytes:
-    """Reverse ID3v2 unsynchronisation: every FF 00 byte pair becomes a
-    lone FF (the encoder inserted the 00 so no false MPEG sync pattern
-    FF Ex — or a stuffed FF 00 — appears inside the tag; id3v2.3 §5 /
-    id3v2.4 §6.1). bytes.replace scans left-to-right non-overlapping, so
-    the encoder's FF 00 00 (for an original FF 00) correctly becomes
-    FF 00."""
-    return b.replace(b"\xff\x00", b"\xff")
-
-
-def _id3_unsync_stuff(b: bytes) -> bytes:
-    """Apply ID3v2 unsynchronisation (synthesis-twin side): insert 00
-    after any FF that precedes a 111xxxxx byte or a 00 (or ends the
-    buffer) — exactly the patterns the spec requires encoders to break."""
-    out = bytearray()
-    n = len(b)
-    for i, c in enumerate(b):
-        out.append(c)
-        if c == 0xFF and (i + 1 == n or b[i + 1] >= 0xE0 or b[i + 1] == 0):
-            out.append(0)
-    return bytes(out)
-
-
-def _id3_text(data: bytes) -> str:
-    """Decode one ID3v2 text frame body: leading encoding byte then the
-    string (0 latin-1, 1 utf-16 with BOM, 2 utf-16be, 3 utf-8)."""
-    if not data:
-        return ""
-    enc, body = data[0], data[1:]
-    try:
-        if enc == 0:
-            return body.decode("latin-1").rstrip("\x00")
-        if enc == 1:
-            return body.decode("utf-16").rstrip("\x00")
-        if enc == 2:
-            return body.decode("utf-16-be").rstrip("\x00")
-        if enc == 3:
-            return body.decode("utf-8").rstrip("\x00")
-    except UnicodeDecodeError:
-        raise ValueError("bad_id3_text")
-    raise ValueError(f"bad_id3_encoding {enc}")
-
-
-def audio_tags(payload: bytes) -> dict:
-    """Header-walk tag metadata (title/artist/album) — the filter-by-
-    provenance fields a training-data pipeline wants from audio files
-    without decoding any audio:
-
-    - MP3: ID3v2.2 (3-byte frame ids/sizes), v2.3 (plain big-endian
-      frame sizes), v2.4 (syncsafe sizes); falls back to the fixed-
-      layout ID3v1 trailer. Unsynchronised tags are supported: v2.2/v2.3
-      unstuff the WHOLE tag before frame parsing (frame sizes refer to
-      unstuffed data), v2.4 unstuffs per frame (sizes are on-disk) via
-      the global flag or the per-frame format flag 0x02, honoring the
-      0x01 data-length-indicator prefix.
-    - OGG: Vorbis comment header / OpusTags (UTF-8 KEY=value pairs,
-      case-insensitive keys) reassembled from the page stream.
-
-    Returns {container, tag_source, title, artist, album}; tag_source
-    '' when the payload carries no recognizable tags."""
-    out = {"container": "", "tag_source": "", "title": "", "artist": "", "album": ""}
-    n = len(payload)
-    if payload[:3] == b"ID3" and n >= 10:
-        out["container"] = "mp3"
-        ver, flags = payload[3], payload[5]
-        unsync = bool(flags & 0x80)
-        size = min(_id3_syncsafe(payload[6:10]), _MAX_TAG_SCAN)
-        body = payload[10 : 10 + size]
-        if unsync and ver in (2, 3):
-            # the common 2.3-era layout: the tag header's size counts the
-            # stuffed bytes, everything after it is unstuffed in one pass
-            body = _id3_deunsync(body)
-        pos = 0
-        if ver in (3, 4) and flags & 0x40 and len(body) >= 4:
-            # extended header: self-sized (syncsafe in v2.4, plain in v2.3)
-            ext = _id3_syncsafe(body[0:4]) if ver == 4 else int.from_bytes(body[0:4], "big") + 4
-            pos = min(ext, len(body))
-        if ver in (3, 4):
-            while pos + 10 <= len(body):
-                fid = body[pos : pos + 4]
-                if fid == b"\x00\x00\x00\x00":
-                    break
-                fsz = (
-                    _id3_syncsafe(body[pos + 4 : pos + 8])
-                    if ver == 4
-                    else int.from_bytes(body[pos + 4 : pos + 8], "big")
-                )
-                if fsz > len(body) - pos - 10:
-                    break  # malformed size: stop, keep what parsed
-                key = _ID3_TEXT_FRAMES.get(fid)
-                if key and not out[key]:
-                    data = body[pos + 10 : pos + 10 + fsz]
-                    if ver == 4:
-                        fmt = body[pos + 9]
-                        if fmt & 0x01:  # data-length indicator (4 syncsafe
-                            data = data[4:]  # bytes of unstuffed length)
-                        if unsync or fmt & 0x02:
-                            data = _id3_deunsync(data)
-                    out[key] = _id3_text(data)
-                pos += 10 + fsz
-            out["tag_source"] = f"id3v2.{ver}"
-            return out
-        if ver == 2:
-            while pos + 6 <= len(body):
-                fid = body[pos : pos + 3]
-                if fid == b"\x00\x00\x00":
-                    break
-                fsz = int.from_bytes(body[pos + 3 : pos + 6], "big")
-                if fsz > len(body) - pos - 6:
-                    break
-                key = _ID3V22_TEXT_FRAMES.get(fid)
-                if key and not out[key]:
-                    out[key] = _id3_text(body[pos + 6 : pos + 6 + fsz])
-                pos += 6 + fsz
-            out["tag_source"] = "id3v2.2"
-            return out
-        raise NotImplementedError(f"id3v2 version {ver}")
-    if n >= 2 and payload[0] == 0xFF and (payload[1] & 0xE0) == 0xE0:
-        out["container"] = "mp3"
-        if n >= 128 and payload[-128:-125] == b"TAG":
-            t = payload[-128:]
-            out["tag_source"] = "id3v1"
-            out["title"] = t[3:33].decode("latin-1").rstrip("\x00 ")
-            out["artist"] = t[33:63].decode("latin-1").rstrip("\x00 ")
-            out["album"] = t[63:93].decode("latin-1").rstrip("\x00 ")
-        return out
-    if payload[:4] == b"OggS":
-        out["container"] = "ogg"
-        # reassemble page payloads (bounded) and locate the comment packet
-        data = bytearray()
-        pos = 0
-        while pos + 27 <= n and len(data) < _MAX_TAG_SCAN:
-            if payload[pos : pos + 4] != b"OggS":
-                break
-            nsegs = payload[pos + 26]
-            lace = payload[pos + 27 : pos + 27 + nsegs]
-            body_start = pos + 27 + nsegs
-            blen = sum(lace)
-            data += payload[body_start : body_start + blen]
-            pos = body_start + blen
-        for magic, source in ((b"\x03vorbis", "vorbis_comment"), (b"OpusTags", "opus_tags")):
-            at = bytes(data).find(magic)
-            if at == -1:
-                continue
-            p = at + len(magic)
-            if p + 4 > len(data):
-                raise ValueError("truncated_comment_header")
-            vlen = int.from_bytes(data[p : p + 4], "little")
-            p += 4 + vlen
-            if p + 4 > len(data):
-                raise ValueError("truncated_comment_header")
-            count = int.from_bytes(data[p : p + 4], "little")
-            p += 4
-            for _ in range(min(count, 1024)):
-                if p + 4 > len(data):
-                    raise ValueError("truncated_comment_header")
-                clen = int.from_bytes(data[p : p + 4], "little")
-                p += 4
-                item = bytes(data[p : p + clen])
-                p += clen
-                if len(item) < clen:
-                    raise ValueError("truncated_comment_header")
-                try:
-                    text = item.decode("utf-8")
-                except UnicodeDecodeError:
-                    raise ValueError("bad_comment_encoding")
-                k, sep, v = text.partition("=")
-                key = _VORBIS_COMMENT_KEYS.get(k.lower())
-                if sep and key and not out[key]:
-                    out[key] = v
-            out["tag_source"] = source
-            break
-        return out
-    raise ValueError("no_tag_container")
-
-
 def audio_stream_info(payload: bytes) -> dict:
     """Header-walk audio metadata for containers whose PCM decode needs an
     external codec: MP3 (MPEG frame headers) and OGG (Vorbis/Opus ident +
@@ -2232,53 +1788,11 @@ def encode_mp3_headers(n_mp3_frames: int, kbps_idx: int, rate_idx: int, mono: bo
     return (hdr + b"\x00" * (flen - 4)) * n_mp3_frames
 
 
-def encode_id3v2(
-    version: int = 4, title: str = "", artist: str = "", album: str = "",
-    mp3_body: bytes = b"", unsync: bool = False, encoding: int = 3,
-) -> bytes:
-    """Synthesis twin for audio_tags: an ID3v2.2/2.3/2.4 tag block
-    prepended to `mp3_body`. encoding selects the text-frame encoding
-    byte for v2.3/4 (3 utf-8 default, 1 utf-16-with-BOM — whose FF FE
-    BOM is the classic unsynchronisation trigger); v2.2 always writes
-    latin-1. unsync=True applies the spec's stuffing: whole-tag for
-    v2.2/v2.3 (tag size counts stuffed bytes), per-frame for v2.4
-    (format flag 0x02, on-disk frame sizes)."""
-    frames = b""
-    if version in (3, 4):
-        enc_name = {3: "utf-8", 1: "utf-16", 0: "latin-1"}[encoding]
-        for fid, value in ((b"TIT2", title), (b"TPE1", artist), (b"TALB", album)):
-            if not value:
-                continue
-            data = bytes([encoding]) + value.encode(enc_name)
-            fmt = 0
-            if unsync and version == 4:
-                data = _id3_unsync_stuff(data)
-                fmt = 0x02
-            sz = (
-                bytes([(len(data) >> s) & 0x7F for s in (21, 14, 7, 0)])
-                if version == 4
-                else len(data).to_bytes(4, "big")
-            )
-            frames += fid + sz + bytes([0, fmt]) + data
-    elif version == 2:
-        for fid, value in ((b"TT2", title), (b"TP1", artist), (b"TAL", album)):
-            if not value:
-                continue
-            data = b"\x00" + value.encode("latin-1")
-            frames += fid + len(data).to_bytes(3, "big") + data
-    else:
-        raise ValueError("id3v2 version must be 2, 3 or 4")
-    if unsync and version in (2, 3):
-        frames = _id3_unsync_stuff(frames)
-    size = bytes([(len(frames) >> s) & 0x7F for s in (21, 14, 7, 0)])
-    return b"ID3" + bytes([version, 0, 0x80 if unsync else 0]) + size + frames + mp3_body
-
-
 def encode_ogg_vorbis(
     granule: int, rate: int, channels: int, nominal_bps: int,
     comments: dict | None = None, opus: bool = False,
 ) -> bytes:
-    """Synthesis twin for _parse_ogg and audio_tags: BOS page carrying a
+    """Synthesis twin for _parse_ogg: BOS page carrying a
     Vorbis identification header (or OpusHead), an optional comment page
     (Vorbis comment / OpusTags KEY=value pairs), and an EOS page whose
     granule is the total sample count. CRC left zero (the walk doesn't
@@ -2337,91 +1851,6 @@ def encode_ogg_vorbis(
         out += page(0x00, -1, packet, seq)
         seq += 1
     return out + page(0x04, granule, b"", seq)
-
-
-IMAGE_EXIF_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("orientation", IntegerType()),
-        StructField("make", StringType()),
-        StructField("model", StringType()),
-        StructField("datetime", StringType()),
-        StructField("datetime_original", StringType()),
-        StructField("pixel_x", IntegerType()),
-        StructField("pixel_y", IntegerType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
-def extract_image_exif(media: DataFrame) -> DataFrame:
-    """mapInPandas stage over jpeg_exif: per-payload EXIF provenance
-    fields (orientation/make/model/timestamps/dims) with the standard
-    per-row degradation contract. error='no_exif' for JPEGs without an
-    APP1 EXIF block (the common case, not a corruption)."""
-    import pandas as pd
-
-    def exif_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in IMAGE_EXIF_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf.media_id, pdf.payload):
-                b = bytes(payload) if payload is not None else b""
-                row = {"media_id": media_id, "orientation": 0, "make": "",
-                       "model": "", "datetime": "", "datetime_original": "",
-                       "pixel_x": 0, "pixel_y": 0, "error": ""}
-                try:
-                    row.update(jpeg_exif(b))
-                except ValueError as e:
-                    row["error"] = "no_exif" if str(e) == "no_exif_app1" else "corrupt_exif"
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(exif_batch, IMAGE_EXIF_SCHEMA)
-
-
-AUDIO_TAGS_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("container", StringType()),
-        StructField("tag_source", StringType()),
-        StructField("title", StringType()),
-        StructField("artist", StringType()),
-        StructField("album", StringType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
-def extract_audio_tags(media: DataFrame) -> DataFrame:
-    """mapInPandas stage over audio_tags: per-payload title/artist/album
-    provenance fields (ID3v1/v2, Vorbis comment, OpusTags) with the
-    standard per-row degradation contract."""
-    import pandas as pd
-
-    def tag_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in AUDIO_TAGS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf.media_id, pdf.payload):
-                b = bytes(payload) if payload is not None else b""
-                row = {"media_id": media_id, "container": "", "tag_source": "",
-                       "title": "", "artist": "", "album": "", "error": ""}
-                try:
-                    row.update(audio_tags(b))
-                except NotImplementedError:
-                    row["error"] = "decoder_unavailable"
-                except ValueError as e:
-                    # absence of a tag container (WAV/FLAC/random bytes)
-                    # is not corruption — mirror the exif stage's
-                    # no_exif/corrupt_exif distinction
-                    row["error"] = (
-                        "no_tags" if str(e) == "no_tag_container" else "corrupt_tags"
-                    )
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(tag_batch, AUDIO_TAGS_SCHEMA)
 
 
 def extract_audio_features(media: DataFrame) -> DataFrame:

@@ -13,11 +13,11 @@ Three tiers, by what the container can decode:
   non-image streams using a filter that genuinely needs an external codec
   raise ``UnsupportedFilterError`` and the row degrades to
   error='decoder_unavailable'.
-- IMAGE XOBJECT DECODE (real): ``extract_pdf_images`` decodes embedded
-  /Subtype /Image streams — DCTDecode via the in-repo baseline+progressive
-  JPEG decoder (jpeg.decode_jpeg), CCITTFaxDecode G3/G4 via the in-repo
-  T.4/T.6 decoder (ccitt.decode_ccitt), raw/Flate/LZW sample streams by
-  geometry. Only JPX (JPEG2000) and JBIG2 remain per-image
+- IMAGE XOBJECT DECODE (real): ``extract_pdf_profile`` decodes the
+  first embedded /Subtype /Image stream — DCTDecode via the in-repo
+  baseline+progressive JPEG decoder (jpeg.decode_jpeg), CCITTFaxDecode
+  G3/G4 via the in-repo T.4/T.6 decoder (ccitt.decode_ccitt), raw/Flate/
+  LZW sample streams by geometry. Only JPX (JPEG2000) and JBIG2 remain per-image
   'decoder_unavailable' degradations.
 - STRUCTURAL PARSE (real, codec-free): header/version sniffing, page
   counting, object/stream census, embedded-metadata extraction via raw
@@ -710,26 +710,6 @@ def _iter_image_streams(payload: bytes):
             yield onum, ogen, obj_dict, raw
 
 
-def extract_pdf_images(payload: bytes, max_images: int = 64) -> list:
-    """Per-image decode walk: every /Subtype /Image stream object yields a
-    feature dict (dims, channels, pixel digest in the engine's standard
-    md5-over-lowercase-hex basis, mean). Filters needing a genuinely
-    external codec (JPX/JBIG2) degrade per-image to
-    error='decoder_unavailable'; malformed payloads to 'corrupt_image'."""
-    crypto = get_encryption(payload)
-    out = []
-    for onum, ogen, obj_dict, raw in _iter_image_streams(payload):
-        if crypto is not None and not crypto.ok:
-            row = {"width": 0, "height": 0, "channels": 0, "img_filter": "",
-                   "px_md5": "", "mean_x1000": 0, "error": "encrypted"}
-        else:
-            row = _image_feature_row(obj_dict, raw, crypto, onum, ogen)
-        out.append({"image_index": len(out), **row})
-        if len(out) >= max_images:
-            break
-    return out
-
-
 def _pdf_string(body: bytes, i: int) -> tuple[bytes, int]:
     """Decode a PDF literal string starting at the '(' at index i; returns
     (decoded bytes, index just past the closing paren). Handles balanced
@@ -855,8 +835,8 @@ def extract_pdf_text(payload: bytes) -> str:
     """Text extraction over uncompressed/Flate content streams (stdlib zlib
     — no external codec). Text shows within one stream concatenate in
     order; streams are separated by newlines. Image XObject streams carry
-    no text operators and are SKIPPED here (they get their own decode walk,
-    extract_pdf_images) — a real-world PDF full of DCT photos must still
+    no text operators and are SKIPPED here (extract_pdf_profile decodes
+    the first one) — a real-world PDF full of DCT photos must still
     yield its text, not degrade whole-row. Raises UnsupportedFilterError
     when a non-image stream needs a codec this container lacks."""
     crypto = get_encryption(payload)

@@ -169,42 +169,8 @@ except ImportError:  # pragma: no cover
     _Cipher = None
 
 
-def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """AES-CBC over already-block-aligned data (no padding added)."""
-    if len(data) % 16:
-        raise ValueError("aes_cbc_encrypt: data not block-aligned")
-    if _Cipher is not None:
-        enc = _Cipher(_AES(key), _CBC(iv)).encryptor()
-        return enc.update(data) + enc.finalize()
-    rk = _expand_key(key)
-    out = bytearray()
-    prev = iv
-    for off in range(0, len(data), 16):
-        prev = _encrypt_block(rk, bytes(a ^ b for a, b in zip(data[off : off + 16], prev)))
-        out += prev
-    return bytes(out)
-
-
-def aes_cbc_decrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """AES-CBC decrypt of block-aligned data (no padding removed)."""
-    if len(data) % 16:
-        raise ValueError("aes_cbc_decrypt: data not block-aligned")
-    if _Cipher is not None:
-        dec = _Cipher(_AES(key), _CBC(iv)).decryptor()
-        return dec.update(data) + dec.finalize()
-    rk = _expand_key(key)
-    out = bytearray()
-    prev = iv
-    for off in range(0, len(data), 16):
-        blk = data[off : off + 16]
-        out += bytes(a ^ b for a, b in zip(_decrypt_block(rk, blk), prev))
-        prev = blk
-    return bytes(out)
-
-
 def _pure_aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """Pure-Python CBC path regardless of the fast-path import — exists
-    so tests can assert fallback == cryptography on identical inputs."""
+    """The pure-Python CBC loop: aes_cbc_encrypt's fallback."""
     rk = _expand_key(key)
     out = bytearray()
     prev = iv
@@ -215,6 +181,7 @@ def _pure_aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
 
 
 def _pure_aes_cbc_decrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
+    """The pure-Python CBC loop: aes_cbc_decrypt's fallback."""
     rk = _expand_key(key)
     out = bytearray()
     prev = iv
@@ -223,6 +190,26 @@ def _pure_aes_cbc_decrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
         out += bytes(a ^ b for a, b in zip(_decrypt_block(rk, blk), prev))
         prev = blk
     return bytes(out)
+
+
+def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
+    """AES-CBC over already-block-aligned data (no padding added)."""
+    if len(data) % 16:
+        raise ValueError("aes_cbc_encrypt: data not block-aligned")
+    if _Cipher is None:
+        return _pure_aes_cbc_encrypt(key, iv, data)
+    enc = _Cipher(_AES(key), _CBC(iv)).encryptor()
+    return enc.update(data) + enc.finalize()
+
+
+def aes_cbc_decrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
+    """AES-CBC decrypt of block-aligned data (no padding removed)."""
+    if len(data) % 16:
+        raise ValueError("aes_cbc_decrypt: data not block-aligned")
+    if _Cipher is None:
+        return _pure_aes_cbc_decrypt(key, iv, data)
+    dec = _Cipher(_AES(key), _CBC(iv)).decryptor()
+    return dec.update(data) + dec.finalize()
 
 
 # ---------------------------------------------------------------------------

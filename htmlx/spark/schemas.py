@@ -7,7 +7,6 @@ longs (output.go:270-302).
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -16,17 +15,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampType,
-)
-
-# Input: Common-Crawl-style pages table (BASELINE.json input_hint)
-INPUT_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("warc_ts", TimestampType()),
-        StructField("html", BinaryType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-    ]
 )
 
 IMAGE_TYPE = StructType(

@@ -406,197 +406,6 @@ def decode_tga(payload: bytes):
     return np.ascontiguousarray(img.astype(np.uint8))
 
 
-def encode_tga(arr, rle: bool = False, top_down: bool = True, palette=None) -> bytes:
-    """Deterministic TGA encoder (synthesis/tests twin): gray (type 3),
-    truecolor 24/32 (type 2), or color-mapped via `palette` (type 1,
-    (n, 3|4) BGR(A) rows with `arr` as indices); +8 when rle."""
-    import numpy as np
-
-    a = np.asarray(arr, np.uint8)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    h, w, c = a.shape
-    if palette is not None:
-        pal = np.asarray(palette, np.uint8)
-        imgtype, bpp, cmtype = 1, 8, 1
-        body_px = a[:, :, 0]
-        cm_spec = struct.pack("<HHB", 0, pal.shape[0], pal.shape[1] * 8)
-        cm_data = pal.tobytes()
-    elif c == 1:
-        imgtype, bpp, cmtype = 3, 8, 0
-        body_px = a[:, :, 0]
-        cm_spec = struct.pack("<HHB", 0, 0, 0)
-        cm_data = b""
-    else:
-        imgtype, bpp, cmtype = 2, c * 8, 0
-        if c == 3:
-            body_px = a[:, :, ::-1]  # RGB -> BGR
-        else:
-            body_px = np.stack([a[:, :, 2], a[:, :, 1], a[:, :, 0], a[:, :, 3]], 2)
-        cm_spec = struct.pack("<HHB", 0, 0, 0)
-        cm_data = b""
-    if not top_down:
-        body_px = body_px[::-1]
-    flat = body_px.reshape(h, -1)
-    px_bytes = bpp // 8
-
-    if rle:
-        imgtype += 8
-        out = bytearray()
-        row_px = flat.reshape(h, w, px_bytes)
-        for y in range(h):
-            x = 0
-            while x < w:
-                px = row_px[y, x].tobytes()
-                run = 1
-                while x + run < w and run < 128 and row_px[y, x + run].tobytes() == px:
-                    run += 1
-                if run > 1:
-                    out += bytes([0x80 | (run - 1)]) + px
-                    x += run
-                else:
-                    start = x
-                    while (
-                        x < w and x - start < 128
-                        and not (
-                            x + 1 < w
-                            and row_px[y, x + 1].tobytes() == row_px[y, x].tobytes()
-                        )
-                    ):
-                        x += 1
-                    out += bytes([x - start - 1]) + row_px[y, start:x].tobytes()
-        body = bytes(out)
-    else:
-        body = flat.tobytes()
-    hdr = (
-        bytes([0, cmtype, imgtype]) + cm_spec
-        + struct.pack("<HHHH", 0, 0, w, h)
-        + bytes([bpp, 0x20 if top_down else 0x00])
-    )
-    return hdr + cm_data + body
-
-
-# EXIF: a TIFF IFD structure embedded in JPEG APP1 (offsets relative to
-# the TIFF header, so the shared IFD reader applies unchanged). Core
-# provenance tags only — the fields a corpus pipeline filters on.
-_EXIF_IFD0_TAGS = {
-    0x010F: "make", 0x0110: "model", 0x0112: "orientation",
-    0x0132: "datetime", 0x8769: "_exif_ptr",
-}
-_EXIF_SUB_TAGS = {0x9003: "datetime_original", 0xA002: "pixel_x", 0xA003: "pixel_y"}
-
-
-def _walk_ifd(payload: bytes, bo: str, ifd_off: int, tags: dict) -> dict:
-    if ifd_off + 2 > len(payload):
-        raise ValueError("truncated_ifd")
-    (n_entries,) = struct.unpack(bo + "H", payload[ifd_off : ifd_off + 2])
-    out = {}
-    for i in range(n_entries):
-        e = payload[ifd_off + 2 + i * 12 : ifd_off + 14 + i * 12]
-        if len(e) < 12:
-            raise ValueError("truncated_ifd")
-        tag, typ, count = struct.unpack(bo + "HHI", e[:8])
-        name = tags.get(tag)
-        if name is None:
-            continue
-        if count > 64 * 1024:
-            raise ValueError("exif_value_too_large")
-        v = _read_ifd_values(payload, bo, typ, count, e[8:12])
-        if v is None:
-            continue
-        if typ == 2:
-            out[name] = bytes(v).split(b"\x00")[0].decode("latin-1", errors="replace")
-        elif v:
-            out[name] = int(v[0])
-    return out
-
-
-def parse_exif(tiff: bytes) -> dict:
-    """Parse the provenance fields from an EXIF TIFF block (IFD0 +
-    Exif sub-IFD): orientation, make/model, DateTime(Original), pixel
-    dimensions. The IFD machinery is the same one the real-TIFF anchors
-    pin. Raises ValueError on malformed structures."""
-    if tiff[:4] not in (b"II*\x00", b"MM\x00*"):
-        raise ValueError("not_exif_tiff")
-    bo = "<" if tiff[:2] == b"II" else ">"
-    try:
-        (ifd0,) = struct.unpack(bo + "I", tiff[4:8])
-        out = {"orientation": 0, "make": "", "model": "", "datetime": "",
-               "datetime_original": "", "pixel_x": 0, "pixel_y": 0}
-        vals = _walk_ifd(tiff, bo, ifd0, _EXIF_IFD0_TAGS)
-        ptr = vals.pop("_exif_ptr", None)
-        out.update(vals)
-        if ptr:
-            out.update(_walk_ifd(tiff, bo, int(ptr), _EXIF_SUB_TAGS))
-        return out
-    except struct.error:
-        raise ValueError("truncated_exif")
-
-
-def encode_exif(
-    make: str = "", model: str = "", orientation: int = 1, datetime: str = "",
-    datetime_original: str = "", pixel_x: int = 0, pixel_y: int = 0,
-    little: bool = True,
-) -> bytes:
-    """Deterministic EXIF TIFF-block builder (synthesis/tests twin of
-    parse_exif): IFD0 with the provenance tags + an Exif sub-IFD, either
-    byte order, long ASCII values spilled to the data area per spec."""
-    bo = "<" if little else ">"
-
-    def build_ifd(entries, base_off):
-        data_area = b""
-        body = b""
-        data_off = base_off + 2 + 12 * len(entries) + 4
-        for tag, typ, val in entries:
-            if typ == 2:
-                raw = val.encode("latin-1") + b"\x00"
-                count = len(raw)
-                if count <= 4:
-                    field = raw.ljust(4, b"\x00")
-                else:
-                    field = struct.pack(bo + "I", data_off + len(data_area))
-                    data_area += raw
-            elif typ == 3:
-                count = 1
-                field = struct.pack(bo + "H", val) + b"\x00\x00"
-            else:  # LONG
-                count = 1
-                field = struct.pack(bo + "I", val)
-            body += struct.pack(bo + "HHI", tag, typ, count) + field
-        return (
-            struct.pack(bo + "H", len(entries)) + body
-            + struct.pack(bo + "I", 0) + data_area
-        )
-
-    sub_entries = []
-    if datetime_original:
-        sub_entries.append((0x9003, 2, datetime_original))
-    if pixel_x:
-        sub_entries.append((0xA002, 4, pixel_x))
-    if pixel_y:
-        sub_entries.append((0xA003, 4, pixel_y))
-
-    def ifd0_entries(ptr):
-        entries = []
-        if make:
-            entries.append((0x010F, 2, make))
-        if model:
-            entries.append((0x0110, 2, model))
-        entries.append((0x0112, 3, orientation))
-        if datetime:
-            entries.append((0x0132, 2, datetime))
-        if sub_entries:
-            entries.append((0x8769, 4, ptr))
-        return entries
-
-    ifd0 = build_ifd(ifd0_entries(0), 8)
-    sub_off = 8 + len(ifd0)
-    ifd0 = build_ifd(ifd0_entries(sub_off), 8)  # same length: ptr is fixed-width
-    sub = build_ifd(sub_entries, sub_off) if sub_entries else b""
-    hdr = (b"II*\x00" if little else b"MM\x00*") + struct.pack(bo + "I", 8)
-    return hdr + ifd0 + sub
-
-
 def tiff_dimensions(payload: bytes) -> tuple[int, int]:
     """Header-only (w, h) from the first IFD; (0, 0) on any damage."""
     try:
@@ -1228,48 +1037,3 @@ def decode_ico(payload: bytes):
     mbits = np.unpackbits(mrows, axis=1)[:, :w][::-1]
     alpha = np.where(mbits.astype(bool), 0, 255).astype(np.uint8)
     return np.concatenate([rgb, alpha[:, :, None]], axis=2)
-
-
-def encode_ico(images) -> bytes:
-    """Synthesis twin: each entry is ('png', png_bytes) or ('bmp', rgba
-    (h, w, 4) array) — BMP entries get a 32-bit DIB plus an AND mask
-    derived from alpha==0."""
-    import numpy as np
-
-    out = bytearray(b"\x00\x00\x01\x00" + struct.pack("<H", len(images)))
-    bodies = []
-    for kind, img in images:
-        if kind == "png":
-            body = img
-            w = struct.unpack(">I", img[16:20])[0]
-            h = struct.unpack(">I", img[20:24])[0]
-        else:
-            a = np.asarray(img, np.uint8)
-            h, w = a.shape[:2]
-            stride = (w * 4 + 3) & ~3
-            xor = bytearray()
-            for row in a[::-1]:
-                line = row[:, [2, 1, 0, 3]].tobytes()
-                xor += line + b"\x00" * (stride - len(line))
-            mask_stride = ((w + 31) // 32) * 4
-            mask = bytearray()
-            for row in a[::-1]:
-                bits = np.where(row[:, 3] == 0, 1, 0).astype(np.uint8)
-                packed = np.packbits(bits)
-                line = packed.tobytes()
-                mask += line + b"\x00" * (mask_stride - len(line))
-            dib = struct.pack(
-                "<IiiHHIIiiII", 40, w, h * 2, 1, 32, 0,
-                len(xor) + len(mask), 0, 0, 0, 0,
-            )
-            body = dib + bytes(xor) + bytes(mask)
-        bodies.append((w, h, body))
-    off = 6 + 16 * len(images)
-    for w, h, body in bodies:
-        out += bytes([w % 256, h % 256, 0, 0]) + struct.pack(
-            "<HHII", 1, 32, len(body), off
-        )
-        off += len(body)
-    for _, _, body in bodies:
-        out += body
-    return bytes(out)

@@ -11,10 +11,10 @@ specified in the public WebP Lossless Bitstream Specification (RFC 9649).
 
 Lossy VP8 frames genuinely require a full video-intra codec (boolean
 arithmetic decoder, DCT, loop filter) and degrade to
-error='decoder_unavailable'. The ALPH alpha-plane chunk of lossy files,
-however, uses this same VP8L entropy coder (compression method 1) and is
-decoded here for real — a real-encoder-produced ALPH stream is used as a
-conformance anchor in tests/test_vp8l.py.
+error='decoder_unavailable'. The ALPH alpha-plane chunk of lossy files
+uses this same VP8L entropy coder (compression method 1), so a
+real-encoder-produced ALPH stream serves as a conformance anchor for the
+entropy decoder in tests/test_vp8l.py.
 
 The 2D distance table is generated from the spec's neighborhood rule:
 the 120 closest (dx, dy) offsets with dy in 0..7, dx in -8..8 (same-row
@@ -539,61 +539,6 @@ def decode_vp8l(payload: bytes):
         raise ValueError("image_too_large")
     px = _decode_image_stream(bits, w, h, True)
     return _finalize(px, w, h)
-
-
-def decode_alpha_plane(payload: bytes, w: int, h: int):
-    """Decode an ALPH chunk payload (lossy WebP alpha) to (h, w) uint8.
-    Compression method 1 is the VP8L entropy coder with alpha in the
-    green channel; method 0 is raw bytes. Filtering methods 1-3 undo the
-    horizontal/vertical/gradient filters."""
-    import numpy as np
-
-    if not payload:
-        raise ValueError("empty_alpha")
-    head = payload[0]
-    compression = head & 3
-    filtering = (head >> 2) & 3
-    preprocessing = (head >> 4) & 3
-    if preprocessing not in (0, 1):
-        raise ValueError("bad_alpha_preprocessing")
-    if w * h > _MAX_PIXELS:
-        raise ValueError("image_too_large")
-    if compression == 0:
-        raw = payload[1 : 1 + w * h]
-        if len(raw) != w * h:
-            raise ValueError("truncated_alpha")
-        plane = np.frombuffer(raw, np.uint8).reshape(h, w).copy()
-    elif compression == 1:
-        bits = _LsbBits(payload, 8)
-        px = _decode_image_stream(bits, w, h, True)
-        plane = ((np.asarray(px, np.uint32).reshape(h, -1)[:, :w] >> 8) & 0xFF).astype(
-            np.uint8
-        )
-    else:
-        raise ValueError("bad_alpha_compression")
-    if filtering:
-        plane = plane.astype(np.int32)
-        for y in range(h):
-            for x in range(w):
-                if x == 0 and y == 0:
-                    pred = 0
-                elif filtering == 1:  # horizontal
-                    pred = plane[y, x - 1] if x else plane[y - 1, x]
-                elif filtering == 2:  # vertical
-                    pred = plane[y - 1, x] if y else plane[y, x - 1]
-                else:  # gradient
-                    if y == 0:
-                        pred = plane[y, x - 1]
-                    elif x == 0:
-                        pred = plane[y - 1, x]
-                    else:
-                        g = int(plane[y, x - 1]) + int(plane[y - 1, x]) - int(
-                            plane[y - 1, x - 1]
-                        )
-                        pred = _clamp(g)
-                plane[y, x] = (plane[y, x] + pred) & 0xFF
-        plane = plane.astype(np.uint8)
-    return plane
 
 
 def decode_webp(payload: bytes):

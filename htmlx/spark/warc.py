@@ -419,9 +419,7 @@ def _page_row(path: str, rec: dict, record_types: tuple):
 
 
 def _pages_gen(record_types: tuple):
-    """mapInPandas worker over (path, content) archive rows — shared by
-    the batch reader and the streaming twin so both produce identical
-    rows by construction."""
+    """mapInPandas worker over (path, content) archive rows."""
 
     def gen(batches):
         import pandas as pd
@@ -451,35 +449,6 @@ def read_warc(
     for run_extraction / latest_capture / url_filter.
     One archive = one binaryFile row = one Python task."""
     files = spark.read.format("binaryFile").load(path).select("path", "content")
-    return files.mapInPandas(_pages_gen(record_types), WARC_PAGES_SCHEMA)
-
-
-def read_warc_stream(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int = 4,
-    record_types: tuple = ("response",),
-) -> DataFrame:
-    """STREAMING twin of read_warc: a binaryFile file-source stream over
-    an archive directory — the shape of a live crawl, where ~1 GB
-    .warc.gz files land continuously in a bucket and should flow into
-    extraction as they arrive instead of waiting for the snapshot to
-    close. Stateless (record splitting is per-file), so no watermarks or
-    state stores; each micro-batch is maxFilesPerTrigger archives and
-    exactly-once lands on the sink's commit semantics (the same
-    foreachBatch seam start_extraction_stream uses). Rows are built by
-    the SAME per-archive worker as the batch reader, so batch and stream
-    agree byte-for-byte by construction."""
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(path)
-        .select("path", "content")
-    )
     return files.mapInPandas(_pages_gen(record_types), WARC_PAGES_SCHEMA)
 
 

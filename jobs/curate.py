@@ -835,10 +835,6 @@ def main():
         # to the IVF-bucketed path (~num_centroids x less pair work,
         # recall measured in test_ann.py). Same components machinery as
         # every other near-dup family.
-        if "qvec" in docs.columns and "embedding" not in docs.columns:
-            # int8-quantized table (quantize_embeddings output): restore
-            # the float view; error stays within the scale/2 bound
-            docs = analytics.dequantize_embeddings(docs)
         if getattr(args, "emb_approx", False):
             raw_pairs = analytics.embedding_near_dup_ivf(
                 docs, threshold=args.threshold,

@@ -1,0 +1,279 @@
+"""Reference oracles and fixture encoders that only tests use.
+
+The oracles pin a production path by comparison: `parse_stdlib` the fast
+tokenizer, `bpe_apply_merges` the rank-dict BPE encoder, and
+`corpus_filter_frame` the merged corpus_filter variants frame. The
+encoders build inputs for live decoders (TGA, ICO, PNM, WBMP), and
+`pdf_image_rows` runs extract_pdf_profile's per-image decode on every
+image of a payload. Nothing a shipped entry point runs reaches them.
+"""
+
+import struct
+
+import numpy as np
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from htmlx.core.dom import Node, _TreeBuilder
+from htmlx.spark import analytics
+from htmlx.spark.analytics import bpe_merge_step
+from htmlx.spark.pdf import _image_feature_row, _iter_image_streams
+from htmlx.spark.pdfcrypt import get_encryption
+
+
+def parse_stdlib(html_text: str) -> Node:
+    """dom.parse driven by html.parser instead of the fast tokenizer: the
+    differential oracle for the tokenizer."""
+    tb = _TreeBuilder()
+    try:
+        tb.feed(html_text)
+        tb.close()
+    except Exception:
+        pass
+    tb._ensure_body()
+    return tb.doc
+
+
+def bpe_apply_merges(word: str, merges) -> list:
+    """Encode one pretoken: apply trained merges in rank order. Rank
+    order equals iterate-lowest-rank (the GPT-2 encoder loop) because
+    training can only ever rank a composite pair AFTER the merges that
+    built its symbols. Reference implementation — O(M * len) per word;
+    the production encoder is bpe_encode_word (rank-dict loop, cost
+    scales with the word, not the merges table; pinned equal in
+    test_bpe.py)."""
+    syms = list(word)
+    for a, b in merges:
+        if len(syms) < 2:
+            break
+        syms = bpe_merge_step(syms, a, b)
+    return syms
+
+
+def corpus_filter_frame(docs, hash_basis: str, max_bucket_size):
+    """The composite training-corpus filter plan over a documents frame,
+    for ONE (hash_basis, max_bucket_size) policy: the reference that the
+    merged corpus_filter_variants_frame matches per variant (md5 basis
+    uncapped for the oracle variant, xxhash64 capped for production).
+
+    r10 shape (guide §2.4 — remove shuffles outright): the exact-dup
+    keeper is a min-window over the SAME md5 digest the base row already
+    computes (one digest shuffle; the former dedup_exact groupBy +
+    join-back paid the digest shuffle AND a corpus-wide join), lang-ID is
+    a scan-side COLUMN of base (it is a pure projection — the former
+    doc_id join shuffled the corpus once more for it), and the converged
+    component labels join in once (edge endpoints only). Two corpus-wide
+    exchanges total (digest window + label join) instead of five."""
+    docs = analytics.spread_small_input(docs)
+    base = analytics.with_lang_pred(docs.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        "text",
+    )).select(
+        "doc_id",
+        F.md5("text").alias("text_md5"),
+        F.length("text").alias("n_chars"),
+        "pred_lang",
+    ).withColumn(
+        "exact_keep", F.min("doc_id").over(Window.partitionBy("text_md5"))
+    )
+    cands = analytics.minhash_lsh_candidates(
+        docs, max_bucket_size=max_bucket_size, hash_basis=hash_basis
+    )
+    verified = (
+        analytics.ngram_jaccard_pairs(docs, cands)
+        .where(F.col("jaccard") >= 0.9)
+        .select("doc_a", "doc_b")
+    )
+    labels = analytics.propagate_min_labels(
+        verified, [], max_iters=50, until_converged=True
+    )
+    # no broadcast hints: every side here is corpus-sized at scale (the
+    # label table is bounded by near-dup endpoints but still grows with
+    # the corpus) — shuffle joins on uniform doc_id keys, right at 100 TB
+    joined = base.join(
+        labels.withColumnRenamed("doc_id", "__ldoc"),
+        F.col("doc_id") == F.col("__ldoc"),
+        "left",
+    ).withColumn(
+        "near_dup", F.col("doc_id") != F.coalesce("label", "doc_id")
+    )
+    reason = (
+        F.when(F.col("doc_id") != F.col("exact_keep"), F.lit("exact_dup"))
+        .when(F.col("near_dup"), F.lit("near_dup"))
+        .when(F.col("n_chars") < 100, F.lit("low_quality"))
+        .when(F.col("pred_lang") == "und", F.lit("und_lang"))
+        .otherwise(F.lit(""))
+    )
+    return joined.select(
+        "doc_id", reason.alias("reason")
+    ).withColumn("keep", (F.col("reason") == "").cast("boolean"))
+
+
+def encode_tga(arr, rle: bool = False, top_down: bool = True, palette=None) -> bytes:
+    """Deterministic TGA encoder (synthesis/tests twin): gray (type 3),
+    truecolor 24/32 (type 2), or color-mapped via `palette` (type 1,
+    (n, 3|4) BGR(A) rows with `arr` as indices); +8 when rle."""
+    a = np.asarray(arr, np.uint8)
+    if a.ndim == 2:
+        a = a[:, :, None]
+    h, w, c = a.shape
+    if palette is not None:
+        pal = np.asarray(palette, np.uint8)
+        imgtype, bpp, cmtype = 1, 8, 1
+        body_px = a[:, :, 0]
+        cm_spec = struct.pack("<HHB", 0, pal.shape[0], pal.shape[1] * 8)
+        cm_data = pal.tobytes()
+    elif c == 1:
+        imgtype, bpp, cmtype = 3, 8, 0
+        body_px = a[:, :, 0]
+        cm_spec = struct.pack("<HHB", 0, 0, 0)
+        cm_data = b""
+    else:
+        imgtype, bpp, cmtype = 2, c * 8, 0
+        if c == 3:
+            body_px = a[:, :, ::-1]  # RGB -> BGR
+        else:
+            body_px = np.stack([a[:, :, 2], a[:, :, 1], a[:, :, 0], a[:, :, 3]], 2)
+        cm_spec = struct.pack("<HHB", 0, 0, 0)
+        cm_data = b""
+    if not top_down:
+        body_px = body_px[::-1]
+    flat = body_px.reshape(h, -1)
+    px_bytes = bpp // 8
+
+    if rle:
+        imgtype += 8
+        out = bytearray()
+        row_px = flat.reshape(h, w, px_bytes)
+        for y in range(h):
+            x = 0
+            while x < w:
+                px = row_px[y, x].tobytes()
+                run = 1
+                while x + run < w and run < 128 and row_px[y, x + run].tobytes() == px:
+                    run += 1
+                if run > 1:
+                    out += bytes([0x80 | (run - 1)]) + px
+                    x += run
+                else:
+                    start = x
+                    while (
+                        x < w and x - start < 128
+                        and not (
+                            x + 1 < w
+                            and row_px[y, x + 1].tobytes() == row_px[y, x].tobytes()
+                        )
+                    ):
+                        x += 1
+                    out += bytes([x - start - 1]) + row_px[y, start:x].tobytes()
+        body = bytes(out)
+    else:
+        body = flat.tobytes()
+    hdr = (
+        bytes([0, cmtype, imgtype]) + cm_spec
+        + struct.pack("<HHHH", 0, 0, w, h)
+        + bytes([bpp, 0x20 if top_down else 0x00])
+    )
+    return hdr + cm_data + body
+
+
+def encode_ico(images) -> bytes:
+    """Synthesis twin: each entry is ('png', png_bytes) or ('bmp', rgba
+    (h, w, 4) array) — BMP entries get a 32-bit DIB plus an AND mask
+    derived from alpha==0."""
+    out = bytearray(b"\x00\x00\x01\x00" + struct.pack("<H", len(images)))
+    bodies = []
+    for kind, img in images:
+        if kind == "png":
+            body = img
+            w = struct.unpack(">I", img[16:20])[0]
+            h = struct.unpack(">I", img[20:24])[0]
+        else:
+            a = np.asarray(img, np.uint8)
+            h, w = a.shape[:2]
+            stride = (w * 4 + 3) & ~3
+            xor = bytearray()
+            for row in a[::-1]:
+                line = row[:, [2, 1, 0, 3]].tobytes()
+                xor += line + b"\x00" * (stride - len(line))
+            mask_stride = ((w + 31) // 32) * 4
+            mask = bytearray()
+            for row in a[::-1]:
+                bits = np.where(row[:, 3] == 0, 1, 0).astype(np.uint8)
+                packed = np.packbits(bits)
+                line = packed.tobytes()
+                mask += line + b"\x00" * (mask_stride - len(line))
+            dib = struct.pack(
+                "<IiiHHIIiiII", 40, w, h * 2, 1, 32, 0,
+                len(xor) + len(mask), 0, 0, 0, 0,
+            )
+            body = dib + bytes(xor) + bytes(mask)
+        bodies.append((w, h, body))
+    off = 6 + 16 * len(images)
+    for w, h, body in bodies:
+        out += bytes([w % 256, h % 256, 0, 0]) + struct.pack(
+            "<HHII", 1, 32, len(body), off
+        )
+        off += len(body)
+    for _, _, body in bodies:
+        out += body
+    return bytes(out)
+
+
+def encode_pnm(arr, kind: int = 6, maxval: int = 255) -> bytes:
+    """Deterministic netpbm encoder (synthesis/tests twin) for any of
+    the six formats. Bitmap kinds take 0/nonzero input (nonzero =
+    black, matching decode's polarity)."""
+    a = np.asarray(arr)
+    if a.ndim == 2:
+        a = a[:, :, None]
+    h, w, c = a.shape
+    bitmap = kind in (1, 4)
+    if (kind in (3, 6)) != (c == 3) or (bitmap and c != 1):
+        raise ValueError("channel count does not match PNM kind")
+    hdr = b"P%d\n# twin\n%d %d\n" % (kind, w, h)
+    if not bitmap:
+        hdr += b"%d\n" % maxval
+    if kind == 1:
+        body = b"\n".join(
+            b" ".join(b"1" if v else b"0" for v in row) for row in (a[:, :, 0] != 0)
+        )
+    elif kind in (2, 3):
+        body = b" ".join(b"%d" % v for v in a.astype(np.int64).ravel())
+    elif kind == 4:
+        body = np.packbits((a[:, :, 0] != 0).astype(np.uint8), axis=1).tobytes()
+    elif maxval > 255:
+        body = a.astype(">u2").tobytes()
+    else:
+        body = a.astype(np.uint8).tobytes()
+    return hdr + body
+
+
+def encode_wbmp(bitonal) -> bytes:
+    """Deterministic WBMP encoder (synthesis/tests twin): any nonzero
+    sample becomes a 1 (white) bit."""
+    a = np.asarray(bitonal)
+    if a.ndim == 3:
+        a = a[:, :, 0]
+    h, w = a.shape
+
+    def mb(v):
+        out = bytearray()
+        out.append(v & 0x7F)
+        v >>= 7
+        while v:
+            out.insert(0, 0x80 | (v & 0x7F))
+            v >>= 7
+        return bytes(out)
+
+    packed = np.packbits((a != 0).astype(np.uint8), axis=1)
+    return b"\x00\x00" + mb(w) + mb(h) + packed.tobytes()
+
+
+def pdf_image_rows(payload: bytes) -> list:
+    """extract_pdf_profile's per-image feature row, for every image."""
+    crypto = get_encryption(payload)
+    return [
+        _image_feature_row(obj_dict, raw, crypto, onum, ogen)
+        for onum, ogen, obj_dict, raw in _iter_image_streams(payload)
+    ]

@@ -200,134 +200,13 @@ def test_mp3_crc_protected_xing_frame_excluded():
     assert info["n_frames"] == 3 * 1152
 
 
-# ---------------------------------------------------------------------------
-# tag metadata (ID3v1/v2, Vorbis comment, OpusTags)
-# ---------------------------------------------------------------------------
-
-def test_id3v2_all_versions_roundtrip():
-    from htmlx.spark.multimodal import audio_tags, encode_id3v2, encode_mp3_headers
-
-    mp3 = encode_mp3_headers(n_mp3_frames=2, kbps_idx=1, rate_idx=0, mono=True)
-    for ver in (2, 3, 4):
-        t = audio_tags(encode_id3v2(ver, "A Title", "An Artist", "An Album", mp3))
-        assert t["container"] == "mp3" and t["tag_source"] == f"id3v2.{ver}"
-        assert (t["title"], t["artist"], t["album"]) == ("A Title", "An Artist", "An Album")
-    # utf-8 text survives v2.3/2.4
-    t = audio_tags(encode_id3v2(4, "Tïtleé", "", "", mp3))
-    assert t["title"] == "Tïtleé"
-
-
-def test_id3v1_trailer_fallback():
-    from htmlx.spark.multimodal import audio_tags, encode_mp3_headers
-
-    mp3 = encode_mp3_headers(n_mp3_frames=2, kbps_idx=1, rate_idx=0, mono=True)
-    tag = (b"TAG" + b"Old Title".ljust(30, b"\x00") + b"Old Artist".ljust(30, b"\x00")
-           + b"Old Album".ljust(30, b"\x00") + b"\x00" * 35)
-    t = audio_tags(mp3 + tag)
-    assert t["tag_source"] == "id3v1"
-    assert (t["title"], t["artist"], t["album"]) == ("Old Title", "Old Artist", "Old Album")
-    # bare mp3 without any tag: container recognized, no source
-    t = audio_tags(mp3)
-    assert t["container"] == "mp3" and t["tag_source"] == ""
-
-
 def test_vorbis_comment_and_opustags():
-    from htmlx.spark.multimodal import audio_stream_info, audio_tags, encode_ogg_vorbis
-
+    """A Vorbis comment / OpusTags page between the ident and EOS pages
+    does not disturb the header walk's stream info."""
     ogg = encode_ogg_vorbis(1000, 8000, 1, 64000,
                             comments={"title": "Song", "artist": "Band", "x": "y"})
-    t = audio_tags(ogg)
-    assert t["tag_source"] == "vorbis_comment"
-    assert t["title"] == "Song" and t["artist"] == "Band" and t["album"] == ""
-    # the header walk still reads the same stream info with the extra page
     info = audio_stream_info(ogg)
     assert info["sample_rate"] == 8000 and info["n_frames"] == 1000
 
     op = encode_ogg_vorbis(48000, 48000, 2, 0, comments={"album": "LP"}, opus=True)
-    t = audio_tags(op)
-    assert t["tag_source"] == "opus_tags" and t["album"] == "LP"
     assert audio_stream_info(op)["sample_rate"] == 48000
-
-
-def test_audio_tags_error_paths_and_spark_stage():
-    import pytest
-
-    from htmlx.spark.multimodal import audio_tags, encode_id3v2, encode_ogg_vorbis
-
-    with pytest.raises(ValueError):
-        audio_tags(b"RIFFxxxxWAVE")  # not a tag container
-    # truncated comment header -> corrupt, not crash
-    ogg = encode_ogg_vorbis(10, 8000, 1, 0, comments={"title": "x"})
-    cut = ogg[: ogg.find(b"\x03vorbis") + 9]
-    with pytest.raises(ValueError):
-        audio_tags(cut)
-
-    from htmlx.spark.multimodal import extract_audio_tags
-    from htmlx.spark.session import get_spark
-
-    spark = get_spark(cores=2, app_name="htmlx-audio-tags-test")
-    ogg_cut = bytearray(encode_ogg_vorbis(10, 8000, 1, 0, comments={"title": "x"}))
-    ogg_cut = ogg_cut[: bytes(ogg_cut).find(b"\x03vorbis") + 9]
-    media = spark.createDataFrame(
-        [(1, bytearray(encode_id3v2(3, "S", "B", "L",
-          b"\xff\xfb\x10\x00" + b"\x00" * 100))),
-         (2, bytearray(b"junk")),  # no tag container at all
-         (3, bytearray(ogg_cut))],  # recognized container, corrupt tags
-        "media_id long, payload binary",
-    )
-    rows = {r.media_id: r for r in extract_audio_tags(media).collect()}
-    assert rows[1].title == "S" and rows[1].error == ""
-    assert rows[2].error == "no_tags"
-    assert rows[3].error == "corrupt_tags"
-
-
-def test_id3v2_unsynchronisation():
-    """VERDICT r5 item 5: unsynchronised ID3v2 tags (the 2.3-era-common
-    FF-00 byte stuffing) parse instead of degrading. Covers the twin
-    round-trip in every version and two HAND-CONSTRUCTED spec-layout
-    tags (independent of the twin encoder), including a v2.4 frame with
-    both the unsync and data-length-indicator format flags."""
-    from htmlx.spark.multimodal import (
-        _id3_deunsync,
-        _id3_unsync_stuff,
-        audio_tags,
-        encode_id3v2,
-    )
-
-    # the stuffing primitives invert each other, including the FF 00
-    # corner the spec calls out (FF 00 -> FF 00 00 -> FF 00)
-    for raw in (b"\xff\xfe", b"\xff\x00", b"\xff\xff\xe0", b"ab\xff", b""):
-        assert _id3_deunsync(_id3_unsync_stuff(raw)) == raw
-
-    # twin round-trip: utf-16 BOM (FF FE) inside the frame data forces
-    # real stuffing in every version's layout
-    for ver in (2, 3, 4):
-        enc = {2: 3, 3: 1, 4: 1}[ver]  # v2.2 twin is latin-1 regardless
-        tag = encode_id3v2(ver, "Süper", "Art", "Alb", b"", unsync=True,
-                           encoding=enc)
-        assert tag[5] & 0x80
-        got = audio_tags(tag)
-        assert got["title"] == "Süper" and got["artist"] == "Art", (ver, got)
-        assert got["tag_source"] == f"id3v2.{ver}"
-
-    # hand-built v2.3 whole-tag unsync: TIT2 "Hi" in utf-16-with-BOM;
-    # the tag-header size counts the STUFFED bytes, the frame size (7)
-    # the unstuffed data
-    frame = b"TIT2" + (7).to_bytes(4, "big") + b"\x00\x00" + b"\x01\xff\xfe" + "Hi".encode("utf-16-le")
-    stuffed = frame.replace(b"\xff\xfe", b"\xff\x00\xfe")
-    assert len(stuffed) == len(frame) + 1
-    sz = bytes([(len(stuffed) >> s) & 0x7F for s in (21, 14, 7, 0)])
-    tag = b"ID3\x03\x00\x80" + sz + stuffed
-    assert audio_tags(tag)["title"] == "Hi"
-
-    # hand-built v2.4 per-frame unsync + data-length indicator (format
-    # flags 0x03): on-disk size = 4 (DLI) + stuffed data
-    data = b"\x01\xff\xfe" + "Yo".encode("utf-16-le")
-    stuffed = data.replace(b"\xff\xfe", b"\xff\x00\xfe")
-    dli = bytes([(len(data) >> s) & 0x7F for s in (21, 14, 7, 0)])
-    ondisk = dli + stuffed
-    fsz = bytes([(len(ondisk) >> s) & 0x7F for s in (21, 14, 7, 0)])
-    frame = b"TIT2" + fsz + b"\x00\x03" + ondisk
-    sz = bytes([(len(frame) >> s) & 0x7F for s in (21, 14, 7, 0)])
-    tag = b"ID3\x04\x00\x00" + sz + frame  # per-frame flag only, no global
-    assert audio_tags(tag)["title"] == "Yo"

@@ -24,6 +24,22 @@ def test_suspicious_queries_trough_detector():
     assert _suspicious_queries({"a": 1.0}, []) == []
 
 
+def test_query_history_keyed_by_sf_and_cpus(tmp_path):
+    """The trough detector compares only runs at the same (sf, cpus): a
+    line without `cpus` was recorded at local[32] and is no baseline for a
+    4-core run."""
+    from bench import _load_query_history
+
+    path = tmp_path / "query_history.jsonl"
+    path.write_text("\n".join(json.dumps(e) for e in (
+        {"sf": 0.1, "queries": {"a": 1.0}},
+        {"sf": 0.1, "cpus": 4, "loadavg": [1.0, 1.5, 2.0], "queries": {"a": 4.0}},
+        {"sf": 0.01, "cpus": 4, "queries": {"a": 0.5}},
+    )) + "\n")
+    assert _load_query_history(0.1, 4, str(path)) == [{"a": 4.0}]
+    assert _load_query_history(0.1, 32, str(path)) == [{"a": 1.0}]
+
+
 def test_scaling_writer_rejects_noisy_window(tmp_path):
     """A degraded machine-ceiling probe leaves executor_scaling_latest.json
     UNTOUCHED and logs the rejection to the history (the deliberately-

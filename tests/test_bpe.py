@@ -11,6 +11,7 @@ import pytest
 
 from htmlx.spark import analytics as A
 from htmlx.spark.session import get_spark
+from tests.oracles import bpe_apply_merges
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -152,7 +153,7 @@ def test_apply_merges_roundtrip_concat():
     wf = [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3), ("lowest", 4)]
     merges = A.train_bpe_merges(wf, 8)
     for w in ("lowest", "newest", "wider", "unseen", "x"):
-        syms = A.bpe_apply_merges(w, merges)
+        syms = bpe_apply_merges(w, merges)
         assert "".join(syms) == w
 
 
@@ -171,7 +172,7 @@ def _ref_counts(rows, merges):
     for r in rows:
         n = 0
         for w in A._bpe_pretokens_py(r["text"] or ""):
-            n += len(A.bpe_apply_merges(w, merges))
+            n += len(bpe_apply_merges(w, merges))
         out[r["doc_id"]] = n
     return out
 
@@ -282,7 +283,7 @@ def test_rank_dict_encoder_equals_rank_order_application():
     merges = A.train_bpe_merges(wf, 20)
     ranks = A.bpe_ranks(merges)
     for w in ("lowest", "newest", "wider", "lowness", "wes", "x", "", "ee"):
-        assert A.bpe_encode_word(w, ranks, merges) == A.bpe_apply_merges(w, merges), w
+        assert A.bpe_encode_word(w, ranks, merges) == bpe_apply_merges(w, merges), w
 
 
 def test_encode_word_cost_shape():

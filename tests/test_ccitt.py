@@ -81,7 +81,7 @@ def test_tiff_container_twin_all_compressions():
 def test_pdf_ccittfax_filter():
     """PDF CCITTFaxDecode image XObject: K<0 (G4) and K=0 (MH) routes,
     /BlackIs1 both ways."""
-    from htmlx.spark.pdf import extract_pdf_images
+    from tests.oracles import pdf_image_rows
 
     ink = (np.add.outer(np.arange(7), np.arange(19)) % 4 == 1).astype(np.uint8)
     h, w = ink.shape
@@ -97,7 +97,7 @@ def test_pdf_ccittfax_filter():
         )
 
     g4 = encode_ccitt_g4(ink)
-    out = extract_pdf_images(pdf_with(g4, b"/DecodeParms << /K -1 /Columns "
+    out = pdf_image_rows(pdf_with(g4, b"/DecodeParms << /K -1 /Columns "
                                       + str(w).encode() + b" /Rows " + str(h).encode() + b" >>"))
     assert len(out) == 1 and out[0]["error"] == ""
     assert (out[0]["width"], out[0]["height"], out[0]["img_filter"]) == (w, h, "ccitt")
@@ -109,7 +109,7 @@ def test_pdf_ccittfax_filter():
     assert out[0]["px_md5"] == hashlib.md5(binascii.hexlify(expect.tobytes())).hexdigest()
 
     mh = encode_ccitt_g3_1d(ink)
-    out2 = extract_pdf_images(pdf_with(mh, b"/K 0 /BlackIs1 true"))
+    out2 = pdf_image_rows(pdf_with(mh, b"/K 0 /BlackIs1 true"))
     assert out2[0]["error"] == ""
     expect2 = (ink * 255).astype(np.uint8)
     assert out2[0]["px_md5"] == hashlib.md5(binascii.hexlify(expect2.tobytes())).hexdigest()
@@ -177,7 +177,7 @@ def test_tiff_t4_2d_flag():
 
 
 def test_pdf_ccitt_k_positive():
-    from htmlx.spark.pdf import extract_pdf_images
+    from tests.oracles import pdf_image_rows
 
     ink = (np.add.outer(np.arange(6), np.arange(23)) % 5 < 2).astype(np.uint8)
     h, w = ink.shape
@@ -190,7 +190,7 @@ def test_pdf_ccitt_k_positive():
         + b" /Length " + str(len(data)).encode()
         + b" >>\nstream\n" + data + b"\nendstream\nendobj\n%%EOF\n"
     )
-    out = extract_pdf_images(body)
+    out = pdf_image_rows(body)
     assert out[0]["error"] == "" and (out[0]["width"], out[0]["height"]) == (w, h)
 
 
@@ -252,14 +252,14 @@ def test_ccitt_strip_count_mismatch_is_valueerror():
 
 
 def test_pdf_zero_area_and_oversized_images_degrade():
-    from htmlx.spark.pdf import extract_pdf_images
+    from tests.oracles import pdf_image_rows
 
     # 0x0 raw image: must be a per-image corrupt row, not ZeroDivisionError
     body = (
         b"%PDF-1.7\n1 0 obj\n<< /Subtype /Image /Width 0 /Height 0"
         b" /BitsPerComponent 8 /Length 0 >>\nstream\n\nendstream\nendobj\n%%EOF\n"
     )
-    out = extract_pdf_images(body)
+    out = pdf_image_rows(body)
     assert out[0]["error"] == "corrupt_image"
     # CCITT bomb: geometry passing decode_ccitt's 2^30 guard must still be
     # capped by MAX_IMAGE_RASTER (128 MB) at the PDF layer
@@ -268,7 +268,7 @@ def test_pdf_zero_area_and_oversized_images_degrade():
         b" /DecodeParms << /K -1 /Columns 32000 /Rows 33000 >>"
         b" /Length 4 >>\nstream\n\x00\x00\x00\x00\nendstream\nendobj\n%%EOF\n"
     )
-    out2 = extract_pdf_images(body2)
+    out2 = pdf_image_rows(body2)
     assert out2[0]["error"] == "corrupt_image"
 
 

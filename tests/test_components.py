@@ -93,10 +93,8 @@ def test_corpus_filter_variants_matches_separate_frames(spark):
     """The merged corpus_filter variants row must agree per-variant with
     the single-config corpus_filter_frame it replaced (r7 VERDICT item 3
     — one shared subplan instead of two full recomputations)."""
-    from htmlx.spark.entryqueries import (
-        corpus_filter_frame,
-        corpus_filter_variants_frame,
-    )
+    from htmlx.spark.entryqueries import corpus_filter_variants_frame
+    from tests.oracles import corpus_filter_frame
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     merged = corpus_filter_variants_frame(

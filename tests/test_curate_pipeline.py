@@ -337,6 +337,7 @@ def test_pipeline_pack_on_trained_bpe_counts(spark, tmp_path):
     --bpe-model-out persists the merges table for train-once reuse."""
     from jobs.curate import run_pipeline
     from htmlx.spark import analytics as A
+    from tests.oracles import bpe_apply_merges
 
     rows = [
         (i, ("lowest newest widest " * (2 + i % 3)).strip(), 0)
@@ -359,7 +360,7 @@ def test_pipeline_pack_on_trained_bpe_counts(spark, tmp_path):
     kept = {r["doc_id"] for r in packed}
     texts = {r[0]: r[1] for r in rows if r[0] in kept}
     counts = {
-        d: sum(len(A.bpe_apply_merges(w, merges)) for w in A._bpe_pretokens_py(t))
+        d: sum(len(bpe_apply_merges(w, merges)) for w in A._bpe_pretokens_py(t))
         for d, t in texts.items()
     }
     bin_id, fill, first = 0, 0, True

@@ -1,11 +1,18 @@
-"""Static lint: every top-level def and class in htmlx/ is referenced.
+"""Static lint: a shipped entry point reaches every top-level def in htmlx/.
 
-A name counts as referenced when any .py file in the repo (tests included)
-uses it as code, anywhere in an f-string, or as a string literal that is
-exactly the name (getattr and registry keys). Comments, docstrings and its
-own definition do not count. The scan is a small string/comment-aware
-tokenizer: `ast.parse` of the whole repo alone takes about a second, and
-this test needs no Spark and must stay well under that.
+Roots are all code in jobs/, perfbench/, tools/, bench.py and
+__spark_entry__.py, plus the module-level statements of htmlx/ (decorators
+included: they run at import). That is how the QUERIES rows become roots.
+From there the lint takes a fixpoint: a reached name reaches the names used
+in the body of every top-level htmlx/ def or class of that name. Any
+top-level htmlx/ def or class left unreached fails. tests/ is never a root.
+
+A name counts as used when it appears as code, anywhere in an f-string, or
+as a string literal that is exactly the name (getattr, registry keys and the
+name lists in perfbench.spans). Comments, docstrings and a def's own name do
+not count. The scan is a small string/comment-aware tokenizer: `ast.parse`
+of the whole repo alone takes about a second, and this test needs no Spark
+and must stay well under that.
 """
 
 import re
@@ -13,6 +20,8 @@ from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
+ROOT_DIRS = ("jobs", "perfbench", "tools")
+ROOT_FILES = ("bench.py", "__spark_entry__.py")
 
 _TOKEN = re.compile(
     r"(?P<prefix>[rRbBuUfF]{0,2})(?P<quote>'''|\"\"\"|'|\")"
@@ -27,14 +36,26 @@ _STRING_END = {
     for q in ("'''", '"""', "'", '"')
 }
 _WORD = re.compile(r"[A-Za-z_]\w*")
-_DEF_LINE = ("def ", "class ", "async def ")
 
 
-def _scan(src: str, refs: Counter, top_level: list) -> None:
-    """Count the code references in src; append its top-level def names."""
-    pos, prev = 0, ""
+def _scan(src: str) -> tuple[Counter, list]:
+    """Split src's references by owner.
+
+    Returns the references made by module-level statements and a list of
+    (name, references) for each top-level def or class. A top-level def runs
+    from its `def`/`class` line to the next token that starts a line at
+    column 0.
+    """
+    module, defs = Counter(), []
+    refs, pos, prev = module, 0, ""
     while (m := _TOKEN.search(src, pos)) is not None:
         pos = m.end()
+        if m.group(0)[0] == "#":
+            continue
+        if m.start() == src.rfind("\n", 0, m.start()) + 1:
+            refs = module
+            if m["name"] in ("def", "class", "async"):
+                defs.append(("", Counter()))
         if m["quote"]:
             end = _STRING_END[m["quote"]].match(src, pos)
             if end is None:
@@ -47,37 +68,85 @@ def _scan(src: str, refs: Counter, top_level: list) -> None:
                 refs[body] += 1
         elif m["name"]:
             if prev in ("def", "class"):
-                line = src.rfind("\n", 0, m.start()) + 1
-                if src.startswith(_DEF_LINE, line):
-                    top_level.append(m["name"])
+                if refs is module and defs and not defs[-1][0]:
+                    defs[-1] = (m["name"], defs[-1][1])
+                    refs = defs[-1][1]
             else:
                 refs[m["name"]] += 1
             prev = m["name"]
+    return module, defs
+
+
+def _unreached(root: Path) -> list:
+    reached, bodies, checked = set(), {}, []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if any(part.startswith(".") for part in rel.parts):
+            continue
+        module, defs = _scan(path.read_text(encoding="utf-8"))
+        if rel.parts[0] == "htmlx":
+            reached.update(module)
+            for name, refs in defs:
+                bodies.setdefault(name, []).append(refs)
+                checked.append((rel, name))
+        elif rel.parts[0] in ROOT_DIRS or str(rel) in ROOT_FILES:
+            reached.update(module)
+            for _, refs in defs:
+                reached.update(refs)
+    frontier = list(reached)
+    while frontier:
+        for refs in bodies.pop(frontier.pop(), ()):
+            new = [name for name in refs if name not in reached]
+            reached.update(new)
+            frontier += new
+    return [f"{rel} {name}" for rel, name in checked if name not in reached]
 
 
 def test_no_unreferenced_top_level_defs():
-    refs, defs = Counter(), []
-    for path in sorted(ROOT.rglob("*.py")):
-        rel = path.relative_to(ROOT)
-        if any(part.startswith(".") for part in rel.parts):
-            continue
-        top_level = []
-        _scan(path.read_text(encoding="utf-8"), refs, top_level)
-        if rel.parts[0] == "htmlx":
-            defs += [(rel, name) for name in top_level]
-    dead = [f"{rel} {name}" for rel, name in defs if refs[name] == 0]
-    assert dead == [], "unreferenced top-level defs:\n" + "\n".join(dead)
+    dead = _unreached(ROOT)
+    assert dead == [], (
+        f"{len(dead)} top-level htmlx/ defs no root reaches:\n" + "\n".join(dead)
+    )
 
 
 def test_scan_ignores_comments_docstrings_and_definitions():
-    refs, top_level = Counter(), []
-    _scan(
-        'def used():\n    """unused_a is named here"""\n    # unused_b\n'
+    module, defs = _scan(
+        '"""module doc names doc_word"""\n'
+        "import helper_mod\n"
+        "@decorate\n"
+        "def used(\n    arg,\n):\n"
+        '    """unused_a is named here"""\n    # unused_b\n'
         '    return helper(f"{inner}") + getattr(m, "by_key")\n'
-        "class Kls:\n    def method(self): pass\n",
-        refs,
-        top_level,
+        "TABLE = {'row': used}\n"
+        "class Kls:\n    def method(self):\n        return Other\n"
+        "async def coro(): pass\n"
     )
-    assert top_level == ["used", "Kls"]
-    assert {"helper", "inner", "by_key", "getattr"} <= set(refs)
-    assert not {"used", "Kls", "method", "unused_a", "unused_b"} & set(refs)
+    assert [name for name, _ in defs] == ["used", "Kls", "coro"]
+    assert {"helper", "inner", "by_key", "getattr"} <= set(defs[0][1])
+    assert not {"used", "unused_a", "unused_b", "TABLE"} & set(defs[0][1])
+    assert "Other" in defs[1][1] and "method" not in defs[1][1]
+    assert {"helper_mod", "decorate", "TABLE", "row", "used"} <= set(module)
+    assert not {"doc_word", "Kls", "Other", "helper"} & set(module)
+
+
+def test_reachability_is_transitive_and_ignores_tests(tmp_path):
+    files = {
+        "jobs/run.py": "from htmlx.a import entry\nentry()\n",
+        "htmlx/a.py": (
+            "def entry():\n    return middle()\n"
+            "def middle():\n    return leaf\n"
+            "def leaf(): pass\n"
+            "def only_dead_calls():\n    return only_tests()\n"
+            "def only_tests(): pass\n"
+            "REGISTRY = {'row': registered}\n"
+        ),
+        "htmlx/b.py": "def registered(): pass\n",
+        "tests/test_a.py": "from htmlx.a import only_tests\nonly_tests()\n",
+    }
+    for rel, src in files.items():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text(src)
+    assert _unreached(tmp_path) == [
+        "htmlx/a.py only_dead_calls",
+        "htmlx/a.py only_tests",
+    ]

@@ -55,12 +55,8 @@ def test_image_decoders_never_crash(blob):
         _attempt(decode_tiff, prefix + blob)
         sniff_mime(prefix + blob)
         image_dimensions(prefix + blob)
-    from htmlx.spark.multimodal import gif_comments, png_text_chunks, svg_title_desc
     from htmlx.spark.tiffbmp import decode_tga
 
-    _attempt(png_text_chunks, _PNG_SIG + blob)
-    _attempt(gif_comments, b"GIF89a" + blob)
-    _attempt(svg_title_desc, b"<svg " + blob)
     for prefix in (b"", b"\x00\x00\x02", b"\x00\x01\x01", b"\x00\x00\x0a"):
         _attempt(decode_tga, prefix + blob)
 
@@ -81,16 +77,6 @@ def test_jpeg_crafted_scan_fragments(blob):
     good12 = encode_jpeg(np.full((8, 8), 2048, np.uint16), precision=12)
     sos12 = good12.index(b"\xff\xda") + 14
     _attempt(decode_jpeg, good12[:sos12] + blob)
-    # EXIF walk: arbitrary bytes behind an APP1 Exif header
-    from htmlx.spark.multimodal import jpeg_exif
-    from htmlx.spark.tiffbmp import parse_exif
-
-    app1 = b"Exif\x00\x00" + blob
-    wrapped = (b"\xff\xd8\xff\xe1"
-               + (len(app1) + 2).to_bytes(2, "big") + app1 + b"\xff\xd9")
-    _attempt(jpeg_exif, wrapped[:65537])
-    for prefix in (b"", b"II*\x00", b"MM\x00*"):
-        _attempt(parse_exif, prefix + blob)
 
 
 @given(st.binary(max_size=2048))
@@ -105,14 +91,11 @@ def test_wav_decoder_never_crashes(blob):
 def test_aiff_au_decoders_never_crash(blob):
     from htmlx.spark.multimodal import decode_aiff, decode_au, decode_audio
 
-    from htmlx.spark.multimodal import audio_tags
-
     for prefix in (b"", b"FORM\x00\x00\x08\x00AIFF", b"FORM\x00\x00\x08\x00AIFC",
                    b".snd", b"ID3\x04\x00\x00", b"ID3\x03\x00\x00", b"OggS\x00"):
         _attempt(decode_aiff, prefix + blob)
         _attempt(decode_au, prefix + blob)
         _attempt(decode_audio, prefix + blob)
-        _attempt(audio_tags, prefix + blob)
 
 
 @given(st.binary(max_size=2048))
@@ -246,12 +229,11 @@ def test_pdf_text_string_roundtrip_property(text):
 def test_vp8l_decoder_never_crashes(blob):
     import numpy as np
 
-    from htmlx.spark.vp8l import decode_alpha_plane, decode_webp, encode_vp8l
+    from htmlx.spark.vp8l import decode_webp, encode_vp8l
 
     good = encode_vp8l(np.zeros((4, 4, 4), np.uint8))
     for prefix in (b"", b"RIFF", good[:21]):  # bare / riff tag / valid header
         _attempt(decode_webp, prefix + blob)
-    _attempt(lambda b: decode_alpha_plane(b, 8, 8), blob)
 
 
 @given(st.binary(max_size=2048))

@@ -8,7 +8,8 @@ import pytest
 
 from htmlx.core.dom import parse
 from htmlx.core.entities import replace_html_entities
-from htmlx.core.textnorm import clean_text, get_link_density, get_text_content, get_text_length
+from htmlx.core.scorer import collect_content_metrics, link_density_from_metrics
+from htmlx.core.textnorm import clean_text, get_text_content
 from htmlx.core.urlutil import is_external_url, is_valid_url
 
 # helpers_test.go:278-395
@@ -152,14 +153,19 @@ def test_get_text_content(name, html, want):
     assert get_text_content(parse(html)) == want
 
 
+# GetTextLength / GetLinkDensity: the scorer's single-walk metrics compute both
+def _metrics(html):
+    return collect_content_metrics(parse(html))
+
+
 def test_get_text_length():
-    assert get_text_length(parse("<p>Hello</p>")) == 5
-    assert get_text_length(parse("<div><p>Hello</p><p>World</p></div>")) == 10
-    assert get_text_length(parse("<p></p>")) == 0
+    assert _metrics("<p>Hello</p>").text_length == 5
+    assert _metrics("<div><p>Hello</p><p>World</p></div>").text_length == 10
+    assert _metrics("<p></p>").text_length == 0
 
 
 def test_get_link_density():
-    assert get_link_density(parse("<p>Hello World</p>")) == 0.0
-    assert abs(get_link_density(parse('<p><a href="test.html">Hello World</a></p>')) - 1.0) < 0.1
-    assert abs(get_link_density(parse('<p>Hello <a href="test.html">World</a></p>')) - 0.5) < 0.1
-    assert get_link_density(parse("<p></p>")) == 0.0
+    assert link_density_from_metrics(_metrics("<p>Hello World</p>")) == 0.0
+    assert abs(link_density_from_metrics(_metrics('<p><a href="test.html">Hello World</a></p>')) - 1.0) < 0.1
+    assert abs(link_density_from_metrics(_metrics('<p>Hello <a href="test.html">World</a></p>')) - 0.5) < 0.1
+    assert link_density_from_metrics(_metrics("<p></p>")) == 0.0

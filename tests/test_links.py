@@ -2,7 +2,7 @@
 and links_order_test.go."""
 
 from htmlx.core.extract import Config
-from htmlx.core.links import extract_all_links, group_links_by_type
+from htmlx.core.links import extract_all_links
 
 
 def urls_of(links):
@@ -123,9 +123,9 @@ def test_external_filter():
 
 def test_group_links_by_type():
     html = b'<a href="https://e.com/a">A</a><img src="https://e.com/i.png"><script src="https://e.com/s.js"></script>'
-    grouped = group_links_by_type(extract_all_links(html))
-    assert set(grouped) == {"link", "image", "js"}
-    assert len(grouped["link"]) == 1
+    links = extract_all_links(html)
+    assert {l["type"] for l in links} == {"link", "image", "js"}
+    assert [l["type"] for l in links].count("link") == 1
 
 
 def test_empty_and_blank():

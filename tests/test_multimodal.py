@@ -504,7 +504,8 @@ def test_ico_roundtrips_and_dispatch():
     import numpy as np
 
     from htmlx.spark.multimodal import decode_image, encode_png
-    from htmlx.spark.tiffbmp import decode_ico, encode_ico
+    from htmlx.spark.tiffbmp import decode_ico
+    from tests.oracles import encode_ico
 
     rnd = np.random.RandomState(9)
     a = rnd.randint(0, 256, (7, 9, 4)).astype(np.uint8)
@@ -537,7 +538,7 @@ def test_webp_and_ico_dimensions_and_sniff():
     import numpy as np
 
     from htmlx.spark.multimodal import image_dimensions, sniff_mime
-    from htmlx.spark.tiffbmp import encode_ico
+    from tests.oracles import encode_ico
     from htmlx.spark.vp8l import encode_vp8l
 
     p = encode_vp8l(np.zeros((7, 11, 4), np.uint8))
@@ -635,7 +636,8 @@ def test_wbmp_roundtrip_dispatch_and_error_paths():
     import numpy as np
     import pytest
 
-    from htmlx.spark.multimodal import decode_image, decode_wbmp, encode_wbmp
+    from htmlx.spark.multimodal import decode_image, decode_wbmp
+    from tests.oracles import encode_wbmp
 
     rng = np.random.default_rng(13)
     for hw in ((1, 1), (8, 8), (23, 61), (5, 200)):
@@ -674,7 +676,8 @@ def test_pnm_all_six_formats_roundtrip_and_errors():
     import numpy as np
     import pytest
 
-    from htmlx.spark.multimodal import decode_image, decode_pnm, encode_pnm
+    from htmlx.spark.multimodal import decode_image, decode_pnm
+    from tests.oracles import encode_pnm
 
     rng = np.random.default_rng(29)
     # bitmap kinds: nonzero = black per PBM spec (opposite of WBMP)
@@ -707,100 +710,58 @@ def test_pnm_all_six_formats_roundtrip_and_errors():
 
 
 def test_png_text_chunks_all_kinds():
-    import numpy as np
-    import pytest
-
-    from htmlx.spark.multimodal import (
-        decode_png,
-        encode_png,
-        insert_png_text,
-        png_text_chunks,
-    )
-
-    base = encode_png(np.zeros((2, 2), np.uint8))
-    png = insert_png_text(base, "Software", "htmlx 1.0")
-    png = insert_png_text(png, "Comment", "compressed words", b"zTXt")
-    png = insert_png_text(png, "Title", "unicode — ïtxt", b"iTXt")
-    got = dict(png_text_chunks(png))
-    assert got["Software"] == "htmlx 1.0"
-    assert got["Comment"] == "compressed words"
-    assert got["Title"] == "unicode — ïtxt"
-    # pixels unaffected by the spliced chunks
-    assert (decode_png(png) == 0).all()
-    # no text chunks -> empty list; bad header -> error
-    assert png_text_chunks(base) == []
-    with pytest.raises(ValueError):
-        png_text_chunks(b"nope")
-    # zTXt bomb guard: hand-build an over-cap chunk
+    """tEXt, zTXt and iTXt chunks spliced after IHDR leave the decoded
+    pixels unchanged: decode_png skips ancillary chunks."""
+    import struct
     import zlib
 
-    data = b"K\x00\x00" + zlib.compress(b"y" * (70 * 1024))
-    import struct
+    import numpy as np
 
-    chunk = struct.pack(">I", len(data)) + b"zTXt" + data + struct.pack(
-        ">I", zlib.crc32(b"zTXt" + data) & 0xFFFFFFFF)
-    ihdr_end = 8 + 8 + 13 + 4
-    evil = base[:ihdr_end] + chunk + base[ihdr_end:]
-    with pytest.raises(ValueError):
-        png_text_chunks(evil)
+    from htmlx.spark.multimodal import decode_png, encode_png
+
+    base = encode_png(np.zeros((2, 2), np.uint8))
+    ihdr_end = 8 + 8 + 13 + 4  # sig + len/type + IHDR body + crc
+    png = base
+    for kind, data in (
+        (b"tEXt", b"Software\x00htmlx 1.0"),
+        (b"zTXt", b"Comment\x00\x00" + zlib.compress(b"compressed words")),
+        (b"iTXt", b"Title\x00\x01\x00en\x00\x00"
+         + zlib.compress("unicode — ïtxt".encode("utf-8"))),
+    ):
+        chunk = struct.pack(">I", len(data)) + kind + data + struct.pack(
+            ">I", zlib.crc32(kind + data) & 0xFFFFFFFF)
+        png = png[:ihdr_end] + chunk + png[ihdr_end:]
+    assert (decode_png(png) == 0).all()
 
 
 def test_gif_comments_and_svg_title_desc():
+    """A spliced two-sub-block GIF comment extension leaves the decoded
+    pixels unchanged."""
     import numpy as np
-    import pytest
 
-    from htmlx.spark.multimodal import (
-        decode_gif,
-        encode_gif,
-        gif_comments,
-        svg_title_desc,
-    )
+    from htmlx.spark.multimodal import decode_gif, encode_gif
 
     pal = np.stack([np.arange(256)] * 3, 1).astype(np.uint8)
     g = encode_gif(np.zeros((4, 4), np.uint8), pal)
-    assert gif_comments(g) == []
     # splice a two-sub-block comment extension after header + GCT
     at = 13 + 768
     comment = b"\x21\xfe" + bytes([7]) + b"made by" + bytes([5]) + b" twin" + b"\x00"
     g2 = g[:at] + comment + g[at:]
-    assert gif_comments(g2) == ["made by twin"]
-    # the pixel decoder is unaffected by the spliced extension
     assert (decode_gif(g2) == decode_gif(g)).all()
-    with pytest.raises(ValueError):
-        gif_comments(b"GIF89a\x00\x00\x00\x00")  # truncated screen desc
-    with pytest.raises(ValueError):  # unterminated comment chain
-        gif_comments(g[:at] + b"\x21\xfe\x05ab")
-    # comment bomb: many max-size sub-blocks past the cap
-    bomb = g[:at] + b"\x21\xfe" + (bytes([255]) + b"x" * 255) * 100 + b"\x00" + g[at:]
-    with pytest.raises(ValueError):
-        gif_comments(bomb)
-
-    svg = (b'<?xml version="1.0"?>\n<svg xmlns="x"><title>My Icon</title>'
-           b'<desc>A test\ngraphic</desc><rect/></svg>')
-    assert svg_title_desc(svg) == {"title": "My Icon", "desc": "A test\ngraphic"}
-    assert svg_title_desc(b"<svg></svg>") == {"title": "", "desc": ""}
-    with pytest.raises(ValueError):
-        svg_title_desc(b"<html></html>")
 
 
 def test_svg_title_desc_doctype_and_comment_prefix():
-    """ADVICE r5: svg_title_desc gates via _svg_root, so DOCTYPE- or
-    comment-prefixed SVGs that sniff_mime accepts are extracted too."""
-    import pytest
-
-    from htmlx.spark.multimodal import sniff_mime, svg_title_desc
+    """ADVICE r5: sniff_mime accepts DOCTYPE- or comment-prefixed SVGs
+    and rejects HTML with an inline <svg>."""
+    from htmlx.spark.multimodal import sniff_mime
 
     doc = (b'<?xml version="1.0"?>\n'
            b'<!DOCTYPE svg PUBLIC "-//W3C//DTD SVG 1.1//EN" "svg11.dtd">\n'
            b'<!-- exported -->\n'
            b'<svg xmlns="x"><title>Doc</title><desc>d</desc></svg>')
     assert sniff_mime(doc) == "image/svg+xml"
-    assert svg_title_desc(doc) == {"title": "Doc", "desc": "d"}
-    # HTML with an inline <svg> stays rejected by both tiers
     html = b"<!DOCTYPE html><html><body><svg><title>x</title></svg></body></html>"
     assert sniff_mime(html) != "image/svg+xml"
-    with pytest.raises(ValueError):
-        svg_title_desc(html)
 
 
 def test_pnm_p1_comments_in_raster():

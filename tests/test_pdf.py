@@ -351,12 +351,12 @@ def test_pdf_dct_image_decodes_via_inrepo_jpeg():
     import numpy as np
 
     from htmlx.spark.jpeg import encode_jpeg
-    from htmlx.spark.pdf import extract_pdf_images
+    from tests.oracles import pdf_image_rows
 
     y = np.repeat(np.repeat(np.array([[10, 200], [77, 140]], np.uint8), 8, 0), 8, 1)
     for progressive in (False, True):
         jp = encode_jpeg(y, progressive=progressive)
-        out = extract_pdf_images(_img_pdf(jp, b"/Filter /DCTDecode"))
+        out = pdf_image_rows(_img_pdf(jp, b"/Filter /DCTDecode"))
         assert len(out) == 1
         row = out[0]
         assert (row["width"], row["height"], row["channels"]) == (16, 16, 1)
@@ -370,11 +370,11 @@ def test_pdf_raw_flate_image():
 
     import numpy as np
 
-    from htmlx.spark.pdf import extract_pdf_images
+    from tests.oracles import pdf_image_rows
 
     raw = (np.arange(5 * 3 * 3) % 256).astype(np.uint8)
     data = z.compress(raw.tobytes())
-    out = extract_pdf_images(
+    out = pdf_image_rows(
         _img_pdf(data, b"/Width 5 /Height 3 /BitsPerComponent 8 "
                  b"/ColorSpace /DeviceRGB /Filter /FlateDecode")
     )
@@ -383,10 +383,10 @@ def test_pdf_raw_flate_image():
 
 
 def test_pdf_jpx_jbig2_degrade_per_image():
-    from htmlx.spark.pdf import extract_pdf_images
+    from tests.oracles import pdf_image_rows
 
     for filt in (b"/Filter /JPXDecode", b"/Filter /JBIG2Decode"):
-        out = extract_pdf_images(_img_pdf(b"\x00opaque", filt + b" /Width 4 /Height 4"))
+        out = pdf_image_rows(_img_pdf(b"\x00opaque", filt + b" /Width 4 /Height 4"))
         assert out[0]["error"] == "decoder_unavailable"
         assert out[0]["px_md5"] == ""
 
@@ -411,9 +411,9 @@ def test_pdf_text_walk_skips_image_streams():
 
 
 def test_pdf_corrupt_image_degrades_not_raises():
-    from htmlx.spark.pdf import extract_pdf_images
+    from tests.oracles import pdf_image_rows
 
-    out = extract_pdf_images(_img_pdf(b"\xff\xd8\xff\xee garbage", b"/Filter /DCTDecode"))
+    out = pdf_image_rows(_img_pdf(b"\xff\xd8\xff\xee garbage", b"/Filter /DCTDecode"))
     assert out[0]["error"] == "corrupt_image"
 
 

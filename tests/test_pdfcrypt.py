@@ -16,7 +16,6 @@ import pytest
 
 from htmlx.spark.pdf import (
     EncryptedPdfError,
-    extract_pdf_images,
     extract_pdf_text,
     parse_pdf_structure,
 )
@@ -35,6 +34,7 @@ from htmlx.spark.pdfcrypt import (
     make_v5_user_values,
     rc4,
 )
+from tests.oracles import pdf_image_rows
 
 # ---------------------------------------------------------------------------
 # Primitive anchors.
@@ -277,7 +277,7 @@ def test_encrypted_objstm_pages_counted():
 
 def test_encrypted_image_decodes():
     pdf = build_encrypted_pdf(cfm="aesv2", v=4, r=4, image=True)
-    imgs = extract_pdf_images(pdf)
+    imgs = pdf_image_rows(pdf)
     assert len(imgs) == 1
     img = imgs[0]
     assert img["error"] == ""
@@ -285,9 +285,9 @@ def test_encrypted_image_decodes():
 
 
 def test_locked_image_rows_flagged():
+    # extract_pdf_profile flags the whole row and decodes no image
     pdf = build_encrypted_pdf(good_u=False, image=True)
-    imgs = extract_pdf_images(pdf)
-    assert imgs and all(i["error"] == "encrypted" for i in imgs)
+    assert parse_pdf_structure(pdf)["error"] == "encrypted"
 
 
 def test_aes_stream_too_short_is_value_error():

@@ -145,22 +145,6 @@ def test_lang_id_is_jvm_side(spark, docs):
     assert p_wide.count("Exchange") == 1  # only the caller's own repartition
 
 
-def test_dedup_pages_single_fat_shuffle(docs):
-    """Pre-extraction content dedup must shuffle the fat html column ONCE
-    (min_by over digest), not agg+join twice."""
-    from pyspark.sql import functions as F
-
-    from htmlx.spark.job import dedup_pages_by_content
-
-    pages = docs.select(
-        F.concat(F.lit("https://x/"), "doc_id").alias("url"),
-        F.encode("text", "UTF-8").alias("html"),
-    )
-    p = plan_of(dedup_pages_by_content(pages))
-    assert p.count("Exchange hashpartitioning") == 1
-    assert "Join" not in p
-
-
 def test_relational_broadcast_dims(spark):
     """Dim joins in the TPC-H-shape queries must broadcast (no shuffled
     join for region/nation/customer); only facts shuffle."""

@@ -102,7 +102,8 @@ def _tree_sig(node):
 def test_fast_tokenizer_matches_stdlib(parts):
     """The fast tokenizer must build the identical tree to the stdlib-driven
     parser on arbitrary tag soup (differential regression guard)."""
-    from htmlx.core.dom import parse, parse_stdlib
+    from htmlx.core.dom import parse
+    from tests.oracles import parse_stdlib
 
     doc = "".join(parts)
     assert _tree_sig(parse(doc)) == _tree_sig(parse_stdlib(doc))

@@ -5,7 +5,7 @@ import pytest
 from htmlx.core.dom import ELEMENT, parse, walk_nodes
 from htmlx.core.scorer import (
     DefaultScorer,
-    score_content_node,
+    get_default_scorer,
     should_remove_element,
 )
 
@@ -45,7 +45,7 @@ SCORE_CASES = [
 def test_score_content_node(name, html, check):
     node = find_target(html)
     assert node is not None
-    assert check(score_content_node(node))
+    assert check(get_default_scorer().score(node))
 
 
 # scoring_test.go:137-199
@@ -116,8 +116,8 @@ def test_score_exact_values():
     """
     # <div>Short</div>: tag 50, text 5 bytes (<50 -> -300), density 5/(1*10)=0.5
     node = find_target("<div>Short</div>")
-    assert score_content_node(node) == 50 - 300  # density 0.5: no multiplier
+    assert get_default_scorer().score(node) == 50 - 300  # density 0.5: no multiplier
 
     # empty div: tag 50, textLength 0 -> density 0 -> low-density x0.7
     node = find_target("<div></div>")
-    assert score_content_node(node) == int((50 - 300) * 0.7)
+    assert get_default_scorer().score(node) == int((50 - 300) * 0.7)

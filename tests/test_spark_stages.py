@@ -1,4 +1,4 @@
-"""Audit stage, content-hash dedup, JSON output, skew balancing."""
+"""Audit stage, JSON output, skew balancing."""
 
 import pytest
 
@@ -6,11 +6,9 @@ from pyspark.sql import functions as F
 
 from htmlx.core.extract import Config
 from htmlx.spark.job import (
-    dedup_pages_by_content,
     run_extraction,
     run_extraction_full,
     salted_repartition,
-    to_json_results,
 )
 from htmlx.spark.session import get_spark
 
@@ -38,17 +36,6 @@ def test_audit_stage_rows(spark):
     assert all(r.run_id == "ar" and r.partition_id >= 0 for r in audit)
 
 
-def test_dedup_pages_by_content(spark):
-    rows = [
-        ("u1", b"<p>same</p>"),
-        ("u2", b"<p>same</p>"),
-        ("u3", b"<p>other</p>"),
-    ]
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    dd = dedup_pages_by_content(pages).collect()
-    assert sorted(r.url for r in dd) == ["u1", "u3"]
-
-
 def test_to_json_results(spark):
     import json
 
@@ -56,8 +43,8 @@ def test_to_json_results(spark):
         [("u1", b"<article><h1>T</h1><p>Hello world text.</p></article>")],
         "url string, html binary",
     )
-    out = to_json_results(run_extraction(pages, Config())).collect()
-    payload = json.loads(out[0].json)
+    # JSON output is Spark's own serializer over the results frame
+    payload = json.loads(run_extraction(pages, Config()).toJSON().first())
     assert payload["title"] == "T"
     assert payload["word_count"] == 4
     assert "reading_time_ms" in payload

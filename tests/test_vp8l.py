@@ -13,7 +13,8 @@ import pytest
 
 from htmlx.spark.vp8l import (
     _DIST_TABLE,
-    decode_alpha_plane,
+    _decode_image_stream,
+    _LsbBits,
     decode_vp8l,
     decode_webp,
     encode_vp8l,
@@ -107,9 +108,11 @@ def test_error_paths():
 @pytest.mark.skipif(not _ANCHORS, reason="no CPython webp test asset present")
 def test_real_libwebp_alpha_stream_anchor():
     """Conformance against a REAL libwebp encoder output: the 16x16
-    Python-logo alpha plane (ALPH chunk, compression method 1 = VP8L
-    entropy coding with a color-indexing transform). Pinned by shape,
-    value histogram edges and the exact plane checksum."""
+    Python-logo alpha plane (ALPH chunk, compression method 1 = a
+    headerless VP8L image stream with a color-indexing transform, no
+    filtering), decoded by the same entropy decoder as decode_vp8l with
+    alpha in the green channel. Pinned by shape, value histogram edges
+    and the exact plane checksum."""
     d = open(_ANCHORS[0], "rb").read()
     pos, alph = 12, None
     while pos + 8 <= len(d):
@@ -118,8 +121,9 @@ def test_real_libwebp_alpha_stream_anchor():
         if tag == b"ALPH":
             alph = d[pos + 8 : pos + 8 + n]
         pos += 8 + n + (n & 1)
-    assert alph is not None and alph[0] & 3 == 1  # lossless-compressed alpha
-    plane = decode_alpha_plane(alph, 16, 16)
+    assert alph is not None and alph[0] == 1  # VP8L-coded, unfiltered alpha
+    px = _decode_image_stream(_LsbBits(alph, 8), 16, 16, True)
+    plane = ((np.asarray(px, np.uint32).reshape(16, 16) >> 8) & 0xFF).astype(np.uint8)
     assert plane.shape == (16, 16)
     # the logo mask: fully-transparent corners, fully-opaque core
     assert plane[0, 0] == 0 and plane[15, 0] == 0
@@ -131,10 +135,3 @@ def test_real_libwebp_alpha_stream_anchor():
     assert hashlib.md5(plane.tobytes()).hexdigest() == (
         "fa1667e19ae1b259be670911674006a6"
     )
-
-
-def test_raw_alpha_and_filters():
-    rnd = np.random.RandomState(6)
-    plane = rnd.randint(0, 256, (5, 8)).astype(np.uint8)
-    raw = b"\x00" + plane.tobytes()  # compression 0, filter 0
-    assert (decode_alpha_plane(raw, 8, 5) == plane).all()

@@ -688,49 +688,6 @@ def test_cdx_cli_builds_index(spark, tmp_path, monkeypatch, capsys):
     assert read_cdx(spark, out).count() == 6
 
 
-def test_read_warc_stream_batch_equivalence(spark, tmp_path):
-    """The streaming twin: archives streamed through read_warc_stream
-    produce the same rows as the batch reader, and archives that land
-    AFTER the first trigger are picked up incrementally (the live-crawl
-    ingest contract)."""
-    from pyspark.sql import functions as F
-
-    from htmlx.spark.warc import read_warc, read_warc_stream
-
-    d = str(tmp_path / "landing")
-    os.makedirs(d)
-
-    def archive(name, urls):
-        with open(os.path.join(d, name), "wb") as f:
-            f.write(b"".join(
-                gzip.compress(_record(b"response", _http(HTML_A), url=u.encode()))
-                for u in urls))
-
-    archive("w0.warc.gz", ["https://a.com/1", "https://a.com/2"])
-    ckpt = str(tmp_path / "ckpt")
-    sink = str(tmp_path / "sink")
-
-    def drain():
-        q = (read_warc_stream(spark, d, max_files_per_trigger=1)
-             .select("url", F.md5("html").alias("h"), "http_status", "warc_ts")
-             .writeStream.format("parquet")
-             .option("path", sink)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(60)
-
-    drain()
-    got1 = {r["url"] for r in spark.read.parquet(sink).collect()}
-    assert got1 == {"https://a.com/1", "https://a.com/2"}
-    archive("w1.warc.gz", ["https://b.org/3"])  # lands later
-    drain()
-    streamed = spark.read.parquet(sink).collect()
-    batch = (read_warc(spark, d)
-             .select("url", F.md5("html").alias("h"), "http_status", "warc_ts")
-             .collect())
-    assert sorted(map(tuple, streamed)) == sorted(map(tuple, batch))
-
-
 def test_write_wet_roundtrip_and_determinism(spark, tmp_path):
     """write_wet publishes extraction text as member-per-record WET
     archives that read_wet ingests back verbatim; re-publishing the
