@@ -100,12 +100,6 @@ class Node:
                 return v
         return None
 
-    def iter_children(self):
-        c = self.first_child
-        while c is not None:
-            yield c
-            c = c.next_sibling
-
     def __repr__(self):  # pragma: no cover - debug aid
         kind = {DOCUMENT: "doc", ELEMENT: "elem", TEXT: "text", COMMENT: "comment"}[self.type]
         return f"<Node {kind} {self.data[:30]!r}>"
@@ -174,7 +168,6 @@ class _TreeBuilder(HTMLParser):
         self.head = None
         self.body = None
         self.body_started = False
-        self.head_explicit_open = False
         self.stack: list[Node] = []  # open user elements (below html/head/body)
 
     # -- structure helpers -------------------------------------------------
@@ -204,7 +197,6 @@ class _TreeBuilder(HTMLParser):
         if attrs:
             self._merge_attrs(self.body, attrs)
         self.body_started = True
-        self.head_explicit_open = False
         return self.body
 
     @staticmethod
@@ -214,16 +206,6 @@ class _TreeBuilder(HTMLParser):
             if k not in seen:
                 node.attrs.append((k, v))
                 seen.add(k)
-
-    def _current_parent(self) -> Node:
-        if self.stack:
-            return self.stack[-1]
-        if self.body_started:
-            return self._ensure_body()
-        if self.head_explicit_open:
-            return self._ensure_head()
-        # head-limbo: decided per token type by callers
-        return self._ensure_body()
 
     # -- implied end tags --------------------------------------------------
     def _close_p_in_button_scope(self):
@@ -254,7 +236,6 @@ class _TreeBuilder(HTMLParser):
             return
         if tag == "head":
             self._ensure_head(attrs)
-            self.head_explicit_open = not self.body_started
             return
         if tag == "body":
             self._ensure_body(attrs)
@@ -318,7 +299,6 @@ class _TreeBuilder(HTMLParser):
             self.body_started = True
             return
         if tag == "head":
-            self.head_explicit_open = False
             return
         for i in range(len(self.stack) - 1, -1, -1):
             if self.stack[i].data == tag:

@@ -24,7 +24,6 @@ _COMMON = (
     ("&mdash;", "—"),
     ("&ndash;", "–"),
 )
-_COMMON_MAP = dict(_COMMON)
 
 # Typographic/extended named entities (helpers.go:632-673 entityReplacer).
 _EXTENDED = {

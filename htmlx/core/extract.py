@@ -25,7 +25,6 @@ from .extraction import (
 )
 from .sanitize import NOOP_AUDIT, AuditRecorder, sanitize_dom
 from .scorer import DefaultScorer, get_default_scorer, score_all_nodes, select_best_candidate
-from .tables import TrackedBuilder
 from .textnorm import clean_text, get_text_content
 from .urlutil import is_external_url, is_valid_url
 from .media import (
@@ -388,9 +387,10 @@ class Extractor:
 
     # -- images / links ----------------------------------------------------
     def _extract_images_and_links(self, node: Node) -> tuple[list[dict], list[dict]]:
-        """Fused single walk for image + link extraction (same traversal,
-        same position semantics as the separate walks — pure perf fusion,
-        SURVEY.md §4.1 'single-traversal fusion')."""
+        """Image + link extraction in one walk (extract.go:1044-1137 runs
+        two; SURVEY.md §4.1 'single-traversal fusion'). Position is the
+        1-based ordinal of ALL <img> (resp. <a>) encountered — invalid ones
+        consume a position but are dropped."""
         images: list[dict] = []
         links: list[dict] = []
         img_pos = 0
@@ -414,24 +414,6 @@ class Extractor:
 
         walk_nodes(node, visit)
         return images, links
-
-    def _extract_images_with_position(self, node: Node) -> list[dict]:
-        """extract.go:1044-1089. Position is the 1-based ordinal of ALL <img>
-        encountered — invalid images consume a position but are dropped."""
-        images = []
-        position = 0
-
-        def visit(n: Node) -> bool:
-            nonlocal position
-            if n.type == ELEMENT and n.data == "img":
-                position += 1
-                img = self._parse_image_node(n, position)
-                if img is not None:
-                    images.append(img)
-            return True
-
-        walk_nodes(node, visit)
-        return images
 
     @staticmethod
     def _parse_image_node(n: Node, position: int) -> dict | None:
@@ -461,23 +443,6 @@ class Extractor:
             return None
         img["is_decorative"] = img["alt"] == ""
         return img
-
-    def _extract_links_with_position(self, node: Node) -> list[dict]:
-        """extract.go:1091-1137."""
-        links = []
-        position = 0
-
-        def visit(n: Node) -> bool:
-            nonlocal position
-            if n.type == ELEMENT and n.data == "a":
-                position += 1
-                link = self._parse_link_node(n, position)
-                if link is not None:
-                    links.append(link)
-            return True
-
-        walk_nodes(node, visit)
-        return links
 
     @staticmethod
     def _parse_link_node(n: Node, position: int) -> dict | None:

@@ -217,7 +217,7 @@ def corpus() -> list[tuple[str, bytes]]:
 def build_golden() -> dict:
     """Compute the golden expected outputs with the core (frozen to disk by
     tools/freeze_goldens.py; tests compare against the frozen file)."""
-    from .core.extract import Config, Extractor, markdown_config
+    from .core.extract import Extractor, markdown_config
     from .core.links import extract_all_links
 
     default = Extractor()

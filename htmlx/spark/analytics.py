@@ -47,10 +47,7 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     added shuffle, so the zero-exchange scale story of the JVM-side
     operators still holds (plan-pinned with pre-spread inputs in
     tests/test_plans.py). The round-robin repartition is deterministic
-    under task retry (sortBeforeRepartition is on by default). Streaming
-    frames keep their source partitioning."""
-    if getattr(df, "isStreaming", False):
-        return df
+    under task retry (sortBeforeRepartition is on by default)."""
     # memo: the .rdd partition probe costs a plan->RDD conversion (~0.1 s
     # of driver time under load); composite builders route the SAME frame
     # object through several spread-aware helpers, so mark it once
@@ -1662,10 +1659,6 @@ def simhash_expr(hash_basis: str = "xxhash64") -> str:
     )
 
 
-# the md5-basis constant: what the DuckDB oracle replicates (entryqueries)
-SIMHASH_EXPR = simhash_expr("md5")
-
-
 def simhash_docs(documents: DataFrame, hash_basis: str = "xxhash64") -> DataFrame:
     """SimHash signatures, entirely JVM-side (one pass over the token-hash
     array accumulating all 60 bit votes — no Python, no shuffle). Replaces
@@ -1817,7 +1810,6 @@ def ivf_assign(
     embeddings: DataFrame,
     num_centroids: int = 8,
     lloyd_iters: int = 1,
-    centroids: DataFrame | None = None,
 ) -> tuple:
     """IVF bucketing: deterministic seed centroids (smallest xxhash64 of
     vec_id — no RNG, reproducible across runs/parallelism) refined with
@@ -1829,33 +1821,8 @@ def ivf_assign(
 
     Returns (assigned_df with bucket column, centroids_df). At 100 TB scale
     this replaces the all-pairs join: embedding_near_dup_ivf scores pairs
-    within a bucket only, so the pairwise work shrinks by ~num_centroids.
-
-    `centroids` (r8): a PRE-TRAINED (centroid_id, cvec) table (this
-    function's own second return, typically persisted to parquet) —
-    skip seeding and Lloyd entirely and just assign, the FAISS shape
-    where the coarse quantizer is a fixed index artifact trained once
-    on a sample and reused by every ingest batch (retraining per batch
-    would put the same vector in different buckets across batches,
-    breaking incremental index maintenance)."""
+    within a bucket only, so the pairwise work shrinks by ~num_centroids."""
     norm = _normalized(embeddings)
-    if centroids is not None:
-        cents = centroids.select("centroid_id", "cvec")
-
-        def assign_fixed(vectors: DataFrame) -> DataFrame:
-            scored = vectors.crossJoin(F.broadcast(cents)).select(
-                "vec_id", "nvec", "centroid_id", _dot("nvec", "cvec").alias("sim")
-            )
-            w = Window.partitionBy("vec_id").orderBy(
-                F.col("sim").desc(), F.col("centroid_id")
-            )
-            return (
-                scored.withColumn("__r", F.row_number().over(w))
-                .where(F.col("__r") == 1)
-                .select("vec_id", "nvec", F.col("centroid_id").alias("bucket"))
-            )
-
-        return assign_fixed(norm), cents
     seeds = (
         norm.withColumn("__h", F.xxhash64(F.col("vec_id")))
         .orderBy("__h")
@@ -2429,59 +2396,27 @@ def lang_mix_docs(documents: DataFrame, min_line_chars: int = 20) -> DataFrame:
 # Near-duplicate clustering -> dedup keep-list
 # ---------------------------------------------------------------------------
 
-def near_dup_components(
-    documents: DataFrame,
-    pairs: DataFrame,
-    max_iters: int = 5,
-    until_converged: bool = False,
-    group_col: str | None = None,
-) -> DataFrame:
+#: propagation-round cap (even: rounds run in pairs); the loop stops as
+#: soon as a round pair changes no label, so this only bounds a
+#: pathological chain
+PROPAGATION_MAX_ROUNDS = 50
+
+
+def near_dup_components(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     """Connected components over verified near-dup pairs -> the dedup
     KEEP-LIST: every doc labeled with the minimum doc_id of its component
     (keep_doc_id) and an is_dup flag. This is the step that turns candidate
     pairs into an actual drop set — without it, transitive near-dups
     (A~B, B~C, A!~C) dedup inconsistently.
 
-    Min-label propagation (Pregel-style): labels start as doc_id and each
-    round takes the min over neighbors; converges in graph-diameter rounds.
-    Near-dup components are dense (LSH + verify emits most clique edges),
-    so the diameter is tiny — max_iters=5 covers diameter-5 chains, far
-    beyond what a 0.9-Jaccard transitive chain produces. Each round is one
-    shuffle of the (small) edge set joined against labels; the full corpus
-    joins in only at the end. until_converged=True instead iterates until a
-    round changes nothing (one scalar count() action per round — an
-    aggregate, not a data collect), the production mode when the diameter
-    is unknown.
-
-    group_col (r8): run SEVERAL independent component problems in ONE
-    iteration chain — pairs and documents both carry the group column
-    (e.g. a policy-variant tag) and every join/aggregate is additionally
-    keyed by it. k variants' propagation rounds collapse from k
-    blocking per-round count() actions to one chain over the k×-volume
-    keyed edge set (the corpus_filter_variants shape); convergence is
-    reached when EVERY group's labels stop changing."""
-    g = [group_col] if group_col else []
-    labels = propagate_min_labels(
-        pairs, g, max_iters=max_iters, until_converged=until_converged
-    )
-    if g:
-        # documents must carry the group column (one row per group x doc);
-        # name-based join coalesces the keys, no ambiguity
-        return (
-            documents.select(*g, F.col("doc_id").cast("long").alias("doc_id"))
-            .join(labels, g + ["doc_id"], "left")
-            .select(
-                *g,
-                "doc_id",
-                F.coalesce("label", "doc_id").cast("long").alias("keep_doc_id"),
-            )
-            .withColumn(
-                "is_dup", (F.col("doc_id") != F.col("keep_doc_id")).cast("boolean")
-            )
-        )
+    Min-label propagation (Pregel-style, see propagate_min_labels) iterates
+    until a round changes nothing, so any chain diameter closes. Each round
+    is one shuffle of the (small) edge set joined against labels; the full
+    corpus joins in only at the end."""
+    labels = propagate_min_labels(pairs, [])
     return (
         documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-        .join(labels.withColumnRenamed("doc_id", "ldoc"), F.col("doc_id") == F.col("ldoc"), "left")
+        .join(labels, ["doc_id"], "left")
         .select(
             "doc_id",
             F.coalesce("label", "doc_id").cast("long").alias("keep_doc_id"),
@@ -2490,36 +2425,37 @@ def near_dup_components(
     )
 
 
-def propagate_min_labels(
-    pairs: DataFrame,
-    g: list,
-    max_iters: int = 5,
-    until_converged: bool = False,
-) -> DataFrame:
+def propagate_min_labels(pairs: DataFrame, g: list) -> DataFrame:
     """The min-label propagation core of near_dup_components, exposed so
     composite plans (corpus_filter) can join the converged label table
     ONCE into their own output row instead of going through the
     documents-shaped wrapper (which re-scans the corpus and adds a second
     join). Returns (g..., doc_id, label) for EDGE ENDPOINTS only — docs
     with no edge keep their own id (callers left-join + coalesce).
+
+    g (r8) runs SEVERAL independent component problems in ONE iteration
+    chain: pairs carry the group columns (e.g. a policy-variant tag) and
+    every join/aggregate is additionally keyed by them, so k variants share
+    one blocking count per round pair; convergence is reached when EVERY
+    group's labels stop changing.
+
     The returned frame is persisted (it is the keep-list; bounded by the
     near-dup edge-endpoint count)."""
-    sym = pairs.select(
-        *g, F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(pairs.select(*g, F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    # Persist the edge set: every propagation round joins against it, and
-    # without a materialization Spark would re-derive the FULL upstream
-    # pipeline (LSH + Jaccard verification) once per round. The verified
-    # edge list is tiny relative to the corpus (near-dup rate), so caching
-    # it is the standard iterative-graph pattern at any scale.
-    sym = sym.persist()
-    # only docs that appear in an edge can change label; singletons join
-    # back at the end (keeps every iteration's working set = edge endpoints)
-    labels = (
-        sym.select(*g, F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-    )
+    # One explode, not a union of two selects: `pairs` is read ONCE, so the
+    # persist below holds the only copy of the upstream pipeline (LSH +
+    # Jaccard verification) and callers need not cache the pair set
+    # themselves. Every propagation round joins against this edge set, so
+    # without the persist Spark would re-derive that pipeline once per
+    # round. The verified edge list is tiny relative to the corpus
+    # (near-dup rate), so caching it is the standard iterative-graph
+    # pattern at any scale.
+    edge = F.explode(
+        F.array(
+            F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+            F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+        )
+    ).alias("__e")
+    sym = pairs.select(*g, edge).select(*g, "__e.src", "__e.dst").persist()
 
     def first_round():
         # Round 1 folds THREE operators into one aggregate (r10): the
@@ -2578,50 +2514,37 @@ def propagate_min_labels(
             )
         )
 
-    if until_converged:
-        # Convergence is checked every TWO propagation rounds (r10): the
-        # blocking count() only sees the LAST round's changed-flag, and
-        # "the final round changed nothing" alone already implies the
-        # labels are stable, so pairing rounds halves the blocking
-        # actions on the critical path (near-dup components are dense —
-        # most graphs converge by round 2, paying ONE count instead of
-        # two). The extra propagation executed when convergence lands on
-        # an odd round is lazy transformations over the persisted
-        # previous labels + cached edge set — round overhead, not data
-        # cost. Labels are bit-identical either way.
-        prev_persisted = None
-        done = 0
-        while done < max_iters:
-            span = min(2, max_iters - done)
-            new_labels = first_round() if done == 0 else one_round(labels)
-            for _ in range(span - 1):
-                new_labels = one_round(new_labels.drop("__changed"))
-            done += span
-            new_labels = new_labels.persist()
-            changed = new_labels.where(F.col("__changed")).count()
-            # unpersist the PERSISTED frame of the previous pair (labels
-            # is a projection over it; unpersisting the projection would
-            # leak the parent's cached blocks)
-            old = prev_persisted
-            prev_persisted = new_labels
-            labels = new_labels.drop("__changed")
-            if old is not None:
-                old.unpersist()
-            if changed == 0:
-                break
-    else:
-        for i in range(max_iters):
-            labels = (first_round() if i == 0 else one_round(labels)).drop(
-                "__changed"
-            )
-    # cache-scope discipline: materialize the (tiny) final labels once,
-    # then release the edge cache — otherwise every call leaks sym's
-    # blocks for the session lifetime. What remains cached is the
-    # keep-list itself, bounded by the near-dup edge-endpoint count.
-    # (in until_converged mode the loop already persisted+counted labels)
-    if not until_converged:
-        labels = labels.persist()
-        labels.count()
+    # Convergence is checked every TWO propagation rounds (r10): the
+    # blocking count() only sees the LAST round's changed-flag, and "the
+    # final round changed nothing" alone already implies the labels are
+    # stable, so pairing rounds halves the blocking actions on the
+    # critical path (near-dup components are dense — most graphs converge
+    # by round 2, paying ONE count instead of two). The extra propagation
+    # executed when convergence lands on an odd round is lazy
+    # transformations over the persisted previous labels + cached edge set
+    # — round overhead, not data cost. Labels are bit-identical either way.
+    # Persisting every pair also keeps each round's plan linear: one_round
+    # reads `cur` twice, so k unpersisted rounds would unroll into
+    # 2^(k-1) copies of the plan.
+    prev_persisted = None
+    for pair in range(PROPAGATION_MAX_ROUNDS // 2):
+        odd = first_round() if pair == 0 else one_round(labels)
+        new_labels = one_round(odd.drop("__changed")).persist()
+        changed = new_labels.where(F.col("__changed")).count()
+        # unpersist the PERSISTED frame of the previous pair (labels is a
+        # projection over it; unpersisting the projection would leak the
+        # parent's cached blocks)
+        old = prev_persisted
+        prev_persisted = new_labels
+        labels = new_labels.drop("__changed")
+        if old is not None:
+            old.unpersist()
+        if changed == 0:
+            break
+    # cache-scope discipline: release the edge cache once the labels are
+    # materialized — otherwise every call leaks sym's blocks for the
+    # session lifetime. What remains cached is the keep-list itself,
+    # bounded by the near-dup edge-endpoint count.
     sym.unpersist()
     return labels
 
@@ -2707,7 +2630,6 @@ def _bytes_to_unicode() -> dict:
 
 
 _B2U = _bytes_to_unicode()
-_U2B = {c: b for b, c in _B2U.items()}
 
 
 def bpe_byte_alphabet() -> list:

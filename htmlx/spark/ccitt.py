@@ -141,18 +141,11 @@ class _BitReader:
             pos += 1
         return (acc >> (nbits - n)) & ((1 << n) - 1)
 
-    def skip_bits(self, n: int) -> None:
-        for _ in range(n):
-            self.read_bit()
-
     def byte_align(self) -> None:
         self.nbits = 0
 
     def exhausted(self) -> bool:
         return self.nbits == 0 and self.pos >= len(self.data)
-
-    def bits_left(self) -> int:
-        return self.nbits + 8 * (len(self.data) - self.pos)
 
 
 def _read_run(r: _BitReader, table: dict) -> int:

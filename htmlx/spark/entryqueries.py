@@ -29,24 +29,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _adaptive(spark: SparkSession, on: bool = True) -> None:
-    """Declare a query family's AQE mode at build time (optimization
-    guide §2.2 'let AQE coalesce small partitions').
-
-    The JVM analytics rows (dedup/LSH/joins/aggregations) opt IN: their
-    static shuffle width (2x cores, session.py) is a constant tuned for
-    neither a 5k-row bench corpus nor a 100 TB cluster, while AQE's
-    runtime coalescing sizes every post-shuffle stage from the observed
-    bytes (measured r10 at sf0.1: dedup_exact 7-10 s -> ~3 s; scale
-    safety: at real volume coalescing is a no-op on already-large
-    partitions and skew-join splitting only helps). The extraction and
-    Python-decode tiers keep AQE OFF (session.py default; the
-    query-stage barrier measurably cost fleet throughput — BASELINE r4)
-    — each builder states its mode idempotently so bench/correctness
-    execution order cannot leak one family's mode into the other."""
-    spark.conf.set("spark.sql.adaptive.enabled", "true" if on else "false")
-
-
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
@@ -2673,10 +2655,7 @@ def q_near_dup_components(spark, sf_dir):
         .where(F.col("jaccard") >= 0.9)
         .select("doc_a", "doc_b")
     )
-    # converge-on-count, not a fixed round budget: the oracle computes the
-    # EXACT transitive closure, so a corpus with a deeper chain than any
-    # fixed budget must still match
-    return analytics.near_dup_components(docs, verified, max_iters=50, until_converged=True)
+    return analytics.near_dup_components(docs, verified)
 
 
 O_NEAR_DUP_COMPONENTS = f"""
@@ -2721,7 +2700,7 @@ def q_simhash(spark, sf_dir):
     return analytics.simhash_docs(_docs(spark, sf_dir), hash_basis="md5")
 
 
-# Same 60-bit md5-basis signature, DuckDB dialect (see analytics.SIMHASH_EXPR)
+# Same 60-bit md5-basis signature, DuckDB dialect (see analytics.simhash_expr)
 O_SIMHASH = f"""
 SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(list_sum(
   [ CASE WHEN list_sum(list_transform(string_split(text, ' '),
@@ -2730,11 +2709,6 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(list_sum(
     FOR b IN generate_series(0, {analytics.SIMHASH_BITS - 1}) ]) AS BIGINT) AS simhash
 FROM documents
 """
-
-
-#: previous invocation's persisted LSH pair set — evicted on the next
-#: call so repeated corpus_filter runs in one session cache O(1) frames
-_CF_PAIRS_CACHE = None
 
 
 def corpus_filter_variants_frame(docs, variants: dict):
@@ -2748,7 +2722,7 @@ def corpus_filter_variants_frame(docs, variants: dict):
     carries the lang-ID column and the exact-dup keeper — see below), the
     Jaccard verification, and the label-propagation iteration chain
     (variant-keyed via propagate_min_labels — one blocking count() per
-    round for ALL variants instead of one per variant per round).
+    round pair for ALL variants instead of one per variant).
     Per-variant: the LSH candidate generation (basis-sharing inside
     minhash_lsh_candidates_variants) and the final reason fan-out.
     Returns (variant, doc_id, reason, keep).
@@ -2787,33 +2761,18 @@ def corpus_filter_variants_frame(docs, variants: dict):
     ).withColumn(
         "exact_keep", F.min("doc_id").over(Window.partitionBy("text_md5"))
     )
-    # The VERIFIED pair set is referenced twice in the DAG (both union
-    # branches of the symmetric edge set inside propagate_min_labels);
-    # without a materialization both hash bases' signature scans and the
-    # Jaccard verification run twice when the components chain first
-    # executes. The verified table is tiny (near-dup pairs only), so
-    # persisting it is safe at any scale. The cache cannot be
-    # unpersisted inside this (lazy) builder, so accumulation across
-    # repeated invocations in one driver session (bench loops, sweeps)
-    # is bounded to ONE cached frame: each call evicts the previous
-    # call's set (r8 advice — the leak was unbounded before).
-    global _CF_PAIRS_CACHE
-    if _CF_PAIRS_CACHE is not None:
-        try:
-            _CF_PAIRS_CACHE.unpersist(blocking=False)
-        except Exception:
-            pass
+    # The VERIFIED pair set is not persisted here: propagate_min_labels
+    # reads it exactly once (one explode into the symmetric edge set) and
+    # persists that edge set itself, so both hash bases' signature scans
+    # and the Jaccard verification run once, and the edge cache is
+    # released before the builder returns.
     pairs = analytics.minhash_lsh_candidates_variants(docs, variants)
     verified = (
         analytics.ngram_jaccard_pairs(docs, pairs, carry_cols=("variant",))
         .where(F.col("jaccard") >= 0.9)
         .select("variant", "doc_a", "doc_b")
-        .persist()
     )
-    _CF_PAIRS_CACHE = verified
-    labels = analytics.propagate_min_labels(
-        verified, ["variant"], max_iters=50, until_converged=True
-    )
+    labels = analytics.propagate_min_labels(verified, ["variant"])
     base_v = base.select(
         F.explode(F.array(*[F.lit(v) for v in variants])).alias("variant"), "*"
     )
@@ -4223,12 +4182,23 @@ WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.
 
 
 def _with_aqe(fn, on: bool = True):
-    """Bind a query builder to its AQE mode (see _adaptive): the mode is
-    declared at registration so bench/correctness execution ORDER cannot
-    leak one family's mode into the other — every build states its own."""
+    """Bind a query builder to its AQE mode (optimization guide §2.2 'let
+    AQE coalesce small partitions'), declared at registration so
+    bench/correctness execution ORDER cannot leak one family's mode into
+    the other — every build states its own, idempotently.
+
+    The JVM analytics rows (dedup/LSH/joins/aggregations) opt IN: their
+    static shuffle width (2x cores, session.py) is a constant tuned for
+    neither a 5k-row bench corpus nor a 100 TB cluster, while AQE's
+    runtime coalescing sizes every post-shuffle stage from the observed
+    bytes (measured r10 at sf0.1: dedup_exact 7-10 s -> ~3 s; scale
+    safety: at real volume coalescing is a no-op on already-large
+    partitions and skew-join splitting only helps). The extraction and
+    Python-decode tiers keep AQE OFF (session.py default; the
+    query-stage barrier measurably cost fleet throughput — BASELINE r4)."""
 
     def wrapped(spark, sf_dir):
-        _adaptive(spark, on)
+        spark.conf.set("spark.sql.adaptive.enabled", "true" if on else "false")
         return fn(spark, sf_dir)
 
     wrapped.__name__ = fn.__name__
@@ -4239,7 +4209,7 @@ def _with_aqe(fn, on: bool = True):
 
 # Extraction + Python-decode tiers keep AQE OFF (the tuned status quo:
 # explicit salted repartition, one python-task wave); JVM analytics rows
-# opt IN for scale-adaptive shuffle coalescing. Rationale in _adaptive.
+# opt IN for scale-adaptive shuffle coalescing. Rationale in _with_aqe.
 QUERIES = {
     "extract_text": _with_aqe(q_extract_text, on=False),
     "extract_links": _with_aqe(q_extract_links, on=False),

@@ -63,15 +63,6 @@ class ParquetTableIO:
         self._write_manifest(manifest)
 
     # -- append ------------------------------------------------------------
-    def append_group(self, df: DataFrame, run_id: str, group_id: int) -> None:
-        """Write one partition group then commit it to the manifest.
-        The manifest update happens only after a successful write, so a
-        failed run leaves the group uncommitted and it is redone on resume
-        (write-then-commit = the Iceberg snapshot-commit analogue)."""
-        path = os.path.join(self.data_dir, f"run_id={run_id}", f"group={group_id}")
-        df.write.mode("overwrite").parquet(path)
-        self._commit_groups(run_id, [group_id])
-
     def append_groups(self, df: DataFrame, run_id: str, group_ids) -> None:
         """Write MANY groups in one pass — df must carry `run_id` and
         `group` columns.

@@ -37,22 +37,11 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("mime", StringType()),
-        StructField("source_url", StringType()),
-    ]
 )
 
 MEDIA_META_SCHEMA = StructType(
@@ -1089,20 +1078,6 @@ def dhash_near_dup(
     return pairs
 
 
-# precedence-ordered drop reasons for image-text pair construction —
-# the corpus_filter convention: the FIRST failing gate names the row
-IMAGE_TEXT_REASONS = (
-    "no_caption",
-    "caption_too_short",
-    "caption_too_long",
-    "caption_lang",
-    "missing_media",
-    "decode_error",
-    "image_too_small",
-    "near_dup_image",
-)
-
-
 def image_text_pairs(
     images: DataFrame,
     media: DataFrame | None = None,
@@ -1136,8 +1111,10 @@ def image_text_pairs(
 
     Returns one row per input image: (page_id, media_id, src, caption,
     caption_bytes, caption_lang, width, height, dhash, keep, reason) —
-    reason is the FIRST failing gate per IMAGE_TEXT_REASONS, '' when
-    kept.
+    reason is the FIRST failing gate (the corpus_filter convention), in
+    precedence order no_caption > caption_too_short > caption_too_long >
+    caption_lang > missing_media > decode_error > image_too_small >
+    near_dup_image; '' when kept.
 
     `pix`: optionally pass a precomputed extract_image_dhash frame
     (media_id, dhash, width, height, error) instead of `media` — the

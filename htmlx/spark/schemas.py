@@ -14,7 +14,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 IMAGE_TYPE = StructType(
@@ -121,42 +120,5 @@ ALL_LINKS_SCHEMA = StructType(
         StructField("error", StringType()),
         StructField("run_id", StringType()),
         StructField("partition_id", IntegerType()),
-    ]
-)
-
-# Per-document audit/security events (audit.go:52-67) with lineage —
-# the flattened table view of RESULT_SCHEMA.audit (derive_audit in job.py)
-AUDIT_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType()),
-        StructField("partition_id", IntegerType()),
-        StructField("url", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("level", StringType()),
-        StructField("event_type", StringType()),
-        StructField("message", StringType()),
-        StructField("tag", StringType()),
-        StructField("attribute", StringType()),
-        StructField("blocked_url", StringType()),
-        StructField("input_size", LongType()),
-        StructField("max_size", LongType()),
-        StructField("depth", IntegerType()),
-        StructField("max_depth", IntegerType()),
-        StructField("raw_value", StringType()),
-    ]
-)
-
-# Per-partition metrics rows -> audit table (north_rule lineage requirement;
-# Spark-native replacement for Statistics, processor.go:254-271)
-METRICS_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType()),
-        StructField("partition_id", IntegerType()),
-        StructField("docs_in", LongType()),
-        StructField("docs_ok", LongType()),
-        StructField("docs_error", LongType()),
-        StructField("bytes_in", LongType()),
-        StructField("extract_ms", LongType()),
-        StructField("audit_events", LongType()),
     ]
 )

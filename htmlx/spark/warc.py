@@ -452,14 +452,6 @@ def read_warc(
     return files.mapInPandas(_pages_gen(record_types), WARC_PAGES_SCHEMA)
 
 
-#: Parsed CDXJ index row: everything a pruning join needs to decide
-#: which archives (and which byte ranges, on a range-capable reader)
-#: contain wanted records.
-CDX_SCHEMA = (
-    "surt string, warc_ts timestamp, url string, mime string, status int, "
-    "digest string, length long, offset long, filename string"
-)
-
 _CDXJ_JSON_SCHEMA = (
     "url string, mime string, status string, digest string, "
     "length string, offset string, filename string"
@@ -469,7 +461,11 @@ _CDXJ_JSON_SCHEMA = (
 def read_cdx(spark: SparkSession, path: str) -> DataFrame:
     """Read a Common-Crawl-style CDXJ capture index (the `cc-index`
     text files: one line per capture, `SURT-key timestamp14 {json}`)
-    into CDX_SCHEMA. 100 TB plan: real Common-Crawl jobs prune by
+    into (surt string, warc_ts timestamp, url string, mime string,
+    status int, digest string, length long, offset long, filename
+    string): everything a pruning join needs to decide which archives
+    (and which byte ranges, on a range-capable reader) contain wanted
+    records. 100 TB plan: real Common-Crawl jobs prune by
     url/host/status BEFORE touching archive bytes — a snapshot's index
     is ~200 GB of text vs ~100 TB of WARC, so a keep-list join against
     this table followed by cdx_archive_pruning cuts the archive scan to
@@ -630,7 +626,7 @@ def iter_warc_index(
             )
 
 
-#: iter_warc_index's output: CDX_SCHEMA minus surt (derived JVM-side).
+#: iter_warc_index's output: read_cdx's columns minus surt (derived JVM-side).
 _CDX_BUILD_SCHEMA = (
     "url string, warc_ts timestamp, mime string, status int, "
     "digest string, length long, offset long, filename string"
@@ -640,7 +636,7 @@ _CDX_BUILD_SCHEMA = (
 def cdx_from_warc(
     spark: SparkSession, path, record_types: tuple = ("response",)
 ) -> DataFrame:
-    """Build a CDX capture index (CDX_SCHEMA) from .warc/.warc.gz
+    """Build a CDX capture index (read_cdx's columns) from .warc/.warc.gz
     archives — the complement of read_cdx, for crawls that don't ship
     one: index once (one cheap header-only pass, no payload inflation),
     then every downstream job prunes by url/host/status before touching

@@ -4,7 +4,7 @@
       --input <documents table/parquet path> --output <keep-list root> \
       [--mode filter|dedup|components|split|decontaminate|pii|pack|quality|paradedup|exactdedup|spandedup|pipeline] \
       [--threshold 0.9] [--min-chars 100] [--hash-basis xxhash64] \
-      [--iters 0] [--eval-input <eval parquet>] [--seq-len 2048] \
+      [--eval-input <eval parquet>] [--seq-len 2048] \
       [--keep-by <col>] [--keep-desc] [--quality-rule gopher|c4|both|none]
 
 Modes:
@@ -75,7 +75,7 @@ Modes:
               bucket so assignments reproduce across engines/clusters.
   hostrank    host-level PageRank prior over a link-graph table at
               --input with columns (src_host, dst_host[, weight]):
-              damped power iteration (--damping, --iters) with uniform
+              damped power iteration (--damping, --rank-iters) with uniform
               teleport and dangling-mass redistribution; emits
               (host, rank). Feed extract_links output aggregated to
               host pairs; join the rank back as a per-doc quality prior.
@@ -149,8 +149,8 @@ that ordering column instead (e.g. a crawl timestamp or quality score) and
 --keep-desc keeps the highest value (newest/best). doc_id always breaks
 ties deterministically.
 
---iters 0 (default) iterates label propagation to convergence (one scalar
-count() per round); a positive value pins a fixed round budget.
+Label propagation (dedup / components / filter / pipeline near_dedup)
+always iterates to convergence (one scalar count() per two rounds).
 """
 
 import argparse
@@ -393,12 +393,7 @@ def run_pipeline(spark, docs, args) -> dict:
             .where(F.col("jaccard") >= args.threshold)
             .select("doc_a", "doc_b")
         )
-        kw = (
-            {"max_iters": 50, "until_converged": True}
-            if args.iters == 0
-            else {"max_iters": args.iters}
-        )
-        comp = analytics.near_dup_components(cur, pairs, **kw)
+        comp = analytics.near_dup_components(cur, pairs)
         return comp.where(~F.col("is_dup")).select("doc_id")
 
     keep, n_cur = stage("near_dedup", near_keep, n_cur)
@@ -650,7 +645,6 @@ def main():
     ap.add_argument("--threshold", type=float, default=0.9, help="Jaccard verify threshold")
     ap.add_argument("--min-chars", type=int, default=100)
     ap.add_argument("--hash-basis", choices=["xxhash64", "md5"], default="xxhash64")
-    ap.add_argument("--iters", type=int, default=0, help="0 = iterate to convergence")
     ap.add_argument("--span-window", type=int, default=15,
                     help="minimum duplicated run length in tokens (spandedup mode)")
     ap.add_argument("--span-max-occurrences", type=int, default=None,
@@ -666,8 +660,6 @@ def main():
     ap.add_argument("--quality-rule", choices=["gopher", "c4", "both", "none"],
                     default="gopher", help="pipeline-mode quality gate")
     args = ap.parse_args()
-    if args.iters < 0:
-        ap.error("--iters must be >= 0 (0 = iterate to convergence)")
     if args.mode == "components" and not args.pairs:
         ap.error("--mode components requires --pairs")
     if args.mode == "decontaminate" and not args.eval_input:
@@ -679,14 +671,6 @@ def main():
 
     spark = SparkSession.builder.appName("htmlx-curate").getOrCreate()
     docs = spark.read.parquet(args.input)
-
-    def keep_list(pairs):
-        kw = (
-            {"max_iters": 50, "until_converged": True}
-            if args.iters == 0
-            else {"max_iters": args.iters}
-        )
-        return analytics.near_dup_components(docs, pairs, **kw)
 
     def verified_pairs():
         cands = analytics.minhash_lsh_candidates(docs, hash_basis=args.hash_basis)
@@ -769,8 +753,7 @@ def main():
             max_hamming=args.hamming, hash_col=hcol,
         ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
         comp = analytics.near_dup_components(
-            reps.select(F.col("rep_id").cast("long").alias("doc_id")),
-            pairs, max_iters=50, until_converged=True,
+            reps.select(F.col("rep_id").cast("long").alias("doc_id")), pairs
         )
         resolved = (
             ok.join(reps, hcol)
@@ -848,8 +831,7 @@ def main():
             F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
         )
         comp = analytics.near_dup_components(
-            docs.select(F.col("vec_id").cast("long").alias("doc_id")),
-            pairs, max_iters=50, until_converged=True,
+            docs.select(F.col("vec_id").cast("long").alias("doc_id")), pairs
         )
         out = comp.select(
             F.col("doc_id").alias("vec_id"),
@@ -928,10 +910,9 @@ def main():
                      "(merges.parquet + alphabet.parquet; see bpetrain)")
         out = analytics.bpe_encode_ids(docs, merges, alphabet)
     elif args.mode == "components":
-        pairs = spark.read.parquet(args.pairs)
-        out = keep_list(pairs)
+        out = analytics.near_dup_components(docs, spark.read.parquet(args.pairs))
     elif args.mode == "dedup":
-        out = keep_list(verified_pairs())
+        out = analytics.near_dup_components(docs, verified_pairs())
     else:
         base = docs.select(
             F.col("doc_id").cast("long").alias("doc_id"),
@@ -941,7 +922,7 @@ def main():
         exact = analytics.dedup_exact(docs).select(
             "text_md5", F.col("keep_doc_id").alias("exact_keep")
         )
-        comp = keep_list(verified_pairs()).select(
+        comp = analytics.near_dup_components(docs, verified_pairs()).select(
             "doc_id", F.col("is_dup").alias("near_dup")
         )
         lang = analytics.lang_id_docs(docs)

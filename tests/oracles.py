@@ -84,9 +84,7 @@ def corpus_filter_frame(docs, hash_basis: str, max_bucket_size):
         .where(F.col("jaccard") >= 0.9)
         .select("doc_a", "doc_b")
     )
-    labels = analytics.propagate_min_labels(
-        verified, [], max_iters=50, until_converged=True
-    )
+    labels = analytics.propagate_min_labels(verified, [])
     # no broadcast hints: every side here is corpus-sized at scale (the
     # label table is bounded by near-dup endpoints but still grows with
     # the corpus) — shuffle joins on uniform doc_id keys, right at 100 TB

@@ -113,32 +113,6 @@ def test_embedding_near_dup_ivf_recall(spark, emb):
     assert recall >= 0.9, recall  # true near-dups co-locate
 
 
-def test_ivf_fixed_centroids_reuse(spark, emb, tmp_path):
-    """Persisted centroids are a fixed index artifact: re-assigning the
-    training vectors against the saved table equals inline training
-    output exactly, and a NEW batch assigns into the same bucket space
-    without retraining (the incremental-index contract — per-batch
-    retraining would bucket the same vector differently across
-    batches)."""
-    from htmlx.spark import analytics
-
-    assigned, cents = analytics.ivf_assign(emb, num_centroids=4)
-    cp = str(tmp_path / "centroids.parquet")
-    cents.write.parquet(cp)
-    loaded = spark.read.parquet(cp)
-    re_assigned, _ = analytics.ivf_assign(emb, centroids=loaded)
-    a = {r["vec_id"]: r["bucket"] for r in assigned.collect()}
-    b = {r["vec_id"]: r["bucket"] for r in re_assigned.collect()}
-    assert a == b
-    # a new batch (ids offset, same vectors) lands in the same buckets
-    from pyspark.sql import functions as F
-
-    shifted = emb.select((F.col("vec_id") + 1000).alias("vec_id"), "embedding")
-    c = {r["vec_id"] - 1000: r["bucket"]
-         for r in analytics.ivf_assign(shifted, centroids=loaded)[0].collect()}
-    assert c == a
-
-
 def test_curate_embdedup_cli(spark, tmp_path, monkeypatch):
     """--mode embdedup e2e over an embeddings parquet: a planted
     near-identical pair collapses to one keeper (min vec_id), distinct

@@ -14,6 +14,8 @@ from htmlx.spark.session import get_spark
 from tests.oracles import bpe_apply_merges
 
 SF_DIR = "/root/testdata/sf0.001"
+# byte-level decode table: the inverse of the trainer's byte -> symbol map
+_U2B = {c: b for b, c in A._B2U.items()}
 
 
 @pytest.fixture(scope="module")
@@ -352,7 +354,7 @@ def test_byte_table_is_the_published_bijection():
 def test_byte_level_pretokens_roundtrip_unicode():
     text = "héllo 世界 🎉 ok"
     toks = A._bpe_pretokens_py(text, byte_level=True)
-    decoded = bytes(A._U2B[c] for t in toks for c in t).decode("utf-8")
+    decoded = bytes(_U2B[c] for t in toks for c in t).decode("utf-8")
     assert decoded == text.replace("🎉", "🎉")  # exact bytes back
     assert "".join(toks) != ""  # non-empty mapping
 
@@ -374,7 +376,7 @@ def test_byte_level_train_and_ids_no_unk(spark):
         assert unk not in r["token_ids"]  # byte-level NEVER UNKs
         # decode: ids -> symbols -> bytes -> original text
         syms = "".join(rev[i] for i in r["token_ids"])
-        decoded = bytes(A._U2B[c] for c in syms).decode("utf-8")
+        decoded = bytes(_U2B[c] for c in syms).decode("utf-8")
         assert decoded == "".join(
             t for t in __import__("re").findall(A.BPE_PRETOKEN_PATTERN, texts[d])
         )

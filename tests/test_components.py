@@ -5,8 +5,10 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from htmlx.spark.analytics import near_dup_components
+from htmlx.spark.analytics import near_dup_components, propagate_min_labels
 from htmlx.spark.session import get_spark
+
+SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
@@ -16,10 +18,10 @@ def spark():
     s.stop()
 
 
-def _run(spark, n_docs, edges, **kw):
+def _run(spark, n_docs, edges):
     docs = spark.createDataFrame([(i,) for i in range(n_docs)], "doc_id long")
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    out = near_dup_components(docs, pairs, **kw)
+    out = near_dup_components(docs, pairs)
     return {r.doc_id: (r.keep_doc_id, r.is_dup) for r in out.collect()}
 
 def test_transitive_chain_collapses_to_min(spark):
@@ -32,16 +34,16 @@ def test_transitive_chain_collapses_to_min(spark):
 
 
 def test_long_chain_within_iteration_budget(spark):
-    # a diameter-5 path: 9-8-7-6-5-4 -> all label 4 at max_iters=5
+    # a diameter-5 path: 9-8-7-6-5-4 -> all label 4
     edges = [(i, i + 1) for i in range(4, 9)]
-    got = _run(spark, 10, edges, max_iters=5)
+    got = _run(spark, 10, edges)
     assert all(got[i] == (4, i != 4) for i in range(4, 10))
 
 
-def test_until_converged_handles_any_diameter(spark):
-    # diameter 7 exceeds the default fixed budget; convergence mode closes it
+def test_converges_at_any_diameter(spark):
+    # diameter 7 needs 7 propagation rounds; the default call converges
     edges = [(i, i + 1) for i in range(0, 7)]
-    got = _run(spark, 8, edges, max_iters=50, until_converged=True)
+    got = _run(spark, 8, edges)
     assert all(got[i] == (0, i != 0) for i in range(8))
 
 
@@ -50,7 +52,7 @@ def test_keep_list_consistency_against_corpus(spark):
     itself) and every near-dup pair lands in one component."""
     from htmlx.spark.analytics import minhash_lsh_candidates, ngram_jaccard_pairs
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     cands = minhash_lsh_candidates(docs, max_bucket_size=None)
     verified = ngram_jaccard_pairs(docs, cands).where("jaccard >= 0.9").select("doc_a", "doc_b")
     comp = near_dup_components(docs, verified).cache()
@@ -62,10 +64,11 @@ def test_keep_list_consistency_against_corpus(spark):
 
 
 def test_group_col_runs_independent_problems_in_one_chain(spark):
-    """group_col (r8): two different edge sets keyed by a variant tag
+    """Group keys (r8): two different edge sets keyed by a variant tag
     must produce exactly the per-variant results of separate calls —
     labels must NOT leak across groups even when the same doc_id has
-    different components in each."""
+    different components in each. Driven the way corpus_filter uses it:
+    propagate_min_labels keyed by the tag, then a left join + coalesce."""
     edges_a = [(1, 2), (2, 3), (5, 6)]
     edges_b = [(3, 4)]  # doc 3 is a dup of 1's component in A, of 3..4 in B
     docs = spark.createDataFrame([(i,) for i in range(7)], "doc_id long")
@@ -76,17 +79,57 @@ def test_group_col_runs_independent_problems_in_one_chain(spark):
     docs_v = docs.select(
         F.explode(F.array(F.lit("a"), F.lit("b"))).alias("variant"), "doc_id"
     )
+    labels = propagate_min_labels(tagged, ["variant"])
+    keep = F.coalesce("label", "doc_id")
     got = {
         (r.variant, r.doc_id): (r.keep_doc_id, r.is_dup)
-        for r in near_dup_components(
-            docs_v, tagged, max_iters=50, until_converged=True, group_col="variant"
-        ).collect()
+        for r in docs_v.join(labels, ["variant", "doc_id"], "left")
+        .select(
+            "variant",
+            "doc_id",
+            keep.alias("keep_doc_id"),
+            (F.col("doc_id") != keep).alias("is_dup"),
+        )
+        .collect()
     }
     assert len(got) == 14
     for v, edges in (("a", edges_a), ("b", edges_b)):
-        want = _run(spark, 7, edges, max_iters=50, until_converged=True)
+        want = _run(spark, 7, edges)
         for i in range(7):
             assert got[(v, i)] == want[i], (v, i)
+
+
+def test_pair_set_is_read_once(spark):
+    """The symmetric edge set is one explode over the pairs, not a union
+    of two selects, so the upstream pair pipeline (LSH + Jaccard at the
+    query rows) runs once however many rounds propagation takes."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def identity(batches):
+        for b in batches:
+            seen.add(len(b))
+            yield b
+
+    edges = [(1, 2), (2, 3), (5, 6), (7, 8), (8, 9), (9, 10), (10, 11)]
+    raw = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    pairs = raw.mapInPandas(identity, raw.schema)
+    docs = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
+    near_dup_components(docs, pairs).collect()
+    assert seen.value == len(edges)
+
+
+def test_corpus_filter_holds_one_persisted_frame(spark):
+    """Building and running corpus_filter leaves exactly one persisted
+    RDD behind (the keep-list labels): no module-global pair cache, and
+    the edge set is released inside propagate_min_labels."""
+    from htmlx.spark.entryqueries import q_corpus_filter
+
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    q_corpus_filter(spark, SF_DIR).collect()
+    assert jsc.getPersistentRDDs().size() - before == 1
+    spark.catalog.clearCache()
 
 
 def test_corpus_filter_variants_matches_separate_frames(spark):
@@ -96,7 +139,7 @@ def test_corpus_filter_variants_matches_separate_frames(spark):
     from htmlx.spark.entryqueries import corpus_filter_variants_frame
     from tests.oracles import corpus_filter_frame
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     merged = corpus_filter_variants_frame(
         docs, {"oracle": ("md5", None), "production": ("xxhash64", 1024)}
     )

@@ -73,7 +73,6 @@ def _pipeline_args(tmp_path, **over):
         keep_desc=False,
         hash_basis="xxhash64",
         threshold=0.9,
-        iters=0,
         eval_input=None,
         seq_len=64,
         pack_buckets=2,

@@ -1,11 +1,17 @@
 """Static lint: a shipped entry point reaches every top-level def in htmlx/.
 
+A top-level def here is a def, a class, or a column-0 `NAME = ...` /
+`NAME: T = ...` assignment, whose body is its right-hand side. Dunder
+names (`__all__`, ...) are not defs: their assignments stay module-level
+statements.
+
 Roots are all code in jobs/, perfbench/, tools/, bench.py and
-__spark_entry__.py, plus the module-level statements of htmlx/ (decorators
-included: they run at import). That is how the QUERIES rows become roots.
-From there the lint takes a fixpoint: a reached name reaches the names used
-in the body of every top-level htmlx/ def or class of that name. Any
-top-level htmlx/ def or class left unreached fails. tests/ is never a root.
+__spark_entry__.py, plus the other module-level statements of htmlx/
+(decorators included: they run at import). The QUERIES rows become roots
+because __spark_entry__.py names the QUERIES table. From there the lint
+takes a fixpoint: a reached name reaches the names used in the body of
+every top-level htmlx/ def of that name. Any top-level htmlx/ def left
+unreached fails. tests/ is never a root.
 
 A name counts as used when it appears as code, anywhere in an f-string, or
 as a string literal that is exactly the name (getattr, registry keys and the
@@ -36,14 +42,17 @@ _STRING_END = {
     for q in ("'''", '"""', "'", '"')
 }
 _WORD = re.compile(r"[A-Za-z_]\w*")
+# `NAME = ...` or `NAME: T = ...` (not `==`), matched right after the name
+_ASSIGN = re.compile(r"[ \t]*(?::[^=\n]*)?=(?!=)")
 
 
 def _scan(src: str) -> tuple[Counter, list]:
     """Split src's references by owner.
 
     Returns the references made by module-level statements and a list of
-    (name, references) for each top-level def or class. A top-level def runs
-    from its `def`/`class` line to the next token that starts a line at
+    (name, references) for each top-level def, class or assignment. A
+    top-level def runs from its `def`/`class` line (or, for an assignment,
+    from just after its name) to the next token that starts a line at
     column 0.
     """
     module, defs = Counter(), []
@@ -56,6 +65,14 @@ def _scan(src: str) -> tuple[Counter, list]:
             refs = module
             if m["name"] in ("def", "class", "async"):
                 defs.append(("", Counter()))
+            elif (
+                m["name"]
+                and not (m["name"].startswith("__") and m["name"].endswith("__"))
+                and _ASSIGN.match(src, pos)
+            ):
+                defs.append((m["name"], Counter()))
+                refs, prev = defs[-1][1], m["name"]
+                continue
         if m["quote"]:
             end = _STRING_END[m["quote"]].match(src, pos)
             if end is None:
@@ -120,18 +137,23 @@ def test_scan_ignores_comments_docstrings_and_definitions():
         "TABLE = {'row': used}\n"
         "class Kls:\n    def method(self):\n        return Other\n"
         "async def coro(): pass\n"
+        "LIMIT: int = (\n    BASE\n)\n"
+        "__all__ = [exported]\n"
+        "if LIMIT == 1:\n    pass\n"
     )
-    assert [name for name, _ in defs] == ["used", "Kls", "coro"]
+    assert [name for name, _ in defs] == ["used", "TABLE", "Kls", "coro", "LIMIT"]
     assert {"helper", "inner", "by_key", "getattr"} <= set(defs[0][1])
     assert not {"used", "unused_a", "unused_b", "TABLE"} & set(defs[0][1])
-    assert "Other" in defs[1][1] and "method" not in defs[1][1]
-    assert {"helper_mod", "decorate", "TABLE", "row", "used"} <= set(module)
-    assert not {"doc_word", "Kls", "Other", "helper"} & set(module)
+    assert {"row", "used"} <= set(defs[1][1]) and "TABLE" not in defs[1][1]
+    assert "Other" in defs[2][1] and "method" not in defs[2][1]
+    assert {"int", "BASE"} <= set(defs[4][1])
+    assert {"helper_mod", "decorate", "exported", "LIMIT"} <= set(module)
+    assert not {"doc_word", "Kls", "Other", "helper", "row", "BASE"} & set(module)
 
 
 def test_reachability_is_transitive_and_ignores_tests(tmp_path):
     files = {
-        "jobs/run.py": "from htmlx.a import entry\nentry()\n",
+        "jobs/run.py": "from htmlx.a import entry, REGISTRY\nentry()\n",
         "htmlx/a.py": (
             "def entry():\n    return middle()\n"
             "def middle():\n    return leaf\n"
@@ -139,8 +161,10 @@ def test_reachability_is_transitive_and_ignores_tests(tmp_path):
             "def only_dead_calls():\n    return only_tests()\n"
             "def only_tests(): pass\n"
             "REGISTRY = {'row': registered}\n"
+            "UNUSED_TABLE = {'row': only_in_table}\n"
+            "__all__ = ['entry']\n"
         ),
-        "htmlx/b.py": "def registered(): pass\n",
+        "htmlx/b.py": "def registered(): pass\ndef only_in_table(): pass\n",
         "tests/test_a.py": "from htmlx.a import only_tests\nonly_tests()\n",
     }
     for rel, src in files.items():
@@ -149,4 +173,6 @@ def test_reachability_is_transitive_and_ignores_tests(tmp_path):
     assert _unreached(tmp_path) == [
         "htmlx/a.py only_dead_calls",
         "htmlx/a.py only_tests",
+        "htmlx/a.py UNUSED_TABLE",
+        "htmlx/b.py only_in_table",
     ]

@@ -171,7 +171,7 @@ def test_components_plan_no_cartesian(spark, docs):
     verified = ngram_jaccard_pairs(docs, cands).where("jaccard >= 0.9").select(
         "doc_a", "doc_b"
     )
-    p = plan_of(near_dup_components(docs, verified, max_iters=3))
+    p = plan_of(near_dup_components(docs, verified))
     assert "CartesianProduct" not in p and "BroadcastNestedLoop" not in p
     assert "InMemoryTableScan" in p or "InMemoryRelation" in p
 
