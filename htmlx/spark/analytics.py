@@ -2549,6 +2549,83 @@ def propagate_min_labels(pairs: DataFrame, g: list) -> DataFrame:
     return labels
 
 
+def corpus_filter(docs: DataFrame, variants: dict, threshold: float) -> DataFrame:
+    """The composite training-corpus filter: every doc keeps or drops with
+    a precedence-ordered reason (exact_dup > near_dup > low_quality
+    (< 100 chars) > und_lang), under SEVERAL (hash_basis, max_bucket_size)
+    LSH policies in ONE pass — variants maps a tag to its policy, e.g.
+    {"production": ("xxhash64", 1024)}; threshold is the Jaccard verify
+    bound. Returns (variant, doc_id, reason, keep), one row per variant
+    per input doc.
+
+    Shared once across all variants: the base scan (which also carries
+    the lang-ID column and the exact-dup keeper — see below), the Jaccard
+    verification, and the label-propagation iteration chain (variant-keyed
+    via propagate_min_labels — one blocking count() per round pair for ALL
+    variants instead of one per variant). Per-variant: the LSH candidate
+    generation (basis-sharing inside minhash_lsh_candidates_variants) and
+    the final reason fan-out.
+
+    Plan shape (r10, guide §2.4 — remove shuffles outright; measured and
+    oracle-pinned equivalent):
+    - exact-dup keeper = min(doc_id) window over the SAME text_md5 the
+      base row computes (exactly the oracle's own shape) — no dedup_exact
+      groupBy + corpus-wide join-back.
+    - lang-ID is a scan-side COLUMN of base (pure projection), not a
+      corpus-wide doc_id join.
+    - Jaccard verifies the VARIANT-TAGGED pairs directly
+      (ngram_jaccard_pairs carry_cols): a pair's jaccard does not depend
+      on the tag, and the expensive shingle-set joins are identical
+      either way, so no distinct() + tag-re-join round trip. Pairs shared
+      by k variants pay k (trivial) array_intersect evaluations instead —
+      bounded by the variant count, never the corpus.
+    - the converged labels join base ONCE on (variant, doc_id)."""
+    # one scale-adaptive fan-out shared by every consumer below (base,
+    # both bases' signature scans, the shingle sets) — no-op at real
+    # scan widths
+    docs = spread_small_input(docs)
+    base = with_lang_pred(
+        docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
+    ).select(
+        "doc_id",
+        F.md5("text").alias("text_md5"),
+        F.length("text").alias("n_chars"),
+        "pred_lang",
+    ).withColumn(
+        "exact_keep", F.min("doc_id").over(Window.partitionBy("text_md5"))
+    )
+    # The VERIFIED pair set is not persisted here: propagate_min_labels
+    # reads it exactly once (one explode into the symmetric edge set) and
+    # persists that edge set itself, so both hash bases' signature scans
+    # and the Jaccard verification run once, and the edge cache is
+    # released before the function returns.
+    pairs = minhash_lsh_candidates_variants(docs, variants)
+    verified = (
+        ngram_jaccard_pairs(docs, pairs, carry_cols=("variant",))
+        .where(F.col("jaccard") >= threshold)
+        .select("variant", "doc_a", "doc_b")
+    )
+    labels = propagate_min_labels(verified, ["variant"])
+    base_v = base.select(
+        F.explode(F.array(*[F.lit(v) for v in variants])).alias("variant"), "*"
+    )
+    # no broadcast hints: every side here is corpus-sized at scale —
+    # shuffle joins on uniform keys (md5 / doc_id)
+    joined = base_v.join(labels, ["variant", "doc_id"], "left").withColumn(
+        "near_dup", F.col("doc_id") != F.coalesce("label", "doc_id")
+    )
+    reason = (
+        F.when(F.col("doc_id") != F.col("exact_keep"), F.lit("exact_dup"))
+        .when(F.col("near_dup"), F.lit("near_dup"))
+        .when(F.col("n_chars") < 100, F.lit("low_quality"))
+        .when(F.col("pred_lang") == "und", F.lit("und_lang"))
+        .otherwise(F.lit(""))
+    )
+    return joined.select(
+        "variant", "doc_id", reason.alias("reason")
+    ).withColumn("keep", (F.col("reason") == "").cast("boolean"))
+
+
 # BPE-ish pre-tokenizer (GPT-2-style, restricted to the regex subset Java
 # and RE2 interpret identically): optional leading space + letter run /
 # digit run / punctuation run. Subword vocabularies split these further,
@@ -2790,7 +2867,7 @@ def _bpe_word_freqs(documents, max_vocab, text_col, byte_level):
     return rows
 
 
-def train_bpe(
+def train_bpe_full(
     documents: DataFrame,
     num_merges: int = 1000,
     max_vocab: int = 1_000_000,
@@ -2801,28 +2878,17 @@ def train_bpe(
     the merge loop on the top-max_vocab word-frequency table (ordered
     count desc, word asc — a total order, so the cap is deterministic).
     The driver collect is bounded by max_vocab, never corpus size —
-    the standard tokenizer-training shape. Returns the merges list;
-    persist with bpe_merges_df(...).write.parquet(...).
+    the standard tokenizer-training shape. Returns (merges, alphabet):
+    the merges list (persist with bpe_merges_df(...).write.parquet(...))
+    and the training ALPHABET — sorted distinct characters of the capped
+    word-frequency table, or the fixed byte alphabet in byte order when
+    byte_level — together they define the id space
+    bpe_vocab/bpe_encode_ids use.
 
     byte_level=True trains over UTF-8 BYTES mapped through the GPT-2
     byte<->unicode table: fixed 256-symbol base alphabet, no UNK ever,
     CJK/emoji handled without alphabet blowup — the published design
     for web-scale multilingual corpora."""
-    rows = _bpe_word_freqs(documents, max_vocab, text_col, byte_level)
-    return train_bpe_merges(rows, num_merges)
-
-
-def train_bpe_full(
-    documents: DataFrame,
-    num_merges: int = 1000,
-    max_vocab: int = 1_000_000,
-    text_col: str = "text",
-    byte_level: bool = False,
-):
-    """train_bpe plus the training ALPHABET — sorted distinct characters
-    of the capped word-frequency table, or the fixed byte alphabet in
-    byte order when byte_level — together they define the id space
-    bpe_vocab/bpe_encode_ids use. Same single corpus pass."""
     rows = _bpe_word_freqs(documents, max_vocab, text_col, byte_level)
     alphabet = (
         bpe_byte_alphabet()

@@ -732,7 +732,7 @@ def q_token_stats(spark, sf_dir):
     projection, PLUS greedy next-fit sequence packing
     (analytics.pack_sequences: doc_id-ordered bins of 512 whitespace
     tokens across 8 parallel buckets), PLUS (r9) a CORPUS-TRAINED BPE
-    level: analytics.train_bpe learns 16 merges on this very corpus
+    level: analytics.train_bpe_full learns 16 merges on this very corpus
     (one word-count shuffle + the bounded driver merge loop), the
     replace-chain encoder counts exact subword tokens per doc entirely
     inside whole-stage codegen, and a second packing runs on those REAL
@@ -746,7 +746,7 @@ def q_token_stats(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     stats = analytics.token_stats(docs, include_bpe=True)
     packed = analytics.pack_sequences(docs, seq_len=512, num_buckets=8)
-    merges = analytics.train_bpe(docs, num_merges=16, max_vocab=100_000)
+    merges, _ = analytics.train_bpe_full(docs, num_merges=16, max_vocab=100_000)
     real = analytics.bpe_encode_counts(docs, merges)
     packed_real = analytics.pack_sequences(
         docs,
@@ -2711,88 +2711,6 @@ FROM documents
 """
 
 
-def corpus_filter_variants_frame(docs, variants: dict):
-    """The composite training-corpus filter under SEVERAL (hash_basis,
-    max_bucket_size) policies in ONE pass — the dedup_spans_variants
-    pattern applied to the heaviest bench pair (r7 VERDICT item 3: the
-    separate corpus_filter + corpus_filter_production queries recomputed
-    the full exact-dedup/lang-ID/verify/components subplan twice).
-
-    Shared once across all variants: the base scan (which since r10 also
-    carries the lang-ID column and the exact-dup keeper — see below), the
-    Jaccard verification, and the label-propagation iteration chain
-    (variant-keyed via propagate_min_labels — one blocking count() per
-    round pair for ALL variants instead of one per variant).
-    Per-variant: the LSH candidate generation (basis-sharing inside
-    minhash_lsh_candidates_variants) and the final reason fan-out.
-    Returns (variant, doc_id, reason, keep).
-
-    r10 restructure (guide §2.4 — remove shuffles outright; measured and
-    oracle-pinned equivalent):
-    - exact-dup keeper = min(doc_id) window over the SAME text_md5 the
-      base row computes (exactly the oracle's own shape) — the former
-      dedup_exact groupBy + corpus-wide join-back collapses into the one
-      digest exchange.
-    - lang-ID is a scan-side COLUMN of base (pure projection), not a
-      corpus-wide doc_id join.
-    - Jaccard verifies the VARIANT-TAGGED pairs directly
-      (ngram_jaccard_pairs carry_cols): a pair's jaccard does not depend
-      on the tag, and the expensive shingle-set joins are identical
-      either way, so the former distinct() + tag-re-join round trip is
-      gone. Pairs shared by k variants pay k (trivial) array_intersect
-      evaluations instead — bounded by the variant count, never the
-      corpus.
-    - the converged labels join base ONCE on (variant, doc_id); the old
-      comp chain re-scanned docs for the variant fan-out and joined
-      twice."""
-    from pyspark.sql import Window
-
-    # one scale-adaptive fan-out shared by every consumer below (base,
-    # both bases' signature scans, the shingle sets) — no-op at real
-    # scan widths
-    docs = analytics.spread_small_input(docs)
-    base = analytics.with_lang_pred(
-        docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
-    ).select(
-        "doc_id",
-        F.md5("text").alias("text_md5"),
-        F.length("text").alias("n_chars"),
-        "pred_lang",
-    ).withColumn(
-        "exact_keep", F.min("doc_id").over(Window.partitionBy("text_md5"))
-    )
-    # The VERIFIED pair set is not persisted here: propagate_min_labels
-    # reads it exactly once (one explode into the symmetric edge set) and
-    # persists that edge set itself, so both hash bases' signature scans
-    # and the Jaccard verification run once, and the edge cache is
-    # released before the builder returns.
-    pairs = analytics.minhash_lsh_candidates_variants(docs, variants)
-    verified = (
-        analytics.ngram_jaccard_pairs(docs, pairs, carry_cols=("variant",))
-        .where(F.col("jaccard") >= 0.9)
-        .select("variant", "doc_a", "doc_b")
-    )
-    labels = analytics.propagate_min_labels(verified, ["variant"])
-    base_v = base.select(
-        F.explode(F.array(*[F.lit(v) for v in variants])).alias("variant"), "*"
-    )
-    # no broadcast hints: every side here is corpus-sized at scale (see
-    # corpus_filter_frame) — shuffle joins on uniform keys (md5 / doc_id)
-    joined = base_v.join(labels, ["variant", "doc_id"], "left").withColumn(
-        "near_dup", F.col("doc_id") != F.coalesce("label", "doc_id")
-    )
-    reason = (
-        F.when(F.col("doc_id") != F.col("exact_keep"), F.lit("exact_dup"))
-        .when(F.col("near_dup"), F.lit("near_dup"))
-        .when(F.col("n_chars") < 100, F.lit("low_quality"))
-        .when(F.col("pred_lang") == "und", F.lit("und_lang"))
-        .otherwise(F.lit(""))
-    )
-    return joined.select(
-        "variant", "doc_id", reason.alias("reason")
-    ).withColumn("keep", (F.col("reason") == "").cast("boolean"))
-
-
 def q_corpus_filter(spark, sf_dir):
     """The composite training-corpus filter — the end-to-end decision a
     100 TB data pipeline actually ships: every doc keeps or drops with a
@@ -2804,7 +2722,8 @@ def q_corpus_filter(spark, sf_dir):
     Since r8 this is the MERGED variants row: variant='oracle' is the
     exact DuckDB-replicable configuration (md5 basis, uncapped buckets);
     variant='production' is the shipping configuration (xxhash64 basis,
-    buckets capped at 1024 — jobs/curate.py defaults), both in one pass.
+    buckets capped at 1024) — what jobs/curate.py --mode filter runs
+    through the same analytics.corpus_filter — both in one pass.
     The oracle replays ONE computation cross-joined to both variant
     tags: legitimate because the VERIFIED pair sets coincide across
     bases on this corpus (near-dup pairs here are >=0.9-Jaccard, whose
@@ -2814,9 +2733,10 @@ def q_corpus_filter(spark, sf_dir):
     cannot bind below 1025 near-identical docs (lsh_bucket_stats row
     reports dropped_buckets=0 on this corpus). A real basis/cap
     divergence would flip the production rows' hash."""
-    return corpus_filter_variants_frame(
+    return analytics.corpus_filter(
         _docs(spark, sf_dir),
         {"oracle": ("md5", None), "production": ("xxhash64", 1024)},
+        0.9,
     )
 
 

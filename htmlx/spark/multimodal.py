@@ -1078,6 +1078,32 @@ def dhash_near_dup(
     return pairs
 
 
+def perceptual_keepers(pool: DataFrame, hash_col: str, max_hamming: int) -> DataFrame:
+    """The perceptual-hash keep-list over a (media_id, <hash_col>) pool.
+    Exact-hash buckets collapse first (groupBy, no pairwise work, keeper
+    = min media_id); near-dup pairing then runs over one REPRESENTATIVE
+    per distinct hash — bounded by distinct-hash count, never by media
+    count — and connected components over those pairs merge buckets, so
+    every hash's keeper is the global min media_id of its component.
+    The banded-Hamming pairing (dhash_near_dup) is hash-agnostic: image
+    dHash and audio eHash share it. Returns (<hash_col>, keep_media_id),
+    one row per distinct hash."""
+    from pyspark.sql import functions as F
+
+    from .analytics import near_dup_components
+
+    reps = pool.groupBy(hash_col).agg(F.min("media_id").alias("media_id"))
+    pairs = dhash_near_dup(
+        reps, max_hamming=max_hamming, hash_col=hash_col
+    ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+    comp = near_dup_components(
+        reps.select(F.col("media_id").alias("doc_id")), pairs
+    ).select(F.col("doc_id").alias("media_id"), "keep_doc_id")
+    return reps.join(comp, "media_id").select(
+        hash_col, F.col("keep_doc_id").alias("keep_media_id")
+    )
+
+
 def image_text_pairs(
     images: DataFrame,
     media: DataFrame | None = None,
@@ -1102,9 +1128,9 @@ def image_text_pairs(
     convention) plus the shared JVM language classifier
     (analytics.lang_id_docs — same grammar as doc/line granularity);
     pixels decode ONCE via extract_image_dhash (dims + dHash + typed
-    degradation in one pass); near-dup images dedup by exact-dHash
-    buckets (keeper = min media_id) merged through banded-Hamming pairs
-    and connected components over bucket REPRESENTATIVES, so the
+    degradation in one pass); near-dup images dedup through
+    perceptual_keepers (exact-dHash buckets merged by banded-Hamming
+    pairs and connected components over bucket representatives), so the
     component keeper is the global min media_id. Dedup runs over the
     pool that passed every earlier gate (the corpus_filter shape: a
     quality-dropped image never shadows a keepable duplicate).
@@ -1126,7 +1152,7 @@ def image_text_pairs(
     representative-pair edge set, not the corpus."""
     from pyspark.sql import functions as F
 
-    from .analytics import lang_id_docs, near_dup_components
+    from .analytics import lang_id_docs
 
     caption = F.coalesce(
         F.nullif(F.trim(F.col("alt")), F.lit("")),
@@ -1182,15 +1208,8 @@ def image_text_pairs(
         .select("media_id", "dhash")
         .distinct()
     )
-    reps = pool.groupBy("dhash").agg(F.min("media_id").alias("media_id"))
-    pairs = dhash_near_dup(reps, max_hamming=max_hamming).select(
-        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
-    )
-    comp = near_dup_components(
-        reps.select(F.col("media_id").alias("doc_id")), pairs
-    ).select(F.col("doc_id").alias("media_id"), "keep_doc_id")
-    keepers = reps.join(comp, "media_id").select(
-        "dhash", F.col("keep_doc_id").alias("__keep_media_id")
+    keepers = perceptual_keepers(pool, "dhash", max_hamming).withColumnRenamed(
+        "keep_media_id", "__keep_media_id"
     )
     rows = rows.join(keepers, "dhash", "left")
 
@@ -1766,12 +1785,10 @@ def encode_mp3_headers(n_mp3_frames: int, kbps_idx: int, rate_idx: int, mono: bo
 
 
 def encode_ogg_vorbis(
-    granule: int, rate: int, channels: int, nominal_bps: int,
-    comments: dict | None = None, opus: bool = False,
+    granule: int, rate: int, channels: int, nominal_bps: int, opus: bool = False,
 ) -> bytes:
     """Synthesis twin for _parse_ogg: BOS page carrying a
-    Vorbis identification header (or OpusHead), an optional comment page
-    (Vorbis comment / OpusTags KEY=value pairs), and an EOS page whose
+    Vorbis identification header (or OpusHead) and an EOS page whose
     granule is the total sample count. CRC left zero (the walk doesn't
     verify CRCs, documented)."""
     if opus:
@@ -1810,24 +1827,7 @@ def encode_ogg_vorbis(
             + body
         )
 
-    out = page(0x02, 0, ident, 0)
-    seq = 1
-    if comments is not None:
-        vendor = b"htmlx-twin"
-        items = [
-            (k.upper() + "=" + v).encode("utf-8") for k, v in comments.items()
-        ]
-        packet = (
-            (b"OpusTags" if opus else b"\x03vorbis")
-            + len(vendor).to_bytes(4, "little") + vendor
-            + len(items).to_bytes(4, "little")
-            + b"".join(len(i).to_bytes(4, "little") + i for i in items)
-        )
-        if not opus:
-            packet += b"\x01"  # vorbis framing bit
-        out += page(0x00, -1, packet, seq)
-        seq += 1
-    return out + page(0x04, granule, b"", seq)
+    return page(0x02, 0, ident, 0) + page(0x04, granule, b"", 1)
 
 
 def extract_audio_features(media: DataFrame) -> DataFrame:

@@ -250,9 +250,6 @@ class StreamCorruptError(zlib.error):
     exactly like corrupt deflate."""
 
 
-LZWDecodeError = StreamCorruptError  # historical name, kept for callers
-
-
 def lzw_decode_pdf(data: bytes, cap: int = MAX_INFLATE, early_change: int = 1) -> bytes:
     """PDF LZWDecode (PDF 1.7 spec 7.4.4): MSB-first bit packing over 8-bit
     symbols, 256=clear and 257=EOD, code width 9..12, and EarlyChange
@@ -282,10 +279,10 @@ def lzw_decode_pdf(data: bytes, cap: int = MAX_INFLATE, early_change: int = 1) -
             if code == 257:  # EOD
                 return bytes(out)
             if not started:
-                raise LZWDecodeError("lzw_data_before_clear")
+                raise StreamCorruptError("lzw_data_before_clear")
             if prev == -1:
                 if code >= 256:
-                    raise LZWDecodeError("bad_lzw_code")
+                    raise StreamCorruptError("bad_lzw_code")
                 entry = table[code]
             elif code < len(table):
                 entry = table[code]
@@ -295,7 +292,7 @@ def lzw_decode_pdf(data: bytes, cap: int = MAX_INFLATE, early_change: int = 1) -
                 entry = table[prev] + table[prev][:1]
                 table.append(entry)
             else:
-                raise LZWDecodeError("bad_lzw_code")
+                raise StreamCorruptError("bad_lzw_code")
             out += entry
             if len(out) > cap:
                 raise InflateBudgetError(f"lzw output exceeds {cap} bytes")
@@ -369,7 +366,7 @@ def ascii_hex_decode(data: bytes) -> bytes:
     try:
         return bytes.fromhex(hexdigits.decode("ascii"))
     except (ValueError, UnicodeDecodeError) as e:
-        raise LZWDecodeError(f"bad ascii-hex data: {e}") from None
+        raise StreamCorruptError(f"bad ascii-hex data: {e}") from None
 
 
 def ascii85_decode(data: bytes) -> bytes:
@@ -383,7 +380,7 @@ def ascii85_decode(data: bytes) -> bytes:
     try:
         return base64.a85decode(b"<~" + body + b"~>", adobe=True)
     except ValueError as e:
-        raise LZWDecodeError(f"bad ascii85 data: {e}") from None
+        raise StreamCorruptError(f"bad ascii85 data: {e}") from None
 
 
 def run_length_decode(data: bytes, cap: int = MAX_INFLATE) -> bytes:
@@ -400,12 +397,12 @@ def run_length_decode(data: bytes, cap: int = MAX_INFLATE) -> bytes:
         if L < 128:
             chunk = data[i + 1 : i + 2 + L]
             if len(chunk) != L + 1:
-                raise LZWDecodeError("truncated run-length literal")
+                raise StreamCorruptError("truncated run-length literal")
             out += chunk
             i += 2 + L
         else:
             if i + 1 >= n:
-                raise LZWDecodeError("truncated run-length repeat")
+                raise StreamCorruptError("truncated run-length repeat")
             out += data[i + 1 : i + 2] * (257 - L)
             i += 2
         if len(out) > cap:

@@ -428,9 +428,10 @@ class PdfEncryption:
         return iv + aes_cbc_encrypt(key, iv, data + bytes([pad]) * pad)
 
 
-def _file_key_legacy(o: bytes, p: int, id0: bytes, r: int, length_bits: int,
-                     encrypt_metadata: bool) -> bytes:
-    """Algorithm 2 with an empty user password (§7.6.4.3.2)."""
+def derive_legacy_file_key(o: bytes, p: int, id0: bytes, r: int,
+                           length_bits: int, encrypt_metadata: bool = True) -> bytes:
+    """Algorithm 2 with an empty user password (§7.6.4.3.2) — public so
+    twins derive the same key the opener will."""
     h = hashlib.md5()
     h.update(_PAD)  # empty password -> the bare pad string
     h.update(o[:32])
@@ -542,13 +543,6 @@ def make_v5_user_values(file_key: bytes, vsalt: bytes = b"VS345678",
     return uhash + vsalt + ksalt, ue
 
 
-def derive_legacy_file_key(o: bytes, p: int, id0: bytes, r: int,
-                           length_bits: int, encrypt_metadata: bool = True) -> bytes:
-    """Public wrapper over Algorithm 2 so twins derive the same key the
-    opener will."""
-    return _file_key_legacy(o, p, id0, r, length_bits, encrypt_metadata)
-
-
 def get_encryption(payload: bytes, scan_cap: int = 10 * 1024 * 1024):
     """Return None (unencrypted), or a PdfEncryption whose .ok says
     whether the empty user password opened the document."""
@@ -620,8 +614,8 @@ def get_encryption(payload: bytes, scan_cap: int = 10 * 1024 * 1024):
         pass
     if mid is not None:
         id0 = _parse_string(scan, mid.start(1))
-    key = _file_key_legacy(o, p, id0, r, length_bits if v >= 2 else 40,
-                           encrypt_metadata)
+    key = derive_legacy_file_key(o, p, id0, r, length_bits if v >= 2 else 40,
+                                 encrypt_metadata)
     if not _check_user_password_legacy(key, u, id0, r):
         return PdfEncryption(r, v, b"", cfm, ok=False)
     return PdfEncryption(r, v, key, cfm, ok=True,

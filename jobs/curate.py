@@ -3,14 +3,17 @@
   spark-submit --py-files htmlx.zip jobs/curate.py \
       --input <documents table/parquet path> --output <keep-list root> \
       [--mode filter|dedup|components|split|decontaminate|pii|pack|quality|paradedup|exactdedup|spandedup|pipeline] \
-      [--threshold 0.9] [--min-chars 100] [--hash-basis xxhash64] \
+      [--threshold 0.9] [--hash-basis xxhash64] \
       [--eval-input <eval parquet>] [--seq-len 2048] \
       [--keep-by <col>] [--keep-desc] [--quality-rule gopher|c4|both|none]
 
 Modes:
   filter      full keep/drop decision per document with a precedence-
-              ordered reason column (exact_dup > near_dup > low_quality >
-              und_lang) — what a training-data ingest actually consumes.
+              ordered reason column (exact dup, then near dup, then under
+              100 chars, then undetermined language) — what a
+              training-data ingest actually consumes; runs
+              analytics.corpus_filter under the (--hash-basis, 1024-doc
+              LSH bucket cap, --threshold) policy.
   dedup       near-dup keep-list only (LSH -> exact-Jaccard verify ->
               connected components).
   components  same as dedup but expects a precomputed pairs table at
@@ -51,7 +54,8 @@ Modes:
   exactdedup  exact-dedup table (one row per distinct text with the kept
               doc and duplicate count).
   imagededup  perceptual image dedup over a (media_id, payload) table:
-              dHash via the in-repo decoders, exact-hash buckets keep
+              dHash via the in-repo decoders, then
+              multimodal.perceptual_keepers: exact-hash buckets keep
               the MINIMUM media_id, then near-dup pairs within
               --hamming bits (banded LSH + XOR popcount) merge buckets
               via the same label-propagation used for text near-dups.
@@ -190,6 +194,21 @@ def _bpe_token_counts(spark, docs, args):
     return analytics.bpe_encode_counts(
         docs, merges, method=method, byte_level=byte_level
     ).withColumnRenamed("n_bpe_real", "n_tokens")
+
+
+def verified_pairs(docs, args):
+    """(doc_a, doc_b) near-dup pairs: MinHash-LSH candidates under
+    --hash-basis, verified by exact shingle Jaccard >= --threshold."""
+    from pyspark.sql import functions as F
+
+    from htmlx.spark import analytics
+
+    cands = analytics.minhash_lsh_candidates(docs, hash_basis=args.hash_basis)
+    return (
+        analytics.ngram_jaccard_pairs(docs, cands)
+        .where(F.col("jaccard") >= args.threshold)
+        .select("doc_a", "doc_b")
+    )
 
 
 def run_pipeline(spark, docs, args) -> dict:
@@ -387,13 +406,7 @@ def run_pipeline(spark, docs, args) -> dict:
     executed.append("exact_dedup")
 
     def near_keep():
-        cands = analytics.minhash_lsh_candidates(cur, hash_basis=args.hash_basis)
-        pairs = (
-            analytics.ngram_jaccard_pairs(cur, cands)
-            .where(F.col("jaccard") >= args.threshold)
-            .select("doc_a", "doc_b")
-        )
-        comp = analytics.near_dup_components(cur, pairs)
+        comp = analytics.near_dup_components(cur, verified_pairs(cur, args))
         return comp.where(~F.col("is_dup")).select("doc_id")
 
     keep, n_cur = stage("near_dedup", near_keep, n_cur)
@@ -643,7 +656,6 @@ def main():
                     help="write the trained merges table here (bpetrain "
                          "mode, or alongside inline --bpe-train)")
     ap.add_argument("--threshold", type=float, default=0.9, help="Jaccard verify threshold")
-    ap.add_argument("--min-chars", type=int, default=100)
     ap.add_argument("--hash-basis", choices=["xxhash64", "md5"], default="xxhash64")
     ap.add_argument("--span-window", type=int, default=15,
                     help="minimum duplicated run length in tokens (spandedup mode)")
@@ -671,14 +683,6 @@ def main():
 
     spark = SparkSession.builder.appName("htmlx-curate").getOrCreate()
     docs = spark.read.parquet(args.input)
-
-    def verified_pairs():
-        cands = analytics.minhash_lsh_candidates(docs, hash_basis=args.hash_basis)
-        return (
-            analytics.ngram_jaccard_pairs(docs, cands)
-            .where(F.col("jaccard") >= args.threshold)
-            .select("doc_a", "doc_b")
-        )
 
     if args.mode == "pipeline":
         manifest = run_pipeline(spark, docs, args)
@@ -727,9 +731,9 @@ def main():
         )
     elif args.mode in ("imagededup", "audiodedup"):
         from htmlx.spark.multimodal import (
-            dhash_near_dup,
             extract_audio_ehash,
             extract_image_dhash,
+            perceptual_keepers,
         )
 
         extract_fn, hcol = (
@@ -742,33 +746,11 @@ def main():
             src = src.withColumnRenamed("doc_id", "media_id")
         hashes = extract_fn(src.select("media_id", "payload"))
         ok = hashes.where(F.col("error") == "")
-        # exact-hash buckets collapse first (groupBy, no pairwise work);
-        # near-dup pairing then runs over one REPRESENTATIVE per distinct
-        # hash — bounded by distinct-hash count, never by media count.
-        # The banded-Hamming pairing is hash-agnostic: the same machinery
-        # serves image dHash and audio eHash.
-        reps = ok.groupBy(hcol).agg(F.min("media_id").alias("rep_id"))
-        pairs = dhash_near_dup(
-            reps.select(F.col("rep_id").alias("media_id"), hcol),
-            max_hamming=args.hamming, hash_col=hcol,
-        ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-        comp = analytics.near_dup_components(
-            reps.select(F.col("rep_id").cast("long").alias("doc_id")), pairs
-        )
-        resolved = (
-            ok.join(reps, hcol)
-            .join(
-                comp.select(
-                    F.col("doc_id").alias("rep_id"),
-                    F.col("keep_doc_id").alias("keep_media_id"),
-                ),
-                "rep_id",
-            )
-            .select(
-                "media_id", hcol, "keep_media_id",
-                (F.col("media_id") != F.col("keep_media_id")).alias("is_dup"),
-                F.lit("").alias("error"),
-            )
+        keepers = perceptual_keepers(ok.select("media_id", hcol), hcol, args.hamming)
+        resolved = ok.join(keepers, hcol).select(
+            "media_id", hcol, "keep_media_id",
+            (F.col("media_id") != F.col("keep_media_id")).alias("is_dup"),
+            F.lit("").alias("error"),
         )
         failed = hashes.where(F.col("error") != "").select(
             "media_id", hcol,
@@ -912,32 +894,12 @@ def main():
     elif args.mode == "components":
         out = analytics.near_dup_components(docs, spark.read.parquet(args.pairs))
     elif args.mode == "dedup":
-        out = analytics.near_dup_components(docs, verified_pairs())
+        out = analytics.near_dup_components(docs, verified_pairs(docs, args))
     else:
-        base = docs.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.md5("text").alias("text_md5"),
-            F.length("text").alias("n_chars"),
-        )
-        exact = analytics.dedup_exact(docs).select(
-            "text_md5", F.col("keep_doc_id").alias("exact_keep")
-        )
-        comp = analytics.near_dup_components(docs, verified_pairs()).select(
-            "doc_id", F.col("is_dup").alias("near_dup")
-        )
-        lang = analytics.lang_id_docs(docs)
-        # corpus-sized sides on uniform keys: shuffle joins, no broadcasts
-        joined = base.join(exact, "text_md5").join(comp, "doc_id").join(lang, "doc_id")
-        reason = (
-            F.when(F.col("doc_id") != F.col("exact_keep"), F.lit("exact_dup"))
-            .when(F.col("near_dup"), F.lit("near_dup"))
-            .when(F.col("n_chars") < args.min_chars, F.lit("low_quality"))
-            .when(F.col("pred_lang") == "und", F.lit("und_lang"))
-            .otherwise(F.lit(""))
-        )
-        out = joined.select("doc_id", reason.alias("reason")).withColumn(
-            "keep", (F.col("reason") == "").cast("boolean")
-        )
+        # 1024: minhash_lsh_candidates' default bucket cap
+        out = analytics.corpus_filter(
+            docs, {"production": (args.hash_basis, 1024)}, args.threshold
+        ).drop("variant")
 
     out.write.mode("overwrite").parquet(args.output)
     print(f"mode={args.mode} rows={spark.read.parquet(args.output).count()} -> {args.output}")

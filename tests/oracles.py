@@ -53,7 +53,7 @@ def bpe_apply_merges(word: str, merges) -> list:
 def corpus_filter_frame(docs, hash_basis: str, max_bucket_size):
     """The composite training-corpus filter plan over a documents frame,
     for ONE (hash_basis, max_bucket_size) policy: the reference that the
-    merged corpus_filter_variants_frame matches per variant (md5 basis
+    merged analytics.corpus_filter matches per variant (md5 basis
     uncapped for the oracle variant, xxhash64 capped for production).
 
     r10 shape (guide §2.4 — remove shuffles outright): the exact-dup

@@ -200,13 +200,49 @@ def test_mp3_crc_protected_xing_frame_excluded():
     assert info["n_frames"] == 3 * 1152
 
 
+def _ogg_page(htype: int, granule: int, body: bytes, seq: int) -> bytes:
+    """One OGG page (serial 1234, CRC zero) with 255-byte lacing."""
+    full, last = divmod(len(body), 255)
+    segs = b"\xff" * full + bytes([last])
+    return (
+        b"OggS\x00" + bytes([htype])
+        + granule.to_bytes(8, "little", signed=True)
+        + (1234).to_bytes(4, "little") + seq.to_bytes(4, "little")
+        + b"\x00\x00\x00\x00" + bytes([len(segs)]) + segs + body
+    )
+
+
+def _with_comment_page(ogg: bytes, granule: int, comments: dict, opus: bool) -> bytes:
+    """Insert a Vorbis comment / OpusTags page (KEY=value pairs) between
+    encode_ogg_vorbis' ident page and its 28-byte empty EOS page."""
+    vendor = b"htmlx-twin"
+    items = [(k.upper() + "=" + v).encode("utf-8") for k, v in comments.items()]
+    packet = (
+        (b"OpusTags" if opus else b"\x03vorbis")
+        + len(vendor).to_bytes(4, "little") + vendor
+        + len(items).to_bytes(4, "little")
+        + b"".join(len(i).to_bytes(4, "little") + i for i in items)
+    )
+    if not opus:
+        packet += b"\x01"  # vorbis framing bit
+    return (
+        ogg[:-28] + _ogg_page(0x00, -1, packet, 1)
+        + _ogg_page(0x04, granule, b"", 2)
+    )
+
+
 def test_vorbis_comment_and_opustags():
     """A Vorbis comment / OpusTags page between the ident and EOS pages
     does not disturb the header walk's stream info."""
-    ogg = encode_ogg_vorbis(1000, 8000, 1, 64000,
-                            comments={"title": "Song", "artist": "Band", "x": "y"})
+    ogg = _with_comment_page(
+        encode_ogg_vorbis(1000, 8000, 1, 64000), 1000,
+        {"title": "Song", "artist": "Band", "x": "y"}, opus=False,
+    )
     info = audio_stream_info(ogg)
     assert info["sample_rate"] == 8000 and info["n_frames"] == 1000
 
-    op = encode_ogg_vorbis(48000, 48000, 2, 0, comments={"album": "LP"}, opus=True)
+    op = _with_comment_page(
+        encode_ogg_vorbis(48000, 48000, 2, 0, opus=True), 48000,
+        {"album": "LP"}, opus=True,
+    )
     assert audio_stream_info(op)["sample_rate"] == 48000

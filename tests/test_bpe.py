@@ -180,7 +180,7 @@ def _ref_counts(rows, merges):
 
 
 def test_encode_replace_chain_matches_python(spark, docs):
-    merges = A.train_bpe(docs, num_merges=16)
+    merges = A.train_bpe_full(docs, num_merges=16)[0]
     assert len(merges) == 16
     got = {
         r["doc_id"]: r["n_bpe_real"]
@@ -194,7 +194,7 @@ def test_encode_replace_chain_matches_python(spark, docs):
 
 
 def test_encode_pandas_matches_replace_chain(spark, docs):
-    merges = A.train_bpe(docs, num_merges=12)
+    merges = A.train_bpe_full(docs, num_merges=12)[0]
     a = {
         r["doc_id"]: r["n_bpe_real"]
         for r in A.bpe_encode_counts(docs, merges, method="replace").collect()
@@ -207,7 +207,7 @@ def test_encode_pandas_matches_replace_chain(spark, docs):
 
 
 def test_encode_replace_chain_is_jvm_only(spark, docs):
-    merges = A.train_bpe(docs, num_merges=8)
+    merges = A.train_bpe_full(docs, num_merges=8)[0]
     plan = A.bpe_encode_counts(docs, merges)._jdf.queryExecution().executedPlan().toString()
     assert "mapInPandas" not in plan and "EvalPython" not in plan
     # scan-side projection: no KEYED shuffle ever; the only exchange
@@ -244,7 +244,7 @@ def test_spark_replace_semantics_match_greedy(spark):
 
 
 def test_merges_df_roundtrip(spark, docs, tmp_path):
-    merges = A.train_bpe(docs, num_merges=6)
+    merges = A.train_bpe_full(docs, num_merges=6)[0]
     path = str(tmp_path / "merges.parquet")
     A.bpe_merges_df(spark, merges).write.parquet(path)
     assert A.load_bpe_merges(spark, path) == merges
@@ -253,7 +253,7 @@ def test_merges_df_roundtrip(spark, docs, tmp_path):
 def test_pack_sequences_with_real_counts(spark, docs):
     from pyspark.sql import functions as F
 
-    merges = A.train_bpe(docs, num_merges=8)
+    merges = A.train_bpe_full(docs, num_merges=8)[0]
     real = A.bpe_encode_counts(docs, merges).withColumnRenamed("n_bpe_real", "n_tokens")
     packed = A.pack_sequences(docs, seq_len=64, num_buckets=4, counts=real).collect()
     counts = {r["doc_id"]: r["n_tokens"] for r in real.collect()}
@@ -416,7 +416,7 @@ def test_replace_chain_handles_line_terminators(spark):
          (3, "line one\nline two\nline one\n")],
         "doc_id long, text string",
     )
-    merges = A.train_bpe(docs, num_merges=8)
+    merges = A.train_bpe_full(docs, num_merges=8)[0]
     a = {r["doc_id"]: r["n_bpe_real"]
          for r in A.bpe_encode_counts(docs, merges, method="replace").collect()}
     b = {r["doc_id"]: r["n_bpe_real"]

@@ -136,12 +136,12 @@ def test_corpus_filter_variants_matches_separate_frames(spark):
     """The merged corpus_filter variants row must agree per-variant with
     the single-config corpus_filter_frame it replaced (r7 VERDICT item 3
     — one shared subplan instead of two full recomputations)."""
-    from htmlx.spark.entryqueries import corpus_filter_variants_frame
+    from htmlx.spark.analytics import corpus_filter
     from tests.oracles import corpus_filter_frame
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    merged = corpus_filter_variants_frame(
-        docs, {"oracle": ("md5", None), "production": ("xxhash64", 1024)}
+    merged = corpus_filter(
+        docs, {"oracle": ("md5", None), "production": ("xxhash64", 1024)}, 0.9
     )
     got = {
         (r.variant, r.doc_id): (r.reason, r.keep) for r in merged.collect()

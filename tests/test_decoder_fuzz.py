@@ -182,7 +182,7 @@ def test_lzw_decoder_never_crashes(blob):
     for ec in (0, 1):
         try:
             lzw_decode_pdf(blob, cap=1 << 20, early_change=ec)
-        except DECODE_OK:  # LZWDecodeError/InflateBudgetError are zlib.error
+        except DECODE_OK:  # StreamCorruptError/InflateBudgetError are zlib.error
             pass
 
 

@@ -82,13 +82,71 @@ def test_simhash_structure_equivalent_across_bases(docs):
         assert SIMHASH_BITS * 0.2 < ones < SIMHASH_BITS * 0.8, (basis, ones)
 
 
+def _calls_without_md5(src: str, names: set) -> list:
+    """Names of the `analytics.<fn>(...)` calls in `src`, fn in `names`,
+    whose argument list passes neither hash_basis="md5" nor a
+    `hash_basis=hash_basis` pass-through. Call sites are found in code
+    tokens only (stdlib tokenize): COMMENT and STRING tokens — comments
+    and docstrings that name a call — are skipped, and arguments are
+    read up to the call's matching close paren."""
+    import ast
+    import io
+    import tokenize
+
+    toks = [
+        t for t in tokenize.generate_tokens(io.StringIO(src).readline)
+        if t.type in (tokenize.NAME, tokenize.OP, tokenize.STRING, tokenize.NUMBER)
+    ]
+    missing = []
+    for i in range(len(toks) - 3):
+        head = [t.string for t in toks[i: i + 4]]
+        if (toks[i].type != tokenize.NAME or head[0] != "analytics"
+                or head[1] != "." or head[2] not in names or head[3] != "("):
+            continue
+        depth, j, ok = 0, i + 3, False
+        while True:
+            t = toks[j].string
+            if toks[j].type == tokenize.OP and t in "([{":
+                depth += 1
+            elif toks[j].type == tokenize.OP and t in ")]}":
+                depth -= 1
+                if depth == 0:
+                    break
+            elif depth == 1 and t == "hash_basis" and toks[j + 1].string == "=":
+                arg = toks[j + 2]
+                ok = ok or arg.string == "hash_basis" or (
+                    arg.type == tokenize.STRING and ast.literal_eval(arg.string) == "md5"
+                )
+            j += 1
+        if not ok:
+            missing.append(head[2])
+    return missing
+
+
+def test_basis_call_scan_skips_comments_and_strings():
+    """A call named in a comment or a docstring is not a call site; a real
+    call without hash_basis="md5" still fails the scan."""
+    src = (
+        'def q(docs):\n'
+        '    """Uses analytics.simhash_docs(docs) under the hood."""\n'
+        '    # analytics.simhash_expr("md5") is the oracle form\n'
+        '    a = analytics.simhash_docs(docs, hash_basis="md5")\n'
+        '    b = analytics.minhash_lsh_candidates(\n'
+        '        docs, max_bucket_size=min(3, 4), hash_basis=hash_basis)\n'
+        '    return analytics.dedup_spans(docs, w=analytics.simhash_docs(docs))\n'
+    )
+    names = {"simhash_docs", "simhash_expr", "minhash_lsh_candidates", "dedup_spans"}
+    assert _calls_without_md5(src, names) == ["dedup_spans", "simhash_docs"]
+    assert _calls_without_md5(src.replace("w=analytics.simhash_docs(docs)", "w=1"),
+                              names) == ["dedup_spans"]
+
+
 def test_driver_queries_use_md5_basis_and_production_defaults_xxhash64():
     """The hash-basis invariant (CLAUDE.md): every analytics function that
     takes hash_basis must default to xxhash64 (production), and every
     call site in the driver-query module must pass 'md5' explicitly (the
     only base DuckDB shares). Until now this was review-enforced only."""
     import inspect
-    import re
 
     from htmlx.spark import analytics, entryqueries
 
@@ -102,17 +160,14 @@ def test_driver_queries_use_md5_basis_and_production_defaults_xxhash64():
         assert default in ("xxhash64", inspect.Parameter.empty), (
             fn.__name__, default)
 
-    src = inspect.getsource(entryqueries)
     # every basis-taking analytics call in the driver module passes md5
     # (a `hash_basis=hash_basis` pass-through is allowed for parametrized
-    # builders like corpus_filter_frame — their DRIVER callers are the
-    # q_ wrappers, which must pass the literal "md5")
-    for call in re.finditer(r"analytics\.(\w+)\(", src):
-        if call.group(1) in {f.__name__ for f in basis_fns}:
-            # find the matching close paren naively: scan the call's args
-            tail = src[call.end(): call.end() + 400].split("\n\n")[0]
-            assert ('hash_basis="md5"' in tail or "hash_basis=hash_basis" in tail), (
-                f"driver call to {call.group(1)} must pass hash_basis='md5'")
+    # builders — their DRIVER callers are the q_ wrappers, which must
+    # pass the literal "md5")
+    missing = _calls_without_md5(
+        inspect.getsource(entryqueries), {f.__name__ for f in basis_fns}
+    )
+    assert not missing, f"driver calls must pass hash_basis='md5': {missing}"
     # and the parametrized builder's driver wrapper pins md5 for the
     # DuckDB-replicable 'oracle' variant (the 'production' variant ships
     # xxhash64 deliberately — its oracle leg rests on the basis

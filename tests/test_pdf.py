@@ -217,14 +217,14 @@ def test_lzw_early_change_mismatch_is_detected_not_silent():
     desynchronize) — guards against both sides ignoring the parameter."""
     import random
 
-    from htmlx.spark.pdf import LZWDecodeError, lzw_decode_pdf, lzw_encode_pdf
+    from htmlx.spark.pdf import StreamCorruptError, lzw_decode_pdf, lzw_encode_pdf
 
     rnd = random.Random(11)
     data = bytes(rnd.randrange(3) for _ in range(20000))
     enc = lzw_encode_pdf(data, early_change=1)
     try:
         assert lzw_decode_pdf(enc, early_change=0) != data
-    except LZWDecodeError:
+    except StreamCorruptError:
         pass  # desync may also surface as a bad code — equally correct
 
 
@@ -234,20 +234,20 @@ def test_lzw_corrupt_and_bomb_guard():
     import pytest
 
     from htmlx.spark.pdf import (
-        InflateBudgetError, LZWDecodeError, lzw_decode_pdf, lzw_encode_pdf)
+        InflateBudgetError, StreamCorruptError, lzw_decode_pdf, lzw_encode_pdf)
 
-    with pytest.raises(LZWDecodeError):  # data before any clear code
+    with pytest.raises(StreamCorruptError):  # data before any clear code
         lzw_decode_pdf(b"\x00\x00\x00\x00")
     # out-of-range code: clear then code 300 (table has 258)
     acc = (256 << 9) | 300
     raw = acc.to_bytes(3, "big")  # 18 bits -> not byte aligned; pad
-    with pytest.raises(LZWDecodeError):
+    with pytest.raises(StreamCorruptError):
         lzw_decode_pdf(raw + b"\x00")
     # budget: highly compressible input must trip the cap, not materialize
     bomb = lzw_encode_pdf(b"\x00" * 200000)
     with pytest.raises(InflateBudgetError):
         lzw_decode_pdf(bomb, cap=10000)
-    assert issubclass(LZWDecodeError, zlib.error)  # corrupt_stream mapping
+    assert issubclass(StreamCorruptError, zlib.error)  # corrupt_stream mapping
 
 
 def test_lzw_filtered_content_stream():
