@@ -2584,12 +2584,15 @@ def corpus_filter(docs: DataFrame, variants: dict, threshold: float) -> DataFram
     # both bases' signature scans, the shingle sets) — no-op at real
     # scan widths
     docs = spread_small_input(docs)
+    # NULL text is treated as '': a NULL-text doc is low_quality (0 chars)
+    # and exact-dups another empty text by its digest, not by NULL grouping
+    text = F.coalesce("text", F.lit(""))
     base = with_lang_pred(
         docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
     ).select(
         "doc_id",
-        F.md5("text").alias("text_md5"),
-        F.length("text").alias("n_chars"),
+        F.md5(text).alias("text_md5"),
+        F.length(text).alias("n_chars"),
         "pred_lang",
     ).withColumn(
         "exact_keep", F.min("doc_id").over(Window.partitionBy("text_md5"))

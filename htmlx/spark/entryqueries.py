@@ -2745,8 +2745,8 @@ def _corpus_filter_oracle() -> str:
 WITH comp AS ({{components}}),
 langp AS ({{lang}}),
 exact AS (
-  SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS ekeep,
-         len(text) AS n_chars
+  SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(coalesce(text, ''))) AS ekeep,
+         len(coalesce(text, '')) AS n_chars
   FROM documents)
 SELECT v.variant, doc_id, reason, reason = '' AS keep FROM (
   SELECT CAST(e.doc_id AS BIGINT) AS doc_id,

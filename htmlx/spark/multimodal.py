@@ -1784,29 +1784,21 @@ def encode_mp3_headers(n_mp3_frames: int, kbps_idx: int, rate_idx: int, mono: bo
     return (hdr + b"\x00" * (flen - 4)) * n_mp3_frames
 
 
-def encode_ogg_vorbis(
-    granule: int, rate: int, channels: int, nominal_bps: int, opus: bool = False,
-) -> bytes:
-    """Synthesis twin for _parse_ogg: BOS page carrying a
-    Vorbis identification header (or OpusHead) and an EOS page whose
-    granule is the total sample count. CRC left zero (the walk doesn't
-    verify CRCs, documented)."""
-    if opus:
-        ident = (
-            b"OpusHead\x01" + bytes([channels]) + (0).to_bytes(2, "little")
-            + rate.to_bytes(4, "little") + (0).to_bytes(2, "little") + b"\x00"
-        )
-    else:
-        ident = (
-            b"\x01vorbis"
-            + (0).to_bytes(4, "little")
-            + bytes([channels])
-            + rate.to_bytes(4, "little")
-            + (0).to_bytes(4, "little", signed=True)
-            + nominal_bps.to_bytes(4, "little", signed=True)
-            + (0).to_bytes(4, "little", signed=True)
-            + b"\xb8\x01"
-        )
+def encode_ogg_vorbis(granule: int, rate: int, channels: int, nominal_bps: int) -> bytes:
+    """Synthesis twin for _parse_ogg: BOS page carrying a Vorbis
+    identification header and an EOS page whose granule is the total
+    sample count. CRC left zero (the walk doesn't verify CRCs,
+    documented)."""
+    ident = (
+        b"\x01vorbis"
+        + (0).to_bytes(4, "little")
+        + bytes([channels])
+        + rate.to_bytes(4, "little")
+        + (0).to_bytes(4, "little", signed=True)
+        + nominal_bps.to_bytes(4, "little", signed=True)
+        + (0).to_bytes(4, "little", signed=True)
+        + b"\xb8\x01"
+    )
 
     def page(htype: int, granule_pos: int, body: bytes, seq: int) -> bytes:
         if body:

@@ -683,6 +683,9 @@ def main():
 
     spark = SparkSession.builder.appName("htmlx-curate").getOrCreate()
     docs = spark.read.parquet(args.input)
+    # a frame the output write reads more than once: persisted for that
+    # write and released right after it
+    held = None
 
     if args.mode == "pipeline":
         manifest = run_pipeline(spark, docs, args)
@@ -744,7 +747,9 @@ def main():
         src = docs
         if "media_id" not in src.columns and "doc_id" in src.columns:
             src = src.withColumnRenamed("doc_id", "media_id")
-        hashes = extract_fn(src.select("media_id", "payload"))
+        # the decode feeds the representative groupBy, the keeper join and
+        # the error passthrough: decode each payload once
+        hashes = held = extract_fn(src.select("media_id", "payload")).persist()
         ok = hashes.where(F.col("error") == "")
         keepers = perceptual_keepers(ok.select("media_id", hcol), hcol, args.hamming)
         resolved = ok.join(keepers, hcol).select(
@@ -901,7 +906,11 @@ def main():
             docs, {"production": (args.hash_basis, 1024)}, args.threshold
         ).drop("variant")
 
-    out.write.mode("overwrite").parquet(args.output)
+    try:
+        out.write.mode("overwrite").parquet(args.output)
+    finally:
+        if held is not None:
+            held.unpersist()
     print(f"mode={args.mode} rows={spark.read.parquet(args.output).count()} -> {args.output}")
 
 

@@ -3,8 +3,8 @@
 The oracles pin a production path by comparison: `parse_stdlib` the fast
 tokenizer, `bpe_apply_merges` the rank-dict BPE encoder, and
 `corpus_filter_frame` the merged corpus_filter variants frame. The
-encoders build inputs for live decoders (TGA, ICO, PNM, WBMP), and
-`pdf_image_rows` runs extract_pdf_profile's per-image decode on every
+encoders build inputs for live decoders (TGA, ICO, PNM, WBMP, Ogg Opus),
+and `pdf_image_rows` runs extract_pdf_profile's per-image decode on every
 image of a payload. Nothing a shipped entry point runs reaches them.
 """
 
@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from htmlx.core.dom import Node, _TreeBuilder
 from htmlx.spark import analytics
 from htmlx.spark.analytics import bpe_merge_step
+from htmlx.spark.multimodal import encode_ogg_vorbis
 from htmlx.spark.pdf import _image_feature_row, _iter_image_streams
 from htmlx.spark.pdfcrypt import get_encryption
 
@@ -65,13 +66,14 @@ def corpus_filter_frame(docs, hash_basis: str, max_bucket_size):
     component labels join in once (edge endpoints only). Two corpus-wide
     exchanges total (digest window + label join) instead of five."""
     docs = analytics.spread_small_input(docs)
+    text = F.coalesce("text", F.lit(""))  # NULL text counts as ''
     base = analytics.with_lang_pred(docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "text",
     )).select(
         "doc_id",
-        F.md5("text").alias("text_md5"),
-        F.length("text").alias("n_chars"),
+        F.md5(text).alias("text_md5"),
+        F.length(text).alias("n_chars"),
         "pred_lang",
     ).withColumn(
         "exact_keep", F.min("doc_id").over(Window.partitionBy("text_md5"))
@@ -266,6 +268,18 @@ def encode_wbmp(bitonal) -> bytes:
 
     packed = np.packbits((a != 0).astype(np.uint8), axis=1)
     return b"\x00\x00" + mb(w) + mb(h) + packed.tobytes()
+
+
+def encode_ogg_opus(granule: int, rate: int, channels: int) -> bytes:
+    """multimodal.encode_ogg_vorbis with an OpusHead identification packet
+    in the BOS page instead of the Vorbis one (same EOS page)."""
+    ident = (
+        b"OpusHead\x01" + bytes([channels]) + (0).to_bytes(2, "little")
+        + rate.to_bytes(4, "little") + (0).to_bytes(2, "little") + b"\x00"
+    )
+    ogg = encode_ogg_vorbis(granule, rate, channels, 0)
+    # the Vorbis BOS page: 26 header bytes, 1 segment of 30 bytes
+    return ogg[:26] + bytes([1, len(ident)]) + ident + ogg[26 + 2 + 30:]
 
 
 def pdf_image_rows(payload: bytes) -> list:

@@ -21,6 +21,7 @@ from htmlx.spark.multimodal import (
     encode_mp3_headers,
     encode_ogg_vorbis,
 )
+from tests.oracles import encode_ogg_opus
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "real_lame_mpeg2.mp3")
 
@@ -242,7 +243,7 @@ def test_vorbis_comment_and_opustags():
     assert info["sample_rate"] == 8000 and info["n_frames"] == 1000
 
     op = _with_comment_page(
-        encode_ogg_vorbis(48000, 48000, 2, 0, opus=True), 48000,
+        encode_ogg_opus(48000, 48000, 2), 48000,
         {"album": "LP"}, opus=True,
     )
     assert audio_stream_info(op)["sample_rate"] == 48000

@@ -10,6 +10,7 @@ import sys
 import numpy as np
 import pytest
 
+from htmlx.spark import multimodal
 from htmlx.spark.multimodal import encode_wav
 from htmlx.spark.session import get_spark
 from htmlx.spark.tiffbmp import encode_bmp
@@ -61,9 +62,10 @@ def test_filter_mode_is_corpus_filter_and_keeps_null_text_docs(
     }
     assert len(want) == n_docs
     assert {d: got[d] for d in want} == want
-    for d in (top + 1, top + 2):
-        reason, keep = got[d]
-        assert reason and keep is False, (d, reason, keep)
+    # NULL text is treated as '': the first is too short to keep, the
+    # second is an exact duplicate of it
+    assert got[top + 1] == ("low_quality", False)
+    assert got[top + 2] == ("exact_dup", False)
 
 
 def _media(spark, tmp_path, rows):
@@ -90,7 +92,23 @@ def test_imagededup_mode_keeps_component_minimum(spark, tmp_path, monkeypatch):
         (5, bmp(base)), (7, bmp(base)), (3, bmp(pert)), (9, bmp(far)),
         (4, b"\x00\x01garbage"),
     ])
+    # an identity stage in front of the decode counts payload reads: the
+    # decoded frame feeds the representative groupBy, the keeper join and
+    # the error passthrough, and each payload must still decode once
+    reads = spark.sparkContext.accumulator(0)
+
+    def identity(batches):
+        for b in batches:
+            reads.add(len(b))
+            yield b
+
+    decode = multimodal.extract_image_dhash
+    monkeypatch.setattr(
+        multimodal, "extract_image_dhash",
+        lambda media: decode(media.mapInPandas(identity, media.schema)),
+    )
     out = _curate(spark, monkeypatch, tmp_path, "imagededup", inp)
+    assert reads.value == 5
     assert out.columns == ["media_id", "dhash", "keep_media_id", "is_dup", "error"]
     got = {r.media_id: r for r in out.collect()}
     assert sorted(got) == [3, 4, 5, 7, 9]
