@@ -362,12 +362,13 @@ class Extractor:
     def _extract_article_node(self, doc: Node) -> Node | None:
         """Port of extractArticleNode (extract.go:842-861). Candidates are
         collected in document order, so tie-break is deterministic
-        (first-in-document-order; see SURVEY.md §7.4). The default scorer
+        (first-in-document-order; see SURVEY.md §7.4). A scorer whose
+        score() is DefaultScorer's (a subclass may change score_attributes)
         uses the O(n) bottom-up pass (score_all_nodes) — semantically
         identical to the reference's per-node subtree walks but linear, not
-        O(n·depth). A custom scorer (opaque score()) takes the generic
+        O(n·depth). Any other score() is opaque and takes the generic
         per-node walk, mirroring extract.go:849-856."""
-        if isinstance(self.scorer, DefaultScorer):
+        if getattr(type(self.scorer), "score", None) is DefaultScorer.score:
             candidates = score_all_nodes(doc, self.scorer)
         else:
             candidates = {}
@@ -568,5 +569,5 @@ def extract(html_bytes: bytes, config: Config | None = None) -> Result:
     return Extractor(config).extract(html_bytes)
 
 
-def extract_text(html_bytes: bytes, config: Config | None = None) -> str:
-    return Extractor(config).extract_text(html_bytes)
+def extract_text(html_bytes: bytes) -> str:
+    return Extractor().extract_text(html_bytes)

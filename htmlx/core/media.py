@@ -206,12 +206,12 @@ def extract_attribute_value(tag_content: str, attr_name: str) -> str:
 # Video/audio extraction (media.go:26-241)
 # ---------------------------------------------------------------------------
 
-def _video_info(url="", type_="", poster="", width="", height="", duration=""):
-    return {"url": url, "type": type_, "poster": poster, "width": width, "height": height, "duration": duration}
+def _video_info(url="", type_=""):
+    return {"url": url, "type": type_, "poster": "", "width": "", "height": "", "duration": ""}
 
 
-def _audio_info(url="", type_="", duration=""):
-    return {"url": url, "type": type_, "duration": duration}
+def _audio_info(url="", type_=""):
+    return {"url": url, "type": type_, "duration": ""}
 
 
 def _find_source_url(n: Node) -> tuple[str, str]:

@@ -89,7 +89,6 @@ class ContentMetrics:
         "heading_count",
         "text_length",
         "link_text_length",
-        "total_text_length",
         "tag_count",
         "comma_count",
     )
@@ -99,7 +98,6 @@ class ContentMetrics:
         self.heading_count = 0
         self.text_length = 0
         self.link_text_length = 0
-        self.total_text_length = 0
         self.tag_count = 0
         self.comma_count = 0
 
@@ -126,7 +124,6 @@ def collect_content_metrics(node: Node) -> ContentMetrics:
             if text:
                 blen = len(text.encode("utf-8"))
                 m.text_length += blen
-                m.total_text_length += blen
                 m.comma_count += text.count(",") + text.count("，")
                 p = n.parent
                 while p is not None:
@@ -138,23 +135,6 @@ def collect_content_metrics(node: Node) -> ContentMetrics:
 
     walk_nodes(node, visit)
     return m
-
-
-def density_from_metrics(m: ContentMetrics) -> float:
-    """internal/scoring.go:99-111."""
-    if m.text_length == 0:
-        return 0.0
-    if m.tag_count == 0:
-        return 1.0
-    density = m.text_length / (m.tag_count * 10)
-    return 1.0 if density > 1.0 else density
-
-
-def link_density_from_metrics(m: ContentMetrics) -> float:
-    """internal/scoring.go:114-119."""
-    if m.total_text_length == 0:
-        return 0.0
-    return m.link_text_length / m.total_text_length
 
 
 def _calculate_pattern_score(value: str, patterns: dict) -> int:
@@ -212,48 +192,15 @@ class DefaultScorer:
         return score
 
     def score(self, node: Node) -> int:
-        """scorer.go:184-243."""
+        """scorer.go:184-243: this node's subtree metrics through the one
+        scoring formula (_score_from_counts)."""
         if node is None or node.type != ELEMENT or is_non_content_element(node.data) or node.data == "p":
             return 0
-        score = TAG_SCORES.get(node.data, 0) + self.score_attributes(node)
         m = collect_content_metrics(node)
-
-        if m.paragraph_count >= MIN_PARAGRAPHS_FOR_BONUS:
-            score += m.paragraph_count * MANY_PARAGRAPHS_MULTIPLIER
-        elif m.paragraph_count > 0:
-            score += m.paragraph_count * FEW_PARAGRAPHS_MULTIPLIER
-
-        if m.heading_count > 0:
-            score += m.heading_count * HEADING_MULTIPLIER
-
-        tl = m.text_length
-        if tl > VERY_LONG_TEXT_THRESHOLD:
-            score += VERY_LONG_TEXT_THRESHOLD + (tl - VERY_LONG_TEXT_THRESHOLD) // VERY_LONG_TEXT_BONUS_MULTIPLIER
-        elif tl > LONG_TEXT_THRESHOLD:
-            score += tl // LONG_TEXT_BONUS_DIVIDER
-        elif tl > MEDIUM_TEXT_THRESHOLD:
-            score += tl // MEDIUM_TEXT_BONUS_DIVIDER
-        elif tl < SHORT_TEXT_THRESHOLD:
-            score += SHORT_TEXT_PENALTY
-
-        density = density_from_metrics(m)
-        if density > HIGH_CONTENT_DENSITY_THRESHOLD:
-            score = int(score * HIGH_DENSITY_MULTIPLIER)
-        elif density < LOW_CONTENT_DENSITY_THRESHOLD:
-            score = int(score * LOW_DENSITY_MULTIPLIER)
-
-        link_density = link_density_from_metrics(m)
-        if link_density > HIGH_LINK_DENSITY_THRESHOLD:
-            score = int(score * HIGH_LINK_DENSITY_PENALTY)
-        elif link_density > MEDIUM_LINK_DENSITY_THRESHOLD:
-            score = int(score * MEDIUM_LINK_DENSITY_PENALTY)
-        elif link_density > LOW_LINK_DENSITY_THRESHOLD:
-            score = int(score * LOW_LINK_DENSITY_PENALTY)
-
-        if m.comma_count > COMMA_BONUS_THRESHOLD:
-            score += m.comma_count * COMMA_BONUS_MULTIPLIER
-
-        return score
+        return _score_from_counts(
+            self, node, m.tag_count, m.paragraph_count, m.heading_count,
+            m.text_length, m.link_text_length, m.comma_count,
+        )
 
     def should_remove(self, node: Node) -> bool:
         """scorer.go:246-298."""
@@ -406,11 +353,11 @@ def _score_from_counts(
     heading_count: int, text_length: int, link_text_length: int,
     comma_count: int,
 ) -> int:
-    """The scoring formula from DefaultScorer.score given precomputed
-    metrics as plain ints (scorer.go:189-242 verbatim; density formulas
-    inlined from scoring.go:99-119) — no ContentMetrics allocation on the
-    per-candidate hot path; total_text_length == text_length here because
-    the bottom-up accumulation computes both from the same subtree."""
+    """The scoring formula (scorer.go:189-242 verbatim; density formulas
+    inlined from scoring.go:99-119) over a node's subtree metrics as plain
+    ints — no ContentMetrics allocation on score_all_nodes' per-candidate
+    hot path. The reference's total text length is text_length: both
+    count the same subtree's text."""
     score = TAG_SCORES.get(node.data, 0) + scorer.score_attributes(node)
     if paragraph_count >= MIN_PARAGRAPHS_FOR_BONUS:
         score += paragraph_count * MANY_PARAGRAPHS_MULTIPLIER

@@ -142,9 +142,7 @@ def dedup_exact(
     )
 
 
-def split_paragraphs(
-    documents: DataFrame, delimiter: str = "\n", extra_cols: tuple = ()
-) -> DataFrame:
+def split_paragraphs(documents: DataFrame, extra_cols: tuple = ()) -> DataFrame:
     """Explode documents into (doc_id, para_idx, paragraph) rows — the
     unit CCNet-style paragraph dedup operates on. Real corpora split on
     newlines/blank lines; the driver corpus synthesizes delimiters
@@ -155,7 +153,7 @@ def split_paragraphs(
     return documents.select(
         F.col("doc_id").cast("long"),
         *[F.col(c) for c in extra_cols],
-        F.posexplode(F.split(F.col("text"), delimiter)).alias("para_idx", "paragraph"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("para_idx", "paragraph"),
     )
 
 
@@ -258,10 +256,7 @@ def canonical_url_col(url_col: str = "url"):
     ).otherwise(F.concat(scheme, F.lit("://"), host, path, qs))
 
 
-def latest_capture(
-    df: DataFrame, url_col: str = "url", ts_col: str = "warc_ts",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def latest_capture(df: DataFrame) -> DataFrame:
     """URL-level recrawl dedup: one row per canonical URL keeping the
     NEWEST capture (max ts, ties to the smallest id — deterministic
     across engines). The real Common-Crawl shape: the same page is
@@ -269,12 +264,11 @@ def latest_capture(
     corpora keep the latest. Single hash-aggregate shuffle keyed by
     canonical URL (uniform after canonicalization), max_by partial-aggs
     map-side — same 100 TB profile as dedup_exact."""
-    i = F.col(id_col)
     return (
         df.select(
-            canonical_url_col(url_col).alias("canonical_url"),
-            F.col(ts_col).alias("__ts"),
-            i.cast("long").alias("__id"),
+            canonical_url_col("url").alias("canonical_url"),
+            F.col("warc_ts").alias("__ts"),
+            F.col("doc_id").cast("long").alias("__id"),
         )
         .groupBy("canonical_url")
         .agg(
@@ -296,13 +290,7 @@ DEFAULT_URL_KEYWORDS = ("porn", "xxx", "casino", "viagra", "escort")
 URL_BYTE_CAP = 2000
 
 
-def url_filter(
-    df: DataFrame,
-    blocklist: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    keywords: tuple = DEFAULT_URL_KEYWORDS,
-) -> DataFrame:
+def url_filter(df: DataFrame, blocklist: DataFrame) -> DataFrame:
     """Crawl URL filtering (the RefinedWeb/UT1-blocklist pipeline stage):
     per document, keep/drop + first-match reason:
 
@@ -311,7 +299,7 @@ def url_filter(
       blocked_host    — host equals, or is a subdomain of, a blocklist
                         entry (label-boundary suffix match: 'b.com'
                         blocks 'a.b.com' but NOT 'notb.com')
-      blocked_keyword — lowercased URL contains a keyword
+      blocked_keyword — lowercased URL contains a DEFAULT_URL_KEYWORDS entry
       kept            — none of the above
 
     Precedence: structural invalidity first (cheap scan checks), then
@@ -323,7 +311,7 @@ def url_filter(
     side stays a single pruned scan with zero shuffle and zero Python;
     suffix matching is an arrays_overlap against the per-doc host suffix
     chain (<= #labels entries), not a LIKE scan per blocklist entry."""
-    u = F.col(url_col)
+    u = F.col("url")
     scheme = _scheme_of(u)
     host = _strip_any_port(_hostport_of(u))
     labels = F.split(host, "\\.")
@@ -336,7 +324,7 @@ def url_filter(
         F.collect_set(F.lower(F.col("host"))).alias("__blocked_hosts")
     )
     low = F.lower(u)
-    kw = F.array(*[F.lit(k) for k in keywords])
+    kw = F.array(*[F.lit(k) for k in DEFAULT_URL_KEYWORDS])
     reason = (
         F.when(~scheme.isin("http", "https"), F.lit("bad_scheme"))
         .when(F.octet_length(u) > URL_BYTE_CAP, F.lit("url_too_long"))
@@ -352,22 +340,24 @@ def url_filter(
     return (
         df.crossJoin(F.broadcast(bl))
         .select(
-            F.col(id_col).cast("long").alias(id_col),
-            u.alias(url_col),
+            F.col("doc_id").cast("long").alias("doc_id"),
+            u.alias("url"),
             reason.alias("reason"),
         )
         .withColumn("keep", F.col("reason") == "kept")
     )
 
 
+#: host_rank truncates the rank table's lineage after every this many rounds
+#: (its docstring says why).
+HOST_RANK_CHECKPOINT_EVERY = 4
+
+
 def host_rank(
     edges: DataFrame,
     damping: float = 0.85,
     iters: int = 3,
-    src_col: str = "src_host",
-    dst_col: str = "dst_host",
     weight_col: str | None = None,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Host-level PageRank over the crawl link graph — the domain-
     reputation prior real curation pipelines feed into quality scoring
@@ -388,17 +378,16 @@ def host_rank(
     broadcast as single rows — no driver collect, no cartesian. Rank
     state is one row per host (~10^7 at web scale — always the small
     side; Catalyst/AQE broadcasts it when it fits). Every
-    `checkpoint_every` rounds the rank table is localCheckpoint-ed
+    HOST_RANK_CHECKPOINT_EVERY rounds the rank table is localCheckpoint-ed
     (eager) to truncate lineage. This is not optional hygiene: each
     iteration consumes `pr` TWICE (the inflow join and the dangling-mass
     aggregate), so the unrolled logical tree DOUBLES per iteration —
     plan size is 2^iters, not linear (measured: an 8-iteration unrolled
     executedPlan carries >10k codegen spans), and analysis/codegen blow
-    up long before 30 iterations. checkpoint_every=4 caps every segment
-    at 2^4 subtree copies; materializing the identical one-row-per-host
-    state changes no values, so determinism is preserved (pinned by
-    test_link_graph.py::test_host_rank_checkpoint_determinism). Pass
-    checkpoint_every=0 to disable (only sensible for iters <= ~8).
+    up long before 30 iterations. Checkpointing every 4 rounds caps every
+    segment at 2^4 subtree copies; materializing the identical
+    one-row-per-host state changes no values, so determinism is preserved
+    (pinned by test_link_graph.py::test_host_rank_checkpoint_determinism).
 
     Checkpoint RELIABILITY: when the SparkContext has a checkpoint
     directory configured (sc.setCheckpointDir — the normal cluster
@@ -407,6 +396,7 @@ def host_rank(
     truncation kills the whole job — unacceptable on a 1000-executor
     run. Without a checkpoint dir (local dev), localCheckpoint is the
     only option and is used as before."""
+    src_col, dst_col = "src_host", "dst_host"
     e = edges.groupBy(src_col, dst_col).agg(
         (
             F.sum(weight_col) if weight_col else F.count(F.lit(1))
@@ -453,7 +443,7 @@ def host_rank(
                 ).alias("rank"),
             )
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0 and (it + 1) < iters:
+        if (it + 1) % HOST_RANK_CHECKPOINT_EVERY == 0 and (it + 1) < iters:
             sc = pr.sparkSession.sparkContext
             if sc._jsc.sc().checkpointDir().isDefined():
                 pr = pr.checkpoint(eager=True)
@@ -509,13 +499,7 @@ def surt_col(url_col: str = "url"):
     )
 
 
-def link_graph(
-    results: DataFrame,
-    url_col: str = "url",
-    links_col: str = "links",
-    respect_nofollow: bool = True,
-    cross_host_only: bool = False,
-) -> DataFrame:
+def link_graph(results: DataFrame, cross_host_only: bool = False) -> DataFrame:
     """Crawl link-graph construction from the extraction pipeline's own
     output — the glue between run_extraction and host_rank /
     anchor_text_agg: explode each document's extracted links (LINK_TYPE
@@ -524,9 +508,8 @@ def link_graph(
 
     Semantics: relative link URLs (no scheme://) resolve to the SOURCE
     host — a relative link cannot leave its site. rel=nofollow links are
-    excluded by default: nofollow exists precisely to withhold the
-    endorsement PageRank propagates (pass respect_nofollow=False to keep
-    them). cross_host_only=True drops intra-site edges for
+    excluded: nofollow exists precisely to withhold the endorsement
+    PageRank propagates. cross_host_only=True drops intra-site edges for
     endorsement-style analyses (host_rank wants them kept — self-edges
     model internal link mass).
 
@@ -535,10 +518,8 @@ def link_graph(
     links, with popular-pair skew absorbed map-side. Zero Python. Feed
     the output straight into host_rank(edges)."""
     ex = results.select(
-        _host_of(url_col).alias("src_host"), F.explode(links_col).alias("l")
-    )
-    if respect_nofollow:
-        ex = ex.where(~F.coalesce(F.col("l.is_nofollow"), F.lit(False)))
+        _host_of("url").alias("src_host"), F.explode("links").alias("l")
+    ).where(~F.coalesce(F.col("l.is_nofollow"), F.lit(False)))
     lurl = F.col("l.url")
     dst = F.when(
         lurl.rlike(URL_SCHEME_RE), _host_of(lurl)
@@ -553,13 +534,7 @@ def link_graph(
     )
 
 
-def anchor_text_agg(
-    links: DataFrame,
-    src_url_col: str = "src_url",
-    dst_url_col: str = "dst_url",
-    anchor_col: str = "anchor_text",
-    cross_host_only: bool = True,
-) -> DataFrame:
+def anchor_text_agg(links: DataFrame, cross_host_only: bool = True) -> DataFrame:
     """Inlink anchor-text aggregation per target host — the classic web
     quality prior (a host referenced by many OTHER hosts, with real anchor
     text, is prior-good; link farms show few distinct source hosts and
@@ -582,9 +557,9 @@ def anchor_text_agg(
     partial aggregate, bounded by distinct host PAIRS, not by links. Zero
     Python, zero joins, no broadcast."""
     df = links.select(
-        _host_of(src_url_col).alias("src_host"),
-        _host_of(dst_url_col).alias("dst_host"),
-        F.coalesce(F.col(anchor_col), F.lit("")).alias("__anchor"),
+        _host_of("src_url").alias("src_host"),
+        _host_of("dst_url").alias("dst_host"),
+        F.coalesce(F.col("anchor_text"), F.lit("")).alias("__anchor"),
     )
     if cross_host_only:
         df = df.where(F.col("src_host") != F.col("dst_host"))
@@ -600,10 +575,6 @@ def anchor_text_agg(
 
 def host_template_lines(
     docs: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    host_col: str | None = None,
     min_docs: int = 3,
     min_frac: float = 0.5,
 ) -> DataFrame:
@@ -632,11 +603,10 @@ def host_template_lines(
     cleaning side is a host-keyed join against it (AQE broadcasts it at
     real scale) followed by a scan-side array filter — the corpus text is
     never re-shuffled. Zero Python."""
-    host = F.col(host_col) if host_col else _host_of(url_col)
     base = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        host.alias("__host"),
-        F.split(F.col(text_col), "\n").alias("__lines"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        _host_of("url").alias("__host"),
+        F.split(F.col("text"), "\n").alias("__lines"),
     )
     ex = base.select(
         "doc_id", "__host", F.explode("__lines").alias("__line")
@@ -669,14 +639,7 @@ def host_template_lines(
     )
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    ts_col: str = "warc_ts",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame, text_col: str = "text") -> DataFrame:
     """Crawl snapshot diff — the incremental-pipeline primitive: given two
     crawl snapshots of (url, warc_ts, text), classify every canonical URL
     as added / removed / changed / unchanged so downstream stages
@@ -698,9 +661,9 @@ def snapshot_diff(
     def _snap(df):
         return (
             df.select(
-                canonical_url_col(url_col).alias("canonical_url"),
-                F.col(ts_col).alias("__ts"),
-                F.col(id_col).cast("long").alias("__id"),
+                canonical_url_col("url").alias("canonical_url"),
+                F.col("warc_ts").alias("__ts"),
+                F.col("doc_id").cast("long").alias("__id"),
                 F.md5(F.col(text_col)).alias("__h"),
             )
             .groupBy("canonical_url")
@@ -731,16 +694,15 @@ def snapshot_diff(
     )
 
 
-def meta_robots(
-    pages: DataFrame,
-    html_col: str = "html",
-    id_col: str = "doc_id",
-    head_bytes: int = 65536,
-) -> DataFrame:
+#: meta_robots scans only this many leading characters of a page.
+META_ROBOTS_HEAD_BYTES = 65536
+
+
+def meta_robots(pages: DataFrame) -> DataFrame:
     """Meta-robots compliance pre-filter over RAW page bytes — the
     standard crawl-pipeline step that drops noindex pages before any
-    expensive extraction runs. Scans the first head_bytes of the page
-    (meta robots must live in <head>; a tag beyond 64 KB is pathological
+    expensive extraction runs. Scans the first META_ROBOTS_HEAD_BYTES of
+    the page (meta robots must live in <head>; a tag beyond 64 KB is pathological
     and deliberately out of contract) with one case-insensitive regex
     pass, tolerating attribute-order flips (content before name),
     single/double/unquoted values, and the 'none' shorthand
@@ -755,13 +717,13 @@ def meta_robots(
     a single-tag scan under-reports). robots_content joins the tags'
     content values with ',' in document order.
 
-    Returns id_col, robots_content (NULL when no robots tag),
+    Returns doc_id, robots_content (NULL when no robots tag),
     noindex/nofollow booleans, keep = NOT noindex.
 
     100 TB plan: pure Catalyst regexp on a bounded prefix — zero
     shuffle, zero Python, pushes the cheapest possible drop to the
     scan."""
-    head = F.substring(F.col(html_col).cast("string"), 1, head_bytes)
+    head = F.substring(F.col("html").cast("string"), 1, META_ROBOTS_HEAD_BYTES)
     tags = F.regexp_extract_all(
         head,
         F.lit(
@@ -788,7 +750,7 @@ def meta_robots(
     noindex = present & (has("noindex") | has("none"))
     nofollow = present & (has("nofollow") | has("none"))
     return pages.select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.when(present, content).alias("robots_content"),
         noindex.alias("noindex"),
         nofollow.alias("nofollow"),
@@ -817,14 +779,7 @@ SITEMAP_MAX_BYTES = 50 * 1024 * 1024
 SITEMAP_LOC_MAX_CHARS = 2048
 
 
-def sitemap_entries(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    same_host_only: bool = True,
-    max_entries: int = SITEMAP_MAX_ENTRIES,
-    max_bytes: int = SITEMAP_MAX_BYTES,
-) -> DataFrame:
+def sitemap_entries(pages: DataFrame) -> DataFrame:
     """Parse sitemap XML captures (sitemaps.org protocol) out of a pages
     table into crawl-frontier entries — the discovery step between
     robots.txt compliance and fetch scheduling: a <urlset> yields
@@ -837,21 +792,20 @@ def sitemap_entries(
     unescaped in <loc>; entries past the spec's 50,000-per-file cap and
     bytes past 50 MB are ignored (array slice / bounded substring —
     caps are the spec's own, not silent); a <loc> of >= 2,048 chars is
-    dropped; and with same_host_only (the spec's cross-submission
-    default — a sitemap may only list URLs of its own host unless
-    robots.txt cross-submits) entries whose host differs from the
-    sitemap capture's host are dropped, using the shared URL grammar
-    (_host_of) on both sides.
+    dropped; and, per the spec's cross-submission default (a sitemap may
+    only list URLs of its own host unless robots.txt cross-submits),
+    entries whose host differs from the sitemap capture's host are
+    dropped, using the shared URL grammar (_host_of) on both sides.
 
     Returns (host, sitemap_url, kind, loc, lastmod). 100 TB plan: pure
     Catalyst regexp over a bounded prefix of the binary column +
     explode — zero Python, zero shuffle; the frontier anti-join
     downstream is the only exchange."""
-    body = F.substring(F.col(html_col).cast("string"), 1, max_bytes)
+    body = F.substring(F.col("html").cast("string"), 1, SITEMAP_MAX_BYTES)
 
     def block_entries(container_re, block_re):
         blocks = F.slice(
-            F.regexp_extract_all(body, F.lit(block_re), 0), 1, max_entries
+            F.regexp_extract_all(body, F.lit(block_re), 0), 1, SITEMAP_MAX_ENTRIES
         )
         ent = F.transform(
             blocks,
@@ -881,8 +835,8 @@ def sitemap_entries(
     ).otherwise(F.lit("url"))
     out = (
         pages.select(
-            _host_of(url_col).alias("host"),
-            F.col(url_col).alias("sitemap_url"),
+            _host_of("url").alias("host"),
+            F.col("url").alias("sitemap_url"),
             kind.alias("kind"),
             F.explode(entries).alias("e"),
         )
@@ -896,14 +850,10 @@ def sitemap_entries(
             & (F.length("loc") < SITEMAP_LOC_MAX_CHARS)
         )
     )
-    if same_host_only:
-        out = out.where(_host_of(F.col("loc")) == F.col("host"))
-    return out
+    return out.where(_host_of(F.col("loc")) == F.col("host"))
 
 
-def sitemap_urls_from_robots(
-    robots: DataFrame, host_col: str = "host", robots_col: str = "robots_txt"
-) -> DataFrame:
+def sitemap_urls_from_robots(robots: DataFrame) -> DataFrame:
     """Sitemap discovery from robots.txt captures: the `Sitemap:` field
     (sitemaps.org 'Sitemap location' / RFC 9309 §2.2.4 other records —
     group-independent, so it matches ANYWHERE in the file,
@@ -912,16 +862,14 @@ def sitemap_urls_from_robots(
     sitemap_url) seeds the sitemap fetch list. Zero Python, zero
     shuffle."""
     urls = F.regexp_extract_all(
-        F.col(robots_col), F.lit(r"(?im)^[ \t]*sitemap[ \t]*:[ \t]*(\S+)"), 1
+        F.col("robots_txt"), F.lit(r"(?im)^[ \t]*sitemap[ \t]*:[ \t]*(\S+)"), 1
     )
     return robots.select(
-        F.col(host_col).alias("host"), F.explode(urls).alias("sitemap_url")
+        F.col("host").alias("host"), F.explode(urls).alias("sitemap_url")
     )
 
 
-def sitemap_frontier(
-    entries: DataFrame, pages: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def sitemap_frontier(entries: DataFrame, pages: DataFrame) -> DataFrame:
     """The uncrawled frontier: sitemap-listed page URLs (kind='url')
     not yet captured in the pages table — what a recrawl scheduler
     fetches next. One distinct + one left-anti join on url (uniform
@@ -932,15 +880,16 @@ def sitemap_frontier(
         .agg(F.max("lastmod").alias("lastmod"))
     )
     return listed.join(
-        pages.select(F.col(url_col).alias("url")).distinct(), "url", "left_anti"
+        pages.select(F.col("url").alias("url")).distinct(), "url", "left_anti"
     )
 
 
-def _char_trigrams(docs: DataFrame, text_col: str, id_col: str | None):
-    """(__id?, __t) exploded character trigrams — shared by training
-    and scoring so both sides tokenize identically by construction."""
-    t = F.col(text_col)
-    cols = ([F.col(id_col).cast("long").alias("__id")] if id_col else []) + [
+def _char_trigrams(docs: DataFrame, with_id: bool):
+    """(__id?, __t) exploded character trigrams of `text` — shared by
+    training and scoring so both sides tokenize identically by
+    construction."""
+    t = F.col("text")
+    cols = ([F.col("doc_id").cast("long").alias("__id")] if with_id else []) + [
         F.explode(
             F.transform(
                 F.sequence(F.lit(1), F.length(t) - 2),
@@ -951,7 +900,7 @@ def _char_trigrams(docs: DataFrame, text_col: str, id_col: str | None):
     return docs.where(F.length(t) >= 3).select(*cols)
 
 
-def train_char_trigram(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def train_char_trigram(docs: DataFrame) -> DataFrame:
     """Train the character-trigram reference model on a corpus slice:
     one (trigram, count) row per distinct trigram. Write it once and
     score every later batch against it (char_trigram_perplexity's
@@ -959,18 +908,13 @@ def train_char_trigram(docs: DataFrame, text_col: str = "text") -> DataFrame:
     artifact, not retrained per scoring run. One uniform-key hash-agg
     with map-side combine; ~1e6-1e7 rows at web scale."""
     return (
-        _char_trigrams(docs, text_col, None)
+        _char_trigrams(docs, False)
         .groupBy(F.col("__t").alias("trigram"))
         .agg(F.count(F.lit(1)).cast("long").alias("count"))
     )
 
 
-def char_trigram_perplexity(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    model: DataFrame | None = None,
-) -> DataFrame:
+def char_trigram_perplexity(docs: DataFrame, model: DataFrame | None = None) -> DataFrame:
     """Corpus-self-perplexity quality scoring — the third CCNet pillar
     (Wenzek 2020 §4.3 scores documents with a pre-trained KenLM 5-gram
     and head/middle/tail-partitions the corpus by perplexity; this is
@@ -1002,7 +946,7 @@ def char_trigram_perplexity(
     model=None (self-scoring) every trigram is seen and the left join
     degenerates to the original inner-join semantics, so oracle parity
     is unchanged by construction."""
-    tri = _char_trigrams(docs, text_col, id_col)
+    tri = _char_trigrams(docs, True)
     if model is None:
         m = tri.groupBy("__t").agg(F.count(F.lit(1)).alias("__c"))
     else:
@@ -1030,8 +974,8 @@ def char_trigram_perplexity(
         .groupBy("__id")
         .agg(F.round(F.avg("__bits"), 2).cast("double").alias("tri_bits"))
     )
-    return docs.select(F.col(id_col).cast("long").alias(id_col)).join(
-        scored.withColumnRenamed("__id", id_col), id_col, "left"
+    return docs.select(F.col("doc_id").cast("long").alias("doc_id")).join(
+        scored.withColumnRenamed("__id", "doc_id"), "doc_id", "left"
     )
 
 
@@ -1309,19 +1253,31 @@ def span_window_stats(
     )
 
 
-def shingles_col(text_col: str = "text", k: int = 3):
-    """k-word shingles as an array<string> column (pure SQL, no Python)."""
+#: Near-dup shape shared by the MinHash/LSH operators and their DuckDB
+#: oracles: SHINGLE_K-word shingles, MINHASH_NUM_HASHES draws per signature,
+#: split into LSH_BANDS bands of MINHASH_NUM_HASHES // LSH_BANDS rows, and
+#: the production cap on one (band, hash) bucket's size.
+SHINGLE_K = 3
+MINHASH_NUM_HASHES = 32
+LSH_BANDS = 8
+LSH_MAX_BUCKET = 1024
+
+
+def shingles_col():
+    """SHINGLE_K-word shingles of `text` as an array<string> column (pure
+    SQL, no Python)."""
+    k = SHINGLE_K
     return F.expr(
-        f"CASE WHEN size(split({text_col}, ' ')) < {k} THEN array({text_col}) "
-        f"ELSE transform(sequence(1, size(split({text_col}, ' ')) - {k - 1}), "
-        f"i -> concat_ws(' ', slice(split({text_col}, ' '), i, {k}))) END"
+        f"CASE WHEN size(split(text, ' ')) < {k} THEN array(text) "
+        f"ELSE transform(sequence(1, size(split(text, ' ')) - {k - 1}), "
+        f"i -> concat_ws(' ', slice(split(text, ' '), i, {k}))) END"
     )
 
 
 # MinHash spec (engine-defined): one base hash per shingle reduced mod the
-# Mersenne prime P=2^31-1, then num_hashes draws from the classic universal
-# family sig[j] = min over shingles of (a_j * h + b_j) mod P, with a_j/b_j
-# md5-derived constants (a_j forced odd).
+# Mersenne prime P=2^31-1, then MINHASH_NUM_HASHES draws from the classic
+# universal family sig[j] = min over shingles of (a_j * h + b_j) mod P, with
+# a_j/b_j md5-derived constants (a_j forced odd).
 #
 # TWO base-hash modes (hash_basis param), same family on top:
 #   "xxhash64" (production default): Spark's native 64-bit hash — pure JVM
@@ -1363,19 +1319,14 @@ def minhash_params(num_hashes: int) -> tuple[list[int], list[int]]:
     )
 
 
-def minhash_signatures(
-    documents: DataFrame,
-    num_hashes: int = 32,
-    shingle_k: int = 3,
-    hash_basis: str = "xxhash64",
-) -> DataFrame:
+def minhash_signatures(documents: DataFrame, hash_basis: str) -> DataFrame:
     """MinHash signatures, all JVM-side with zero shuffles. Tokenization,
     shingles and the per-shingle base hash are staged as separate
     projections so each is computed once per row, not once per hash
     function (Catalyst does not CSE across the per-hash lambdas) — the 32
     draws are then pure integer arithmetic over the staged hash array."""
-    k = shingle_k
-    a, b = minhash_params(num_hashes)
+    k = SHINGLE_K
+    a, b = minhash_params(MINHASH_NUM_HASHES)
     tokens = F.split(F.col("text"), " ")
     sh = F.expr(
         f"CASE WHEN size(__tokens) < {k} THEN array(text) "
@@ -1390,7 +1341,7 @@ def minhash_signatures(
         "array("
         + ",".join(
             f"array_min(transform(__hm, h -> ({a[j]} * h + {b[j]}) % {MINHASH_PRIME}))"
-            for j in range(num_hashes)
+            for j in range(MINHASH_NUM_HASHES)
         )
         + ")"
     )
@@ -1406,15 +1357,13 @@ def minhash_signatures(
 
 def minhash_lsh_candidates(
     documents: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-    max_bucket_size: int | None = 1024,
+    max_bucket_size: int | None = LSH_MAX_BUCKET,
     hash_basis: str = "xxhash64",
 ) -> DataFrame:
-    """LSH banding: split each signature into `bands` bands of
-    num_hashes/bands rows, hash each band, shuffle by (band, hash), and emit
-    candidate near-duplicate pairs that collide in any band (deduped).
+    """LSH banding: split each signature into LSH_BANDS bands of
+    MINHASH_NUM_HASHES/LSH_BANDS rows, hash each band, shuffle by
+    (band, hash), and emit candidate near-duplicate pairs that collide in
+    any band (deduped).
 
     max_bucket_size caps the per-(band_id, band_hash) bucket: a mega-bucket
     of k near-identical docs (boilerplate-only pages surviving exact dedup)
@@ -1422,7 +1371,7 @@ def minhash_lsh_candidates(
     expansion (the docs inside remain candidates through their other,
     smaller buckets). None disables the cap. Use lsh_bucket_stats to count
     dropped buckets for a run report."""
-    banded = _lsh_banded(documents, num_hashes, bands, shingle_k, hash_basis)
+    banded = _lsh_banded(documents, hash_basis)
     if max_bucket_size is not None:
         # Window-count cap, NOT a separate agg + anti-join: keeping both
         # self-join inputs byte-identical subtrees lets Spark's
@@ -1453,13 +1402,7 @@ def minhash_lsh_candidates(
     return pairs
 
 
-def minhash_lsh_candidates_variants(
-    documents: DataFrame,
-    variants: dict,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-) -> DataFrame:
+def minhash_lsh_candidates_variants(documents: DataFrame, variants: dict) -> DataFrame:
     """minhash_lsh_candidates under SEVERAL (hash_basis, max_bucket_size)
     policies in ONE pass: `variants` maps name -> (hash_basis,
     max_bucket_size | None). Returns (variant, doc_a, doc_b).
@@ -1480,7 +1423,7 @@ def minhash_lsh_candidates_variants(
         by_basis.setdefault(basis, {})[name] = cap
     parts = []
     for basis, caps in by_basis.items():
-        banded = _lsh_banded(documents, num_hashes, bands, shingle_k, basis)
+        banded = _lsh_banded(documents, basis)
         w = Window.partitionBy("band_id", "band_hash")
         counted = banded.withColumn("__bn", F.count(F.lit(1)).over(w))
         vlist = F.array(
@@ -1544,14 +1487,9 @@ def _band_hash_expr(b: int, rows: int, hash_basis: str) -> str:
     )
 
 
-def _lsh_banded(
-    documents: DataFrame, num_hashes: int, bands: int, shingle_k: int,
-    hash_basis: str = "xxhash64",
-) -> DataFrame:
-    rows = num_hashes // bands
-    with_sig = minhash_signatures(documents, num_hashes, shingle_k, hash_basis).select(
-        "doc_id", "minhash_sig"
-    )
+def _lsh_banded(documents: DataFrame, hash_basis: str) -> DataFrame:
+    rows = MINHASH_NUM_HASHES // LSH_BANDS
+    with_sig = minhash_signatures(documents, hash_basis).select("doc_id", "minhash_sig")
     # single-expression band array (r10): same tree, ~30 fewer py4j
     # round trips per basis at build time
     band_array = F.expr(
@@ -1559,7 +1497,7 @@ def _lsh_banded(
         + ",".join(
             f"named_struct('band_id', {b}, "
             f"'band_hash', {_band_hash_expr(b, rows, hash_basis)})"
-            for b in range(bands)
+            for b in range(LSH_BANDS)
         )
         + ")"
     )
@@ -1571,15 +1509,12 @@ def _lsh_banded(
 
 def lsh_bucket_stats(
     documents: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-    max_bucket_size: int = 1024,
+    max_bucket_size: int = LSH_MAX_BUCKET,
     hash_basis: str = "xxhash64",
 ) -> DataFrame:
     """Bucket-size distribution + dropped-bucket count for the LSH cap —
     the 'no silent caps' companion to minhash_lsh_candidates."""
-    sizes = _lsh_banded(documents, num_hashes, bands, shingle_k, hash_basis).groupBy(
+    sizes = _lsh_banded(documents, hash_basis).groupBy(
         "band_id", "band_hash"
     ).agg(F.count("*").alias("bucket_size"))
     return sizes.agg(
@@ -1592,10 +1527,7 @@ def lsh_bucket_stats(
 
 
 def ngram_jaccard_pairs(
-    documents: DataFrame,
-    candidates: DataFrame,
-    shingle_k: int = 3,
-    carry_cols: tuple = (),
+    documents: DataFrame, candidates: DataFrame, carry_cols: tuple = ()
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs (array_intersect/union —
     JVM-side). Join candidates back to shingle sets; at scale the candidate
@@ -1606,7 +1538,7 @@ def ngram_jaccard_pairs(
     not depend on the tag; the expensive shingle-set joins are the same
     either way)."""
     sets = spread_small_input(documents).select(
-        F.col("doc_id"), F.array_distinct(shingles_col("text", shingle_k)).alias("sh")
+        F.col("doc_id"), F.array_distinct(shingles_col()).alias("sh")
     )
     return (
         candidates.join(sets.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
@@ -1670,20 +1602,22 @@ def simhash_docs(documents: DataFrame, hash_basis: str = "xxhash64") -> DataFram
     )
 
 
-def embedding_near_dup(
-    embeddings: DataFrame, threshold: float = 0.95, num_blocks: int = 8
-) -> DataFrame:
+#: embedding_near_dup's block count: B(B+1)/2 block-pair tasks.
+EMBEDDING_BLOCKS = 8
+
+
+def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
     """EXACT embedding-cosine near-duplicate pairs above `threshold`, via
     block-pair decomposition instead of a single cartesian join.
 
-    Every vector is hashed to one of `num_blocks` blocks and replicated to
-    the `num_blocks` block-pair tasks it participates in; the self-join is
-    then an EQUI-join on the (p, q) task key — each unordered pair of
+    Every vector is hashed to one of EMBEDDING_BLOCKS blocks and replicated
+    to the EMBEDDING_BLOCKS block-pair tasks it participates in; the
+    self-join is then an EQUI-join on the (p, q) task key — each unordered pair of
     vectors meets in exactly one task, so the result is exact while the
     pairwise work is spread evenly over B(B+1)/2 shuffle buckets (no
     BroadcastNestedLoopJoin / CartesianProduct over the full table, no
-    single-task hot spot). Shuffle volume is num_blocks × n vectors; pick
-    num_blocks ~ sqrt(desired parallelism) at scale.
+    single-task hot spot). Shuffle volume is EMBEDDING_BLOCKS × n vectors;
+    pick it ~ sqrt(desired parallelism) at scale.
 
     All-pairs work is inherent to an EXACT threshold join; for the
     approximate/cheap path at 100 TB, bucket with ivf_assign first and
@@ -1698,7 +1632,7 @@ def embedding_near_dup(
     magnitude wider than the ulp noise, so the driver-gate check is stable
     there. For adversarial inputs, pre-quantize (round both sides before
     comparing) or treat boundary pairs as tied."""
-    B = num_blocks
+    B = EMBEDDING_BLOCKS
     norm = _normalized(embeddings)
     rep = (
         norm.withColumn("block", F.pmod(F.xxhash64("vec_id"), F.lit(B)).cast("int"))
@@ -1806,14 +1740,14 @@ def embedding_near_dup_ivf(
     )
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    num_centroids: int = 8,
-    lloyd_iters: int = 1,
-) -> tuple:
+#: Lloyd iterations ivf_assign runs on its seed centroids.
+IVF_LLOYD_ITERS = 1
+
+
+def ivf_assign(embeddings: DataFrame, num_centroids: int = 8) -> tuple:
     """IVF bucketing: deterministic seed centroids (smallest xxhash64 of
     vec_id — no RNG, reproducible across runs/parallelism) refined with
-    `lloyd_iters` Lloyd iterations, then every vector assigned to its
+    IVF_LLOYD_ITERS Lloyd iterations, then every vector assigned to its
     nearest centroid. Fully lazy/distributed: the bucket mean is computed
     dimension-agnostically (posexplode -> per-(bucket, position) average ->
     positional reassembly), so no driver-side lookup of the embedding
@@ -1845,7 +1779,7 @@ def ivf_assign(
         )
 
     assigned = assign(norm, centroids)
-    for _ in range(lloyd_iters):
+    for _ in range(IVF_LLOYD_ITERS):
         # recompute centroids as bucket means (renormalized): explode to
         # (bucket, pos, value), average per cell, reassemble positionally —
         # tiny shuffles (num_centroids x dim cells), no dim known up front
@@ -2133,10 +2067,15 @@ def c4_gopher_quality(documents: DataFrame) -> DataFrame:
 GOPHER_DUP_NGRAM_THRESHOLDS = {5: 15, 6: 14, 7: 13, 8: 12, 9: 11, 10: 10}
 
 
-def dup_ngram_char_fractions(documents: DataFrame, ns=(5, 6, 7, 8, 9, 10)) -> DataFrame:
+#: The word n-gram sizes dup_ngram_char_fractions reports (Gopher's 5..10);
+#: each n is one output column, dup_<n>gram_char_pct.
+DUP_NGRAM_NS = (5, 6, 7, 8, 9, 10)
+
+
+def dup_ngram_char_fractions(documents: DataFrame) -> DataFrame:
     """Gopher's duplicate-n-gram CHARACTER fractions (Rae et al. 2021
-    §A.1.1): for each n, the share of the document's characters covered
-    by any word n-gram that occurs >= 2x in the doc (overlaps counted
+    §A.1.1): for each n in DUP_NGRAM_NS, the share of the document's
+    characters covered by any word n-gram that occurs >= 2x in the doc (overlaps counted
     once — a positional interval union). Characters = token characters
     (spaces excluded), documented and shared with the DuckDB oracle.
 
@@ -2145,7 +2084,7 @@ def dup_ngram_char_fractions(documents: DataFrame, ns=(5, 6, 7, 8, 9, 10)) -> Da
     window count -> explode covered positions of duplicated starts ->
     distinct -> join token lengths -> per-doc sums. Every shuffle keys
     on (doc_id, ...) — uniform, corpus never broadcast, data volume
-    bounded by ~|ns| x token count."""
+    bounded by ~|DUP_NGRAM_NS| x token count."""
     from pyspark.sql import Window
 
     toks = F.split(F.col("text"), " ")
@@ -2156,6 +2095,7 @@ def dup_ngram_char_fractions(documents: DataFrame, ns=(5, 6, 7, 8, 9, 10)) -> Da
     ).select("doc_id", "pos", F.length("tok").alias("tok_len"))
     totals = tok_tbl.groupBy("doc_id").agg(F.sum("tok_len").alias("total_chars"))
 
+    ns = DUP_NGRAM_NS
     gram_frames = []
     for n in ns:
         grams = F.when(
@@ -2311,9 +2251,9 @@ def _lang_pred_sql() -> str:
     return _LANG_PRED_SQL
 
 
-def with_lang_pred(df: DataFrame, out_col: str = "pred_lang") -> DataFrame:
-    """Append the lang-ID prediction as a COLUMN, keeping every existing
-    column: the classifier is a pure per-row projection, so composite
+def with_lang_pred(df: DataFrame) -> DataFrame:
+    """Append the lang-ID prediction as column `pred_lang`, keeping every
+    existing column: the classifier is a pure per-row projection, so composite
     consumers (corpus_filter's base frame) fold it into their own scan
     instead of paying a corpus-wide doc_id join against lang_id_docs
     (guide §2.4 — remove shuffles outright). The token array is staged
@@ -2323,7 +2263,7 @@ def with_lang_pred(df: DataFrame, out_col: str = "pred_lang") -> DataFrame:
         df.withColumn(
             "__toks", F.array_distinct(F.split(F.lower(F.col("text")), " "))
         )
-        .withColumn(out_col, F.expr(_lang_pred_sql()))
+        .withColumn("pred_lang", F.expr(_lang_pred_sql()))
         .drop("__toks")
     )
 
@@ -2669,15 +2609,15 @@ BPE_PAIRSEP = "\x1f"  # (left, right) pair-key / merges serialization
 BPE_SPACE_MARK = "Ġ"  # 'Ġ': GPT-2's printable stand-in for ' '
 
 
-def bpe_pretokens_col(text_col: str = "text", mark_spaces: bool = True):
-    """Array column of BPE pretokens: control separators stripped,
-    BPE_PRETOKEN_PATTERN applied, leading spaces mapped to Ġ. The
+def bpe_pretokens_col(mark_spaces: bool = True):
+    """Array column of BPE pretokens of `text`: control separators
+    stripped, BPE_PRETOKEN_PATTERN applied, leading spaces mapped to Ġ. The
     Python twin is _bpe_pretokens_py — keep them identical.
     mark_spaces=False yields RAW tokens (the byte-level path maps the
     space BYTE through the GPT-2 table instead — Ġ-marking first would
     double-encode it)."""
     cleaned = F.translate(
-        F.col(text_col), BPE_WORDSEP + BPE_SYMSEP + BPE_PAIRSEP, ""
+        F.col("text"), BPE_WORDSEP + BPE_SYMSEP + BPE_PAIRSEP, ""
     )
     toks = F.regexp_extract_all(cleaned, F.lit(BPE_PRETOKEN_PATTERN), 0)
     if not mark_spaces:
@@ -2844,7 +2784,7 @@ def train_bpe_merges(word_freqs, num_merges: int):
     return merges
 
 
-def _bpe_word_freqs(documents, max_vocab, text_col, byte_level):
+def _bpe_word_freqs(documents, max_vocab, byte_level):
     """Shared word-frequency collection: ONE distributed word-count
     shuffle over JVM-extracted pretokens (the grouping key is the RAW
     token for byte_level — the byte mapping is injective, so mapping
@@ -2854,7 +2794,7 @@ def _bpe_word_freqs(documents, max_vocab, text_col, byte_level):
     wf = (
         spread_small_input(documents).select(
             F.explode(
-                bpe_pretokens_col(text_col, mark_spaces=not byte_level)
+                bpe_pretokens_col(mark_spaces=not byte_level)
             ).alias("word")
         )
         .groupBy("word")
@@ -2874,7 +2814,6 @@ def train_bpe_full(
     documents: DataFrame,
     num_merges: int = 1000,
     max_vocab: int = 1_000_000,
-    text_col: str = "text",
     byte_level: bool = False,
 ):
     """Train BPE on a corpus: ONE distributed word-count shuffle, then
@@ -2892,7 +2831,7 @@ def train_bpe_full(
     byte<->unicode table: fixed 256-symbol base alphabet, no UNK ever,
     CJK/emoji handled without alphabet blowup — the published design
     for web-scale multilingual corpora."""
-    rows = _bpe_word_freqs(documents, max_vocab, text_col, byte_level)
+    rows = _bpe_word_freqs(documents, max_vocab, byte_level)
     alphabet = (
         bpe_byte_alphabet()
         if byte_level
@@ -2923,39 +2862,31 @@ def bpe_unk_id(merges, alphabet) -> int:
     return len(alphabet) + len(merges)
 
 
-def bpe_encode_ids(
-    documents: DataFrame,
-    merges,
-    alphabet,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    byte_level: bool | None = None,
-) -> DataFrame:
+def bpe_encode_ids(documents: DataFrame, merges, alphabet) -> DataFrame:
     """Exact token-ID sequences per document — what a training run
     actually consumes (pack_sequences' counts tell it where bins end;
     this is the bin CONTENT). One mapInPandas pass with the rank-dict
     encoder and a per-batch distinct-word cache; characters outside the
     training alphabet take the UNK id (bpe_unk_id — the fixed
     len(alphabet)+len(merges), NEVER len(vocab)) — impossible by
-    construction on the byte-level path. byte_level=None auto-detects
+    construction on the byte-level path. A byte-level model is detected
     from the alphabet (the fixed 256-char byte table IS the marker).
-    Returns (id_col, token_ids array<int>, n_tokens)."""
+    Returns (doc_id, token_ids array<int>, n_tokens)."""
     import pandas as pd
 
     if not isinstance(merges, list):
         merges = _merges_from_df(merges)
-    if byte_level is None:
-        byte_level = list(alphabet) == bpe_byte_alphabet()
+    byte_level = list(alphabet) == bpe_byte_alphabet()
     vocab = bpe_vocab(merges, alphabet)
     unk = bpe_unk_id(merges, alphabet)
     ranks = bpe_ranks(merges)
-    src = documents.select(F.col(id_col).cast("long"), F.col(text_col))
+    src = documents.select(F.col("doc_id").cast("long"), F.col("text"))
 
     def encode_batches(batches):
         cache = {}
         for pdf in batches:
             out_ids, out_n = [], []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 ids = []
                 for w in _bpe_pretokens_py(text or "", byte_level=byte_level):
                     if w not in cache:
@@ -2967,11 +2898,11 @@ def bpe_encode_ids(
                 out_ids.append(ids)
                 out_n.append(len(ids))
             yield pd.DataFrame(
-                {id_col: pdf[id_col], "token_ids": out_ids, "n_tokens": out_n}
+                {"doc_id": pdf["doc_id"], "token_ids": out_ids, "n_tokens": out_n}
             )
 
     return src.mapInPandas(
-        encode_batches, f"{id_col} long, token_ids array<int>, n_tokens long"
+        encode_batches, "doc_id long, token_ids array<int>, n_tokens long"
     )
 
 
@@ -3046,8 +2977,6 @@ def load_bpe_model(spark, path: str):
 def bpe_encode_counts(
     documents: DataFrame,
     merges,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     method: str = "replace",
     byte_level: bool = False,
 ) -> DataFrame:
@@ -3069,7 +2998,7 @@ def bpe_encode_counts(
     equal in tests/test_bpe.py."""
     if not isinstance(merges, list):
         merges = _merges_from_df(merges)
-    out_id = F.col(id_col).cast("long").alias(id_col)
+    out_id = F.col("doc_id").cast("long").alias("doc_id")
     if byte_level and method != "pandas":
         raise ValueError(
             "byte_level encoding needs method='pandas' — the scan-side "
@@ -3079,25 +3008,25 @@ def bpe_encode_counts(
         import pandas as pd
 
         ranks = bpe_ranks(merges)
-        src = documents.select(F.col(id_col).cast("long"), F.col(text_col))
+        src = documents.select(F.col("doc_id").cast("long"), F.col("text"))
 
         def count_batches(batches):
             cache = {}
             for pdf in batches:
                 counts = []
-                for text in pdf[text_col]:
+                for text in pdf["text"]:
                     n = 0
                     for w in _bpe_pretokens_py(text or "", byte_level=byte_level):
                         if w not in cache:
                             cache[w] = len(bpe_encode_word(w, ranks, merges))
                         n += cache[w]
                     counts.append(n)
-                yield pd.DataFrame({id_col: pdf[id_col], "n_bpe_real": counts})
+                yield pd.DataFrame({"doc_id": pdf["doc_id"], "n_bpe_real": counts})
 
-        return src.mapInPandas(count_batches, f"{id_col} long, n_bpe_real long")
+        return src.mapInPandas(count_batches, "doc_id long, n_bpe_real long")
 
     ss = BPE_SYMSEP + BPE_SYMSEP
-    toks = bpe_pretokens_col(text_col)
+    toks = bpe_pretokens_col()
     words = F.transform(
         toks,
         # (?s): dot must match line terminators too — \n/\r are legal
@@ -3117,59 +3046,56 @@ def bpe_encode_counts(
     return spread_small_input(documents).select(out_id, n_real.alias("n_bpe_real"))
 
 
-def hash_split(
-    documents: DataFrame,
-    id_col: str = "doc_id",
-    train_pct: int = 90,
-    val_pct: int = 5,
-    keep_cols: tuple = (),
-) -> DataFrame:
+#: hash_split's train / val shares in percent (test takes the rest), and
+#: the bucket count weighted_sample thresholds; the hash_split oracle
+#: reads the same three.
+SPLIT_TRAIN_PCT = 90
+SPLIT_VAL_PCT = 5
+SAMPLE_RESOLUTION = 10_000
+
+
+def hash_split(documents: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """Deterministic train/val/test split by content-independent id hash:
-    bucket = md5(id) mod 100, split by cumulative percentage. Reproducible
+    bucket = md5(doc_id) mod 100, split by cumulative percentage. Reproducible
     across runs, engines, partitionings and cluster sizes — the property a
     random sample() lacks — and md5-based so the assignment is
     oracle-checkable. Scan-side projection, zero shuffles."""
     bucket = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 7), 16, 10)
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 7), 16, 10)
         .cast("long")
         % 100
     )
     split = (
-        F.when(bucket < train_pct, F.lit("train"))
-        .when(bucket < train_pct + val_pct, F.lit("val"))
+        F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train"))
+        .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, F.lit("val"))
         .otherwise(F.lit("test"))
     )
     return documents.select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("doc_id").cast("long").alias("doc_id"),
         bucket.alias("bucket"),
         split.alias("split"),
         *[F.col(c) for c in keep_cols],
     )
 
 
-def weighted_sample(
-    documents: DataFrame,
-    weight_expr,
-    id_col: str = "doc_id",
-    resolution: int = 10_000,
-) -> DataFrame:
+def weighted_sample(documents: DataFrame, weight_expr) -> DataFrame:
     """Deterministic per-row weighted sampling for data mixing: keep a row
-    iff md5(id) bucket < weight * resolution, where weight in [0, 1] is a
+    iff md5(doc_id) bucket < weight * SAMPLE_RESOLUTION, where weight in [0, 1] is a
     Column (typically derived per source/domain — the 'mixing ratio' knob
     a training-data pipeline tunes per corpus slice). Reproducible across
     runs/engines/cluster sizes, scan-side, zero shuffles; expected kept
-    fraction per slice = its weight to 1/resolution granularity."""
+    fraction per slice = its weight to 1/SAMPLE_RESOLUTION granularity."""
     bucket = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 7), 16, 10)
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 7), 16, 10)
         .cast("long")
-        % resolution
+        % SAMPLE_RESOLUTION
     )
     # floor() BEFORE the long cast: Spark's double->long cast truncates
     # toward zero while DuckDB's CAST(.. AS BIGINT) rounds to nearest, so an
     # explicit floor on BOTH engines is the only engine-independent threshold.
     return documents.withColumn(
         "sample_keep",
-        (bucket < F.floor(weight_expr * resolution).cast("long")).cast("boolean"),
+        (bucket < F.floor(weight_expr * SAMPLE_RESOLUTION).cast("long")).cast("boolean"),
     )
 
 
@@ -3178,8 +3104,6 @@ def temperature_sample(
     group_col: str = "source",
     alpha: float = 0.7,
     target_frac: float | None = None,
-    id_col: str = "doc_id",
-    resolution: int = 10_000,
 ) -> DataFrame:
     """Temperature-based domain rebalancing — the standard mixture rule
     for multilingual / multi-domain LM corpora (sampling exponent alpha,
@@ -3219,7 +3143,7 @@ def temperature_sample(
         )
     # the argmin domain's rate is (n/q)*q/n in doubles — one ulp below
     # 1.0 on one engine and clamped to exactly 1.0 on the other flips
-    # floor(rate*resolution) between 9999/10000. Snap near-1 rates to
+    # floor(rate*SAMPLE_RESOLUTION) between 9999/10000. Snap near-1 rates to
     # exactly 1.0 (identically on both engines; semantically a no-op at
     # 1e-9) so the no-upsampling domain is a true fixpoint.
     raw_rate = F.least(F.lit(1.0), F.col("__t") * F.col("__q") / F.col("__n"))
@@ -3230,17 +3154,17 @@ def temperature_sample(
             "keep_rate"
         ),
     )
-    joined = documents.select(F.col(id_col).cast("long").alias(id_col), g).join(
+    joined = documents.select(F.col("doc_id").cast("long").alias("doc_id"), g).join(
         F.broadcast(rates), group_col
     )
-    return weighted_sample(joined, F.col("keep_rate"), id_col=id_col, resolution=resolution)
+    return weighted_sample(joined, F.col("keep_rate"))
 
 
-def word_ngram_hash_col(n: int, hash_basis: str, text_col: str = "text"):
-    """Column of distinct whitespace-word n-gram hashes for a text column.
+def word_ngram_hash_col(n: int, hash_basis: str):
+    """Column of distinct whitespace-word n-gram hashes of `text`.
     Pure Catalyst — sequence + slice + array_join, hashed xxhash64
     (production) or md5 (oracle basis, DuckDB-shared)."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     joined = F.transform(
         F.sequence(F.lit(1), F.size(toks) - n + 1),
         lambda i: F.array_join(F.slice(toks, i, n), " "),
@@ -3313,7 +3237,7 @@ PII_IPV4 = r"\b(\d{1,3}\.){3}\d{1,3}\b"
 PII_LONG_DIGITS = r"\b\d{7,}\b"  # phone-ish runs; after IPs are consumed
 
 
-def pii_scrub(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub(documents: DataFrame) -> DataFrame:
     """PII redaction: emails -> <EMAIL>, IPv4s -> <IP>, 7+-digit runs ->
     <NUM> (in that order, so IP octets aren't re-matched as digit runs),
     plus per-kind match counts. Each count is taken on the PREVIOUS
@@ -3321,7 +3245,7 @@ def pii_scrub(documents: DataFrame, text_col: str = "text") -> DataFrame:
     clean_text redacts (an IP inside an email is consumed by <EMAIL> and
     never counted as an IP). Pure Catalyst regexp projections — zero
     shuffle, scan-side at 100 TB."""
-    t = F.col(text_col)
+    t = F.col("text")
     s1 = F.regexp_replace(t, PII_EMAIL, "<EMAIL>")
     s2 = F.regexp_replace(s1, PII_IPV4, "<IP>")
     s3 = F.regexp_replace(s2, PII_LONG_DIGITS, "<NUM>")
@@ -3349,13 +3273,13 @@ MOJIBAKE_CP1252_PUNCT = "â€"
 MOJIBAKE_REPLACEMENT = "�"
 
 
-def mojibake_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def mojibake_stats(documents: DataFrame) -> DataFrame:
     """Encoding-artifact (mojibake) detection — the corpus-QA signal that
     catches double-encoded or lossily-transcoded documents before they
     pollute training text: per-doc counts of the three standard artifact
     families plus an any-artifact flag. Pure Catalyst regexp_count
     projections — zero shuffle, scan-side at 100 TB."""
-    t = F.col(text_col)
+    t = F.col("text")
     n1 = F.regexp_count(t, F.lit(MOJIBAKE_DOUBLE_UTF8)).cast("long")
     n2 = F.regexp_count(t, F.lit(MOJIBAKE_CP1252_PUNCT)).cast("long")
     n3 = F.regexp_count(t, F.lit(MOJIBAKE_REPLACEMENT)).cast("long")
@@ -3445,12 +3369,7 @@ WET_AB_SCHEMA = (
 )
 
 
-def wet_ab_compare(
-    results: DataFrame,
-    wet: DataFrame,
-    text_col: str = "text",
-    wet_text_col: str = "text",
-) -> DataFrame:
+def wet_ab_compare(results: DataFrame, wet: DataFrame) -> DataFrame:
     """Per-url A/B between THIS engine's extracted text and the crawl's
     published WET text (warc.read_wet) — the comparator that keeps the
     WET ingest from being write-only (r7 VERDICT item 7). One row per
@@ -3474,9 +3393,9 @@ def wet_ab_compare(
     shuffle 100 TB to compare it). This is a diagnostic/QA report, not
     a curation hot path; volume is one pass over the joined texts."""
     joined = (
-        results.select(F.col("url"), F.col(text_col).alias("__e"))
+        results.select(F.col("url"), F.col("text").alias("__e"))
         .join(
-            wet.select(F.col("url"), F.col(wet_text_col).alias("__w")),
+            wet.select(F.col("url"), F.col("text").alias("__w")),
             "url",
             "full_outer",
         )
@@ -3511,18 +3430,13 @@ def wet_ab_compare(
     return joined.mapInPandas(compare, WET_AB_SCHEMA)
 
 
-def wet_ab_report(
-    results: DataFrame,
-    wet: DataFrame,
-    text_col: str = "text",
-    wet_text_col: str = "text",
-) -> DataFrame:
+def wet_ab_report(results: DataFrame, wet: DataFrame) -> DataFrame:
     """One-row distribution summary of wet_ab_compare: coverage (urls on
     both sides / engine-only / wet-only) and the char-F1 + length-ratio
     distribution (mean, p10/p50/p90) over urls present on BOTH sides.
     The per-url frame is the drill-down; this is the run report a crawl
     A/B dashboard ingests."""
-    cmp = wet_ab_compare(results, wet, text_col, wet_text_col)
+    cmp = wet_ab_compare(results, wet)
     both = (F.col("engine_chars") > 0) & (F.col("wet_chars") > 0)
     f1 = F.when(both, F.col("char_f1"))
     lr = F.when(both, F.col("length_ratio"))

@@ -517,14 +517,11 @@ def encode_ccitt_g3_mixed(bits, pattern: str = "alternate") -> bytes:
     return w.done()
 
 
-def encode_tiff_ccitt(ink, compression: int = 4, mixed: bool = False,
-                      tile=None) -> bytes:
-    """Wrap an encoder-twin CCITT stream in a minimal TIFF (little-endian,
-    PhotometricInterpretation=0/WhiteIsZero) for the synthesis corpora.
-    compression: 4 = T.6, 3 = T.4 (1D+EOL, or mixed 1D/2D with T4Options
-    bit 0 when mixed=True), 2 = MH byte-aligned. tile=(tw, th) writes a
-    TILED layout: each tile independently coded, edge tiles zero-padded
-    to the grid (TIFF 6.0 tile rule)."""
+def encode_tiff_ccitt(ink, compression: int = 4, mixed: bool = False) -> bytes:
+    """Wrap an encoder-twin CCITT stream in a one-strip TIFF
+    (little-endian, PhotometricInterpretation=0/WhiteIsZero) for the
+    synthesis corpora. compression: 4 = T.6, 3 = T.4 (1D+EOL, or mixed
+    1D/2D with T4Options bit 0 when mixed=True), 2 = MH byte-aligned."""
     import struct
 
     import numpy as np
@@ -542,58 +539,6 @@ def encode_tiff_ccitt(ink, compression: int = 4, mixed: bool = False,
         raise ValueError("ccitt_tiff_compression")
 
     t4_options = 1 if (compression == 3 and mixed) else 0
-    if tile:
-        tw, th = tile
-        blocks = []
-        for y0 in range(0, rows, th):
-            for x0 in range(0, cols, tw):
-                block = np.zeros((th, tw), np.uint8)
-                sub = a[y0 : y0 + th, x0 : x0 + tw]
-                block[: sub.shape[0], : sub.shape[1]] = sub
-                blocks.append(_code(block))
-        entries = [
-            (256, 3, 1, cols), (257, 3, 1, rows), (258, 3, 1, 1),
-            (259, 3, 1, compression), (262, 3, 1, 0), (277, 3, 1, 1),
-            (322, 3, 1, tw), (323, 3, 1, th),
-            (324, 4, len(blocks), 0),  # tile offsets (patched)
-            (325, 4, len(blocks), 0),  # tile byte counts (patched)
-        ]
-        if t4_options:
-            entries.append((292, 4, 1, t4_options))
-            entries.sort()
-        n = len(entries)
-        ifd_off = 8
-        arrays_off = ifd_off + 2 + 12 * n + 4
-        nb = len(blocks)
-        offsets_off = arrays_off
-        counts_off = arrays_off + 4 * nb
-        data_off = counts_off + 4 * nb
-        offs, pos = [], data_off
-        for b in blocks:
-            offs.append(pos)
-            pos += len(b)
-        out = bytearray(b"II*\x00" + struct.pack("<I", ifd_off))
-        out += struct.pack("<H", n)
-        for tag, typ, cnt, val in entries:
-            if tag == 324:
-                val = offs[0] if nb == 1 else offsets_off
-            elif tag == 325:
-                val = len(blocks[0]) if nb == 1 else counts_off
-            out += struct.pack("<HHII", tag, typ, cnt, val)
-        out += struct.pack("<I", 0)
-        if nb > 1:
-            for o in offs:
-                out += struct.pack("<I", o)
-            for b in blocks:
-                out += struct.pack("<I", len(b))
-        else:
-            # single tile: values inline in the IFD entries; arrays_off
-            # region is unused but data must still start at data_off
-            out += b"\x00" * (data_off - len(out))
-        for b in blocks:
-            out += b
-        return bytes(out)
-
     data = _code(a)
     entries = [
         (256, 3, 1, cols), (257, 3, 1, rows), (258, 3, 1, 1),

@@ -17,7 +17,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.extract import Config, markdown_config
-from . import analytics, relational, warc
+from . import analytics, multimodal, relational, warc
 from .job import run_all_links, run_extraction
 from .pages import PAGE_TEMPLATES, URL_SQL, pages_from_documents
 
@@ -1761,10 +1761,10 @@ irows AS (
   JOIN ikeep k ON k.comp = c.comp)
 SELECT 'features' AS level, CAST(doc_id AS BIGINT) AS media_id,
   md5(md5(h) || '|'
-      || md5(substr(h, 2 * ((0 * (byte_len - 16)) // 3) + 1, 32)) || '|'
-      || md5(substr(h, 2 * ((1 * (byte_len - 16)) // 3) + 1, 32)) || '|'
-      || md5(substr(h, 2 * ((2 * (byte_len - 16)) // 3) + 1, 32)) || '|'
-      || md5(substr(h, 2 * ((3 * (byte_len - 16)) // 3) + 1, 32))) AS k,
+      || md5(substr(h, 2 * ((0 * (byte_len - {multimodal.MEDIA_FRAME_LEN})) // 3) + 1, {2 * multimodal.MEDIA_FRAME_LEN})) || '|'
+      || md5(substr(h, 2 * ((1 * (byte_len - {multimodal.MEDIA_FRAME_LEN})) // 3) + 1, {2 * multimodal.MEDIA_FRAME_LEN})) || '|'
+      || md5(substr(h, 2 * ((2 * (byte_len - {multimodal.MEDIA_FRAME_LEN})) // 3) + 1, {2 * multimodal.MEDIA_FRAME_LEN})) || '|'
+      || md5(substr(h, 2 * ((3 * (byte_len - {multimodal.MEDIA_FRAME_LEN})) // 3) + 1, {2 * multimodal.MEDIA_FRAME_LEN}))) AS k,
   byte_len AS n1,
   CAST(floor(1000 * list_sum(list_transform(
         map_values(list_aggregate(pairs, 'histogram')),
@@ -2573,10 +2573,11 @@ def q_minhash_lsh(spark, sf_dir):
     return analytics.minhash_lsh_candidates(_docs(spark, sf_dir), hash_basis="md5")
 
 
-def _minhash_lsh_oracle(num_hashes: int = 32, bands: int = 8) -> str:
+def _minhash_lsh_oracle() -> str:
     """DuckDB replica of the full MinHash+LSH candidate pipeline, generated
     from the SAME hash-family constants as the Spark expressions (md5 base
     hash mod P + universal (a_j*h+b_j) mod P draws + md5 band keys)."""
+    num_hashes, bands = analytics.MINHASH_NUM_HASHES, analytics.LSH_BANDS
     a, b = analytics.minhash_params(num_hashes)
     P = analytics.MINHASH_PRIME
     rows = num_hashes // bands
@@ -2611,9 +2612,9 @@ FROM banded a JOIN banded b
 
 
 _DUCK_SHINGLES = (
-    "list_distinct(CASE WHEN len(string_split(text, ' ')) < 3 THEN [text] "
-    "ELSE [array_to_string(string_split(text, ' ')[i:i+2], ' ') "
-    "FOR i IN generate_series(1, len(string_split(text, ' ')) - 2)] END)"
+    f"list_distinct(CASE WHEN len(string_split(text, ' ')) < {analytics.SHINGLE_K} THEN [text] "
+    f"ELSE [array_to_string(string_split(text, ' ')[i:i+{analytics.SHINGLE_K - 1}], ' ') "
+    f"FOR i IN generate_series(1, len(string_split(text, ' ')) - {analytics.SHINGLE_K - 1})] END)"
 )
 
 
@@ -2680,17 +2681,19 @@ FROM reach GROUP BY doc
 def q_lsh_bucket_stats(spark, sf_dir):
     """The 'no silent caps' companion: bucket-size distribution + dropped
     count for the LSH mega-bucket cap, value-verified."""
-    return analytics.lsh_bucket_stats(_docs(spark, sf_dir), max_bucket_size=1024, hash_basis="md5")
+    return analytics.lsh_bucket_stats(
+        _docs(spark, sf_dir), max_bucket_size=analytics.LSH_MAX_BUCKET, hash_basis="md5"
+    )
 
 
-def _lsh_bucket_stats_oracle(num_hashes: int = 32, bands: int = 8) -> str:
-    base = _minhash_lsh_oracle(num_hashes, bands)
+def _lsh_bucket_stats_oracle() -> str:
+    base = _minhash_lsh_oracle()
     banded_cte = base[: base.index("SELECT DISTINCT")].rstrip()
     return f"""{banded_cte},
 sizes AS (SELECT band_id, band_hash, count(*) AS c FROM banded GROUP BY 1, 2)
 SELECT CAST(count(*) AS BIGINT) AS n_buckets,
        CAST(max(c) AS BIGINT) AS max_bucket,
-       CAST(sum(CASE WHEN c > 1024 THEN 1 ELSE 0 END) AS BIGINT) AS dropped_buckets
+       CAST(sum(CASE WHEN c > {analytics.LSH_MAX_BUCKET} THEN 1 ELSE 0 END) AS BIGINT) AS dropped_buckets
 FROM sizes
 """
 
@@ -2735,7 +2738,7 @@ def q_corpus_filter(spark, sf_dir):
     divergence would flip the production rows' hash."""
     return analytics.corpus_filter(
         _docs(spark, sf_dir),
-        {"oracle": ("md5", None), "production": ("xxhash64", 1024)},
+        {"oracle": ("md5", None), "production": ("xxhash64", analytics.LSH_MAX_BUCKET)},
         0.9,
     )
 
@@ -3762,7 +3765,7 @@ def q_hash_split(spark, sf_dir):
     return base.join(temp, "doc_id")
 
 
-O_HASH_SPLIT = """
+O_HASH_SPLIT = f"""
 WITH d AS (SELECT doc_id, CASE WHEN doc_id % 10 < 6 THEN 'dA'
                                WHEN doc_id % 10 < 9 THEN 'dB'
                                ELSE 'dC' END AS domain FROM documents),
@@ -3776,17 +3779,17 @@ r AS (SELECT domain, CAST(n AS BIGINT) AS n_domain,
              CASE WHEN rr > 1.0 - 1e-9 THEN 1.0 ELSE rr END AS rate FROM r0)
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
        CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7) AS UBIGINT) AS BIGINT) % 100 AS bucket,
-       CASE WHEN CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7) AS UBIGINT) AS BIGINT) % 100 < 90 THEN 'train'
-            WHEN CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7) AS UBIGINT) AS BIGINT) % 100 < 95 THEN 'val'
+       CASE WHEN CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7) AS UBIGINT) AS BIGINT) % 100 < {analytics.SPLIT_TRAIN_PCT} THEN 'train'
+            WHEN CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7) AS UBIGINT) AS BIGINT) % 100 < {analytics.SPLIT_TRAIN_PCT + analytics.SPLIT_VAL_PCT} THEN 'val'
             ELSE 'test' END AS split,
        documents.source AS source,
-       CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7) AS UBIGINT) AS BIGINT) % 10000
-         < CAST(floor(((1 + CAST(regexp_extract(documents.source, '([0-9]+)', 1) AS BIGINT) % 5) / 5) * 10000) AS BIGINT)
+       CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7) AS UBIGINT) AS BIGINT) % {analytics.SAMPLE_RESOLUTION}
+         < CAST(floor(((1 + CAST(regexp_extract(documents.source, '([0-9]+)', 1) AS BIGINT) % 5) / 5) * {analytics.SAMPLE_RESOLUTION}) AS BIGINT)
        AS sample_keep,
        r.n_domain AS n_domain,
        CAST(round(r.rate * 1000000, 0) AS BIGINT) AS rate_x1e6,
-       CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7) AS UBIGINT) AS BIGINT) % 10000
-         < CAST(floor(r.rate * 10000) AS BIGINT) AS temp_keep
+       CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7) AS UBIGINT) AS BIGINT) % {analytics.SAMPLE_RESOLUTION}
+         < CAST(floor(r.rate * {analytics.SAMPLE_RESOLUTION}) AS BIGINT) AS temp_keep
 FROM documents
 JOIN d USING (doc_id)
 JOIN r ON r.domain = d.domain

@@ -166,13 +166,14 @@ def derive_audit(results: DataFrame) -> DataFrame:
     )
 
 
-def salted_repartition(df: DataFrame, num_partitions: int, salt: str = "htmlx") -> DataFrame:
+def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     """Explicit skew-defeating shuffle on url-hash (north_rule requirement).
 
     Host-domain skew (many pages per domain) concentrates work when data is
-    partitioned by crawl order or host; hashing the full url with a salt
-    spreads rows uniformly. xxhash64 stays JVM-side (no Python roundtrip)."""
-    return df.repartition(num_partitions, F.xxhash64(F.col("url"), F.lit(salt)))
+    partitioned by crawl order or host; hashing the full url with a fixed
+    salt spreads rows uniformly. xxhash64 stays JVM-side (no Python
+    roundtrip)."""
+    return df.repartition(num_partitions, F.xxhash64(F.col("url"), F.lit("htmlx")))
 
 
 def run_extraction(
@@ -206,7 +207,6 @@ def run_extraction_full(
     df: DataFrame,
     config: Config | None = None,
     run_id: str = "",
-    num_partitions: int | None = None,
     doc_counter=None,
 ) -> dict[str, DataFrame]:
     """Results + metrics + audit from ONE extraction pass.
@@ -218,7 +218,7 @@ def run_extraction_full(
     the read-back (what run_with_resume does at scale); otherwise Spark's
     lazy evaluation re-runs the extraction per consumed output."""
     results = run_extraction(
-        df, config, run_id, num_partitions, with_audit=True, doc_counter=doc_counter
+        df, config, run_id, with_audit=True, doc_counter=doc_counter
     )
     return {
         "results": results,

@@ -785,7 +785,8 @@ def extract_media_metadata(media: DataFrame) -> DataFrame:
 # verifiable on the lowercase-hex basis):
 #   hexstr        = lower(hex(payload))
 #   payload_md5   = md5(hexstr)
-#   frame i of N (frame_len bytes): off_i = (i * (byte_len - frame_len)) // (N - 1)
+#   frame i of N = 4 (frame_len = MEDIA_FRAME_LEN bytes):
+#                   off_i = (i * (byte_len - frame_len)) // (N - 1)
 #                   frame_hash_i = md5(substr(hexstr, 2*off_i + 1, 2*frame_len));
 #                   byte_len <= frame_len -> every frame hash = md5(hexstr)
 #   entropy_x1000 = floor(1000 * sum over byte values ASCENDING (count>0)
@@ -807,7 +808,12 @@ MEDIA_FEATURES_SCHEMA = StructType(
 )
 
 
-def extract_media_features(media: DataFrame, n_frames: int = 4, frame_len: int = 16) -> DataFrame:
+#: Bytes per sampled frame (frame_len above); the DuckDB oracle
+#: (entryqueries.O_MEDIA_FRAME_FEATURES) reads it too.
+MEDIA_FRAME_LEN = 16
+
+
+def extract_media_features(media: DataFrame) -> DataFrame:
     """mapInPandas stage: binary payload -> byte-level features + sampled
     frame digests (numpy histogram + hashlib; Arrow-batched)."""
     import binascii
@@ -831,13 +837,13 @@ def extract_media_features(media: DataFrame, n_frames: int = 4, frame_len: int =
                         p = c / n
                         ent += -p * math.log2(p)
                 frames = []
-                for i in range(n_frames):
-                    if n <= frame_len:
+                for i in range(4):
+                    if n <= MEDIA_FRAME_LEN:
                         frames.append(hashlib.md5(hx).hexdigest())
                     else:
-                        off = (i * (n - frame_len)) // (n_frames - 1)
+                        off = (i * (n - MEDIA_FRAME_LEN)) // 3
                         frames.append(
-                            hashlib.md5(hx[2 * off : 2 * (off + frame_len)]).hexdigest()
+                            hashlib.md5(hx[2 * off : 2 * (off + MEDIA_FRAME_LEN)]).hexdigest()
                         )
                 rows.append(
                     {
@@ -1019,10 +1025,7 @@ def extract_image_dhash(media: DataFrame) -> DataFrame:
 
 
 def dhash_near_dup(
-    hashes: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "media_id",
-    hash_col: str = "dhash",
+    hashes: DataFrame, max_hamming: int = 3, hash_col: str = "dhash"
 ) -> DataFrame:
     """Near-duplicate image pairs by dHash Hamming distance, as banded
     LSH + exact verify — all Catalyst, no Python:
@@ -1043,7 +1046,7 @@ def dhash_near_dup(
     width = 64 // n_bands
     mask = (1 << width) - 1
     h = hashes.select(
-        F.col(id_col).cast("long").alias("__id"), F.col(hash_col).alias("__h")
+        F.col("media_id").cast("long").alias("__id"), F.col(hash_col).alias("__h")
     )
     bands = h.select(
         "__id", "__h",
@@ -1104,12 +1107,15 @@ def perceptual_keepers(pool: DataFrame, hash_col: str, max_hamming: int) -> Data
     )
 
 
+#: image_text_pairs drops images narrower or shorter than this many pixels.
+IMAGE_MIN_DIM = 8
+
+
 def image_text_pairs(
     images: DataFrame,
     media: DataFrame | None = None,
     min_caption_bytes: int = 5,
     max_caption_bytes: int = 512,
-    min_dim: int = 8,
     max_hamming: int = 3,
     allow_langs: tuple = ("en",),
     pix: DataFrame | None = None,
@@ -1196,7 +1202,7 @@ def image_text_pairs(
         )
         .when(F.col("__decode_error") != "", F.lit("decode_error"))
         .when(
-            (F.col("width") < min_dim) | (F.col("height") < min_dim),
+            (F.col("width") < IMAGE_MIN_DIM) | (F.col("height") < IMAGE_MIN_DIM),
             F.lit("image_too_small"),
         )
     )
@@ -2004,7 +2010,11 @@ def _gif_interlace_order(h: int):
     return order
 
 
-def decode_gif_frames(payload: bytes, max_frames: int = 256, _return_first=False):
+#: decode_gif_frames stops after this many image descriptors.
+GIF_MAX_FRAMES = 256
+
+
+def decode_gif_frames(payload: bytes, _return_first=False):
     """REAL animated-GIF decode: full canvas compositing per GIF89a —
     frame placement rects, per-frame local palettes, transparency index,
     and disposal methods 0/1 (keep), 2 (restore to transparent
@@ -2057,7 +2067,7 @@ def decode_gif_frames(payload: bytes, max_frames: int = 256, _return_first=False
                 pos += 1 + payload[pos]
             pos += 1
         elif b == 0x2C:  # image descriptor
-            if len(frames) >= max_frames:
+            if len(frames) >= GIF_MAX_FRAMES:
                 break
             if pos + 10 > len(payload):
                 raise ValueError("truncated_image_descriptor")

@@ -198,11 +198,11 @@ def parse_pdf_structure(payload: bytes) -> dict:
     return out
 
 
-def encode_object_stream(objects, compress: bool = True) -> bytes:
+def encode_object_stream(objects) -> bytes:
     """Build a spec-layout /Type /ObjStm stream OBJECT BODY (dict +
-    stream..endstream) from [(obj_num, obj_bytes)] pairs — the synthesis
-    twin for parse_pdf_structure's ObjStm path. Header is the N pairs of
-    'objnum offset', /First points past it."""
+    stream..endstream, FlateDecode) from [(obj_num, obj_bytes)] pairs —
+    the synthesis twin for parse_pdf_structure's ObjStm path. Header is
+    the N pairs of 'objnum offset', /First points past it."""
     offsets = []
     content = b""
     for num, obj in objects:
@@ -210,11 +210,10 @@ def encode_object_stream(objects, compress: bool = True) -> bytes:
         content += obj + b"\n"
     header = b" ".join(b"%d %d" % (n, o) for n, o in offsets) + b"\n"
     body = header + content
-    data = zlib.compress(body) if compress else body
-    filt = b" /Filter /FlateDecode" if compress else b""
+    data = zlib.compress(body)
     return (
-        b"<< /Type /ObjStm /N %d /First %d%s /Length %d >>\nstream\n"
-        % (len(objects), len(header), filt, len(data))
+        b"<< /Type /ObjStm /N %d /First %d /Filter /FlateDecode /Length %d >>\nstream\n"
+        % (len(objects), len(header), len(data))
         + data
         + b"\nendstream"
     )
@@ -233,14 +232,14 @@ class InflateBudgetError(zlib.error):
 MAX_INFLATE = 64 * 1024 * 1024  # per-stream inflate cap (bomb guard)
 
 
-def inflate_bounded(data: bytes, cap: int = MAX_INFLATE) -> bytes:
-    """zlib inflate with a hard output budget: a kilobyte-sized bomb that
-    expands to gigabytes must degrade to an error ROW, not OOM the
-    executor's Python worker."""
+def inflate_bounded(data: bytes) -> bytes:
+    """zlib inflate with a hard output budget (MAX_INFLATE): a
+    kilobyte-sized bomb that expands to gigabytes must degrade to an error
+    ROW, not OOM the executor's Python worker."""
     d = zlib.decompressobj()
-    out = d.decompress(data, cap)
+    out = d.decompress(data, MAX_INFLATE)
     if d.unconsumed_tail:
-        raise InflateBudgetError(f"inflated output exceeds {cap} bytes")
+        raise InflateBudgetError(f"inflated output exceeds {MAX_INFLATE} bytes")
     return out + d.flush()
 
 

@@ -458,13 +458,14 @@ def _check_user_password_legacy(key: bytes, u: bytes, id0: bytes, r: int) -> boo
     return x == u[:16]
 
 
-def _hash_2b(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
-    """ISO 32000-2 Algorithm 2.B iterated hash (R6)."""
-    k = hashlib.sha256(password + salt + udata).digest()
+def _hash_2b(password: bytes, salt: bytes) -> bytes:
+    """ISO 32000-2 Algorithm 2.B iterated hash (R6), for a user password
+    (the algorithm's extra /U input is empty)."""
+    k = hashlib.sha256(password + salt).digest()
     i = 0
     e = b"\x00"
     while i < 64 or e[-1] > i - 32:
-        k1 = (password + k + udata) * 64
+        k1 = (password + k) * 64
         e = aes_cbc_encrypt(k[:16], k[16:32], k1)
         mod = int.from_bytes(e[:16], "big") % 3
         k = (hashlib.sha256, hashlib.sha384, hashlib.sha512)[mod](e).digest()
@@ -528,11 +529,16 @@ def make_user_value(file_key: bytes, id0: bytes, r: int) -> bytes:
     return x + b"\x00" * 16
 
 
-def make_v5_user_values(file_key: bytes, vsalt: bytes = b"VS345678",
-                        ksalt: bytes = b"KS345678", r: int = 6) -> tuple[bytes, bytes]:
+#: The fixed validation and key salts make_v5_user_values writes.
+V5_VALIDATION_SALT = b"VS345678"
+V5_KEY_SALT = b"KS345678"
+
+
+def make_v5_user_values(file_key: bytes, r: int = 6) -> tuple[bytes, bytes]:
     """R5/R6 /U and /UE entries for an empty user password: U carries the
     validation hash + both salts; UE is the file key encrypted under the
     key-salt intermediate (ISO 32000-2 §7.6.4.4)."""
+    vsalt, ksalt = V5_VALIDATION_SALT, V5_KEY_SALT
     if r == 6:
         uhash = _hash_2b(b"", vsalt)
         inter = _hash_2b(b"", ksalt)
@@ -543,10 +549,14 @@ def make_v5_user_values(file_key: bytes, vsalt: bytes = b"VS345678",
     return uhash + vsalt + ksalt, ue
 
 
-def get_encryption(payload: bytes, scan_cap: int = 10 * 1024 * 1024):
+#: get_encryption looks for the /Encrypt dictionary in this many leading bytes.
+ENCRYPT_SCAN_CAP = 10 * 1024 * 1024
+
+
+def get_encryption(payload: bytes):
     """Return None (unencrypted), or a PdfEncryption whose .ok says
     whether the empty user password opened the document."""
-    scan = payload[:scan_cap]
+    scan = payload[:ENCRYPT_SCAN_CAP]
     mref = None
     for mref in _ENCRYPT_REF_RE.finditer(scan):
         pass  # incremental updates: the LAST trailer wins

@@ -15,8 +15,8 @@ published Robots Exclusion Protocol semantics:
   length tie the least restrictive rule (allow) wins (§2.2.2).
 - an empty `Disallow:` value means no restriction; no matching rule
   means allowed; unparseable/absent robots.txt means allowed (§2.3.1.3
-  fail-open for 4xx). Pass `status_col`/`fail_closed_statuses` to
-  robots_filter to also encode §2.3.1.4: "unreachable" (5xx) hosts are
+  fail-open for 4xx). Pass `status_col` to robots_filter to also
+  encode §2.3.1.4: "unreachable" (5xx) hosts are
   treated as complete disallow (fail-closed) while 4xx stays fail-open.
 
 100 TB plan (robots_filter): parsing runs ONLY over the per-host robots
@@ -165,25 +165,18 @@ RULES_SCHEMA = StructType(
 )
 
 
-def robots_rules(
-    robots: DataFrame,
-    host_col: str = "host",
-    text_col: str = "robots_txt",
-    user_agent: str = "*",
-) -> DataFrame:
+def robots_rules(robots: DataFrame, user_agent: str = "*") -> DataFrame:
     """Parse a per-host robots.txt table into the exploded rule table
     (host, pattern, rule_regex, allow, pattern_len) for `user_agent`.
     Hosts whose file yields no rules for the agent emit no rows (=
     allowed). mapInPandas over the HOST table only."""
     import pandas as pd
 
-    hc, tc = host_col, text_col
-
     def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in RULES_SCHEMA.fields]
         for pdf in batches:
             rows = []
-            for host, txt in zip(pdf[hc], pdf[tc]):
+            for host, txt in zip(pdf["host"], pdf["robots_txt"]):
                 try:
                     rules = parse_robots(txt or "", user_agent)
                 except Exception:
@@ -203,15 +196,10 @@ def robots_rules(
                     )
             yield pd.DataFrame(rows, columns=cols)
 
-    return robots.select(hc, tc).mapInPandas(parse_batch, RULES_SCHEMA)
+    return robots.select("host", "robots_txt").mapInPandas(parse_batch, RULES_SCHEMA)
 
 
-def robots_crawl_delay(
-    robots: DataFrame,
-    host_col: str = "host",
-    text_col: str = "robots_txt",
-    user_agent: str = "*",
-) -> DataFrame:
+def robots_crawl_delay(robots: DataFrame, user_agent: str = "*") -> DataFrame:
     """Per-host Crawl-delay table (host, crawl_delay) for `user_agent`
     — the politeness input to fetch scheduling. Hosts requesting no
     delay emit no rows. Same host-bounded mapInPandas shape as
@@ -220,12 +208,10 @@ def robots_crawl_delay(
     rules a filter honors come from the SAME group by construction."""
     import pandas as pd
 
-    hc, tc = host_col, text_col
-
     def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for host, txt in zip(pdf[hc], pdf[tc]):
+            for host, txt in zip(pdf["host"], pdf["robots_txt"]):
                 try:
                     delay = crawl_delay_for(txt or "", user_agent)
                 except Exception:
@@ -234,7 +220,7 @@ def robots_crawl_delay(
                     rows.append({"host": host, "crawl_delay": float(delay)})
             yield pd.DataFrame(rows, columns=["host", "crawl_delay"])
 
-    return robots.select(hc, tc).mapInPandas(
+    return robots.select("host", "robots_txt").mapInPandas(
         parse_batch, "host string, crawl_delay double"
     )
 
@@ -244,7 +230,6 @@ def host_fetch_quota(
     delays: DataFrame,
     window_s: float = 3600.0,
     default_delay: float = 1.0,
-    url_col: str = "url",
     priority_col: str | None = None,
 ) -> DataFrame:
     """Politeness budget for a fetch frontier: a host whose Crawl-delay
@@ -274,10 +259,10 @@ def host_fetch_quota(
         F.lit(float(default_delay)),
     )
     slots = F.floor(F.lit(float(window_s)) / d).cast("long")
-    order = ([priority_col] if priority_col else []) + [url_col]
+    order = ([priority_col] if priority_col else []) + ["url"]
     w = Window.partitionBy("host").orderBy(*order)
     return (
-        urls.withColumn("host", _host_of(url_col))
+        urls.withColumn("host", _host_of("url"))
         .join(F.broadcast(delays), "host", "left")
         .withColumn("fetch_rank", F.row_number().over(w).cast("long"))
         .withColumn("scheduled", F.col("fetch_rank") <= slots)
@@ -300,8 +285,6 @@ ROBOTS_TABLE_SCHEMA = "host string, robots_txt string, status int"
 
 def robots_table_from_pages(
     pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
     status_col: str | None = "http_status",
     ts_col: str | None = "warc_ts",
 ) -> DataFrame:
@@ -330,8 +313,8 @@ def robots_table_from_pages(
     ts = F.col(ts_col) if ts_col is not None else F.lit(0)
     latest = (
         pages.select(
-            _host_of(url_col).alias("host"),
-            F.col(html_col).alias("__body"),
+            _host_of("url").alias("host"),
+            F.col("html").alias("__body"),
             st.alias("__status"),
             ts.alias("__ts"),
         )
@@ -361,30 +344,31 @@ def robots_table_from_pages(
     return latest.mapInPandas(decode_batch, ROBOTS_TABLE_SCHEMA)
 
 
+#: RFC 9309 §2.3.1.4: a robots.txt fetch that ended in one of these
+#: ("unreachable") means complete disallow for the host.
+FAIL_CLOSED_STATUSES = range(500, 600)
+
+
 def robots_filter(
     docs: DataFrame,
     robots: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
     user_agent: str = "*",
     status_col: str | None = None,
-    fail_closed_statuses=range(500, 600),
 ) -> DataFrame:
     """Per-document robots.txt compliance over the corpus: join the
     parsed rule table by host, evaluate the RFC longest-match decision,
-    and emit (id, url, robots_allowed, matched_pattern). Docs on hosts
+    and emit (doc_id, url, robots_allowed, matched_pattern). Docs on hosts
     with no rules (or no robots row) are allowed with matched_pattern
     NULL. All rule evaluation is JVM-side regexp_like; the only Python
     is the per-HOST parse.
 
     Fetch-status policy (RFC 9309 §2.3.1.2-2.3.1.4): pass `status_col`
     naming an HTTP status column on the robots table to encode it fully —
-    hosts whose fetch status is in `fail_closed_statuses` (default 5xx,
-    the RFC's "unreachable" class, which MUST be treated as complete
-    disallow) get robots_allowed=false for every document with
-    matched_pattern NULL; 4xx ("unavailable") and other non-2xx statuses
-    fail OPEN with the body ignored; rules parse only from 2xx (or
-    NULL-status) rows. Without `status_col` the r5 behavior is unchanged
+    hosts whose fetch status is in FAIL_CLOSED_STATUSES (5xx, the RFC's
+    "unreachable" class, which MUST be treated as complete disallow) get
+    robots_allowed=false for every document with matched_pattern NULL;
+    4xx ("unavailable") and other non-2xx statuses fail OPEN with the
+    body ignored; rules parse only from 2xx (or NULL-status) rows. Without `status_col` the r5 behavior is unchanged
     (fail-open everywhere, callers drop unreachable hosts upstream).
     The blocked-host set is one per-HOST row each — broadcastable."""
     from .analytics import _host_of
@@ -395,12 +379,13 @@ def robots_filter(
         st = F.col(status_col).cast("int")
         usable = robots.where(st.isNull() | ((st >= 200) & (st < 300)))
         blocked_hosts = (
-            robots.where(st.isin([int(s) for s in fail_closed_statuses]))
+            robots.where(st.isin(list(FAIL_CLOSED_STATUSES)))
             .select(F.col("host").alias("__bhost"))
             .distinct()
             .withColumn("__blocked", F.lit(True))
         )
     rules = robots_rules(usable, user_agent=user_agent)
+    id_col, url_col = "doc_id", "url"
     u = F.col(url_col)
     base = docs.select(
         F.col(id_col).cast("long").alias(id_col),

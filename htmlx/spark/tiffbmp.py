@@ -146,16 +146,16 @@ def _decode_rle8(data: bytes, w: int, h: int):
     raise ValueError("rle8_missing_end_of_bitmap")
 
 
-def encode_bmp(arr, palette=None, top_down=False, rle=False) -> bytes:
+def encode_bmp(arr, palette=None, rle=False) -> bytes:
     """Synthesis twin: (h, w) indices + palette(n,3), or (h, w, 3) RGB /
-    (h, w, 4) RGBA arrays; rle=True emits BI_RLE8 (requires a palette,
-    bottom-up) mixing encoded runs with absolute segments."""
+    (h, w, 4) RGBA arrays, stored bottom-up; rle=True emits BI_RLE8
+    (requires a palette) mixing encoded runs with absolute segments."""
     import numpy as np
 
     a = np.asarray(arr, np.uint8)
     if rle:
-        if palette is None or a.ndim != 2 or top_down:
-            raise ValueError("rle bmp takes (h, w) indices, bottom-up")
+        if palette is None or a.ndim != 2:
+            raise ValueError("rle bmp takes (h, w) indices")
         h, w = a.shape
         body = bytearray()
         for row in a[::-1]:  # stored bottom-up
@@ -189,7 +189,7 @@ def encode_bmp(arr, palette=None, top_down=False, rle=False) -> bytes:
             rows = a[:, :, [2, 1, 0]] if nchan == 3 else a[:, :, [2, 1, 0, 3]]
         stride = (w * bpp // 8 + 3) & ~3
         body = bytearray()
-        ordered = rows if top_down else rows[::-1]
+        ordered = rows[::-1]
         for y in range(h):
             line = ordered[y].tobytes()
             body += line + b"\x00" * (stride - len(line))
@@ -203,7 +203,7 @@ def encode_bmp(arr, palette=None, top_down=False, rle=False) -> bytes:
         pal_bytes = quads.tobytes()
     data_off = 14 + 40 + len(pal_bytes)
     info = struct.pack(
-        "<IiiHHIIiiII", 40, w, -h if top_down else h, 1, bpp, compression,
+        "<IiiHHIIiiII", 40, w, h, 1, bpp, compression,
         len(body), 2835, 2835, n_colors, 0,
     )
     hdr = b"BM" + struct.pack("<IHHI", data_off + len(body), 0, 0, data_off)
@@ -763,7 +763,7 @@ def decode_tiff(payload: bytes):
 
 def encode_tiff(
     arr, compression=1, predictor=1, byte_order="<", rows_per_strip=None,
-    colormap=None, photometric=None, planar=1, tile=None, bit_depth=8,
+    colormap=None, planar=1, tile=None, bit_depth=8,
 ) -> bytes:
     """Synthesis twin: little/big endian, strip- or tile-based, chunky or
     planar, 8- or 16-bit. `arr` is (h, w) gray / (h, w, c) / (h, w)
@@ -780,12 +780,10 @@ def encode_tiff(
         if a.ndim != 2:
             raise ValueError("palette tiff takes (h, w) indices")
         a = a[:, :, None]
-        photometric = 3
     elif a.ndim == 2:
         a = a[:, :, None]
     h, w, spp = a.shape
-    if photometric is None:
-        photometric = 1 if spp == 1 else 2
+    photometric = 3 if colormap is not None else 1 if spp == 1 else 2
     rows_per_strip = rows_per_strip or h
     if planar not in (1, 2):
         raise ValueError("planar must be 1 or 2")

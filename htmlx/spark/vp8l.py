@@ -510,7 +510,7 @@ def _inv_palette(px, true_w, h, width_bits, palette):
     return out
 
 
-def _finalize(px, w, h, packed_w=None):
+def _finalize(px, w, h):
     """ARGB int list -> (h, w, 4) uint8 RGBA, cropping bundled overshoot."""
     import numpy as np
 

@@ -418,7 +418,7 @@ def _page_row(path: str, rec: dict, record_types: tuple):
     )
 
 
-def _pages_gen(record_types: tuple):
+def _pages_gen():
     """mapInPandas worker over (path, content) archive rows."""
 
     def gen(batches):
@@ -426,7 +426,7 @@ def _pages_gen(record_types: tuple):
 
         for pdf in batches:
             for path_, content in zip(pdf["path"], pdf["content"]):
-                rows = list(iter_warc_pages(path_, bytes(content), record_types))
+                rows = list(iter_warc_pages(path_, bytes(content)))
                 if rows:
                     yield pd.DataFrame(
                         rows,
@@ -440,16 +440,14 @@ def _pages_gen(record_types: tuple):
     return gen
 
 
-def read_warc(
-    spark: SparkSession, path, record_types: tuple = ("response",)
-) -> DataFrame:
+def read_warc(spark: SparkSession, path) -> DataFrame:
     """Read .warc/.warc.gz archives under `path` (file, dir, glob, or a
     LIST of paths — e.g. the cdx_archive_pruning selection) into a pages
     DataFrame (WARC_PAGES_SCHEMA) of the HTTP *response* records — ready
     for run_extraction / latest_capture / url_filter.
     One archive = one binaryFile row = one Python task."""
     files = spark.read.format("binaryFile").load(path).select("path", "content")
-    return files.mapInPandas(_pages_gen(record_types), WARC_PAGES_SCHEMA)
+    return files.mapInPandas(_pages_gen(), WARC_PAGES_SCHEMA)
 
 
 _CDXJ_JSON_SCHEMA = (
@@ -671,21 +669,15 @@ def cdx_from_warc(
     )
 
 
-def write_cdxj(
-    cdx: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    compression: str | None = "gzip",
-) -> None:
+def write_cdxj(cdx: DataFrame, path: str) -> None:
     """Serialize a CDX frame to CDXJ text (`SURT ts14 {json}` — the
     cc-index line format read_cdx parses), entirely JVM-side. Numeric
     json fields are written as strings per the cc-index convention;
     a NULL surt/timestamp falls back to '-' / a zero ts14 so the
     3-field line shape never collapses (concat_ws skips NULLs).
-    Gzipped by default like the published cc-index shards (a ~200 GB
-    index should not be stored raw; .gz text is non-splittable PER
-    FILE, matching the ~300-shard layout read_cdx documents) —
-    compression=None writes plain text."""
+    Gzipped like the published cc-index shards (a ~200 GB index should
+    not be stored raw; .gz text is non-splittable PER FILE, matching the
+    ~300-shard layout read_cdx documents). Overwrites `path`."""
     from pyspark.sql import functions as F
 
     line = F.concat_ws(
@@ -706,15 +698,12 @@ def write_cdxj(
             )
         ),
     )
-    w = cdx.select(line.alias("value")).write.mode(mode)
-    if compression:
-        w = w.option("compression", compression)
-    w.text(path)
+    cdx.select(line.alias("value")).write.mode("overwrite").option(
+        "compression", "gzip"
+    ).text(path)
 
 
-def read_warc_ranges(
-    spark: SparkSession, ranges: DataFrame, record_types: tuple = ("response",)
-) -> DataFrame:
+def read_warc_ranges(spark: SparkSession, ranges: DataFrame) -> DataFrame:
     """Read ONLY the (filename, offset, length) spans of a
     cdx_record_pruning selection into a pages DataFrame
     (WARC_PAGES_SCHEMA) — the record-granularity endgame of CDX pruning:
@@ -755,7 +744,7 @@ def read_warc_ranges(
                     raws = iter((chunk,))
                 for raw in raws:
                     for rec in _iter_records(raw):
-                        row = _page_row(fn, rec, record_types)
+                        row = _page_row(fn, rec, ("response",))
                         if row is not None:
                             rows.append(row)
             if rows:
@@ -841,8 +830,6 @@ def write_wet(
     results: DataFrame,
     out_dir: str,
     n_files: int = 16,
-    url_col: str = "url",
-    text_col: str = "text",
     ts_col: str | None = None,
 ) -> DataFrame:
     """Publish extracted text as WET archives (.warc.wet.gz, one gzip
@@ -866,6 +853,7 @@ def write_wet(
 
     from pyspark.sql import functions as F
 
+    url_col, text_col = "url", "text"
     cols = [url_col, text_col] + ([ts_col] if ts_col else [])
     # Null url/text rows are dropped JVM-side BEFORE partitioning: a
     # null url has no fetch identity to publish under and a null text

@@ -901,9 +901,9 @@ def main():
     elif args.mode == "dedup":
         out = analytics.near_dup_components(docs, verified_pairs(docs, args))
     else:
-        # 1024: minhash_lsh_candidates' default bucket cap
         out = analytics.corpus_filter(
-            docs, {"production": (args.hash_basis, 1024)}, args.threshold
+            docs, {"production": (args.hash_basis, analytics.LSH_MAX_BUCKET)},
+            args.threshold,
         ).drop("variant")
 
     try:

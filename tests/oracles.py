@@ -3,12 +3,14 @@
 The oracles pin a production path by comparison: `parse_stdlib` the fast
 tokenizer, `bpe_apply_merges` the rank-dict BPE encoder, and
 `corpus_filter_frame` the merged corpus_filter variants frame. The
-encoders build inputs for live decoders (TGA, ICO, PNM, WBMP, Ogg Opus),
+encoders build inputs for live decoders (TGA, ICO, PNM, WBMP, Ogg Opus,
+top-down BMP, WhiteIsZero and tiled CCITT TIFF, unfiltered ObjStm),
 and `pdf_image_rows` runs extract_pdf_profile's per-image decode on every
 image of a payload. Nothing a shipped entry point runs reaches them.
 """
 
 import struct
+import zlib
 
 import numpy as np
 from pyspark.sql import Window
@@ -17,9 +19,11 @@ from pyspark.sql import functions as F
 from htmlx.core.dom import Node, _TreeBuilder
 from htmlx.spark import analytics
 from htmlx.spark.analytics import bpe_merge_step
+from htmlx.spark.ccitt import encode_ccitt_g3_1d, encode_ccitt_g4
 from htmlx.spark.multimodal import encode_ogg_vorbis
-from htmlx.spark.pdf import _image_feature_row, _iter_image_streams
+from htmlx.spark.pdf import _image_feature_row, _iter_image_streams, encode_object_stream
 from htmlx.spark.pdfcrypt import get_encryption
+from htmlx.spark.tiffbmp import encode_bmp, encode_tiff
 
 
 def parse_stdlib(html_text: str) -> Node:
@@ -289,3 +293,92 @@ def pdf_image_rows(payload: bytes) -> list:
         _image_feature_row(obj_dict, raw, crypto, onum, ogen)
         for onum, ogen, obj_dict, raw in _iter_image_streams(payload)
     ]
+
+
+def encode_bmp_top_down(arr) -> bytes:
+    """encode_bmp's RGB/RGBA BMP stored top-down: the rows in file order
+    and a negative biHeight (BITMAPINFOHEADER, byte 22)."""
+    b = bytearray(encode_bmp(np.asarray(arr)[::-1]))
+    (h,) = struct.unpack_from("<i", b, 22)
+    struct.pack_into("<i", b, 22, -h)
+    return bytes(b)
+
+
+def encode_tiff_white_is_zero(gray) -> bytes:
+    """encode_tiff's gray TIFF with PhotometricInterpretation 0
+    (WhiteIsZero) patched into its inline tag-262 entry."""
+    t = bytearray(encode_tiff(gray))
+    (n,) = struct.unpack_from("<H", t, 8)  # the one IFD, at offset 8
+    for off in range(10, 10 + 12 * n, 12):
+        if struct.unpack_from("<H", t, off)[0] == 262:
+            struct.pack_into("<H", t, off + 8, 0)
+            return bytes(t)
+    raise ValueError("no PhotometricInterpretation entry")
+
+
+def encode_tiff_ccitt_tiled(ink, compression: int, tile) -> bytes:
+    """encode_tiff_ccitt's TIFF in a TILED layout, tile=(tw, th): each tile
+    independently coded, edge tiles zero-padded to the grid (TIFF 6.0
+    tile rule)."""
+    a = np.asarray(ink, np.uint8)
+    rows, cols = a.shape
+    code = {
+        4: encode_ccitt_g4,
+        3: lambda b: encode_ccitt_g3_1d(b, with_eol=True),
+        2: lambda b: encode_ccitt_g3_1d(b, byte_align=True),
+    }[compression]
+    tw, th = tile
+    blocks = []
+    for y0 in range(0, rows, th):
+        for x0 in range(0, cols, tw):
+            block = np.zeros((th, tw), np.uint8)
+            sub = a[y0 : y0 + th, x0 : x0 + tw]
+            block[: sub.shape[0], : sub.shape[1]] = sub
+            blocks.append(code(block))
+    entries = [
+        (256, 3, 1, cols), (257, 3, 1, rows), (258, 3, 1, 1),
+        (259, 3, 1, compression), (262, 3, 1, 0), (277, 3, 1, 1),
+        (322, 3, 1, tw), (323, 3, 1, th),
+        (324, 4, len(blocks), 0),  # tile offsets (patched)
+        (325, 4, len(blocks), 0),  # tile byte counts (patched)
+    ]
+    n = len(entries)
+    ifd_off = 8
+    arrays_off = ifd_off + 2 + 12 * n + 4
+    nb = len(blocks)
+    offsets_off = arrays_off
+    counts_off = arrays_off + 4 * nb
+    data_off = counts_off + 4 * nb
+    offs, pos = [], data_off
+    for b in blocks:
+        offs.append(pos)
+        pos += len(b)
+    out = bytearray(b"II*\x00" + struct.pack("<I", ifd_off))
+    out += struct.pack("<H", n)
+    for tag, typ, cnt, val in entries:
+        if tag == 324:
+            val = offs[0] if nb == 1 else offsets_off
+        elif tag == 325:
+            val = len(blocks[0]) if nb == 1 else counts_off
+        out += struct.pack("<HHII", tag, typ, cnt, val)
+    out += struct.pack("<I", 0)
+    if nb > 1:
+        for o in offs:
+            out += struct.pack("<I", o)
+        for b in blocks:
+            out += struct.pack("<I", len(b))
+    else:
+        # single tile: values inline in the IFD entries; arrays_off
+        # region is unused but data must still start at data_off
+        out += b"\x00" * (data_off - len(out))
+    for b in blocks:
+        out += b
+    return bytes(out)
+
+
+def encode_object_stream_plain(objects) -> bytes:
+    """encode_object_stream's ObjStm with its body stored unfiltered."""
+    head, rest = encode_object_stream(objects).split(b"\nstream\n", 1)
+    body = zlib.decompress(rest[: -len(b"\nendstream")])
+    head = head.replace(b" /Filter /FlateDecode", b"").rsplit(b" /Length ", 1)[0]
+    return head + b" /Length %d >>\nstream\n" % len(body) + body + b"\nendstream"

@@ -60,7 +60,7 @@ def test_embedding_near_dup_blocked_is_exact(spark, emb):
 
     got = {
         (r.vec_a, r.vec_b)
-        for r in embedding_near_dup(emb, threshold=0.4, num_blocks=5).collect()
+        for r in embedding_near_dup(emb, threshold=0.4).collect()
     }
     norm = _normalized(emb)
     naive = (

@@ -13,6 +13,7 @@ from htmlx.spark.ccitt import (
     encode_ccitt_g4,
     encode_tiff_ccitt,
 )
+from tests.oracles import encode_tiff_ccitt_tiled
 
 
 def _images(rng):
@@ -312,7 +313,7 @@ def test_tiled_ccitt_tiff_all_compressions():
         ink = (rng.random((h, w)) < 0.3).astype(np.uint8)
         for comp in (2, 3, 4):
             for tile in ((16, 8), (8, 8)):
-                px = decode_tiff(encode_tiff_ccitt(ink, comp, tile=tile))
+                px = decode_tiff(encode_tiff_ccitt_tiled(ink, comp, tile))
                 assert (px[:, :, 0] == 255 * (1 - ink)).all()
 
 
@@ -322,7 +323,7 @@ def test_tiled_tiff_fuzz_declared_degradations_only():
     from htmlx.spark.tiffbmp import decode_tiff
 
     img = (np.add.outer(np.arange(20), np.arange(50)) % 7 < 3).astype(np.uint8)
-    seed = encode_tiff_ccitt(img, 4, tile=(16, 8))
+    seed = encode_tiff_ccitt_tiled(img, 4, (16, 8))
     rng = random.Random(17)
     for _ in range(250):
         b = bytearray(seed)
@@ -344,7 +345,7 @@ def test_tiled_ccitt_tile_dim_bomb_capped():
     from htmlx.spark.tiffbmp import decode_tiff
 
     ink = np.zeros((4, 10), np.uint8)
-    t = bytearray(encode_tiff_ccitt(ink, 4, tile=(8, 8)))
+    t = bytearray(encode_tiff_ccitt_tiled(ink, 4, (8, 8)))
     for tag in (322, 323):  # TileWidth / TileLength -> 30000
         i = t.find(struct.pack("<HHI", tag, 3, 1))
         assert i > 0

@@ -4,6 +4,7 @@ with score(node) / should_remove(node) passed via Config."""
 
 from htmlx.core.dom import ELEMENT
 from htmlx.core.extract import Config, Extractor
+from htmlx.core.scorer import DefaultScorer
 
 
 class PreferSecondDiv:
@@ -36,3 +37,27 @@ def test_custom_scorer_should_remove_via_clean():
     html = b'<article><p>Real body text for this page.</p><div class="sidebar">junk</div></article>'
     r = Extractor().extract(html)
     assert "junk" not in r.text
+
+
+class _SidebarScorer:
+    """Scores only the sidebar div."""
+
+    def score(self, node):
+        return 1000 if node.type == ELEMENT and node.attr("class") == "sidebar" else 0
+
+
+class _SidebarDefaultScorer(DefaultScorer):
+    score = _SidebarScorer.score
+
+
+def test_default_scorer_subclass_score_override_drives_selection():
+    """A DefaultScorer subclass that overrides score() selects what its
+    score() says, as the same scorer written as a plain class does; only a
+    subclass that keeps DefaultScorer.score takes the bottom-up pass."""
+    html = (
+        b"<article><p>The real article body, long enough to win on its own "
+        b"merits.</p></article><div class=\"sidebar\">junk sidebar words</div>"
+    )
+    plain = Extractor(Config(scorer=_SidebarScorer())).extract(html).text
+    sub = Extractor(Config(scorer=_SidebarDefaultScorer())).extract(html).text
+    assert plain == sub == "junk sidebar words"

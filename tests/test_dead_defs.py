@@ -1,4 +1,5 @@
-"""Static lint: a shipped entry point reaches every top-level def in htmlx/.
+"""Static lints: a shipped entry point reaches every top-level def in htmlx/,
+and some call sets every defaulted parameter of one.
 
 A top-level def here is a def, a class, or a column-0 `NAME = ...` /
 `NAME: T = ...` assignment, whose body is its right-hand side. Dunder
@@ -19,15 +20,30 @@ name lists in perfbench.spans). Comments, docstrings and a def's own name do
 not count. The scan is a small string/comment-aware tokenizer: `ast.parse`
 of the whole repo alone takes about a second, and this test needs no Spark
 and must stay well under that.
+
+The parameter rule covers every defaulted parameter (positional or
+keyword-only) of a top-level htmlx/ def. It passes when some call in htmlx/,
+jobs/, perfbench/, tools/, tests/, bench.py or __spark_entry__.py binds it,
+by position or by keyword; a call counts when its callee's Name or Attribute
+name equals the def's name, so a recursive call counts and two defs of one
+name share their call sites. A def passes as a whole when code outside tests/
+calls it with `*args`/`**kwargs` or uses its name as a value (a callback, a
+registry entry, a `partial`): the lint cannot see what those bind. A test that
+hands a def to a harness names no parameter, so it keeps none alive; a test
+seam is a parameter a test passes by name. The rule reads calls with `ast`,
+but parsing the whole repo takes about a second, so it parses only the
+top-level statements whose text names a def with a default.
 """
 
+import ast
 import re
-from collections import Counter
+from collections import Counter, defaultdict
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 ROOT_DIRS = ("jobs", "perfbench", "tools")
 ROOT_FILES = ("bench.py", "__spark_entry__.py")
+CALLER_DIRS = ("htmlx", *ROOT_DIRS, "tests")
 
 _TOKEN = re.compile(
     r"(?P<prefix>[rRbBuUfF]{0,2})(?P<quote>'''|\"\"\"|'|\")"
@@ -119,10 +135,117 @@ def _unreached(root: Path) -> list:
     return [f"{rel} {name}" for rel, name in checked if name not in reached]
 
 
+# A top-level def or class line, with the decorators above it: the rule cuts
+# a file into top-level statements there.
+_CHUNK = re.compile(r"^(?:@.*\n)*(?:async def |def |class )", re.M)
+# A def's signature; a superset test for "has a default" (a header this does
+# not match still counts as having one).
+_HEADER = re.compile(r"^(?:async )?def (\w+)\((.*?)\)\s*(?:->[^:\n]*)?:", re.M | re.S)
+
+
+def _parse_naming(src: str, names: re.Pattern) -> list:
+    """(line offset, module) for each top-level statement of src that names
+    one of `names`. A cut inside a string or bracket leaves a statement that
+    does not parse; then the whole file is parsed instead."""
+    cuts = sorted({0, len(src), *(m.start() for m in _CHUNK.finditer(src))})
+    try:
+        return [
+            (src.count("\n", 0, a), ast.parse(src[a:b]))
+            for a, b in zip(cuts, cuts[1:])
+            if names.search(src, a, b)
+        ]
+    except SyntaxError:
+        return [(0, ast.parse(src))]
+
+
+def _unbound_params(root: Path) -> list:
+    sources = {}
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if rel.parts[0] in CALLER_DIRS or str(rel) in ROOT_FILES:
+            sources[rel] = path.read_text(encoding="utf-8")
+    maybe = {
+        m[1]
+        for rel, src in sources.items()
+        if rel.parts[0] == "htmlx"
+        for m in _HEADER.finditer(src)
+        if "=" in m[2]
+    } | {  # headers _HEADER cannot read
+        m[1]
+        for rel, src in sources.items()
+        if rel.parts[0] == "htmlx"
+        for m in re.finditer(r"^(?:async )?def (\w+)", src, re.M)
+        if not _HEADER.match(src, m.start())
+    }
+    if not maybe:
+        return []
+    names = re.compile(r"\b(?:%s)\b" % "|".join(sorted(maybe)))
+    defs, keywords, positional, whole = [], defaultdict(set), Counter(), set()
+    for rel, src in sources.items():
+        for offset, tree in _parse_naming(src, names):
+            if rel.parts[0] == "htmlx":
+                defs += [
+                    (rel, offset + node.lineno, node)
+                    for node in tree.body
+                    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                ]
+            callees = set()
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Call):
+                    callee = node.func
+                    name = getattr(callee, "id", None) or getattr(callee, "attr", None)
+                    if name is None:
+                        continue
+                    callees.add(callee)
+                    positional[name] = max(positional[name], len(node.args))
+                    keywords[name].update(k.arg for k in node.keywords)
+                    if rel.parts[0] != "tests" and (
+                        any(k.arg is None for k in node.keywords)
+                        or any(isinstance(a, ast.Starred) for a in node.args)
+                    ):
+                        whole.add(name)
+                elif (
+                    rel.parts[0] != "tests"
+                    and isinstance(node, (ast.Name, ast.Attribute))
+                    and isinstance(node.ctx, ast.Load)
+                    and node not in callees
+                ):
+                    whole.add(getattr(node, "id", None) or node.attr)
+    unbound = []
+    for rel, line, node in defs:
+        if node.name in whole:
+            continue
+        args = node.args
+        ordered = args.posonlyargs + args.args
+        defaulted = [
+            (i, a.arg) for i, a in enumerate(ordered)
+            if i >= len(ordered) - len(args.defaults)
+        ] + [
+            (None, a.arg)
+            for a, d in zip(args.kwonlyargs, args.kw_defaults)
+            if d is not None
+        ]
+        unbound += [
+            f"{rel}:{line} {node.name}({param}=)"
+            for i, param in defaulted
+            if param not in keywords[node.name]
+            and (i is None or i >= positional[node.name])
+        ]
+    return unbound
+
+
 def test_no_unreferenced_top_level_defs():
     dead = _unreached(ROOT)
     assert dead == [], (
         f"{len(dead)} top-level htmlx/ defs no root reaches:\n" + "\n".join(dead)
+    )
+
+
+def test_every_defaulted_parameter_is_bound():
+    unbound = _unbound_params(ROOT)
+    assert unbound == [], (
+        f"{len(unbound)} defaulted parameters of top-level htmlx/ defs no call "
+        "sets; make each a constant:\n" + "\n".join(unbound)
     )
 
 
@@ -176,3 +299,37 @@ def test_reachability_is_transitive_and_ignores_tests(tmp_path):
         "htmlx/a.py UNUSED_TABLE",
         "htmlx/b.py only_in_table",
     ]
+
+
+def test_parameter_rule_reports_only_the_unbound_parameter(tmp_path):
+    files = {
+        "jobs/run.py": (
+            "from htmlx.a import by_pos, by_kw, spread, recurse\n"
+            "by_pos(1, 2)\n"
+            "by_kw(1, k=2)\n"
+            "spread(**{'x': 1})\n"
+            "recurse(5)\n"
+            "REGISTRY = {'cb': as_callback}\n"
+        ),
+        "htmlx/a.py": (
+            "def by_pos(a, b=1):\n    return a + b\n"
+            "def by_kw(a, *, k=1):\n    return a + k\n"
+            "def seam(a, counter=None):\n    return a\n"
+            "def spread(x=1, y=2):\n    return x + y\n"
+            "def as_callback(v, scale=2):\n    return v * scale\n"
+            "def recurse(n, depth=0):\n"
+            "    return depth if n == 0 else recurse(n - 1, depth=depth + 1)\n"
+            "def knob(a, limit=10, name='x'):\n    return a[:limit] + name\n"
+            "knob('abc', name='y')\n"
+        ),
+        "tests/test_a.py": (
+            "from htmlx.a import seam, knob\n"
+            "seam(1, counter=object())\n"
+            "knob(**{'limit': 3})\n"
+        ),
+        "tools/use.py": "from htmlx.a import knob\nknob('z')\n",
+    }
+    for rel, src in files.items():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text(src)
+    assert _unbound_params(tmp_path) == ["htmlx/a.py:13 knob(limit=)"]

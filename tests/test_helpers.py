@@ -8,7 +8,7 @@ import pytest
 
 from htmlx.core.dom import parse
 from htmlx.core.entities import replace_html_entities
-from htmlx.core.scorer import collect_content_metrics, link_density_from_metrics
+from htmlx.core.scorer import collect_content_metrics
 from htmlx.core.textnorm import clean_text, get_text_content
 from htmlx.core.urlutil import is_external_url, is_valid_url
 
@@ -158,6 +158,11 @@ def _metrics(html):
     return collect_content_metrics(parse(html))
 
 
+def _link_density(m):
+    """GetLinkDensity (scoring.go:114-119) over the scorer's metrics."""
+    return m.link_text_length / m.text_length if m.text_length else 0.0
+
+
 def test_get_text_length():
     assert _metrics("<p>Hello</p>").text_length == 5
     assert _metrics("<div><p>Hello</p><p>World</p></div>").text_length == 10
@@ -165,7 +170,7 @@ def test_get_text_length():
 
 
 def test_get_link_density():
-    assert link_density_from_metrics(_metrics("<p>Hello World</p>")) == 0.0
-    assert abs(link_density_from_metrics(_metrics('<p><a href="test.html">Hello World</a></p>')) - 1.0) < 0.1
-    assert abs(link_density_from_metrics(_metrics('<p>Hello <a href="test.html">World</a></p>')) - 0.5) < 0.1
-    assert link_density_from_metrics(_metrics("<p></p>")) == 0.0
+    assert _link_density(_metrics("<p>Hello World</p>")) == 0.0
+    assert abs(_link_density(_metrics('<p><a href="test.html">Hello World</a></p>')) - 1.0) < 0.1
+    assert abs(_link_density(_metrics('<p>Hello <a href="test.html">World</a></p>')) - 0.5) < 0.1
+    assert _link_density(_metrics("<p></p>")) == 0.0

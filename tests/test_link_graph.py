@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from htmlx.spark.analytics import host_rank, link_graph
 from htmlx.spark.job import Config, run_extraction
 from htmlx.spark.session import get_spark
+from tests.test_host_rank import _reference
 
 
 @pytest.fixture(scope="module")
@@ -51,9 +52,6 @@ def test_edges_weights_relative_and_nofollow(spark):
     cross = {(r["src_host"], r["dst_host"]): r["weight"]
              for r in link_graph(df, cross_host_only=True).collect()}
     assert cross == {("a.com", "b.com"): 3}
-    withnf = {(r["src_host"], r["dst_host"]): r["weight"]
-              for r in link_graph(df, respect_nofollow=False).collect()}
-    assert withnf[("a.com", "c.com")] == 1
 
 
 def test_extract_to_pagerank_chain(spark):
@@ -88,40 +86,39 @@ def test_extract_to_pagerank_chain(spark):
 
 def test_host_rank_checkpoint_determinism(spark):
     """VERDICT r6 item 3: host_rank honors its docstring — long runs
-    localCheckpoint the rank state every checkpoint_every rounds so plan
-    depth stays bounded, and checkpointing changes no values (it only
-    materializes the identical one-row-per-host state)."""
+    localCheckpoint the rank state every HOST_RANK_CHECKPOINT_EVERY (4)
+    rounds so plan depth stays bounded, and checkpointing changes no
+    values (it only materializes the identical one-row-per-host state)."""
+    rows = [("a.com", "b.com", 3), ("b.com", "c.com", 1), ("c.com", "a.com", 2),
+            ("hub.com", "a.com", 5), ("hub.com", "b.com", 1)]
     edges = spark.createDataFrame(
-        [("a.com", "b.com", 3), ("b.com", "c.com", 1), ("c.com", "a.com", 2),
-         ("hub.com", "a.com", 5), ("hub.com", "b.com", 1)],
-        "src_host string, dst_host string, weight long",
+        rows, "src_host string, dst_host string, weight long"
     )
-    # determinism: checkpointed vs unrolled at the same iteration count
-    base = {r["host"]: r["rank"]
-            for r in host_rank(edges, iters=6, weight_col="weight",
-                               checkpoint_every=0).collect()}
+    # determinism: 6 rounds checkpoint once (after round 4) and still
+    # equal the unrolled pure-Python replay
+    want = _reference(rows, 0.85, 6)
     ck = {r["host"]: r["rank"]
-          for r in host_rank(edges, iters=6, weight_col="weight",
-                             checkpoint_every=2).collect()}
-    assert base.keys() == ck.keys()
-    for h in base:
-        assert abs(base[h] - ck[h]) < 1e-12, (h, base[h], ck[h])
+          for r in host_rank(edges, iters=6, weight_col="weight").collect()}
+    assert want.keys() == ck.keys()
+    for h in want:
+        assert abs(want[h] - ck[h]) < 1e-12, (h, want[h], ck[h])
 
     # bounded plan depth: pr is consumed twice per iteration (inflow
     # join + dangling-mass agg), so the unrolled tree DOUBLES per round
-    # — 2^iters, not linear (measured: checkpoint_every=8 left a
-    # 6-round tail whose plan string was 486k chars, 5x an 8-round
-    # unrolled plan). With the default checkpoint_every=4 a 30-round
-    # run's final segment is <= 2^4 subtree copies and must print
-    # SMALLER than an 8-round unrolled plan (2^8) — plan STRING LENGTH
-    # is the structural metric; wall-clock is host-noise-dominated here
+    # — 2^iters, not linear (measured: checkpointing every 8 rounds left
+    # a 6-round tail whose plan string was 486k chars, 5x an 8-round
+    # unrolled plan). A 30-round run's final segment is 2 rounds past
+    # its last checkpoint and must print SMALLER than the 4-round
+    # unrolled plan (2^4, the longest segment host_rank leaves) — plan
+    # STRING LENGTH is the structural metric; wall-clock is
+    # host-noise-dominated here
     pr30 = host_rank(edges, iters=30, weight_col="weight")
     plan30 = pr30._jdf.queryExecution().executedPlan().toString()
-    plan8 = (
-        host_rank(edges, iters=8, weight_col="weight", checkpoint_every=0)
+    plan4 = (
+        host_rank(edges, iters=4, weight_col="weight")
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert len(plan30) < len(plan8), (len(plan30), len(plan8))
+    assert len(plan30) < len(plan4), (len(plan30), len(plan4))
     # and the run itself completes with sane mass (sum of ranks ~ 1)
     total = sum(r["rank"] for r in pr30.collect())
     assert abs(total - 1.0) < 1e-9, total
@@ -136,16 +133,15 @@ def test_host_rank_reliable_checkpoint_with_dir(spark, tmp_path):
         [("a.com", "b.com", 3), ("b.com", "c.com", 1), ("c.com", "a.com", 2)],
         "src_host string, dst_host string, weight long",
     )
+    # without a checkpoint dir: the localCheckpoint path
     base = {r["host"]: r["rank"]
-            for r in host_rank(edges, iters=6, weight_col="weight",
-                               checkpoint_every=0).collect()}
+            for r in host_rank(edges, iters=6, weight_col="weight").collect()}
     sc = spark.sparkContext
     assert not sc._jsc.sc().checkpointDir().isDefined()
     sc.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
         ck = {r["host"]: r["rank"]
-              for r in host_rank(edges, iters=6, weight_col="weight",
-                                 checkpoint_every=2).collect()}
+              for r in host_rank(edges, iters=6, weight_col="weight").collect()}
         # reliable checkpoint actually wrote to the directory
         import os
         assert any(os.scandir(str(tmp_path / "ckpt")))

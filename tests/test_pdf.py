@@ -443,10 +443,12 @@ def test_pdf_profile_one_pass_merges_structural_and_image():
 
 def _objstm_pdf(packed, compress=True, extra=b""):
     from htmlx.spark.pdf import encode_object_stream
+    from tests.oracles import encode_object_stream_plain
 
+    encode = encode_object_stream if compress else encode_object_stream_plain
     return (
         b"%PDF-1.5\n1 0 obj\n<< /Type /Catalog >>\nendobj\n"
-        + b"7 0 obj\n" + encode_object_stream(packed, compress=compress)
+        + b"7 0 obj\n" + encode(packed)
         + b"\nendobj\n" + extra + b"%%EOF\n"
     )
 

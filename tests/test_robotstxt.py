@@ -185,11 +185,6 @@ def test_fail_closed_statuses(spark):
     assert out[4] == (True, None)    # fail-open, body ignored
     assert out[5] == (False, "/b")   # NULL status parses normally
     assert out[6] == (True, None)
-    # custom fail-closed set: treat 404 as closed too
-    out2 = {r["doc_id"]: r["robots_allowed"]
-            for r in robots_filter(docs, robots, status_col="status",
-                                   fail_closed_statuses=[404, 503]).collect()}
-    assert out2[4] is False
     # without status_col the r5 fail-open behavior is unchanged
     out3 = {r["doc_id"]: r["robots_allowed"]
             for r in robots_filter(docs, robots.drop("status")).collect()}

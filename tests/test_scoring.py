@@ -3,11 +3,14 @@
 import pytest
 
 from htmlx.core.dom import ELEMENT, parse, walk_nodes
+from htmlx.core.encoding import detect_and_convert_to_utf8
 from htmlx.core.scorer import (
     DefaultScorer,
     get_default_scorer,
+    score_all_nodes,
     should_remove_element,
 )
+from htmlx.fixtures import corpus
 
 
 def find_target(html: str, tags=("article", "main", "div")):
@@ -121,3 +124,21 @@ def test_score_exact_values():
     # empty div: tag 50, textLength 0 -> density 0 -> low-density x0.7
     node = find_target("<div></div>")
     assert get_default_scorer().score(node) == int((50 - 300) * 0.7)
+
+
+def test_bottom_up_pass_equals_per_node_score():
+    """score_all_nodes (one O(n) pass) returns exactly the positive
+    per-node DefaultScorer.score values, on every fixture corpus page."""
+    scorer = get_default_scorer()
+    for name, html in corpus():
+        doc = parse(detect_and_convert_to_utf8(html, "")[0])
+        want = {}
+
+        def visit(n):
+            s = scorer.score(n)
+            if s > 0:
+                want[n] = s
+            return True
+
+        walk_nodes(doc, visit)
+        assert score_all_nodes(doc) == want, name

@@ -53,11 +53,6 @@ def test_urlset_entries_parse_unescape_and_same_host(spark):
         ("https://a.com/p/2?x=1&y=2", None, "url"),
     ]
     assert {r["host"] for r in df.collect()} == {"a.com"}
-    cross = analytics.sitemap_entries(
-        _pages(spark, [("https://a.com/sitemap.xml", URLSET)]),
-        same_host_only=False,
-    )
-    assert cross.count() == 3
 
 
 def test_sitemapindex_entries(spark):
@@ -84,19 +79,20 @@ def test_non_sitemap_pages_yield_nothing(spark):
     assert df.count() == 0
 
 
-def test_entry_cap_and_loc_length_bound(spark):
+def test_entry_cap_and_loc_length_bound(spark, monkeypatch):
     many = "<urlset>" + "".join(
         f"<url><loc>https://a.com/p/{i}</loc></url>" for i in range(10)
     ) + f"<url><loc>https://a.com/{'q' * 2100}</loc></url></urlset>"
-    df = analytics.sitemap_entries(
-        _pages(spark, [("https://a.com/s.xml", many)]), max_entries=7
-    )
-    locs = {r["loc"] for r in df.collect()}
-    # spec cap: only the first 7 entries; the >=2048-char loc never
-    # survives even uncapped
-    assert locs == {f"https://a.com/p/{i}" for i in range(7)}
+    # at the spec's cap all 10 short locs stay; the >=2048-char loc never
+    # survives
     unc = analytics.sitemap_entries(_pages(spark, [("https://a.com/s.xml", many)]))
     assert unc.count() == 10
+    # the entry cap, lowered from the spec's 50,000 so 11 entries exceed
+    # it: only the first 7 entries are read
+    monkeypatch.setattr(analytics, "SITEMAP_MAX_ENTRIES", 7)
+    df = analytics.sitemap_entries(_pages(spark, [("https://a.com/s.xml", many)]))
+    locs = {r["loc"] for r in df.collect()}
+    assert locs == {f"https://a.com/p/{i}" for i in range(7)}
 
 
 def test_sitemap_urls_from_robots(spark):
@@ -259,8 +255,8 @@ def test_frontier_cdx_delta_and_politeness_windows(spark, tmp_path, monkeypatch)
                ("https://a.com/c/5", "E55"),          # changed
                ("https://a.com/c/3", "CCC")])         # added
     op, np_ = str(tmp_path / "cdx_old"), str(tmp_path / "cdx_new")
-    write_cdxj(old, op, compression=None)
-    write_cdxj(new, np_, compression=None)
+    write_cdxj(old, op)
+    write_cdxj(new, np_)
 
     out = str(tmp_path / "plan")
     monkeypatch.setattr(sys, "argv", [

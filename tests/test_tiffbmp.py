@@ -12,15 +12,16 @@ from htmlx.spark.tiffbmp import (
     encode_tiff,
     tiff_dimensions,
 )
+from tests.oracles import encode_bmp_top_down, encode_tiff_white_is_zero
 
 
 def test_bmp_roundtrips_and_orientation():
     rnd = np.random.RandomState(4)
     for shape in ((7, 5, 3), (4, 9, 4), (1, 1, 3)):
         a = rnd.randint(0, 256, shape).astype(np.uint8)
-        for td in (False, True):
-            got = decode_bmp(encode_bmp(a, top_down=td))
-            assert got.shape == shape and (got == a).all(), (shape, td)
+        for encode in (encode_bmp, encode_bmp_top_down):
+            got = decode_bmp(encode(a))
+            assert got.shape == shape and (got == a).all(), (shape, encode)
     # row padding: widths not multiples of 4
     a = rnd.randint(0, 256, (3, 3, 3)).astype(np.uint8)
     assert (decode_bmp(encode_bmp(a)) == a).all()
@@ -78,7 +79,7 @@ def test_tiff_palette_and_polarity():
     t = encode_tiff(idx, colormap=pal, compression=32773)
     assert (decode_tiff(t) == pal[idx]).all()
     g = rnd.randint(0, 256, (5, 5)).astype(np.uint8)
-    t = encode_tiff(255 - g, photometric=0)  # WhiteIsZero
+    t = encode_tiff_white_is_zero(255 - g)
     assert (decode_tiff(t)[:, :, 0] == g).all()
 
 
