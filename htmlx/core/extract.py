@@ -193,9 +193,6 @@ class Extractor:
         result.processing_time_ms = result.processing_time_us // 1000
         return result
 
-    def extract_text(self, html_bytes: bytes) -> str:
-        return self.extract(html_bytes).text
-
     # -- pipeline ----------------------------------------------------------
     def _extract_core(self, html_bytes: bytes, start: float, audit) -> Result:
         """Stage sequence with cooperative deadline checks between stages,
@@ -565,9 +562,6 @@ class Extractor:
 
 
 def extract(html_bytes: bytes, config: Config | None = None) -> Result:
-    """Package-level convenience (extract.go:128-136)."""
+    """The reference's package-level API (extract.go:128-136); the golden,
+    boundary and property tests drive the engine through it."""
     return Extractor(config).extract(html_bytes)
-
-
-def extract_text(html_bytes: bytes) -> str:
-    return Extractor().extract_text(html_bytes)

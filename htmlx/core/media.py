@@ -58,7 +58,6 @@ AUDIO_REGEX = re.compile(
     r"(?i)https?://[^\s<>\"',;)}\]]{1,500}\.(?:mp3|wav|ogg|m4a|aac|flac|wma|opus|oga)"
 )
 
-MAX_HTML_FOR_REGEX = 1000000  # config.go:50 (output-affecting)
 MAX_REGEX_MATCHES = 1000  # config.go:54 (output-affecting)
 
 _ALL_MEDIA_SIGNATURES = tuple(

@@ -13,9 +13,6 @@ from .elements import is_non_content_element
 from .textnorm import BOUNDARY_STANDARD, has_word_boundary, normalize_nbsp
 
 # constants.go:9-39
-MAX_URL_LENGTH = 2000
-MAX_DATA_URI_LENGTH = 100000
-
 _STRONG_POS = 400
 _MEDIUM_POS = 200
 _STRONG_NEG = -400
@@ -103,7 +100,6 @@ class ContentMetrics:
 
 
 _HEADINGS = frozenset(("h1", "h2", "h3", "h4", "h5", "h6"))
-_WS = " \t\n\r"
 
 
 def collect_content_metrics(node: Node) -> ContentMetrics:

@@ -135,25 +135,6 @@ def pattern_to_regex(pattern: str) -> str:
     return "^" + out + ("$" if anchored else "")
 
 
-def pattern_matches(pattern: str, path: str) -> bool:
-    """Pure-Python matcher (tests + small-scale use)."""
-    return re.match(pattern_to_regex(pattern), path) is not None
-
-
-def robots_allowed(rules: list[tuple[str, bool]], path: str) -> bool:
-    """Longest-match decision for one path: most OCTETS wins (RFC 9309
-    §2.2.2 defines precedence in octets, so multibyte UTF-8 patterns
-    count their encoded length, not their character count), ties go to
-    allow, no match means allowed."""
-    best = None  # (octets, allow)
-    for pattern, allow in rules:
-        if pattern_matches(pattern, path):
-            key = (len(pattern.encode("utf-8")), allow)
-            if best is None or key > best:
-                best = key
-    return True if best is None else best[1]
-
-
 RULES_SCHEMA = StructType(
     [
         StructField("host", StringType()),

@@ -1,14 +1,16 @@
 """Reference oracles and fixture encoders that only tests use.
 
 The oracles pin a production path by comparison: `parse_stdlib` the fast
-tokenizer, `bpe_apply_merges` the rank-dict BPE encoder, and
-`corpus_filter_frame` the merged corpus_filter variants frame. The
+tokenizer, `bpe_apply_merges` the rank-dict BPE encoder,
+`corpus_filter_frame` the merged corpus_filter variants frame, and
+`robots_allowed` the Spark robots.txt filter row by row. The
 encoders build inputs for live decoders (TGA, ICO, PNM, WBMP, Ogg Opus,
 top-down BMP, WhiteIsZero and tiled CCITT TIFF, unfiltered ObjStm),
 and `pdf_image_rows` runs extract_pdf_profile's per-image decode on every
 image of a payload. Nothing a shipped entry point runs reaches them.
 """
 
+import re
 import struct
 import zlib
 
@@ -23,6 +25,7 @@ from htmlx.spark.ccitt import encode_ccitt_g3_1d, encode_ccitt_g4
 from htmlx.spark.multimodal import encode_ogg_vorbis
 from htmlx.spark.pdf import _image_feature_row, _iter_image_streams, encode_object_stream
 from htmlx.spark.pdfcrypt import get_encryption
+from htmlx.spark.robotstxt import pattern_to_regex
 from htmlx.spark.tiffbmp import encode_bmp, encode_tiff
 
 
@@ -37,6 +40,25 @@ def parse_stdlib(html_text: str) -> Node:
         pass
     tb._ensure_body()
     return tb.doc
+
+
+def pattern_matches(pattern: str, path: str) -> bool:
+    """One robots.txt pattern against one path, in Python."""
+    return re.match(pattern_to_regex(pattern), path) is not None
+
+
+def robots_allowed(rules: list[tuple[str, bool]], path: str) -> bool:
+    """Longest-match decision for one path: most OCTETS wins (RFC 9309
+    §2.2.2 defines precedence in octets, so multibyte UTF-8 patterns
+    count their encoded length, not their character count), ties go to
+    allow, no match means allowed."""
+    best = None  # (octets, allow)
+    for pattern, allow in rules:
+        if pattern_matches(pattern, path):
+            key = (len(pattern.encode("utf-8")), allow)
+            if best is None or key > best:
+                best = key
+    return True if best is None else best[1]
 
 
 def bpe_apply_merges(word: str, merges) -> list:

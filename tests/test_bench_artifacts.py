@@ -1,11 +1,13 @@
-"""Bench evidence-pipeline guards (VERDICT r5 items 1-2): the graded
-artifacts must survive host-noise troughs — the trough detector flags
-queries measuring >2x their historical best, and the executor-scaling
-writer refuses to overwrite the headline artifact when the
-machine-ceiling probe says the window itself is degraded."""
+"""Bench evidence-pipeline guards: the trough detector flags queries
+measuring >2x their historical best at the same (sf, cpus), and a headline
+run prints a compact last line that fits a ~4 KB tail capture while writing
+only under bench.py's BENCH directory."""
 
+import importlib
 import json
 import os
+import shutil
+from pathlib import Path
 
 
 def test_suspicious_queries_trough_detector():
@@ -40,129 +42,44 @@ def test_query_history_keyed_by_sf_and_cpus(tmp_path):
     assert _load_query_history(0.1, 32, str(path)) == [{"a": 1.0}]
 
 
-def test_scaling_writer_rejects_noisy_window(tmp_path):
-    """A degraded machine-ceiling probe leaves executor_scaling_latest.json
-    UNTOUCHED and logs the rejection to the history (the deliberately-
-    induced-noisy-run criterion from VERDICT r5 item 2)."""
-    from bench import write_scaling_artifacts
-
-    d = str(tmp_path)
-    clean = {"scaling_efficiency": 0.81, "machine_scaling_ceiling": 0.95,
-             "measured_at": "T1"}
-    assert write_scaling_artifacts(clean, bench_dir=d) is True
-    latest = os.path.join(d, "executor_scaling_latest.json")
-    with open(latest) as f:
-        assert json.load(f)["measured_at"] == "T1"
-
-    noisy = {"scaling_efficiency": 0.53, "machine_scaling_ceiling": 0.62,
-             "measured_at": "T2"}
-    assert write_scaling_artifacts(noisy, bench_dir=d) is False
-    with open(latest) as f:
-        assert json.load(f)["measured_at"] == "T1"  # untouched
-    with open(os.path.join(d, "executor_scaling_history.jsonl")) as f:
-        rows = [json.loads(l) for l in f]
-    assert len(rows) == 2
-    assert rows[1]["rejected_noisy_window"] is True
-    assert "probe" in rows[1]["rejection_reason"]
-
-    # a probe-less measurement can't be judged -> accepted (with the
-    # best-of-history artifact still tracking the cleanest run)
-    probeless = {"scaling_efficiency": 0.7, "machine_scaling_ceiling": None,
-                 "measured_at": "T3"}
-    assert write_scaling_artifacts(probeless, bench_dir=d) is True
-    with open(latest) as f:
-        assert json.load(f)["measured_at"] == "T3"
-    with open(os.path.join(d, "executor_scaling.json")) as f:
-        best = json.load(f)
-    assert best["scaling_efficiency"] == 0.81  # best-of-history kept
-    assert "best-of-history" in best["provenance"]
-
-
-def test_compact_bench_line_fits_tail_capture():
-    """The stdout line the driver tail-parses must stay far under the
-    ~4 KB capture for a realistic 25-query payload (r5's full payload
-    truncated to parsed:null)."""
-    queries = {f"query_name_number_{i:02d}": round(1.234 + i, 3) for i in range(25)}
-    compact = {
-        "metric": ("headline per-query wall-time SUM, warm workers, warm-up "
-                   "excluded; full payload in BENCH/bench_latest.json"),
-        "value": 61.234,
-        "unit": "sec",
-        "queries": queries,
-        "sf": 0.1,
-        "wall_incl_warmup": 147.565,
-        "scaling_efficiency_headline": 0.815,
-        "full_payload": "BENCH/bench_latest.json",
-    }
-    assert len(json.dumps(compact)) < 2000
-
-
-def test_geometry_band_rejects_fleet_trough(tmp_path):
-    """VERDICT r6 item 1: the probe gate can't see fleet-side-only troughs
-    (it runs solo-shaped processes), but efficiency IS comparable within
-    one (exec_cores, worker_slots) geometry. A candidate below 0.8x its
-    own geometry's best accepted efficiency is rejected even with a sane
-    probe; a new geometry has no band and its first run is accepted."""
+def test_compact_bench_line_fits_tail_capture(tmp_path, tmp_path_factory, monkeypatch, capsys):
+    """bench.main() on a realistic 25-query payload prints a final line far
+    under a ~4 KB stdout tail capture (r5's full payload truncated to
+    parsed:null), stamps its history line with this host's CPU count and
+    writes only under BENCH_DIR, whatever the current directory."""
     import bench
-    from bench import write_scaling_artifacts
 
-    d = str(tmp_path)
-    latest = os.path.join(d, "executor_scaling_latest.json")
+    repo_bench = Path(bench.BENCH_DIR)
 
-    # seed: clean accepted run at the 8-core/7-slot geometry
-    seed = {"scaling_efficiency": 0.90, "machine_scaling_ceiling": 0.95,
-            "exec_cores": 8, "worker_slots": 7, "measured_at": "T1"}
-    assert write_scaling_artifacts(seed, bench_dir=d) is True
+    def contents():
+        return {p.name: p.read_bytes() for p in repo_bench.iterdir() if p.is_file()}
 
-    # fleet trough at the KNOWN geometry: probe sane, eff far below band
-    trough = {"scaling_efficiency": 0.55, "machine_scaling_ceiling": 0.96,
-              "exec_cores": 8, "worker_slots": 7, "measured_at": "T2"}
-    assert write_scaling_artifacts(trough, bench_dir=d) is False
-    with open(latest) as f:
-        assert json.load(f)["measured_at"] == "T1"  # untouched
-    with open(os.path.join(d, "executor_scaling_history.jsonl")) as f:
-        rows = [json.loads(l) for l in f]
-    assert rows[-1]["rejected_fleet_trough"] is True
-    assert "fleet-side trough" in rows[-1]["rejection_reason"]
+    before = contents()
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    bench = importlib.reload(bench)
+    for name in ("scaling.json", "executor_scaling_latest.json", "executor_scaling.json"):
+        shutil.copy(repo_bench / name, tmp_path)
+    queries = {f"query_name_number_{i:02d}": round(1.234 + i, 3) for i in range(25)}
+    monkeypatch.setattr(bench, "run_queries", lambda sf_dir, cores: (dict(queries), {}))
+    monkeypatch.setattr(bench, "BENCH_DIR", str(tmp_path))
+    cwd = tmp_path_factory.mktemp("cwd")
+    monkeypatch.chdir(cwd)
 
-    # same low efficiency at a NEW geometry: no band -> accepted (seeds it)
-    new_geo = {"scaling_efficiency": 0.55, "machine_scaling_ceiling": 0.96,
-               "exec_cores": 4, "worker_slots": 3, "measured_at": "T3"}
-    assert write_scaling_artifacts(new_geo, bench_dir=d) is True
-    with open(latest) as f:
-        assert json.load(f)["measured_at"] == "T3"
+    bench.main()
 
-    # rejected entries never seed/shift a band: another trough at the new
-    # geometry must compare against T3's 0.55, not the rejected 8/7 runs
-    again = {"scaling_efficiency": 0.43, "machine_scaling_ceiling": 0.96,
-             "exec_cores": 4, "worker_slots": 3, "measured_at": "T4"}
-    assert write_scaling_artifacts(again, bench_dir=d) is False
-    with open(latest) as f:
-        assert json.load(f)["measured_at"] == "T3"
-
-    # within-band run at the known geometry still accepted
-    ok = {"scaling_efficiency": 0.78, "machine_scaling_ceiling": 0.96,
-          "exec_cores": 8, "worker_slots": 7, "measured_at": "T5"}
-    assert bench.GEOMETRY_BAND_FRACTION * 0.90 < 0.78
-    assert write_scaling_artifacts(ok, bench_dir=d) is True
-
-
-def test_best_of_history_excludes_superlinear_artifacts(tmp_path):
-    """eff > 1.0 means the solo baseline ran in a slow host phase — such a
-    run must never become the best-of-history artifact."""
-    from bench import write_scaling_artifacts
-
-    d = str(tmp_path)
-    good = {"scaling_efficiency": 0.82, "machine_scaling_ceiling": 0.95,
-            "measured_at": "T1"}
-    assert write_scaling_artifacts(good, bench_dir=d)
-    art = {"scaling_efficiency": 1.07, "machine_scaling_ceiling": 0.92,
-           "measured_at": "T2"}
-    assert write_scaling_artifacts(art, bench_dir=d)  # accepted as LATEST
-    import json, os
-    with open(os.path.join(d, "executor_scaling_latest.json")) as f:
-        assert json.load(f)["measured_at"] == "T2"
-    with open(os.path.join(d, "executor_scaling.json")) as f:
-        best = json.load(f)
-    assert best["measured_at"] == "T1" and best["scaling_efficiency"] == 0.82
-    assert "excluded" in best["provenance"]
+    line = capsys.readouterr().out.splitlines()[-1]
+    assert len(line) < 2000
+    compact = json.loads(line)
+    assert set(compact) == {
+        "metric", "value", "unit", "queries", "sf", "wall_incl_warmup",
+        "scaling_efficiency_headline", "full_payload",
+    }
+    with open(tmp_path / "executor_scaling_latest.json") as f:
+        assert compact["scaling_efficiency_headline"] == json.load(f)["scaling_efficiency"]
+    with open(tmp_path / "query_history.jsonl") as f:
+        (entry,) = [json.loads(l) for l in f]
+    assert entry["cpus"] == len(os.sched_getaffinity(0))
+    assert entry["queries"] == queries
+    assert (tmp_path / "bench_latest.json").exists()
+    assert os.listdir(cwd) == []
+    assert contents() == before

@@ -10,16 +10,25 @@ Roots are all code in jobs/, perfbench/, tools/, bench.py and
 __spark_entry__.py, plus the other module-level statements of htmlx/
 (decorators included: they run at import). The QUERIES rows become roots
 because __spark_entry__.py names the QUERIES table. From there the lint
-takes a fixpoint: a reached name reaches the names used in the body of
-every top-level htmlx/ def of that name. Any top-level htmlx/ def left
-unreached fails. tests/ is never a root.
+takes a fixpoint: a reached def reaches what the names used in its body
+resolve to. Any top-level htmlx/ def left unreached fails. tests/ is never
+a root.
 
 A name counts as used when it appears as code, anywhere in an f-string, or
 as a string literal that is exactly the name (getattr, registry keys and the
 name lists in perfbench.spans). Comments, docstrings and a def's own name do
-not count. The scan is a small string/comment-aware tokenizer: `ast.parse`
-of the whole repo alone takes about a second, and this test needs no Spark
-and must stay well under that.
+not count. Names resolve within their file, through its imports:
+- a name used as code means the file's own top-level def of that name, or
+  what the file's `from` import of that name binds (followed on through
+  re-exports);
+- `module.name`, where `module` is a module the file imports, means that
+  module's def; `expr.name` on anything else means nothing, so a method
+  never keeps a function of the same name alive;
+- any name, a string included, also means that name in each module the
+  file imports whole (`getattr(module, "name")`).
+The scan is a small string/comment-aware tokenizer: `ast.parse` of the
+whole repo alone takes about a second, and this test needs no Spark and
+must stay well under that.
 
 The parameter rule covers every defaulted parameter (positional or
 keyword-only) of a top-level htmlx/ def. It passes when some call in htmlx/,
@@ -48,7 +57,7 @@ CALLER_DIRS = ("htmlx", *ROOT_DIRS, "tests")
 _TOKEN = re.compile(
     r"(?P<prefix>[rRbBuUfF]{0,2})(?P<quote>'''|\"\"\"|'|\")"
     r"|#[^\n]*"
-    r"|(?P<name>[A-Za-z_]\w*)"
+    r"|(?P<name>[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*)"
 )
 _STRING_END = {
     q: re.compile(
@@ -57,7 +66,7 @@ _STRING_END = {
     )
     for q in ("'''", '"""', "'", '"')
 }
-_WORD = re.compile(r"[A-Za-z_]\w*")
+_WORD = re.compile(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*")
 # `NAME = ...` or `NAME: T = ...` (not `==`), matched right after the name
 _ASSIGN = re.compile(r"[ \t]*(?::[^=\n]*)?=(?!=)")
 
@@ -83,6 +92,7 @@ def _scan(src: str) -> tuple[Counter, list]:
                 defs.append(("", Counter()))
             elif (
                 m["name"]
+                and "." not in m["name"]
                 and not (m["name"].startswith("__") and m["name"].endswith("__"))
                 and _ASSIGN.match(src, pos)
             ):
@@ -98,41 +108,114 @@ def _scan(src: str) -> tuple[Counter, list]:
             if "f" in m["prefix"].lower():
                 refs.update(_WORD.findall(body))
             elif body.isidentifier():
-                refs[body] += 1
+                refs[body] += 0  # count 0: named by a string, not as code
         elif m["name"]:
             if prev in ("def", "class"):
                 if refs is module and defs and not defs[-1][0]:
                     defs[-1] = (m["name"], defs[-1][1])
                     refs = defs[-1][1]
-            else:
+            elif src[m.start() - 1:m.start()] != ".":  # not `expr().name`
                 refs[m["name"]] += 1
             prev = m["name"]
     return module, defs
 
 
+# An import statement; `names` is what follows `import`, up to the end of the
+# statement (a parenthesized list may span lines).
+_IMPORT = re.compile(
+    r"^[ \t]*(?:from[ \t]+(?P<source>\.*[\w.]*)[ \t]+)?import[ \t]+"
+    r"(?P<names>\([^)]*\)|(?:[^\n\\;#]|\\\n)*)",
+    re.M,
+)
+
+
+def _module_name(rel: Path) -> str:
+    parts = rel.with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imports(src: str, mod: str, is_package: bool, modules: set) -> tuple:
+    """What src's import statements bind: {name: (module, attribute)} for
+    each `from` import, {name: module} for each name bound to a module, and
+    the set of modules src imports whole."""
+    froms, aliases, whole = {}, {}, set()
+    package = mod if is_package else mod.rpartition(".")[0]
+    for m in _IMPORT.finditer(src):
+        names = re.sub(r"#[^\n]*|[()\\]", " ", m["names"])
+        for item in filter(None, (n.strip() for n in names.split(","))):
+            target, alias = (re.split(r"\s+as\s+", item) + [""])[:2]
+            if m["source"] is None:
+                whole.add(target)
+                if alias:
+                    aliases[alias] = target
+                else:
+                    head = target.split(".")[0]
+                    aliases[head] = head
+                continue
+            source = m["source"].lstrip(".")
+            if level := len(m["source"]) - len(source):
+                base = package.rsplit(".", level - 1)[0]
+                source = f"{base}.{source}" if source else base
+            froms[alias or target] = (source, target)
+            if f"{source}.{target}" in modules:
+                aliases[alias or target] = f"{source}.{target}"
+                whole.add(f"{source}.{target}")
+    return froms, aliases, whole
+
+
 def _unreached(root: Path) -> list:
-    reached, bodies, checked = set(), {}, []
+    """Top-level htmlx/ defs no root reaches; a def or `from` import is keyed
+    by (module, name), and names resolve as the module docstring says."""
+    files = {}
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root)
-        if any(part.startswith(".") for part in rel.parts):
-            continue
-        module, defs = _scan(path.read_text(encoding="utf-8"))
-        if rel.parts[0] == "htmlx":
-            reached.update(module)
-            for name, refs in defs:
-                bodies.setdefault(name, []).append(refs)
-                checked.append((rel, name))
-        elif rel.parts[0] in ROOT_DIRS or str(rel) in ROOT_FILES:
-            reached.update(module)
-            for _, refs in defs:
-                reached.update(refs)
+        if rel.parts[0] == "htmlx" or rel.parts[0] in ROOT_DIRS or str(rel) in ROOT_FILES:
+            files[rel] = path.read_text(encoding="utf-8")
+    modules = set()  # every module and package, dotted
+    for rel in files:
+        parts = _module_name(rel).split(".")
+        modules.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+    scanned, bodies, names = {}, defaultdict(list), defaultdict(set)
+    for rel, src in files.items():
+        mod = _module_name(rel)
+        froms, aliases, whole = _imports(src, mod, rel.stem == "__init__", modules)
+        for name, key in froms.items():
+            bodies[(mod, name)].append({key})
+        scanned[rel] = (mod, aliases, whole, *_scan(src))
+        names[mod] |= set(froms) | {name for name, _ in scanned[rel][-1]}
+    reached, checked = set(), []
+    for rel, (mod, aliases, whole, module, defs) in scanned.items():
+
+        def resolve(refs):
+            heads = {ref.split(".")[0] for ref in refs}
+            keys = {(w, h) for w in whole for h in heads & names[w]}  # getattr(module, "name")
+            for ref, count in refs.items():
+                if not count:  # named only by strings
+                    continue
+                head, *attrs = ref.split(".")
+                keys.add((mod, head))
+                target = aliases.get(head)
+                for attr in attrs if target else ():
+                    if f"{target}.{attr}" not in modules:
+                        keys.add((target, attr))
+                        break
+                    target = f"{target}.{attr}"
+            return keys
+
+        reached |= resolve(module)
+        for name, refs in defs:
+            if rel.parts[0] == "htmlx":
+                bodies[(mod, name)].append(resolve(refs))
+                checked.append((rel, (mod, name)))
+            else:
+                reached |= resolve(refs)
     frontier = list(reached)
     while frontier:
-        for refs in bodies.pop(frontier.pop(), ()):
-            new = [name for name in refs if name not in reached]
-            reached.update(new)
+        for keys in bodies.pop(frontier.pop(), ()):
+            new = keys - reached
+            reached |= new
             frontier += new
-    return [f"{rel} {name}" for rel, name in checked if name not in reached]
+    return [f"{rel} {key[1]}" for rel, key in checked if key not in reached]
 
 
 # A top-level def or class line, with the decorators above it: the rule cuts
@@ -278,6 +361,7 @@ def test_reachability_is_transitive_and_ignores_tests(tmp_path):
     files = {
         "jobs/run.py": "from htmlx.a import entry, REGISTRY\nentry()\n",
         "htmlx/a.py": (
+            "from htmlx.b import registered\n"
             "def entry():\n    return middle()\n"
             "def middle():\n    return leaf\n"
             "def leaf(): pass\n"
@@ -298,6 +382,41 @@ def test_reachability_is_transitive_and_ignores_tests(tmp_path):
         "htmlx/a.py only_tests",
         "htmlx/a.py UNUSED_TABLE",
         "htmlx/b.py only_in_table",
+    ]
+
+
+def test_names_resolve_through_imports_not_method_names(tmp_path):
+    files = {
+        "jobs/run.py": (
+            "import htmlx.c\n"
+            "from htmlx import d\n"
+            "from htmlx.a import Extractor\n"
+            "Extractor().extract_text(b'')\n"
+            "htmlx.c.by_path()\n"
+            "d.by_alias()\n"
+            "getattr(d, 'by_string')\n"
+        ),
+        "htmlx/a.py": (
+            "class Extractor:\n"
+            "    def extract_text(self, b):\n        return b\n"
+            "def extract_text(b):\n    return Extractor().extract_text(b)\n"
+        ),
+        "htmlx/c.py": "def by_path(): pass\ndef unused(): pass\n",
+        "htmlx/d.py": (
+            "from .e import helper as by_alias\n"
+            "def by_string(): pass\n"
+            "def column(): pass\n"
+            "print('column')\n"
+        ),
+        "htmlx/e.py": "def helper(): pass\n",
+    }
+    for rel, src in files.items():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text(src)
+    assert _unreached(tmp_path) == [
+        "htmlx/a.py extract_text",
+        "htmlx/c.py unused",
+        "htmlx/d.py column",
     ]
 
 

@@ -9,14 +9,9 @@ op is checked end-to-end against robots_allowed() row by row."""
 
 import pytest
 
-from htmlx.spark.robotstxt import (
-    parse_robots,
-    pattern_matches,
-    robots_allowed,
-    robots_filter,
-    robots_rules,
-)
+from htmlx.spark.robotstxt import parse_robots, robots_filter, robots_rules
 from htmlx.spark.session import get_spark
+from tests.oracles import pattern_matches, robots_allowed
 
 
 @pytest.fixture(scope="module")
