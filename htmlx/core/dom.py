@@ -229,8 +229,10 @@ class _TreeBuilder(HTMLParser):
 
     # -- token handlers ----------------------------------------------------
     def handle_starttag(self, tag, attrs):
-        attrs = _dedup_attrs(attrs)
+        self.start_element(tag, _dedup_attrs(attrs))
 
+    def start_element(self, tag, attrs):
+        """A start tag whose ``attrs`` are already deduplicated, None -> ''."""
         if tag == "html":
             self._ensure_html(attrs)
             return
@@ -239,7 +241,7 @@ class _TreeBuilder(HTMLParser):
             return
         if tag == "body":
             self._ensure_body(attrs)
-            self.stack = []
+            self.stack.clear()
             return
 
         # decide parent region
@@ -295,7 +297,7 @@ class _TreeBuilder(HTMLParser):
         if tag in VOID_ELEMENTS:
             return
         if tag == "body" or tag == "html":
-            self.stack = []
+            self.stack.clear()
             self.body_started = True
             return
         if tag == "head":
@@ -392,11 +394,22 @@ def _dedup_attrs(attrs):
 # ---------------------------------------------------------------------------
 # Fast tokenizer
 # ---------------------------------------------------------------------------
-# A single-pass tokenizer emitting the same handle_* calls as stdlib
-# html.parser (same tolerant regexes, same unescape semantics) but without
-# the incremental-feed machinery, position tracking, and per-token dispatch
-# overhead (~30% of per-document cost). Any exception falls back to the
-# stdlib-driven path, so robustness is never worse than html.parser.
+# A single-pass tokenizer that builds the same tree as the handle_* calls
+# stdlib html.parser would make (same tolerant regexes, same unescape
+# semantics) but without the incremental-feed machinery, position tracking,
+# and per-token dispatch overhead. The common tokens never reach a handler;
+# the loop applies them inline:
+#   * a start tag with an open element, other than html/head/body and the
+#     table fixups' tr/td/th, closes what its implied end tags close, links
+#     under the top of the stack and is pushed unless void;
+#   * an end tag naming the top of the stack pops it;
+#   * text under an open element other than table structure or
+#     pre/textarea/listing joins a trailing text node or links a new one.
+# Attributes are deduplicated in the attribute loop (first name wins,
+# None -> '') and tag names lowered through one memo. Every other token
+# goes through the _TreeBuilder handlers that html.parser drives, which
+# stay the reference (tests/oracles.parse_stdlib). Any exception falls back
+# to the stdlib-driven path, so robustness is never worse than html.parser.
 
 from html import unescape as _unescape
 
@@ -416,13 +429,27 @@ _CDATA_CLOSE = {
 _NAME_LOWER: dict = {}  # tag/attr-name lower() memo (bounded; names repeat)
 
 
+# Start tags that need _TreeBuilder.start_element even with an element open:
+# the implied html/head/body structure and the table fixups. Any other start
+# tag closes what its implied end tags close, then links under the top of
+# the stack (the body when the closes emptied it: no such tag is
+# HEAD_CONTENT).
+_STRUCTURE_START = frozenset(("html", "head", "body", "tr", "td", "th"))
+_CLOSING_START = P_CLOSERS | frozenset(_IMPLIED_END)
+# Open elements whose text handle_data rewrites: foster-parented table text
+# and the first newline dropped after pre/textarea/listing.
+_SLOW_TEXT_PARENTS = frozenset(("table", "tr", "pre", "textarea", "listing")) | TABLE_SECTIONS
+
+
 def _fast_tokenize(rawdata: str, tb: "_TreeBuilder") -> None:
     i = 0
     n = len(rawdata)
     find = rawdata.find
     handle_data = tb.handle_data
-    handle_starttag = tb.handle_starttag
+    start_element = tb.start_element
     handle_endtag = tb.handle_endtag
+    stack = tb.stack  # the builder only mutates it in place
+    push = stack.append
     cache = _NAME_LOWER
     while i < n:
         j = find("<", i)
@@ -432,7 +459,26 @@ def _fast_tokenize(rawdata: str, tb: "_TreeBuilder") -> None:
             break
         if j > i:
             text = rawdata[i:j]
-            handle_data(_unescape(text) if "&" in text else text)
+            if "&" in text:
+                text = _unescape(text)
+            # inline handle_data for text under an ordinary open element
+            # (unescape can empty a text: handle_data drops that)
+            if stack and text and stack[-1].data not in _SLOW_TEXT_PARENTS:
+                parent = stack[-1]
+                last = parent.last_child
+                if last is not None and last.type == TEXT:
+                    last.data += text
+                else:
+                    node = Node(TEXT, text)
+                    node.parent = parent
+                    if last is None:
+                        parent.first_child = node
+                    else:
+                        last.next_sibling = node
+                        node.prev_sibling = last
+                    parent.last_child = node
+            else:
+                handle_data(text)
         if j + 1 >= n:
             handle_data("<")
             break
@@ -448,46 +494,67 @@ def _fast_tokenize(rawdata: str, tb: "_TreeBuilder") -> None:
                     cache[raw] = name
             k = m.end()
             attrs = []
-            while k < n and rawdata[k] not in ">/":
-                am = _ATTRFIND.match(rawdata, k)
-                if not am or am.end() == k:
-                    break
-                raw = am.group(1)
-                aname = cache.get(raw)
-                if aname is None:
-                    aname = raw.lower()
-                    if len(cache) < 1024:
-                        cache[raw] = aname
-                aval = am.group(3)
-                if aval is None:
-                    attrs.append((aname, None))
-                else:
-                    if aval[:1] in "'\"" and aval[:1] == aval[-1:]:
-                        aval = aval[1:-1]
-                    attrs.append((aname, _unescape(aval) if "&" in aval else aval))
-                k = am.end()
+            if k < n and rawdata[k] not in ">/":
+                seen = set()  # _dedup_attrs: the first of each name wins
+                while k < n and rawdata[k] not in ">/":
+                    am = _ATTRFIND.match(rawdata, k)
+                    if not am:
+                        break
+                    end = am.end()
+                    if end == k:
+                        break
+                    k = end
+                    raw, aval = am.group(1, 3)
+                    aname = cache.get(raw)
+                    if aname is None:
+                        aname = raw.lower()
+                        if len(cache) < 1024:
+                            cache[raw] = aname
+                    if aname in seen:
+                        continue
+                    seen.add(aname)
+                    if aval is None:
+                        attrs.append((aname, ""))
+                    else:
+                        if aval[:1] in "'\"" and aval[:1] == aval[-1:]:
+                            aval = aval[1:-1]
+                        attrs.append((aname, _unescape(aval) if "&" in aval else aval))
             gt = find(">", k)
             if gt < 0:
                 # unterminated tag at EOF: stdlib treats the rest as data
                 text = rawdata[j:]
                 handle_data(_unescape(text) if "&" in text else text)
                 break
-            # same predicate as `slice-test or char-test` but ordered so
-            # the dominant k == gt case (tag ends exactly at '>') skips
-            # the slice+rstrip+endswith chain; gt >= k > j+1 always, so
-            # rawdata[gt-1] is in-bounds
-            if rawdata[gt - 1] == "/":
-                selfclosing = True
-            elif k < gt:
-                selfclosing = rawdata[k:gt].rstrip().endswith("/")
-            else:
-                selfclosing = False
             i = gt + 1
-            if selfclosing:
-                tb.handle_startendtag(name, attrs)
+            # html.parser's handle_startendtag (a trailing slash) builds the
+            # same tree as handle_starttag; the slash only matters below
+            if stack and name not in _STRUCTURE_START:
+                if name in _CLOSING_START:
+                    if name in P_CLOSERS:
+                        tb._close_p_in_button_scope()
+                    implied = _IMPLIED_END.get(name)
+                    if implied is not None:
+                        tb._close_siblings(*implied)
+                    parent = stack[-1] if stack else tb._ensure_body()
+                else:
+                    parent = stack[-1]
+                node = Node(ELEMENT, name, attrs)
+                node.parent = parent
+                last = parent.last_child
+                if last is None:
+                    parent.first_child = node
+                else:
+                    last.next_sibling = node
+                    node.prev_sibling = last
+                parent.last_child = node
+                if name not in VOID_ELEMENTS:
+                    push(node)
             else:
-                handle_starttag(name, attrs)
-                if name in _CDATA_CLOSE:
+                start_element(name, attrs)
+            if name in _CDATA_CLOSE:
+                # a self-closing <script/> or <style/> opens no raw text;
+                # gt >= k > j+1, so rawdata[gt-1] is in bounds
+                if not (rawdata[gt - 1] == "/" or rawdata[k:gt].rstrip().endswith("/")):
                     cm = _CDATA_CLOSE[name].search(rawdata, i)
                     if cm:
                         if cm.start() > i:
@@ -501,8 +568,19 @@ def _fast_tokenize(rawdata: str, tb: "_TreeBuilder") -> None:
         elif c == "/":
             m = _ENDTAGFIND.match(rawdata, j)
             if m:
-                handle_endtag(m.group(1).lower())
+                raw = m.group(1)
+                name = cache.get(raw)
+                if name is None:
+                    name = raw.lower()
+                    if len(cache) < 1024:
+                        cache[raw] = name
                 i = m.end()
+                # the stack never holds a void element or html/head/body,
+                # so an end tag naming its top just pops it
+                if stack and stack[-1].data == name:
+                    stack.pop()
+                else:
+                    handle_endtag(name)
             else:
                 gt = find(">", j)
                 if gt < 0:

@@ -145,15 +145,23 @@ def escape_markdown_text(s: str) -> str:
 
 
 _WORD_RUNS = re.compile(r"[^ \t\n\r]+")
+# Every str.isspace character but the four countWords splits on
+# (tests/test_boundary.py derives the set over all code points); a literal
+# class searches ~2x faster than the equivalent [^\S \t\n\r].
+_OTHER_SPACE = re.compile(
+    "[\x0b\x0c\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+)
 
 
 def count_words(text: str) -> int:
     """Port of countWords (extract.go:1139-1157): runs of non-{space,tab,
-    NL,CR}. NOTE: the whitespace set is exactly these four bytes — which
-    is why this is a dedicated regex and not str.split (whose whitespace
-    set also includes \\x0b/\\x0c/unicode spaces)."""
+    NL,CR}. str.split() splits on every str.isspace character, so it counts
+    the same runs only when the text has no other one (\\x0b, \\x0c,
+    \\x1c-\\x1f, \\x85, unicode spaces); otherwise the dedicated regex."""
     if not text:
         return 0
+    if _OTHER_SPACE.search(text) is None:
+        return len(text.split())
     return len(_WORD_RUNS.findall(text))
 
 
@@ -287,23 +295,25 @@ class Extractor:
             # extract.go:789-791). chars <= bytes always, so a doc over the
             # cap in characters is over it in bytes too; only docs that pass
             # the char check AND are non-ASCII need the (<=1 MB) encode.
+            # The gate and every raw scan read one lower() copy of the page;
+            # None when the scans are gated off.
             n_chars = len(html_content)
-            can_contain_media = (
-                0 < n_chars <= MAX_HTML_FOR_REGEX
-                and (
-                    html_content.isascii()
-                    or len(html_content.encode("utf-8")) <= MAX_HTML_FOR_REGEX
-                )
-                and has_media_reference(html_content)
-            )
+            lowered = None
+            if 0 < n_chars <= MAX_HTML_FOR_REGEX and (
+                html_content.isascii()
+                or len(html_content.encode("utf-8")) <= MAX_HTML_FOR_REGEX
+            ):
+                lowered = html_content.lower()
+                if not has_media_reference(lowered):
+                    lowered = None
             if self.config.preserve_videos and self.config.preserve_audios:
                 result.videos, result.audios = extract_videos_and_audios(
-                    doc, html_content, can_contain_media
+                    doc, html_content, lowered
                 )
             elif self.config.preserve_videos:
-                result.videos = extract_videos(doc, html_content, can_contain_media)
+                result.videos = extract_videos(doc, html_content, lowered)
             else:
-                result.audios = extract_audios(doc, html_content, can_contain_media)
+                result.audios = extract_audios(doc, html_content, lowered)
         return result
 
     def _extract_title(self, doc: Node) -> str:

@@ -10,6 +10,8 @@ output-affecting and must match the reference exactly (config.go:50-54).
 from __future__ import annotations
 
 import re
+import string
+from itertools import islice
 
 from .dom import ELEMENT, Node, walk_nodes
 from .urlutil import is_valid_url
@@ -58,22 +60,27 @@ AUDIO_REGEX = re.compile(
     r"(?i)https?://[^\s<>\"',;)}\]]{1,500}\.(?:mp3|wav|ogg|m4a|aac|flac|wma|opus|oga)"
 )
 
+# The same patterns without (?i), for the page's lower() copy (_regex_urls)
+_VIDEO_REGEX_LOWERED = re.compile(VIDEO_REGEX.pattern.removeprefix("(?i)"))
+_AUDIO_REGEX_LOWERED = re.compile(AUDIO_REGEX.pattern.removeprefix("(?i)"))
+
 MAX_REGEX_MATCHES = 1000  # config.go:54 (output-affecting)
+
+_ASCII_LOWER = str.maketrans(string.ascii_uppercase, string.ascii_lowercase)
 
 _ALL_MEDIA_SIGNATURES = tuple(
     dict.fromkeys(tuple(VIDEO_EXTENSIONS) + tuple(AUDIO_EXTENSIONS) + EMBED_PATTERNS)
 )
 
 
-def has_media_reference(content: str) -> bool:
+def has_media_reference(lowered: str) -> bool:
     """Port of HasMediaReference (internal/media.go:176-194): necessary
     condition for any media regex/raw scan to produce output.
 
-    Lowercase once (C speed) then C-level substring membership per
-    signature — ~6x faster than a case-insensitive alternation regex and
-    the same ASCII-case-insensitive semantics as the reference's per-byte
-    prefix dispatch."""
-    lowered = content.lower()
+    ``lowered`` is the page's ``lower()`` copy, which the raw scans share;
+    C-level substring membership per signature is ~6x faster than a
+    case-insensitive alternation regex, with the same ASCII-case-insensitive
+    semantics as the reference's per-byte prefix dispatch."""
     for sig in _ALL_MEDIA_SIGNATURES:
         if sig in lowered:
             return True
@@ -136,21 +143,30 @@ def detect_audio_type(url: str) -> str:
 # Raw-HTML tag attribute scan (media.go:246-411)
 # ---------------------------------------------------------------------------
 
-def extract_tag_attributes(html_content: str, tag_name: str, *attr_names: str) -> list[str]:
+def _aligned_lower(content: str, lowered: str) -> str:
+    """A lowercase copy of ``content`` that keeps every character at its own
+    index: ``lowered`` (``content.lower()``) when lowering kept the length,
+    so each character mapped to one, else an ASCII-only lowering. The
+    reference indexes the page at offsets found in its lowered copy;
+    'İ'.lower() is two characters, so a full copy would shift them."""
+    return lowered if len(lowered) == len(content) else content.translate(_ASCII_LOWER)
+
+
+def extract_tag_attributes(html_content: str, lowered: str, tag_name: str, *attr_names: str) -> list[str]:
     """Port of extractTagAttributes (media.go:246-292): case-insensitive scan
-    of raw HTML for ``<tag ... attr=value>`` (quoted or unquoted)."""
+    of raw HTML for ``<tag ... attr=value>`` (quoted or unquoted).
+    ``lowered`` is ``_aligned_lower``'s copy of ``html_content``."""
     results: list[str] = []
     lower_tag = "<" + tag_name.lower()
-    lower_content = html_content.lower()
     n = len(html_content)
     pos = 0
     tag_len = len(lower_tag)
     while pos < n:
-        tag_start = lower_content.find(lower_tag, pos)
+        tag_start = lowered.find(lower_tag, pos)
         if tag_start == -1:
             break
         if tag_start + tag_len < n:
-            nxt = lower_content[tag_start + tag_len]
+            nxt = lowered[tag_start + tag_len]
             if nxt not in " \t\n\r>/":
                 pos = tag_start + tag_len
                 continue
@@ -159,19 +175,21 @@ def extract_tag_attributes(html_content: str, tag_name: str, *attr_names: str) -
             break
         tag_end += 1
         tag_content = html_content[tag_start:tag_end]
+        lower_tag_content = lowered[tag_start:tag_end]
         for attr_name in attr_names:
-            value = extract_attribute_value(tag_content, attr_name)
+            value = extract_attribute_value(tag_content, lower_tag_content, attr_name)
             if value:
                 results.append(value)
         pos = tag_end
     return results
 
 
-def extract_attribute_value(tag_content: str, attr_name: str) -> str:
-    """Port of extractAttributeValue (media.go:335-411)."""
+def extract_attribute_value(tag_content: str, lower_tag: str, attr_name: str) -> str:
+    """Port of extractAttributeValue (media.go:335-411); ``lower_tag`` is a
+    lowercase copy of ``tag_content`` with every character at its own
+    index."""
     search = attr_name.lower() + "="
     search_len = len(search)
-    lower_tag = tag_content.lower()
     tag_len = len(tag_content)
     pos = 0
     while pos <= tag_len - search_len:
@@ -211,6 +229,22 @@ def _video_info(url="", type_=""):
 
 def _audio_info(url="", type_=""):
     return {"url": url, "type": type_, "duration": ""}
+
+
+def _regex_urls(html_content: str, lowered: str, regex: re.Pattern, lowered_regex: re.Pattern) -> list[str]:
+    """The first MAX_REGEX_MATCHES matches of the (?i) ``regex`` over the
+    page, as URLs sliced from it. ``lowered_regex``, the same pattern
+    without (?i), matches the ``lower()`` copy at the same spans when
+    lowering mapped each character to one and the copy holds no 'ı' or
+    'ſ': (?i) matches those to 'i' and 's', and 'İ' to 'i', while lower()
+    leaves the first two and turns 'İ' into two characters. No other code
+    point differs (tests/test_media.py checks them all); 'K' (Kelvin)
+    lowers to 'k' and (?i) matches it to 'k' too."""
+    if len(lowered) == len(html_content) and "ı" not in lowered and "ſ" not in lowered:
+        matches = lowered_regex.finditer(lowered)
+    else:
+        matches = regex.finditer(html_content)
+    return [html_content[m.start():m.end()] for m in islice(matches, MAX_REGEX_MATCHES)]
 
 
 def _find_source_url(n: Node) -> tuple[str, str]:
@@ -301,8 +335,9 @@ def _parse_audio_node(n: Node) -> dict:
     return audio
 
 
-def extract_videos(node: Node, html_content: str, can_contain_media: bool) -> list[dict]:
-    """Port of extractVideos (media.go:26-93)."""
+def extract_videos(node: Node, html_content: str, lowered: str | None) -> list[dict]:
+    """Port of extractVideos (media.go:26-93). ``lowered`` is the page's
+    ``lower()`` copy when the raw scans run, None when they are gated off."""
     videos: list[dict] = []
     seen: set[str] = set()
 
@@ -312,10 +347,11 @@ def extract_videos(node: Node, html_content: str, can_contain_media: bool) -> li
                 seen.add(url)
                 videos.append(_video_info(url=url, type_=detect_video_type(url)))
 
-    if can_contain_media:
-        add_unique_urls(extract_tag_attributes(html_content, "iframe", "src"))
-        add_unique_urls(extract_tag_attributes(html_content, "embed", "src", "data"))
-        add_unique_urls(extract_tag_attributes(html_content, "object", "data"))
+    if lowered is not None:
+        aligned = _aligned_lower(html_content, lowered)
+        add_unique_urls(extract_tag_attributes(html_content, aligned, "iframe", "src"))
+        add_unique_urls(extract_tag_attributes(html_content, aligned, "embed", "src", "data"))
+        add_unique_urls(extract_tag_attributes(html_content, aligned, "object", "data"))
 
     def visit(n: Node) -> bool:
         if n.type != ELEMENT:
@@ -339,13 +375,8 @@ def extract_videos(node: Node, html_content: str, can_contain_media: bool) -> li
 
     walk_nodes(node, visit)
 
-    if can_contain_media:
-        count = 0
-        for m in VIDEO_REGEX.finditer(html_content):
-            count += 1
-            if count > MAX_REGEX_MATCHES:  # config.go:54 (output-affecting cap)
-                break
-            url = m.group(0)
+    if lowered is not None:
+        for url in _regex_urls(html_content, lowered, VIDEO_REGEX, _VIDEO_REGEX_LOWERED):
             if is_valid_url(url) and url not in seen:
                 seen.add(url)
                 videos.append(_video_info(url=url, type_=detect_video_type(url)))
@@ -353,7 +384,7 @@ def extract_videos(node: Node, html_content: str, can_contain_media: bool) -> li
 
 
 def extract_videos_and_audios(
-    node: Node, html_content: str, can_contain_media: bool
+    node: Node, html_content: str, lowered: str | None
 ) -> tuple[list[dict], list[dict]]:
     """Fused single-walk variant of extract_videos + extract_audios for the
     both-enabled config (the default): one full-document traversal instead
@@ -371,10 +402,11 @@ def extract_videos_and_audios(
                 vseen.add(url)
                 videos.append(_video_info(url=url, type_=detect_video_type(url)))
 
-    if can_contain_media:
-        add_unique_urls(extract_tag_attributes(html_content, "iframe", "src"))
-        add_unique_urls(extract_tag_attributes(html_content, "embed", "src", "data"))
-        add_unique_urls(extract_tag_attributes(html_content, "object", "data"))
+    if lowered is not None:
+        aligned = _aligned_lower(html_content, lowered)
+        add_unique_urls(extract_tag_attributes(html_content, aligned, "iframe", "src"))
+        add_unique_urls(extract_tag_attributes(html_content, aligned, "embed", "src", "data"))
+        add_unique_urls(extract_tag_attributes(html_content, aligned, "object", "data"))
 
     def visit(n: Node) -> bool:
         if n.type != ELEMENT:
@@ -404,30 +436,21 @@ def extract_videos_and_audios(
 
     walk_nodes(node, visit)
 
-    if can_contain_media:
-        count = 0
-        for m in VIDEO_REGEX.finditer(html_content):
-            count += 1
-            if count > MAX_REGEX_MATCHES:
-                break
-            url = m.group(0)
+    if lowered is not None:
+        for url in _regex_urls(html_content, lowered, VIDEO_REGEX, _VIDEO_REGEX_LOWERED):
             if is_valid_url(url) and url not in vseen:
                 vseen.add(url)
                 videos.append(_video_info(url=url, type_=detect_video_type(url)))
-        count = 0
-        for m in AUDIO_REGEX.finditer(html_content):
-            count += 1
-            if count > MAX_REGEX_MATCHES:
-                break
-            url = m.group(0)
+        for url in _regex_urls(html_content, lowered, AUDIO_REGEX, _AUDIO_REGEX_LOWERED):
             if is_valid_url(url) and url not in aseen:
                 aseen.add(url)
                 audios.append(_audio_info(url=url, type_=detect_audio_type(url)))
     return videos, audios
 
 
-def extract_audios(node: Node, html_content: str, can_contain_media: bool) -> list[dict]:
-    """Port of extractAudios (media.go:164-196)."""
+def extract_audios(node: Node, html_content: str, lowered: str | None) -> list[dict]:
+    """Port of extractAudios (media.go:164-196); ``lowered`` as in
+    ``extract_videos``."""
     audios: list[dict] = []
     seen: set[str] = set()
 
@@ -441,13 +464,8 @@ def extract_audios(node: Node, html_content: str, can_contain_media: bool) -> li
 
     walk_nodes(node, visit)
 
-    if can_contain_media:
-        count = 0
-        for m in AUDIO_REGEX.finditer(html_content):
-            count += 1
-            if count > MAX_REGEX_MATCHES:
-                break
-            url = m.group(0)
+    if lowered is not None:
+        for url in _regex_urls(html_content, lowered, AUDIO_REGEX, _AUDIO_REGEX_LOWERED):
             if is_valid_url(url) and url not in seen:
                 seen.add(url)
                 audios.append(_audio_info(url=url, type_=detect_audio_type(url)))

@@ -207,11 +207,6 @@ class AuditRecorder:
             )
         )
 
-    def record_encoding_issue(self, encoding: str, message: str) -> None:
-        # Reference carries the encoding in a metadata map (audit.go:333);
-        # this flat schema reuses `attribute` for it.
-        self.record(_audit_event("encoding_issue", "info", message, attribute=encoding))
-
 
 def _go_duration(seconds: float) -> str:
     """Render a duration the way Go fmt's %v prints time.Duration for the
@@ -244,7 +239,6 @@ class NoopAuditRecorder:
     def record_input_violation(self, size: int, max_size: int, violation_type: str) -> None: ...
     def record_depth_violation(self, depth: int, max_depth: int) -> None: ...
     def record_timeout(self, timeout_s: float) -> None: ...
-    def record_encoding_issue(self, encoding: str, message: str) -> None: ...
 
 
 NOOP_AUDIT = NoopAuditRecorder()
@@ -332,13 +326,18 @@ def _normalize_fullwidth_to_ascii(s: str) -> str:
 def _is_safe_uri(uri: str, audit: AuditRecorder) -> bool:
     """Port of isSafeURIWithAudit (sanitize.go:388-452). The fullwidth
     normalization is hoisted out of the per-scheme checks (pure perf; the
-    reference recomputes it per scheme, sanitize.go:475-476)."""
+    reference recomputes it per scheme, sanitize.go:475-476). NFC and the
+    fullwidth mapping are identities on ASCII, so an ASCII URI skips both."""
     if uri == "":
         return True
-    normalized = unicodedata.normalize("NFC", uri)
-    trimmed = normalized.strip()
-    lower_uri = trimmed.lower()
-    fw = _normalize_fullwidth_to_ascii(lower_uri)
+    ascii_uri = uri.isascii()
+    if ascii_uri:
+        trimmed = uri.strip()
+        fw = lower_uri = trimmed.lower()
+    else:
+        trimmed = unicodedata.normalize("NFC", uri).strip()
+        lower_uri = trimmed.lower()
+        fw = _normalize_fullwidth_to_ascii(lower_uri)
 
     for scheme, reason in (
         ("javascript:", "javascript scheme"),
@@ -351,7 +350,7 @@ def _is_safe_uri(uri: str, audit: AuditRecorder) -> bool:
 
     if trimmed.startswith("//"):
         rest_lower = trimmed[2:].lstrip(" \t\n\r").lower()
-        rest_fw = _normalize_fullwidth_to_ascii(rest_lower)
+        rest_fw = rest_lower if ascii_uri else _normalize_fullwidth_to_ascii(rest_lower)
         for scheme in ("javascript:", "vbscript:", "data:", "file:"):
             if rest_lower.startswith(scheme) or rest_fw.startswith(scheme):
                 audit.record_blocked_url(uri, "dangerous protocol-relative URL")

@@ -99,18 +99,6 @@ class ParquetTableIO:
                 "(or move each group dir under data/run_id=<rid>/)"
             )
 
-    def is_empty(self) -> bool:
-        """True when no group dir has ever been written (a partitioned
-        write of zero rows creates no directories — a legitimate state for
-        e.g. an audit table over a clean corpus)."""
-        self._reject_legacy_layout()
-        for rid_dir in os.listdir(self.data_dir):
-            if rid_dir.startswith("run_id="):
-                sub = os.path.join(self.data_dir, rid_dir)
-                if any(e.startswith("group=") for e in os.listdir(sub)):
-                    return False
-        return True
-
     def read(self, spark: SparkSession) -> DataFrame:
         # Partition-dir values come back as columns; type inference must be
         # off while loading or an all-digit run_id dir would be read as a

@@ -60,8 +60,7 @@ AUDIO_TYPE = StructType(
 
 # One audit event (AuditEntry, audit.go:52-67). `ts` is float epoch seconds
 # inside the nested struct; the audit TABLE view converts it to a timestamp
-# JVM-side (timestamp_seconds). `attribute` doubles as the encoding name for
-# encoding_issue events (flat schema replaces the reference's metadata map).
+# JVM-side (timestamp_seconds).
 AUDIT_EVENT_TYPE = StructType(
     [
         StructField("ts", DoubleType()),

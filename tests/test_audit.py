@@ -89,16 +89,6 @@ def test_timeout_entry_go_duration_format():
     assert _go_duration(2.5) == "2.5s"
 
 
-def test_encoding_issue_entry():
-    rec = AuditRecorder()
-    rec.record_encoding_issue("windows-1252", "invalid byte sequence")
-    e = one(rec)
-    assert e["event_type"] == "encoding_issue"
-    assert e["level"] == "info"
-    assert e["message"] == "invalid byte sequence"
-    assert e["attribute"] == "windows-1252"  # flat stand-in for metadata map
-
-
 # -- extractor-emitted events ------------------------------------------------
 
 

@@ -131,3 +131,20 @@ def test_truncation_replacement_per_stray_byte():
     assert _replace_per_byte("\U0001f600".encode()[:3]) == "�" * 3
     assert _replace_per_byte(b"\xe4\xb8z") == "��z"
     assert _truncate_bytes("café", 5, "...") == "café"  # fits: untouched
+
+
+def test_count_words_splits_on_four_bytes_only():
+    # str.split() is taken only when the text has no str.isspace character
+    # besides space, tab, NL and CR; every other one keeps words together
+    import re
+    import sys
+
+    from htmlx.core.extract import _OTHER_SPACE, count_words
+
+    every = "".join(map(chr, range(sys.maxunicode + 1)))
+    spaces = [c for c in every if c.isspace()]
+    assert set(_OTHER_SPACE.findall(every)) == set(spaces) - set(" \t\n\r")
+    runs = re.compile(r"[^ \t\n\r]+")
+    for c in spaces + ["x", "​"]:
+        for text in (f"a{c}b c\td", f"{c}", f" {c} ", f"one\r\ntwo{c}{c}three"):
+            assert count_words(text) == len(runs.findall(text)), repr(text)

@@ -1,5 +1,6 @@
 """Static lints: a shipped entry point reaches every top-level def in htmlx/,
-and some call sets every defaulted parameter of one.
+some call sets every defaulted parameter of one, and code outside tests/
+names every method of a top-level htmlx/ class.
 
 A top-level def here is a def, a class, or a column-0 `NAME = ...` /
 `NAME: T = ...` assignment, whose body is its right-hand side. Dunder
@@ -30,6 +31,12 @@ The scan is a small string/comment-aware tokenizer: `ast.parse` of the
 whole repo alone takes about a second, and this test needs no Spark and
 must stay well under that.
 
+The method rule covers each non-dunder method of a top-level htmlx/ class:
+code in htmlx/ or a root must use its name after a dot or as a string, or
+the method must override an attribute of a base class that the file imports
+from outside the repository (or a builtin), whose own code calls it
+(`HTMLParser.handle_decl`). It uses the same scan as the reachability rule.
+
 The parameter rule covers every defaulted parameter (positional or
 keyword-only) of a top-level htmlx/ def. It passes when some call in htmlx/,
 jobs/, perfbench/, tools/, tests/, bench.py or __spark_entry__.py binds it,
@@ -45,6 +52,8 @@ top-level statements whose text names a def with a default.
 """
 
 import ast
+import builtins
+import importlib
 import re
 from collections import Counter, defaultdict
 from pathlib import Path
@@ -71,23 +80,30 @@ _WORD = re.compile(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*")
 _ASSIGN = re.compile(r"[ \t]*(?::[^=\n]*)?=(?!=)")
 
 
-def _scan(src: str) -> tuple[Counter, list]:
+def _scan(src: str) -> tuple[Counter, list, list, set]:
     """Split src's references by owner.
 
-    Returns the references made by module-level statements and a list of
-    (name, references) for each top-level def, class or assignment. A
-    top-level def runs from its `def`/`class` line (or, for an assignment,
-    from just after its name) to the next token that starts a line at
-    column 0.
+    Returns the references made by module-level statements, a list of
+    (name, references) for each top-level def, class or assignment, the
+    (class, name) of each method of a top-level class, and every name src
+    uses as an attribute (after a dot) or as a string. A top-level def runs
+    from its `def`/`class` line (or, for an assignment, from just after its
+    name) to the next token that starts a line at column 0. A method is a
+    def at the indentation of the class's first def.
     """
-    module, defs = Counter(), []
+    module, defs, methods, attrs = Counter(), [], [], set()
     refs, pos, prev = module, 0, ""
+    cls = method_indent = None  # the enclosing top-level class, if any
+    method = False  # the next `def` name is a method's
     while (m := _TOKEN.search(src, pos)) is not None:
         pos = m.end()
         if m.group(0)[0] == "#":
             continue
-        if m.start() == src.rfind("\n", 0, m.start()) + 1:
-            refs = module
+        line_start = src.rfind("\n", 0, m.start()) + 1
+        if m.start() == line_start:
+            refs, cls, method_indent = module, None, None
+            if m["name"] == "class":
+                cls = ""
             if m["name"] in ("def", "class", "async"):
                 defs.append(("", Counter()))
             elif (
@@ -99,6 +115,14 @@ def _scan(src: str) -> tuple[Counter, list]:
                 defs.append((m["name"], Counter()))
                 refs, prev = defs[-1][1], m["name"]
                 continue
+        elif (
+            m["name"] in ("def", "async")
+            and cls
+            and not src[line_start:m.start()].strip()
+            and method_indent in (None, m.start() - line_start)
+        ):
+            method_indent = m.start() - line_start
+            method = True
         if m["quote"]:
             end = _STRING_END[m["quote"]].match(src, pos)
             if end is None:
@@ -107,17 +131,27 @@ def _scan(src: str) -> tuple[Counter, list]:
             pos = end.end()
             if "f" in m["prefix"].lower():
                 refs.update(_WORD.findall(body))
+                attrs.update(w for word in _WORD.findall(body) for w in word.split(".")[1:])
             elif body.isidentifier():
                 refs[body] += 0  # count 0: named by a string, not as code
+                attrs.add(body)
         elif m["name"]:
             if prev in ("def", "class"):
                 if refs is module and defs and not defs[-1][0]:
                     defs[-1] = (m["name"], defs[-1][1])
                     refs = defs[-1][1]
+                    if cls == "":
+                        cls = m["name"]
+                elif method and prev == "def":
+                    methods.append((cls, m["name"]))
+                    method = False
             elif src[m.start() - 1:m.start()] != ".":  # not `expr().name`
                 refs[m["name"]] += 1
+                attrs.update(m["name"].split(".")[1:])
+            else:
+                attrs.update(m["name"].split("."))
             prev = m["name"]
-    return module, defs
+    return module, defs, methods, attrs
 
 
 # An import statement; `names` is what follows `import`, up to the end of the
@@ -181,7 +215,7 @@ def _unreached(root: Path) -> list:
         froms, aliases, whole = _imports(src, mod, rel.stem == "__init__", modules)
         for name, key in froms.items():
             bodies[(mod, name)].append({key})
-        scanned[rel] = (mod, aliases, whole, *_scan(src))
+        scanned[rel] = (mod, aliases, whole, *_scan(src)[:2])
         names[mod] |= set(froms) | {name for name, _ in scanned[rel][-1]}
     reached, checked = set(), []
     for rel, (mod, aliases, whole, module, defs) in scanned.items():
@@ -216,6 +250,62 @@ def _unreached(root: Path) -> list:
             reached |= new
             frontier += new
     return [f"{rel} {key[1]}" for rel, key in checked if key not in reached]
+
+
+# A top-level class line and its bases, which may span lines.
+_CLASS = re.compile(r"^class (\w+)\(([^)]*)\)", re.M)
+
+
+def _unused_methods(root: Path) -> list:
+    """Methods of top-level htmlx/ classes whose name no code outside tests/
+    uses as an attribute or a string, and that override nothing in a base
+    class from outside the repository (whose own code calls them)."""
+    used, methods = set(), []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if rel.parts[0] == "htmlx" or rel.parts[0] in ROOT_DIRS or str(rel) in ROOT_FILES:
+            src = path.read_text(encoding="utf-8")
+            _, _, found, attrs = _scan(src)
+            used |= attrs
+            if rel.parts[0] == "htmlx" and found:
+                bases = _external_bases(src, _module_name(rel), rel.stem == "__init__")
+                methods += [(rel, cls, name, bases.get(cls, ())) for cls, name in found]
+    return [
+        f"{rel} {cls}.{name}"
+        for rel, cls, name, bases in methods
+        if not (name.startswith("__") and name.endswith("__"))
+        and name not in used
+        and not any(hasattr(base, name) for base in bases)
+    ]
+
+
+def _external_bases(src: str, mod: str, is_package: bool) -> dict:
+    """{class: base classes} for src's top-level classes, keeping only the
+    bases that src imports from outside the repository or that are
+    builtins."""
+    froms, aliases, _ = _imports(src, mod, is_package, set())
+    out = {}
+    for m in _CLASS.finditer(src):
+        bases = []
+        for base in filter(None, (b.strip() for b in m[2].split(","))):
+            head, _, rest = base.partition(".")
+            if head in froms:
+                source, attr = froms[head]
+                path = [source, attr, *filter(None, rest.split("."))]
+            elif head in aliases:
+                path = [aliases[head], *filter(None, rest.split("."))]
+            elif hasattr(builtins, head):
+                path = ["builtins", head]
+            else:
+                continue
+            if path[0].split(".")[0] in ("htmlx", *ROOT_DIRS):
+                continue
+            obj = importlib.import_module(path[0])
+            for attr in path[1:]:
+                obj = getattr(obj, attr)
+            bases.append(obj)
+        out[m[1]] = bases
+    return out
 
 
 # A top-level def or class line, with the decorators above it: the rule cuts
@@ -332,8 +422,16 @@ def test_every_defaulted_parameter_is_bound():
     )
 
 
+def test_every_method_is_used():
+    unused = _unused_methods(ROOT)
+    assert unused == [], (
+        f"{len(unused)} methods of top-level htmlx/ classes no code outside "
+        "tests/ names:\n" + "\n".join(unused)
+    )
+
+
 def test_scan_ignores_comments_docstrings_and_definitions():
-    module, defs = _scan(
+    module, defs, methods, attrs = _scan(
         '"""module doc names doc_word"""\n'
         "import helper_mod\n"
         "@decorate\n"
@@ -355,6 +453,8 @@ def test_scan_ignores_comments_docstrings_and_definitions():
     assert {"int", "BASE"} <= set(defs[4][1])
     assert {"helper_mod", "decorate", "exported", "LIMIT"} <= set(module)
     assert not {"doc_word", "Kls", "Other", "helper", "row", "BASE"} & set(module)
+    assert methods == [("Kls", "method")]
+    assert attrs == {"by_key", "row"}
 
 
 def test_reachability_is_transitive_and_ignores_tests(tmp_path):
@@ -418,6 +518,39 @@ def test_names_resolve_through_imports_not_method_names(tmp_path):
         "htmlx/c.py unused",
         "htmlx/d.py column",
     ]
+
+
+def test_method_rule_counts_attribute_and_string_uses_and_overrides(tmp_path):
+    files = {
+        "jobs/run.py": (
+            "from htmlx.a import Rec\n"
+            "Rec().used()\n"
+            "getattr(Rec(), 'by_string')\n"
+            "Rec().chained().via_call\n"
+        ),
+        "htmlx/a.py": (
+            "from html.parser import HTMLParser\n"
+            "class Parser(HTMLParser):\n"
+            "    def handle_decl(self, decl):\n        pass\n"
+            "    def helper(self):\n"
+            "        def nested(self):\n            pass\n"
+            "        return nested\n"
+            "class Rec:\n"
+            '    """def in_docstring(self): not a method"""\n'
+            "    def used(self):\n        return self\n"
+            "    def by_string(self): pass\n"
+            "    def chained(self): return self\n"
+            "    @property\n    def via_call(self): return 1\n"
+            "    def only_tests(self): pass\n"
+            "    def __repr__(self): return ''\n"
+            "def nested(): pass\n"
+        ),
+        "tests/test_a.py": "from htmlx.a import Rec\nRec().only_tests()\n",
+    }
+    for rel, src in files.items():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text(src)
+    assert _unused_methods(tmp_path) == ["htmlx/a.py Parser.helper", "htmlx/a.py Rec.only_tests"]
 
 
 def test_parameter_rule_reports_only_the_unbound_parameter(tmp_path):

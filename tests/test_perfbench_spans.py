@@ -73,3 +73,19 @@ def test_read_event_log_counters_per_span(tmp_path):
     assert untagged["executor_run_s"] == pytest.approx(0.25)
     assert untagged["executor_cpu_s"] == pytest.approx(0.1)
     assert "jobs" not in untagged
+
+
+def test_trace_core_attributes_every_core_layer():
+    """trace_core wraps each CORE_LAYERS name that htmlx.core.extract binds
+    (a renamed or dropped name raises here, as it would in every traced
+    run), gives every layer self time over the golden corpus and restores
+    the names afterwards."""
+    from htmlx.core import dom, extract
+    from htmlx.fixtures import corpus
+    from perfbench.spans import CORE_LAYERS, Tracer, trace_core
+
+    out = trace_core(Tracer(), [html for _, html in corpus()])
+    for layer in CORE_LAYERS:
+        assert out[f"core.{layer}.us_per_doc"] > 0, layer
+    assert out["core.extract.self_us_per_doc"] > 0
+    assert extract.parse is dom.parse

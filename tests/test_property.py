@@ -71,7 +71,19 @@ TAG_SOUP = st.lists(
          "<!doctype html>", "<?pi?>", "< notatag", "<table><tr><td>c", "</td></tr></table>",
          "<ul><li>i", "</ul>", "&unknown;", "&lt;", "\n  ", "<em>e</em>", "<SPAN ID=Q>",
          "</span>", "<input value=3>", "<sec-doc>", "</sec-doc>",
-         "<ix:nonnumeric>7</ix:nonnumeric>", "<title>T</title>", "<td colspan=2>"]
+         "<ix:nonnumeric>7</ix:nonnumeric>", "<title>T</title>", "<td colspan=2>",
+         # duplicate, uppercase and valueless attributes (first name wins)
+         "<a HREF=/a href=/b Href=/c>", "<span id=x ID=y hidden>", "<input disabled checked=c>",
+         # mis-nested and stray end tags
+         "<b><i></b></i>", "</b>", "<b>", "</i>",
+         # first newline after pre/textarea/listing
+         "<pre>\n", "</pre>", "<textarea>\nt", "</textarea>",
+         # text directly in table structure (foster-parented)
+         "<table>x", "<table><tr>y", "<tbody>z", "</tr>", "</table>",
+         # implied-end runs
+         "<dl><dt>a<dd>b<dt>c", "</dl>", "<select><option>1<option>2", "</select>",
+         # structure tags with attributes
+         "<html lang=en>", "<body class=b>", "<head id=h>", "</body>", "</html>"]
     ),
     max_size=30,
 )
@@ -85,7 +97,7 @@ def _tree_sig(node):
     while stack:
         n = stack.pop()
         if n.type == ELEMENT:
-            parts.append(("E", n.data, tuple(sorted(n.attrs))))
+            parts.append(("E", n.data, tuple(n.attrs)))  # in source order
         elif n.type == TEXT:
             parts.append(("T", n.data))
         elif n.type == COMMENT:

@@ -122,3 +122,30 @@ def test_e2e_sanitization_removes_script_content():
     r = Extractor().extract(b"<div>Visible<script>document.cookie</script> text</div>")
     assert "cookie" not in r.text
     assert "Visible" in r.text
+
+
+def test_ascii_uri_check_matches_normalizing_path():
+    # an ASCII URI skips NFC and the fullwidth mapping; a str whose
+    # isascii() says False takes that path with the same characters
+    from htmlx.core.sanitize import _is_safe_uri
+
+    class NotAscii(str):
+        def isascii(self):
+            return False
+
+    uris = [
+        "JavaScript:alert(1)", " //vbscript:msgbox(1)", "\x1fjavascript:alert(1)",
+        "//\tdata:text/html,x", "FILE:///etc/passwd", "data:text/html,<b>x</b>",
+        "data:image/png;base64,iVBORw0KGgo=", "data:image/svg+xml,<svg/>", "data:,",
+        "https://example.com/a?b=c", "/relative/path", "  mailto:a@b.c  ", "vbscript",
+    ]
+
+    def untimed(rec):
+        return [{k: v for k, v in e.items() if k != "ts"} for e in rec.events]
+
+    for uri in uris:
+        fast, slow = AuditRecorder(), AuditRecorder()
+        assert _is_safe_uri(uri, fast) == _is_safe_uri(NotAscii(uri), slow), uri
+        assert untimed(fast) == untimed(slow), uri
+    for uri in ("ｊａｖａｓｃｒｉｐｔ:alert(1)", "//ｖｂｓｃｒｉｐｔ:x", "ＦＩＬＥ:///x"):
+        assert not _is_safe_uri(uri, AuditRecorder()), uri

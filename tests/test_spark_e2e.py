@@ -141,14 +141,12 @@ def test_column_pruning_pushdown(spark, tmp_path_factory):
 
 def test_legacy_layout_rejected(spark, tmp_path_factory):
     """A table root written under the pre-run_id layout (data/group=<gid>)
-    must fail loudly on read/is_empty — not silently return zero rows while
+    must fail loudly on read — not silently return zero rows while
     the manifest still claims its groups committed."""
     import pytest
 
     root = str(tmp_path_factory.mktemp("htmlx_legacy"))
     out = ParquetTableIO(os.path.join(root, "results"))
     os.makedirs(os.path.join(out.data_dir, "group=0"))
-    with pytest.raises(RuntimeError, match="legacy table layout"):
-        out.is_empty()
     with pytest.raises(RuntimeError, match="legacy table layout"):
         out.read(spark)
