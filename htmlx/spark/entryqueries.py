@@ -1099,7 +1099,7 @@ rtok AS (SELECT doc_id, s.i - 1 AS pos, length(rt[s.i]) AS tok_len
 rtot AS (SELECT doc_id, sum(tok_len) AS total_chars FROM rtok GROUP BY doc_id),
 rgr AS (SELECT doc_id, nn.n AS n, s.i - 1 AS start,
                array_to_string(rt[s.i : s.i + nn.n - 1], ' ') AS gram
-        FROM r0, unnest([5,6,7,8,9,10]) AS nn(n),
+        FROM r0, unnest(__DUP_NS__) AS nn(n),
              unnest(generate_series(1, greatest(len(rt) - nn.n + 1, 0))) AS s(i)),
 rds AS (SELECT doc_id, n, start FROM
          (SELECT *, count(*) OVER (PARTITION BY doc_id, n, gram) AS cnt FROM rgr)
@@ -1109,12 +1109,7 @@ rcov AS (SELECT DISTINCT doc_id, n, p.pos
 rdch AS (SELECT doc_id, n, sum(tok_len) AS dup_chars
          FROM rcov JOIN rtok USING (doc_id, pos) GROUP BY doc_id, n),
 rpct AS (SELECT rtot.doc_id AS doc_id,
-         CAST(floor(coalesce(max(CASE WHEN rdch.n=5 THEN rdch.dup_chars END), 0) * 100 / greatest(rtot.total_chars, 1)) AS BIGINT) AS dup_5gram_char_pct,
-         CAST(floor(coalesce(max(CASE WHEN rdch.n=6 THEN rdch.dup_chars END), 0) * 100 / greatest(rtot.total_chars, 1)) AS BIGINT) AS dup_6gram_char_pct,
-         CAST(floor(coalesce(max(CASE WHEN rdch.n=7 THEN rdch.dup_chars END), 0) * 100 / greatest(rtot.total_chars, 1)) AS BIGINT) AS dup_7gram_char_pct,
-         CAST(floor(coalesce(max(CASE WHEN rdch.n=8 THEN rdch.dup_chars END), 0) * 100 / greatest(rtot.total_chars, 1)) AS BIGINT) AS dup_8gram_char_pct,
-         CAST(floor(coalesce(max(CASE WHEN rdch.n=9 THEN rdch.dup_chars END), 0) * 100 / greatest(rtot.total_chars, 1)) AS BIGINT) AS dup_9gram_char_pct,
-         CAST(floor(coalesce(max(CASE WHEN rdch.n=10 THEN rdch.dup_chars END), 0) * 100 / greatest(rtot.total_chars, 1)) AS BIGINT) AS dup_10gram_char_pct
+         __DUP_PCT_COLS__
          FROM rtot LEFT JOIN rdch ON rtot.doc_id = rdch.doc_id
          GROUP BY rtot.doc_id, rtot.total_chars),
 tri AS (
@@ -1177,16 +1172,13 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id,
        CAST(terminal_lines AS BIGINT) AS n_sentences,
        CAST(floor(keep_lines * 100 / n_lines) AS BIGINT) AS c4_keep_line_pct,
        (terminal_lines >= 5 AND NOT has_lorem AND NOT has_curly AND NOT has_js) AS c4_pass,
-       rpct.dup_5gram_char_pct, rpct.dup_6gram_char_pct, rpct.dup_7gram_char_pct,
-       rpct.dup_8gram_char_pct, rpct.dup_9gram_char_pct, rpct.dup_10gram_char_pct,
+       __DUP_PCT_SELECT__,
        ((n_words BETWEEN 50 AND 100000 AND mean_x10 BETWEEN 30 AND 100
          AND symbol_pct <= 10 AND alpha_pct >= 80 AND stop_hits >= 2
          AND bullet_pct <= 90 AND ellipsis_pct <= 30
          AND dup_line_pct <= 30 AND dup_line_char_pct <= 20
          AND top2a_pct <= 20 AND top3a_pct <= 18 AND top4a_pct <= 16)
-        AND rpct.dup_5gram_char_pct <= 15 AND rpct.dup_6gram_char_pct <= 14
-        AND rpct.dup_7gram_char_pct <= 13 AND rpct.dup_8gram_char_pct <= 12
-        AND rpct.dup_9gram_char_pct <= 11 AND rpct.dup_10gram_char_pct <= 10) AS gopher_pass_full,
+        AND __DUP_PCT_GATES__) AS gopher_pass_full,
        tb.tri_bits AS tri_bits
 FROM a5 JOIN rpct USING (doc_id) LEFT JOIN tb USING (doc_id)
      LEFT JOIN lma USING (doc_id)
@@ -1513,7 +1505,10 @@ def q_media_frame_features(spark, sf_dir):
         F.lit("features").alias("level"),
         F.col("media_id"),
         F.md5(
-            F.concat_ws("|", "payload_md5", "frame0", "frame1", "frame2", "frame3")
+            F.concat_ws(
+                "|", "payload_md5",
+                *(f"frame{i}" for i in range(multimodal.MEDIA_FRAMES)),
+            )
         ).alias("k"),
         F.col("byte_len").cast("long").alias("n1"),
         F.col("entropy_x1000").cast("long").alias("n2"),
@@ -1720,6 +1715,17 @@ def q_media_frame_features(spark, sf_dir):
     )
 
 
+# The features level's digest: md5 over payload_md5 and each sampled
+# frame's md5, '|'-joined (extract_media_features' frame offsets)
+_MEDIA_FRAME_MD5S = "".join(
+    f" || '|'\n      || md5(substr(h, 2 * (({i} * (byte_len - {multimodal.MEDIA_FRAME_LEN}))"
+    f" // {multimodal.MEDIA_FRAMES - 1}) + 1, {2 * multimodal.MEDIA_FRAME_LEN}))"
+    for i in range(multimodal.MEDIA_FRAMES)
+)
+# the imgtext level replays image_text_pairs' default caption gates; the
+# SQL compares one language, so the default must stay a single one
+(_CAPTION_LANG,) = multimodal.CAPTION_LANGS
+
 O_MEDIA_FRAME_FEATURES = f"""
 WITH p AS (SELECT doc_id, {_MEDIA_PAYLOAD_HEX} AS h FROM documents),
 b AS (SELECT doc_id, h, CAST(length(h) / 2 AS BIGINT) AS byte_len FROM p),
@@ -1745,26 +1751,22 @@ ilang AS (SELECT doc_id, pred_lang FROM (__IMGTEXT_LANG__)),
 ikeep AS (
   SELECT comp, min(c.doc_id) AS keeper
   FROM icaps c JOIN ilang l ON l.doc_id = c.doc_id
-  WHERE c.caption IS NOT NULL AND strlen(c.caption) >= 5
-        AND strlen(c.caption) <= 512 AND l.pred_lang = 'en'
+  WHERE c.caption IS NOT NULL AND strlen(c.caption) >= {multimodal.CAPTION_MIN_BYTES}
+        AND strlen(c.caption) <= {multimodal.CAPTION_MAX_BYTES} AND l.pred_lang = '{_CAPTION_LANG}'
   GROUP BY comp),
 irows AS (
   SELECT c.doc_id, c.caption, l.pred_lang, c.dh,
          CASE WHEN c.caption IS NULL THEN 'no_caption'
-              WHEN strlen(c.caption) < 5 THEN 'caption_too_short'
-              WHEN strlen(c.caption) > 512 THEN 'caption_too_long'
-              WHEN l.pred_lang <> 'en' THEN 'caption_lang'
+              WHEN strlen(c.caption) < {multimodal.CAPTION_MIN_BYTES} THEN 'caption_too_short'
+              WHEN strlen(c.caption) > {multimodal.CAPTION_MAX_BYTES} THEN 'caption_too_long'
+              WHEN l.pred_lang <> '{_CAPTION_LANG}' THEN 'caption_lang'
               WHEN c.doc_id <> k.keeper THEN 'near_dup_image'
               ELSE '' END AS reason
   FROM icaps c
   JOIN ilang l ON l.doc_id = c.doc_id
   JOIN ikeep k ON k.comp = c.comp)
 SELECT 'features' AS level, CAST(doc_id AS BIGINT) AS media_id,
-  md5(md5(h) || '|'
-      || md5(substr(h, 2 * ((0 * (byte_len - {multimodal.MEDIA_FRAME_LEN})) // 3) + 1, {2 * multimodal.MEDIA_FRAME_LEN})) || '|'
-      || md5(substr(h, 2 * ((1 * (byte_len - {multimodal.MEDIA_FRAME_LEN})) // 3) + 1, {2 * multimodal.MEDIA_FRAME_LEN})) || '|'
-      || md5(substr(h, 2 * ((2 * (byte_len - {multimodal.MEDIA_FRAME_LEN})) // 3) + 1, {2 * multimodal.MEDIA_FRAME_LEN})) || '|'
-      || md5(substr(h, 2 * ((3 * (byte_len - {multimodal.MEDIA_FRAME_LEN})) // 3) + 1, {2 * multimodal.MEDIA_FRAME_LEN}))) AS k,
+  md5(md5(h){_MEDIA_FRAME_MD5S}) AS k,
   byte_len AS n1,
   CAST(floor(1000 * list_sum(list_transform(
         map_values(list_aggregate(pairs, 'histogram')),
@@ -4068,12 +4070,35 @@ def _lang_id_oracle() -> str:
     )
 
 
+def _sql_lines(items, per_line: int, sep: str, joiner: str) -> str:
+    """items joined by `sep`, `per_line` to a line, the lines by `joiner`."""
+    return joiner.join(
+        sep.join(items[i : i + per_line]) for i in range(0, len(items), per_line)
+    )
+
+
+_DUP_PCT = [f"dup_{n}gram_char_pct" for n in analytics.DUP_NGRAM_NS]
+
 # Splice the GENERATED per-line classifier into the quality oracle's
 # lang-mix CTEs (O_QUALITY_SCORES is defined before _lang_pred_sql;
 # token replacement keeps the SQL literal free of brace-format hazards
-# — the quality SQL contains '{code}' and struct literals)
+# — the quality SQL contains '{code}' and struct literals), and its
+# dup_<n>gram_char_pct columns and gates from the operator's n-gram
+# sizes and Gopher thresholds
 O_QUALITY_SCORES = (
     O_QUALITY_SCORES
+    .replace("__DUP_NS__", "[" + ",".join(map(str, analytics.DUP_NGRAM_NS)) + "]")
+    .replace("__DUP_PCT_COLS__", _sql_lines(
+        [f"CAST(floor(coalesce(max(CASE WHEN rdch.n={n} THEN rdch.dup_chars END), 0)"
+         f" * 100 / greatest(rtot.total_chars, 1)) AS BIGINT) AS {c}"
+         for n, c in zip(analytics.DUP_NGRAM_NS, _DUP_PCT)],
+        1, "", ",\n         "))
+    .replace("__DUP_PCT_SELECT__", _sql_lines(
+        [f"rpct.{c}" for c in _DUP_PCT], 3, ", ", ",\n       "))
+    .replace("__DUP_PCT_GATES__", _sql_lines(
+        [f"rpct.{c} <= {analytics.GOPHER_DUP_NGRAM_THRESHOLDS[n]}"
+         for n, c in zip(analytics.DUP_NGRAM_NS, _DUP_PCT)],
+        2, " AND ", "\n        AND "))
     .replace("__LANGMIX_PRED__", _lang_pred_sql("lml", "doc_id, line_no"))
     .replace("__LMFR__", _LANGMIX_FR)
     .replace("__LMDE__", _LANGMIX_DE)

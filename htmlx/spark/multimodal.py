@@ -781,11 +781,18 @@ def extract_media_metadata(media: DataFrame) -> DataFrame:
     return media.mapInPandas(meta_batch, MEDIA_META_SCHEMA)
 
 
+#: Frames sampled per payload and bytes per frame (N and frame_len
+#: below); the DuckDB oracle (entryqueries.O_MEDIA_FRAME_FEATURES) reads
+#: both too.
+MEDIA_FRAMES = 4
+MEDIA_FRAME_LEN = 16
+
+
 # Byte-level feature spec (engine-defined, codec-free, cross-engine
 # verifiable on the lowercase-hex basis):
 #   hexstr        = lower(hex(payload))
 #   payload_md5   = md5(hexstr)
-#   frame i of N = 4 (frame_len = MEDIA_FRAME_LEN bytes):
+#   frame i of N = MEDIA_FRAMES (frame_len = MEDIA_FRAME_LEN bytes):
 #                   off_i = (i * (byte_len - frame_len)) // (N - 1)
 #                   frame_hash_i = md5(substr(hexstr, 2*off_i + 1, 2*frame_len));
 #                   byte_len <= frame_len -> every frame hash = md5(hexstr)
@@ -800,17 +807,9 @@ MEDIA_FEATURES_SCHEMA = StructType(
         StructField("byte_len", LongType()),
         StructField("payload_md5", StringType()),
         StructField("entropy_x1000", LongType()),
-        StructField("frame0", StringType()),
-        StructField("frame1", StringType()),
-        StructField("frame2", StringType()),
-        StructField("frame3", StringType()),
+        *(StructField(f"frame{i}", StringType()) for i in range(MEDIA_FRAMES)),
     ]
 )
-
-
-#: Bytes per sampled frame (frame_len above); the DuckDB oracle
-#: (entryqueries.O_MEDIA_FRAME_FEATURES) reads it too.
-MEDIA_FRAME_LEN = 16
 
 
 def extract_media_features(media: DataFrame) -> DataFrame:
@@ -837,11 +836,11 @@ def extract_media_features(media: DataFrame) -> DataFrame:
                         p = c / n
                         ent += -p * math.log2(p)
                 frames = []
-                for i in range(4):
+                for i in range(MEDIA_FRAMES):
                     if n <= MEDIA_FRAME_LEN:
                         frames.append(hashlib.md5(hx).hexdigest())
                     else:
-                        off = (i * (n - MEDIA_FRAME_LEN)) // 3
+                        off = (i * (n - MEDIA_FRAME_LEN)) // (MEDIA_FRAMES - 1)
                         frames.append(
                             hashlib.md5(hx[2 * off : 2 * (off + MEDIA_FRAME_LEN)]).hexdigest()
                         )
@@ -851,10 +850,7 @@ def extract_media_features(media: DataFrame) -> DataFrame:
                         "byte_len": n,
                         "payload_md5": hashlib.md5(hx).hexdigest(),
                         "entropy_x1000": math.floor(1000 * ent),
-                        "frame0": frames[0],
-                        "frame1": frames[1],
-                        "frame2": frames[2],
-                        "frame3": frames[3],
+                        **{f"frame{i}": f for i, f in enumerate(frames)},
                     }
                 )
             yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_FEATURES_SCHEMA.fields])
@@ -1110,14 +1106,21 @@ def perceptual_keepers(pool: DataFrame, hash_col: str, max_hamming: int) -> Data
 #: image_text_pairs drops images narrower or shorter than this many pixels.
 IMAGE_MIN_DIM = 8
 
+#: image_text_pairs' default caption gates: the UTF-8 byte floor and cap,
+#: and the caption languages kept. jobs/curate.py's imgtext defaults and
+#: the DuckDB oracle (entryqueries.O_MEDIA_FRAME_FEATURES) read them too.
+CAPTION_MIN_BYTES = 5
+CAPTION_MAX_BYTES = 512
+CAPTION_LANGS = ("en",)
+
 
 def image_text_pairs(
     images: DataFrame,
     media: DataFrame | None = None,
-    min_caption_bytes: int = 5,
-    max_caption_bytes: int = 512,
+    min_caption_bytes: int = CAPTION_MIN_BYTES,
+    max_caption_bytes: int = CAPTION_MAX_BYTES,
     max_hamming: int = 3,
-    allow_langs: tuple = ("en",),
+    allow_langs: tuple = CAPTION_LANGS,
     pix: DataFrame | None = None,
 ) -> DataFrame:
     """(image, caption, quality) training-pair construction — the step

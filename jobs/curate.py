@@ -2,10 +2,11 @@
 
   spark-submit --py-files htmlx.zip jobs/curate.py \
       --input <documents table/parquet path> --output <keep-list root> \
-      [--mode filter|dedup|components|split|decontaminate|pii|pack|quality|paradedup|exactdedup|spandedup|pipeline] \
-      [--threshold 0.9] [--hash-basis xxhash64] \
-      [--eval-input <eval parquet>] [--seq-len 2048] \
-      [--keep-by <col>] [--keep-desc] [--quality-rule gopher|c4|both|none]
+      [--mode <a mode below, the keys of MODES; default filter>] [see --help]
+
+A mode that needs a second input (decontaminate --eval-input, bpeencode
+--bpe-model, imgtext --media-input, snapdiff --old-input, robotsfilter
+--robots) exits with a usage error before Spark starts without it.
 
 Modes:
   filter      full keep/drop decision per document with a precedence-
@@ -15,9 +16,8 @@ Modes:
               analytics.corpus_filter under the (--hash-basis, 1024-doc
               LSH bucket cap, --threshold) policy.
   dedup       near-dup keep-list only (LSH -> exact-Jaccard verify ->
-              connected components).
-  components  same as dedup but expects a precomputed pairs table at
-              --pairs (doc_a, doc_b).
+              connected components); with --pairs, a precomputed
+              (doc_a, doc_b) pairs table replaces LSH + verify.
   split       deterministic train/val/test assignment by md5 id buckets
               (reproducible across engines and cluster sizes).
   decontaminate  flag docs sharing any 13-gram with the eval set at
@@ -153,7 +153,7 @@ that ordering column instead (e.g. a crawl timestamp or quality score) and
 --keep-desc keeps the highest value (newest/best). doc_id always breaks
 ties deterministically.
 
-Label propagation (dedup / components / filter / pipeline near_dedup)
+Label propagation (dedup / filter / pipeline near_dedup)
 always iterates to convergence (one scalar count() per two rounds).
 """
 
@@ -161,12 +161,14 @@ import argparse
 import json
 import os
 import sys
+from functools import partial
+from typing import Callable, NamedTuple
 
+from pyspark.sql import SparkSession, functions as F
 
-PIPELINE_STAGES = (
-    "urlfilter", "quality", "exact_dedup", "near_dedup", "decontaminate",
-    "tempsample", "split", "pack",
-)
+from htmlx.spark import analytics, multimodal
+from htmlx.spark.robotstxt import robots_filter, robots_table_from_pages
+from htmlx.spark.warc import read_wet
 
 
 def _bpe_token_counts(spark, docs, args):
@@ -174,19 +176,17 @@ def _bpe_token_counts(spark, docs, args):
     no BPE flag is set (pack then bins on the whitespace proxy). The
     replace-chain encoder is the right plan for model-artifact-sized
     merge lists; past 64 merges the cached mapInPandas encoder wins."""
-    from htmlx.spark import analytics
-
-    byte_level = bool(getattr(args, "bpe_byte_level", False))
+    byte_level = args.bpe_byte_level
     merges = None
-    if getattr(args, "bpe_model", None):
+    if args.bpe_model:
         merges, alphabet = analytics.load_bpe_model(spark, args.bpe_model)
         if alphabet is not None:
             byte_level = list(alphabet) == analytics.bpe_byte_alphabet()
-    elif getattr(args, "bpe_train", 0):
+    elif args.bpe_train:
         merges, alphabet = analytics.train_bpe_full(
             docs, num_merges=args.bpe_train, byte_level=byte_level
         )
-        if getattr(args, "bpe_model_out", None):
+        if args.bpe_model_out:
             analytics.save_bpe_model(spark, args.bpe_model_out, merges, alphabet)
     if not merges:
         return None
@@ -199,15 +199,33 @@ def _bpe_token_counts(spark, docs, args):
 def verified_pairs(docs, args):
     """(doc_a, doc_b) near-dup pairs: MinHash-LSH candidates under
     --hash-basis, verified by exact shingle Jaccard >= --threshold."""
-    from pyspark.sql import functions as F
-
-    from htmlx.spark import analytics
-
     cands = analytics.minhash_lsh_candidates(docs, hash_basis=args.hash_basis)
     return (
         analytics.ngram_jaccard_pairs(docs, cands)
         .where(F.col("jaccard") >= args.threshold)
         .select("doc_a", "doc_b")
+    )
+
+
+def read_blocklist(spark, path):
+    """The (host) blocklist in the text file at `path`, one host per line,
+    blank lines and '#' comments skipped; empty when there is no path."""
+    if not path:
+        return spark.createDataFrame([], "host string")
+    return (
+        spark.read.text(path)
+        .select(F.trim("value").alias("host"))
+        .where((F.col("host") != "") & ~F.col("host").startswith("#"))
+    )
+
+
+def _with_cleaned_text(df, override):
+    """df with `text` replaced by override's (doc_id, cleaned_text) where
+    override has a row for the doc."""
+    return (
+        df.join(override, "doc_id", "left")
+        .withColumn("text", F.coalesce("cleaned_text", "text"))
+        .drop("cleaned_text")
     )
 
 
@@ -224,10 +242,6 @@ def run_pipeline(spark, docs, args) -> dict:
     contract): a crash leaves the running stage uncommitted and a re-run
     with the same --output resumes after the last completed stage.
     Per-stage in/dropped/out counts land in <output>/audit.parquet."""
-    from pyspark.sql import functions as F
-
-    from htmlx.spark import analytics
-
     root = args.output
     os.makedirs(root, exist_ok=True)
     mpath = os.path.join(root, "_pipeline_manifest.json")
@@ -285,12 +299,9 @@ def run_pipeline(spark, docs, args) -> dict:
     # policy included, since robots_table_from_pages carries the capture
     # status through.
     derive_robots = (
-        getattr(args, "robots_from_pages", False)
-        and not getattr(args, "robots", None)
-        and "html" in docs.columns
+        args.robots_from_pages and not args.robots and "html" in docs.columns
     )
-    if (getattr(args, "robots", None) or derive_robots) and "url" in docs.columns:
-        from htmlx.spark.robotstxt import robots_filter, robots_table_from_pages
+    if (args.robots or derive_robots) and "url" in docs.columns:
 
         def robots_keep():
             if derive_robots:
@@ -317,7 +328,7 @@ def run_pipeline(spark, docs, args) -> dict:
                 robots_filter(
                     cur,
                     rb,
-                    user_agent=getattr(args, "user_agent", "*"),
+                    user_agent=args.user_agent,
                     status_col="status" if derive_robots else None,
                 )
                 .where("robots_allowed")
@@ -331,17 +342,9 @@ def run_pipeline(spark, docs, args) -> dict:
     # URL filtering runs next (still no text scan) when the corpus
     # carries a url column — the cheapest drops a crawl pipeline makes.
     if "url" in docs.columns:
-        blpath = getattr(args, "blocklist", None)
 
         def url_keep():
-            if blpath:
-                bl = (
-                    spark.read.text(blpath)
-                    .select(F.trim("value").alias("host"))
-                    .where((F.col("host") != "") & ~F.col("host").startswith("#"))
-                )
-            else:
-                bl = spark.createDataFrame([], "host string")
+            bl = read_blocklist(spark, args.blocklist)
             return analytics.url_filter(cur, bl).where("keep").select("doc_id")
 
         keep, n_cur = stage("urlfilter", url_keep, n_cur)
@@ -355,14 +358,14 @@ def run_pipeline(spark, docs, args) -> dict:
     # untouched docs keep flowing from the immutable table), and the
     # override is folded into `base` so every later survivors() join
     # sees the cleaned text too.
-    if getattr(args, "hosttmpl", False) and "url" in docs.columns:
+    if args.hosttmpl and "url" in docs.columns:
 
         def tmpl_build():
             return (
                 analytics.host_template_lines(
                     cur,
-                    min_docs=getattr(args, "tmpl_min_docs", 3),
-                    min_frac=getattr(args, "tmpl_min_frac", 0.5),
+                    min_docs=args.tmpl_min_docs,
+                    min_frac=args.tmpl_min_frac,
                 )
                 .where(F.col("n_removed") > 0)
                 .select("doc_id", "cleaned_text", "n_removed")
@@ -370,16 +373,8 @@ def run_pipeline(spark, docs, args) -> dict:
 
         ov, n_cur = stage("hosttmpl", tmpl_build, n_cur, annotation=True)
         override = ov.select("doc_id", "cleaned_text")
-
-        def _apply_override(df):
-            return (
-                df.join(override, "doc_id", "left")
-                .withColumn("text", F.coalesce("cleaned_text", "text"))
-                .drop("cleaned_text")
-            )
-
-        base = _apply_override(base)
-        cur = _apply_override(cur)
+        base = _with_cleaned_text(base, override)
+        cur = _with_cleaned_text(cur, override)
         executed.append("hosttmpl")
 
     if args.quality_rule != "none":
@@ -420,32 +415,24 @@ def run_pipeline(spark, docs, args) -> dict:
     # stage like hosttmpl: rewrites text, drops nothing; the thin
     # (doc_id, cleaned_text) override folds into base so every later
     # stage and the final output see the span-deduped text.
-    if getattr(args, "spandedup_stage", False):
+    if args.spandedup_stage:
 
         def span_build():
             return (
                 analytics.dedup_spans(
                     cur,
-                    w=getattr(args, "span_window", 15),
+                    w=args.span_window,
                     hash_basis=args.hash_basis,
-                    max_occurrences=getattr(args, "span_max_occurrences", None),
+                    max_occurrences=args.span_max_occurrences,
                 )
                 .where(F.col("tokens_removed") > 0)
                 .select("doc_id", "cleaned_text", "tokens_removed")
             )
 
         ov, n_cur = stage("spandedup", span_build, n_cur, annotation=True)
-        span_override = ov.select("doc_id", "cleaned_text")
-
-        def _apply_span(df):
-            return (
-                df.join(span_override, "doc_id", "left")
-                .withColumn("text", F.coalesce("cleaned_text", "text"))
-                .drop("cleaned_text")
-            )
-
-        base = _apply_span(base)
-        cur = _apply_span(cur)
+        override = ov.select("doc_id", "cleaned_text")
+        base = _with_cleaned_text(base, override)
+        cur = _with_cleaned_text(cur, override)
         executed.append("spandedup")
 
     if args.eval_input:
@@ -462,14 +449,14 @@ def run_pipeline(spark, docs, args) -> dict:
 
     # mixture rebalancing AFTER cleaning/dedup (rates derive from the
     # cleaned counts) and BEFORE the split, opt-in via --temp
-    if getattr(args, "temp", False):
+    if args.temp:
         keep, n_cur = stage(
             "tempsample",
             lambda: analytics.temperature_sample(
                 cur,
-                group_col=getattr(args, "group_col", "source"),
-                alpha=getattr(args, "alpha", 0.7),
-                target_frac=getattr(args, "target_frac", None),
+                group_col=args.group_col,
+                alpha=args.alpha,
+                target_frac=args.target_frac,
             )
             .where("sample_keep")
             .select("doc_id"),
@@ -491,7 +478,7 @@ def run_pipeline(spark, docs, args) -> dict:
             seq_len=args.seq_len,
             num_buckets=args.pack_buckets,
             counts=_bpe_token_counts(spark, train, args),
-            eod_tokens=getattr(args, "eod_tokens", 0),
+            eod_tokens=args.eod_tokens,
         ),
         n_cur,
     )
@@ -504,14 +491,12 @@ def run_pipeline(spark, docs, args) -> dict:
             (i, name, info["docs_in"], info["docs_in"] - info["docs_out"],
              info["docs_out"], None)
         )
-    if getattr(args, "wet_ab", None):
+    if args.wet_ab:
         # extraction-quality drift monitored WHERE curation runs: compare
         # the input corpus text against the crawl's published WET text
         # and land the coverage/F1 report row in the same audit table the
         # stage drops use (full one-row report parquet alongside).
         # docs_in = urls compared, docs_out = urls present on both sides.
-        from htmlx.spark.warc import read_wet
-
         if "url" not in docs.columns:
             raise ValueError("--wet-ab needs a url column on the input table")
         rep = analytics.wet_ab_report(
@@ -542,29 +527,263 @@ def run_pipeline(spark, docs, args) -> dict:
     return manifest
 
 
-def main():
+def _dedup(spark, docs, args):
+    pairs = (
+        spark.read.parquet(args.pairs) if args.pairs else verified_pairs(docs, args)
+    )
+    return analytics.near_dup_components(docs, pairs)
+
+
+def _bpetrain(spark, docs, args):
+    merges, alphabet = analytics.train_bpe_full(
+        docs, num_merges=args.bpe_train or 1000, byte_level=args.bpe_byte_level,
+    )
+    if args.bpe_model_out:
+        analytics.save_bpe_model(spark, args.bpe_model_out, merges, alphabet)
+    return analytics.bpe_merges_df(spark, merges)
+
+
+def _bpeencode(spark, docs, args):
+    # exact token-ID sequences (what a training run consumes) under a
+    # persisted model; requires the full model layout (alphabet too)
+    merges, alphabet = analytics.load_bpe_model(spark, args.bpe_model)
+    if alphabet is None:
+        raise ValueError("--mode bpeencode needs a full model dir "
+                         "(merges.parquet + alphabet.parquet; see bpetrain)")
+    return analytics.bpe_encode_ids(docs, merges, alphabet)
+
+
+def _imgtext(spark, images, args):
+    # (image, caption, quality) training-pair construction: --input is
+    # the exploded images table (page_id, media_id, src, alt, title),
+    # --media-input the fetched (media_id, payload) bytes
+    media = spark.read.parquet(args.media_input)
+    out = multimodal.image_text_pairs(
+        images,
+        media,
+        min_caption_bytes=args.min_caption_bytes,
+        max_caption_bytes=args.max_caption_bytes,
+        max_hamming=args.hamming,
+        allow_langs=tuple(args.allow_langs.split(",")),
+    )
+    if not args.emit_pairs:
+        return out
+    # materialize the training dataset FROM THE WRITTEN OUTPUT: building
+    # it from `out` would re-execute the decode + dedup pipeline a second
+    # time (the wet-ab write-twice class). Write the annotation table
+    # once, read it back for the kept rows and join payloads once.
+    out.write.mode("overwrite").parquet(args.output)
+    kept = spark.read.parquet(args.output).where("keep")
+    (kept.select("page_id", "media_id", "src", "caption",
+                 "caption_lang", "width", "height")
+         .join(media, "media_id")
+         .write.mode("overwrite")
+         .parquet(args.emit_pairs))
+    print(f"mode=imgtext rows={spark.read.parquet(args.output).count()} -> "
+          f"{args.output} (+pairs -> {args.emit_pairs})")
+    return None
+
+
+def _paradedup(spark, docs, args):
+    extra = (args.keep_by,) if args.keep_by else ()
+    return analytics.dedup_paragraphs(
+        analytics.split_paragraphs(docs, extra_cols=extra),
+        keep_by=args.keep_by, descending=args.keep_desc, normalize=args.normalize,
+    )
+
+
+def _payloads(media):
+    """The (media_id, payload) columns of a media table; a doc_id column
+    stands in for a missing media_id."""
+    if "media_id" not in media.columns and "doc_id" in media.columns:
+        media = media.withColumnRenamed("doc_id", "media_id")
+    return media.select("media_id", "payload")
+
+
+def _perceptual_dedup(hcol, spark, hashes, args):
+    """Keepers over the decoded (media_id, <hcol>, error) frame, which
+    feeds the representative groupBy, the keeper join and the error
+    passthrough; undecodable rows pass through with their error."""
+    ok = hashes.where(F.col("error") == "")
+    keepers = multimodal.perceptual_keepers(
+        ok.select("media_id", hcol), hcol, args.hamming
+    )
+    resolved = ok.join(keepers, hcol).select(
+        "media_id", hcol, "keep_media_id",
+        (F.col("media_id") != F.col("keep_media_id")).alias("is_dup"),
+        F.lit("").alias("error"),
+    )
+    failed = hashes.where(F.col("error") != "").select(
+        "media_id", hcol,
+        F.col("media_id").alias("keep_media_id"),
+        F.lit(False).alias("is_dup"), "error",
+    )
+    return resolved.unionByName(failed)
+
+
+def _embdedup(spark, docs, args):
+    # exact block-pair BLAS by default, --emb-approx switches to the
+    # IVF-bucketed path (~num_centroids x less pair work, recall measured
+    # in test_ann.py). Same components machinery as every other near-dup
+    # family.
+    if args.emb_approx:
+        raw_pairs = analytics.embedding_near_dup_ivf(
+            docs, threshold=args.threshold, num_centroids=args.emb_centroids,
+        )
+    else:
+        raw_pairs = analytics.embedding_near_dup(docs, threshold=args.threshold)
+    pairs = raw_pairs.select(
+        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
+    )
+    comp = analytics.near_dup_components(
+        docs.select(F.col("vec_id").cast("long").alias("doc_id")), pairs
+    )
+    return comp.select(
+        F.col("doc_id").alias("vec_id"),
+        F.col("keep_doc_id").alias("keep_vec_id"),
+        "is_dup",
+    )
+
+
+def _perplexity(spark, docs, args):
+    # train-once / score-many (the CCNet shape): --perplexity-model scores
+    # against a saved reference model; --perplexity-model-out additionally
+    # persists the model trained on THIS corpus
+    model = (
+        spark.read.parquet(args.perplexity_model) if args.perplexity_model else None
+    )
+    if args.perplexity_model_out:
+        analytics.train_char_trigram(docs).write.mode("overwrite").parquet(
+            args.perplexity_model_out
+        )
+        if model is None:
+            model = spark.read.parquet(args.perplexity_model_out)
+    return analytics.char_trigram_perplexity(docs, model=model)
+
+
+def _pipeline(spark, docs, args):
+    manifest = run_pipeline(spark, docs, args)
+    done = ", ".join(f"{s}:{v['docs_out']}" for s, v in manifest["completed"].items())
+    print(f"mode=pipeline in={manifest['n_input']} {done} -> {args.output}")
+    return None
+
+
+class Mode(NamedTuple):
+    """One --mode. build(spark, docs, args) returns the frame main writes
+    to --output, or None when the mode wrote --output itself. `needs`
+    names the option (its argparse dest) the mode cannot run without;
+    main rejects a missing one before it starts Spark. `held` builds,
+    from the input, a frame the write reads more than once: main
+    persists it, hands it to build in place of the input, and releases
+    it after the write."""
+
+    build: Callable
+    needs: str | None = None
+    held: Callable | None = None
+
+
+MODES = {
+    "filter": Mode(lambda spark, docs, args: analytics.corpus_filter(
+        docs, {"production": (args.hash_basis, analytics.LSH_MAX_BUCKET)},
+        args.threshold,
+    ).drop("variant")),
+    "dedup": Mode(_dedup),
+    "split": Mode(lambda spark, docs, args: analytics.hash_split(docs)),
+    "decontaminate": Mode(
+        lambda spark, docs, args: analytics.decontaminate(
+            docs, spark.read.parquet(args.eval_input), hash_basis=args.hash_basis
+        ),
+        needs="eval_input",
+    ),
+    "pii": Mode(lambda spark, docs, args: analytics.pii_scrub(docs)),
+    "pack": Mode(lambda spark, docs, args: analytics.pack_sequences(
+        docs,
+        seq_len=args.seq_len,
+        num_buckets=args.pack_buckets,
+        counts=_bpe_token_counts(spark, docs, args),
+        eod_tokens=args.eod_tokens,
+    )),
+    "bpetrain": Mode(_bpetrain),
+    "bpeencode": Mode(_bpeencode, needs="bpe_model"),
+    "imgtext": Mode(_imgtext, needs="media_input"),
+    "quality": Mode(lambda spark, docs, args: analytics.c4_gopher_quality(docs)),
+    "spandedup": Mode(lambda spark, docs, args: analytics.dedup_spans(
+        docs, w=args.span_window, hash_basis=args.hash_basis,
+        max_occurrences=args.span_max_occurrences,
+    )),
+    "paradedup": Mode(_paradedup),
+    "exactdedup": Mode(lambda spark, docs, args: analytics.dedup_exact(
+        docs, keep_by=args.keep_by, descending=args.keep_desc,
+        normalize=args.normalize,
+    )),
+    # the decode is read three times by the write: decode each payload once
+    "imagededup": Mode(
+        partial(_perceptual_dedup, "dhash"),
+        held=lambda media: multimodal.extract_image_dhash(_payloads(media)),
+    ),
+    "embdedup": Mode(_embdedup),
+    "audiodedup": Mode(
+        partial(_perceptual_dedup, "ehash"),
+        held=lambda media: multimodal.extract_audio_ehash(_payloads(media)),
+    ),
+    "tempsample": Mode(lambda spark, docs, args: analytics.temperature_sample(
+        docs, group_col=args.group_col, alpha=args.alpha,
+        target_frac=args.target_frac,
+    )),
+    "hostrank": Mode(lambda spark, docs, args: analytics.host_rank(
+        docs, damping=args.damping, iters=args.rank_iters,
+        weight_col="weight" if "weight" in docs.columns else None,
+    )),
+    "anchorstats": Mode(lambda spark, docs, args: analytics.anchor_text_agg(
+        docs, cross_host_only=not args.intra_host
+    )),
+    "hosttmpl": Mode(lambda spark, docs, args: analytics.host_template_lines(
+        docs, min_docs=args.tmpl_min_docs, min_frac=args.tmpl_min_frac
+    )),
+    "snapdiff": Mode(
+        lambda spark, docs, args: analytics.snapshot_diff(
+            spark.read.parquet(args.old_input), docs
+        ),
+        needs="old_input",
+    ),
+    "linkgraph": Mode(lambda spark, docs, args: analytics.link_graph(
+        docs, cross_host_only=not args.intra_host
+    )),
+    "langmix": Mode(lambda spark, docs, args: analytics.lang_mix_docs(
+        docs, min_line_chars=args.min_line_chars
+    )),
+    "perplexity": Mode(_perplexity),
+    "robotsfilter": Mode(
+        lambda spark, docs, args: robots_filter(
+            docs, spark.read.parquet(args.robots), user_agent=args.user_agent
+        ),
+        needs="robots",
+    ),
+    "metarobots": Mode(lambda spark, docs, args: analytics.meta_robots(docs)),
+    "urlfilter": Mode(lambda spark, docs, args: analytics.url_filter(
+        docs, read_blocklist(spark, args.blocklist)
+    )),
+    "pipeline": Mode(_pipeline),
+}
+
+
+def parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--pairs", default=None, help="precomputed pairs table (components mode)")
-    ap.add_argument(
-        "--mode",
-        choices=["filter", "dedup", "components", "split", "decontaminate",
-                 "pii", "pack", "quality", "paradedup", "exactdedup", "spandedup",
-                 "embdedup", "langmix",
-                 "urlfilter", "hostrank", "anchorstats", "hosttmpl",
-                 "snapdiff", "metarobots", "robotsfilter", "linkgraph",
-                 "perplexity", "tempsample", "imagededup", "audiodedup",
-                 "bpetrain", "bpeencode", "imgtext", "pipeline"],
-        default="filter",
-    )
+    ap.add_argument("--pairs", default=None,
+                    help="precomputed (doc_a, doc_b) pairs table (dedup mode; "
+                         "default: LSH candidates + exact-Jaccard verify)")
+    ap.add_argument("--mode", choices=list(MODES), default="filter")
     ap.add_argument("--media-input", default=None,
                     help="(media_id, payload) parquet (imgtext mode)")
-    ap.add_argument("--min-caption-bytes", type=int, default=5,
+    ap.add_argument("--min-caption-bytes", type=int,
+                    default=multimodal.CAPTION_MIN_BYTES,
                     help="UTF-8 byte floor for captions (imgtext mode)")
-    ap.add_argument("--max-caption-bytes", type=int, default=512,
+    ap.add_argument("--max-caption-bytes", type=int,
+                    default=multimodal.CAPTION_MAX_BYTES,
                     help="UTF-8 byte cap for captions (imgtext mode)")
-    ap.add_argument("--allow-langs", default="en",
+    ap.add_argument("--allow-langs", default=",".join(multimodal.CAPTION_LANGS),
                     help="comma-separated caption languages to keep (imgtext mode)")
     ap.add_argument("--emit-pairs", default=None,
                     help="imgtext mode: also write the KEPT (caption, payload) "
@@ -671,242 +890,23 @@ def main():
                     help="keep the HIGHEST --keep-by value (newest/best)")
     ap.add_argument("--quality-rule", choices=["gopher", "c4", "both", "none"],
                     default="gopher", help="pipeline-mode quality gate")
-    args = ap.parse_args()
-    if args.mode == "components" and not args.pairs:
-        ap.error("--mode components requires --pairs")
-    if args.mode == "decontaminate" and not args.eval_input:
-        ap.error("--mode decontaminate requires --eval-input")
+    return ap
 
-    from pyspark.sql import SparkSession, functions as F
 
-    from htmlx.spark import analytics
+def main(argv=None):
+    ap = parser()
+    args = ap.parse_args(argv)
+    mode = MODES[args.mode]
+    if mode.needs and vars(args)[mode.needs] is None:
+        ap.error(f"--mode {args.mode} requires --{mode.needs.replace('_', '-')}")
 
     spark = SparkSession.builder.appName("htmlx-curate").getOrCreate()
     docs = spark.read.parquet(args.input)
-    # a frame the output write reads more than once: persisted for that
-    # write and released right after it
-    held = None
-
-    if args.mode == "pipeline":
-        manifest = run_pipeline(spark, docs, args)
-        done = ", ".join(
-            f"{s}:{v['docs_out']}" for s, v in manifest["completed"].items()
-        )
-        print(f"mode=pipeline in={manifest['n_input']} {done} -> {args.output}")
-        return
-    if args.mode == "quality":
-        out = analytics.c4_gopher_quality(docs)
-    elif args.mode == "langmix":
-        out = analytics.lang_mix_docs(
-            docs, min_line_chars=getattr(args, "min_line_chars", 20)
-        )
-    elif args.mode == "perplexity":
-        # train-once / score-many (the CCNet shape): --perplexity-model
-        # scores against a saved reference model; --perplexity-model-out
-        # additionally persists the model trained on THIS corpus
-        model = (
-            spark.read.parquet(args.perplexity_model)
-            if getattr(args, "perplexity_model", None)
-            else None
-        )
-        if getattr(args, "perplexity_model_out", None):
-            trained = analytics.train_char_trigram(docs)
-            trained.write.mode("overwrite").parquet(args.perplexity_model_out)
-            if model is None:
-                model = spark.read.parquet(args.perplexity_model_out)
-        out = analytics.char_trigram_perplexity(docs, model=model)
-    elif args.mode == "exactdedup":
-        out = analytics.dedup_exact(
-            docs, keep_by=args.keep_by, descending=args.keep_desc,
-            normalize=args.normalize,
-        )
-    elif args.mode == "spandedup":
-        out = analytics.dedup_spans(
-            docs, w=args.span_window, hash_basis=args.hash_basis,
-            max_occurrences=args.span_max_occurrences,
-        )
-    elif args.mode == "paradedup":
-        extra = (args.keep_by,) if args.keep_by else ()
-        out = analytics.dedup_paragraphs(
-            analytics.split_paragraphs(docs, extra_cols=extra),
-            keep_by=args.keep_by, descending=args.keep_desc,
-            normalize=args.normalize,
-        )
-    elif args.mode in ("imagededup", "audiodedup"):
-        from htmlx.spark.multimodal import (
-            extract_audio_ehash,
-            extract_image_dhash,
-            perceptual_keepers,
-        )
-
-        extract_fn, hcol = (
-            (extract_image_dhash, "dhash")
-            if args.mode == "imagededup"
-            else (extract_audio_ehash, "ehash")
-        )
-        src = docs
-        if "media_id" not in src.columns and "doc_id" in src.columns:
-            src = src.withColumnRenamed("doc_id", "media_id")
-        # the decode feeds the representative groupBy, the keeper join and
-        # the error passthrough: decode each payload once
-        hashes = held = extract_fn(src.select("media_id", "payload")).persist()
-        ok = hashes.where(F.col("error") == "")
-        keepers = perceptual_keepers(ok.select("media_id", hcol), hcol, args.hamming)
-        resolved = ok.join(keepers, hcol).select(
-            "media_id", hcol, "keep_media_id",
-            (F.col("media_id") != F.col("keep_media_id")).alias("is_dup"),
-            F.lit("").alias("error"),
-        )
-        failed = hashes.where(F.col("error") != "").select(
-            "media_id", hcol,
-            F.col("media_id").alias("keep_media_id"),
-            F.lit(False).alias("is_dup"), "error",
-        )
-        out = resolved.unionByName(failed)
-    elif args.mode == "imgtext":
-        # (image, caption, quality) training-pair construction: --input
-        # is the exploded images table (page_id, media_id, src, alt,
-        # title), --media-input the fetched (media_id, payload) bytes
-        from htmlx.spark.multimodal import image_text_pairs
-
-        if not args.media_input:
-            sys.exit("--mode imgtext needs --media-input")
-        media = spark.read.parquet(args.media_input)
-        out = image_text_pairs(
-            docs,
-            media,
-            min_caption_bytes=args.min_caption_bytes,
-            max_caption_bytes=args.max_caption_bytes,
-            max_hamming=args.hamming,
-            allow_langs=tuple(args.allow_langs.split(",")),
-        )
-        if args.emit_pairs:
-            # materialize the training dataset FROM THE WRITTEN OUTPUT:
-            # building it from `out` would re-execute the decode + dedup
-            # pipeline a second time (the wet-ab write-twice class).
-            # Write the annotation table once, read it back for the kept
-            # rows, join payloads once, and return (the common tail write
-            # below must not run — it would overwrite the path it is now
-            # reading from).
-            out.write.mode("overwrite").parquet(args.output)
-            kept = spark.read.parquet(args.output).where("keep")
-            (kept.select("page_id", "media_id", "src", "caption",
-                         "caption_lang", "width", "height")
-                 .join(media, "media_id")
-                 .write.mode("overwrite")
-                 .parquet(args.emit_pairs))
-            print(f"mode={args.mode} rows="
-                  f"{spark.read.parquet(args.output).count()} -> "
-                  f"{args.output} (+pairs -> {args.emit_pairs})")
-            return
-    elif args.mode == "embdedup":
-        # embedding-cosine near-dup keep-list over a (vec_id, embedding)
-        # table: exact block-pair BLAS by default, --emb-approx switches
-        # to the IVF-bucketed path (~num_centroids x less pair work,
-        # recall measured in test_ann.py). Same components machinery as
-        # every other near-dup family.
-        if getattr(args, "emb_approx", False):
-            raw_pairs = analytics.embedding_near_dup_ivf(
-                docs, threshold=args.threshold,
-                num_centroids=getattr(args, "emb_centroids", 8),
-            )
-        else:
-            raw_pairs = analytics.embedding_near_dup(
-                docs, threshold=args.threshold
-            )
-        pairs = raw_pairs.select(
-            F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-        )
-        comp = analytics.near_dup_components(
-            docs.select(F.col("vec_id").cast("long").alias("doc_id")), pairs
-        )
-        out = comp.select(
-            F.col("doc_id").alias("vec_id"),
-            F.col("keep_doc_id").alias("keep_vec_id"),
-            "is_dup",
-        )
-    elif args.mode == "tempsample":
-        out = analytics.temperature_sample(
-            docs, group_col=args.group_col, alpha=args.alpha,
-            target_frac=args.target_frac,
-        )
-    elif args.mode == "hostrank":
-        wcol = "weight" if "weight" in docs.columns else None
-        out = analytics.host_rank(
-            docs, damping=args.damping, iters=args.rank_iters, weight_col=wcol
-        )
-    elif args.mode == "anchorstats":
-        out = analytics.anchor_text_agg(
-            docs, cross_host_only=not args.intra_host
-        )
-    elif args.mode == "hosttmpl":
-        out = analytics.host_template_lines(
-            docs, min_docs=args.tmpl_min_docs, min_frac=args.tmpl_min_frac
-        )
-    elif args.mode == "snapdiff":
-        old = spark.read.parquet(args.old_input)
-        out = analytics.snapshot_diff(old, docs)
-    elif args.mode == "metarobots":
-        out = analytics.meta_robots(docs)
-    elif args.mode == "robotsfilter":
-        from htmlx.spark.robotstxt import robots_filter
-
-        robots = spark.read.parquet(args.robots)
-        out = robots_filter(docs, robots, user_agent=args.user_agent)
-    elif args.mode == "linkgraph":
-        out = analytics.link_graph(docs, cross_host_only=not args.intra_host)
-    elif args.mode == "urlfilter":
-        if args.blocklist:
-            bl = (
-                spark.read.text(args.blocklist)
-                .select(F.trim("value").alias("host"))
-                .where((F.col("host") != "") & ~F.col("host").startswith("#"))
-            )
-        else:
-            bl = spark.createDataFrame([], "host string")
-        out = analytics.url_filter(docs, bl)
-    elif args.mode == "split":
-        out = analytics.hash_split(docs)
-    elif args.mode == "decontaminate":
-        ev = spark.read.parquet(args.eval_input)
-        out = analytics.decontaminate(docs, ev, hash_basis=args.hash_basis)
-    elif args.mode == "pii":
-        out = analytics.pii_scrub(docs)
-    elif args.mode == "pack":
-        out = analytics.pack_sequences(
-            docs,
-            seq_len=args.seq_len,
-            num_buckets=args.pack_buckets,
-            counts=_bpe_token_counts(spark, docs, args),
-            eod_tokens=args.eod_tokens,
-        )
-    elif args.mode == "bpetrain":
-        merges, alphabet = analytics.train_bpe_full(
-            docs, num_merges=args.bpe_train or 1000,
-            byte_level=args.bpe_byte_level,
-        )
-        out = analytics.bpe_merges_df(spark, merges)
-        if args.bpe_model_out:
-            analytics.save_bpe_model(spark, args.bpe_model_out, merges, alphabet)
-    elif args.mode == "bpeencode":
-        # exact token-ID sequences (what a training run consumes) under a
-        # persisted model; requires the full model layout (alphabet too)
-        merges, alphabet = analytics.load_bpe_model(spark, args.bpe_model)
-        if alphabet is None:
-            sys.exit("--mode bpeencode needs a full model dir "
-                     "(merges.parquet + alphabet.parquet; see bpetrain)")
-        out = analytics.bpe_encode_ids(docs, merges, alphabet)
-    elif args.mode == "components":
-        out = analytics.near_dup_components(docs, spark.read.parquet(args.pairs))
-    elif args.mode == "dedup":
-        out = analytics.near_dup_components(docs, verified_pairs(docs, args))
-    else:
-        out = analytics.corpus_filter(
-            docs, {"production": (args.hash_basis, analytics.LSH_MAX_BUCKET)},
-            args.threshold,
-        ).drop("variant")
-
+    held = mode.held(docs).persist() if mode.held else None
     try:
+        out = mode.build(spark, docs if held is None else held, args)
+        if out is None:
+            return
         out.write.mode("overwrite").parquet(args.output)
     finally:
         if held is not None:

@@ -114,9 +114,10 @@ def test_embedding_near_dup_ivf_recall(spark, emb):
 
 
 def test_curate_embdedup_cli(spark, tmp_path, monkeypatch):
-    """--mode embdedup e2e over an embeddings parquet: a planted
-    near-identical pair collapses to one keeper (min vec_id), distinct
-    vectors stay; --emb-approx runs the IVF path on the same input."""
+    """--mode embdedup --emb-approx e2e over an embeddings parquet: the
+    IVF path collapses a planted near-identical pair to one keeper (min
+    vec_id) and keeps the distinct vectors (the exact path runs in
+    test_curate_cli's mode-table test)."""
     import sys
 
     from jobs.curate import main
@@ -131,14 +132,12 @@ def test_curate_embdedup_cli(spark, tmp_path, monkeypatch):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<double>"
     ).write.parquet(inp)
-    for flag in ([], ["--emb-approx", "--emb-centroids", "1"]):
-        out = str(tmp_path / ("out" + str(len(flag))))
-        monkeypatch.setattr(sys, "argv", [
-            "curate.py", "--mode", "embdedup", "--input", inp,
-            "--output", out, "--threshold", "0.95", *flag,
-        ])
-        main()
-        got = {r["vec_id"]: (r["keep_vec_id"], r["is_dup"])
-               for r in spark.read.parquet(out).collect()}
-        assert got == {1: (1, False), 2: (1, True),
-                       3: (3, False), 4: (4, False)}, flag
+    out = str(tmp_path / "out")
+    monkeypatch.setattr(sys, "argv", [
+        "curate.py", "--mode", "embdedup", "--input", inp, "--output", out,
+        "--threshold", "0.95", "--emb-approx", "--emb-centroids", "1",
+    ])
+    main()
+    got = {r["vec_id"]: (r["keep_vec_id"], r["is_dup"])
+           for r in spark.read.parquet(out).collect()}
+    assert got == {1: (1, False), 2: (1, True), 3: (3, False), 4: (4, False)}

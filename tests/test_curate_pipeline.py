@@ -3,7 +3,6 @@ mode (item 7): survivor selection by a caller-supplied ordering column,
 and the quality->dedup->decontaminate->split->pack chain with per-stage
 audit counts and stage-level resume."""
 
-import argparse
 import json
 import os
 
@@ -65,20 +64,17 @@ def test_keep_policy_paragraphs(spark):
     assert keep == 2 and count == 3
 
 
-def _pipeline_args(tmp_path, **over):
-    base = dict(
-        output=str(tmp_path / "out"),
-        quality_rule="none",
-        keep_by=None,
-        keep_desc=False,
-        hash_basis="xxhash64",
-        threshold=0.9,
-        eval_input=None,
-        seq_len=64,
-        pack_buckets=2,
-    )
-    base.update(over)
-    return argparse.Namespace(**base)
+def _pipeline_args(tmp_path, *argv):
+    """curate's parsed pipeline arguments: no quality gate and small pack
+    bins, then `argv`. run_pipeline takes the documents as a frame, so
+    --input (required by the parser) is never read."""
+    from jobs.curate import parser
+
+    return parser().parse_args([
+        "--mode", "pipeline", "--input", str(tmp_path / "unused"),
+        "--output", str(tmp_path / "out"), "--quality-rule", "none",
+        "--seq-len", "64", "--pack-buckets", "2", *argv,
+    ])
 
 
 def test_pipeline_stages_audit_and_resume(spark, tmp_path):
@@ -130,7 +126,7 @@ def test_pipeline_keep_policy_changes_survivor(spark, tmp_path):
     ]
     docs = _docs(spark, rows)
     run_pipeline(
-        spark, docs, _pipeline_args(tmp_path, keep_by="prio", keep_desc=True)
+        spark, docs, _pipeline_args(tmp_path, "--keep-by", "prio", "--keep-desc")
     )
     kept = {
         r.doc_id
@@ -150,7 +146,9 @@ def test_pipeline_manifest_is_write_then_commit(spark, tmp_path):
     docs = _docs(spark, [(1, "w " * 60, 0), (2, "v " * 60, 0)])
     # a missing eval parquet makes the decontaminate stage fail after
     # exact/near dedup committed but before split/pack ran
-    args = _pipeline_args(tmp_path, eval_input=str(tmp_path / "missing.parquet"))
+    args = _pipeline_args(
+        tmp_path, "--eval-input", str(tmp_path / "missing.parquet")
+    )
     with pytest.raises(Exception):
         run_pipeline(spark, docs, args)
     manifest = json.loads((tmp_path / "out" / "_pipeline_manifest.json").read_text())
@@ -186,8 +184,8 @@ def test_pipeline_urlfilter_and_tempsample_stages(spark, tmp_path):
     bl = tmp_path / "bl.txt"
     bl.write_text("# list\nbad.example\n")
     args = _pipeline_args(
-        tmp_path, blocklist=str(bl), temp=True, group_col="source",
-        alpha=0.5, target_frac=None,
+        tmp_path, "--blocklist", str(bl), "--temp", "--group-col", "source",
+        "--alpha", "0.5",
     )
     manifest = run_pipeline(spark, docs, args)
     done = manifest["completed"]
@@ -229,8 +227,8 @@ def test_pipeline_hosttmpl_stage_unmasks_exact_dups(spark, tmp_path):
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, source string, url string"
     )
-    args = _pipeline_args(tmp_path, hosttmpl=True, tmpl_min_docs=3,
-                          tmpl_min_frac=0.5)
+    args = _pipeline_args(tmp_path, "--hosttmpl", "--tmpl-min-docs", "3",
+                          "--tmpl-min-frac", "0.5")
     manifest = run_pipeline(spark, docs, args)
     done = manifest["completed"]
     assert done["hosttmpl"]["docs_in"] == 6
@@ -273,7 +271,7 @@ def test_pipeline_robots_from_pages_gates_extraction(spark, tmp_path):
         "doc_id long, url string, text string, html binary, "
         "http_status int, warc_ts long",
     )
-    args = _pipeline_args(tmp_path, robots_from_pages=True)
+    args = _pipeline_args(tmp_path, "--robots-from-pages")
     manifest = run_pipeline(spark, docs, args)
     done = manifest["completed"]
     assert done["robots"]["docs_in"] == 6
@@ -312,8 +310,8 @@ def test_pipeline_spandedup_stage_rewrites_text(spark, tmp_path):
     )
     evp = str(tmp_path / "eval.parquet")
     ev.write.parquet(evp)
-    args = _pipeline_args(tmp_path, spandedup_stage=True, span_window=15,
-                          eval_input=evp)
+    args = _pipeline_args(tmp_path, "--spandedup", "--span-window", "15",
+                          "--eval-input", evp)
     manifest = run_pipeline(spark, docs, args)
     done = manifest["completed"]
     assert done["spandedup"]["docs_in"] == 3
@@ -345,7 +343,8 @@ def test_pipeline_pack_on_trained_bpe_counts(spark, tmp_path):
     docs = _docs(spark, rows)
     model_out = str(tmp_path / "merges.parquet")
     args = _pipeline_args(
-        tmp_path, bpe_train=8, bpe_model_out=model_out, seq_len=16, pack_buckets=1
+        tmp_path, "--bpe-train", "8", "--bpe-model-out", model_out,
+        "--seq-len", "16", "--pack-buckets", "1",
     )
     run_pipeline(spark, docs, args)
 
@@ -409,7 +408,7 @@ def test_pipeline_wet_ab_report_row_in_audit(spark, tmp_path):
     wet_dir = str(tmp_path / "wet")
     write_wet(wet_src, wet_dir, n_files=1).collect()  # lazy manifest frame
 
-    args = _pipeline_args(tmp_path, wet_ab=wet_dir)
+    args = _pipeline_args(tmp_path, "--wet-ab", wet_dir)
     run_pipeline(spark, docs, args)
 
     audit = {r["stage"]: r for r in spark.read.parquet(

@@ -279,27 +279,6 @@ def test_capped_plan_stays_jvm_side(spark):
     assert "EvalPython" not in plan and "MapInPandas" not in plan
 
 
-def test_curate_spandedup_cli(spark, tmp_path, monkeypatch):
-    """jobs/curate.py --mode spandedup writes the per-doc cleaned table."""
-    import sys
-
-    from jobs.curate import main
-
-    docs = [(0, "x " + BOILER + " y"), (1, "z " + BOILER + " q"),
-            (2, "no duplication in this one at all anywhere")]
-    inp, outp = str(tmp_path / "in.parquet"), str(tmp_path / "out.parquet")
-    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(inp)
-    monkeypatch.setattr(sys, "argv", [
-        "curate.py", "--input", inp, "--output", outp,
-        "--mode", "spandedup", "--span-window", "15",
-    ])
-    main()
-    got = {r["doc_id"]: r for r in spark.read.parquet(outp).collect()}
-    assert got[0]["tokens_removed"] == 0
-    assert got[1]["tokens_removed"] > 0 and BOILER not in got[1]["cleaned_text"]
-    assert got[2]["tokens_removed"] == 0
-
-
 def test_curate_spandedup_cli_cap_flag(spark, tmp_path, monkeypatch):
     """--span-max-occurrences reaches dedup_spans: over-cap template
     windows survive in every doc through the real CLI path."""

@@ -348,9 +348,7 @@ def test_robots_crawl_delay_table_and_fetch_quota(spark):
 
 def test_pipeline_robots_stage(tmp_path):
     """--robots in pipeline mode gates docs before URL filtering."""
-    import argparse
-
-    from jobs.curate import run_pipeline
+    from jobs.curate import parser, run_pipeline
     from htmlx.spark.session import get_spark
 
     spark = get_spark(cores=4, app_name="htmlx-robots-pipeline-test")
@@ -368,12 +366,11 @@ def test_pipeline_robots_stage(tmp_path):
             [("a.com", "User-agent: *\nDisallow: /private/\n")],
             "host string, robots_txt string",
         ).write.parquet(str(rb))
-        args = argparse.Namespace(
-            output=str(tmp_path / "out"), quality_rule="none", keep_by=None,
-            keep_desc=False, hash_basis="xxhash64", threshold=0.9, iters=0,
-            eval_input=None, seq_len=64, pack_buckets=2,
-            robots=str(rb), user_agent="*",
-        )
+        args = parser().parse_args([
+            "--mode", "pipeline", "--input", str(tmp_path / "unused"),
+            "--output", str(tmp_path / "out"), "--quality-rule", "none",
+            "--seq-len", "64", "--pack-buckets", "2", "--robots", str(rb),
+        ])
         manifest = run_pipeline(spark, docs, args)
         done = manifest["completed"]
         assert done["robots"]["docs_in"] == 3
